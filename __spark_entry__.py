@@ -1,108 +1,20 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 ``entry(spark)`` runs the flagship rolling-trend query at sf0.001;
-``queries()`` / ``oracle_sql()`` expose the full registry from
-``nl_railtraffic_etl_pipeline_spark.plans.registry`` — one entry per
-implemented operator from SURVEY.md §2/§2.12.  EVERY entry carries a
-full DuckDB oracle (the streaming sessionizer and duplicate-clustering
-gates via gaps-and-islands and recursive-CTE reachability; the former
-rows-only exception ``text_compression_ratio`` now joins a published
-driver-local pyarrow+zlib reference artifact, the IVF-centroid
-pattern).  The committed ``CORRECTNESS_local_r11.json`` records the
-full-registry oracle run at sf0.001/0.01/0.1.
-
-Sampling rotation: the driver's correctness gate checks the FIRST 50
-entries of ``queries()`` each round, so a registry this size (397)
-would leave most gates driver-unverified forever under a fixed order.
-``queries()`` therefore orders gates by (1) most-recent driver sample
-FAILED — a fix must be re-verified by the driver, not just locally
-(the r7 DECIMAL episode proved local and driver evidence can diverge);
-(2) NEVER seen in any committed ``CORRECTNESS_r*.json``; (3) everything
-else, least-recently-sampled first — so previously verified gates
-periodically re-enter the 50-gate window and regressions can't stay
-driver-invisible forever.  Registry order breaks ties within each
-class, keeping iteration deterministic for a fixed artifact set.
-POST-DRAIN POLICY (the standing regime once class (2) empties, ~r10):
-class (3) IS the regression re-sampler — with ~330 gates and 50 slots
-per round, every gate's driver evidence has a bounded age of ceil(N/50)
-≈ 7 rounds; a fix for any future driver-red gate jumps the queue via
-class (1) and is re-verified the next round.  No code change is needed
-at the transition; the ordering key already expresses it.
-``bench.py`` is NOT affected: it re-emits its timings keyed in canonical
-registry order, so bench visibility stays comparable round-over-round.
+``queries()`` / ``oracle_sql()`` expose the registry from
+``nl_railtraffic_etl_pipeline_spark.plans.registry`` in registry order:
+the six reference analytics queries, the ``daily_stats`` roll-up, the run
+report, the latest-wins upsert and the pipeline lake round-trip.  Every
+gate carries a DuckDB oracle.
 """
 
 from __future__ import annotations
 
-import glob
-import json
-import os
-import re
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
 from nl_railtraffic_etl_pipeline_spark.plans.registry import ORACLES, QUERIES
-
-
-def _driver_history() -> tuple[dict[str, int], set[str]]:
-    """(gate -> latest round sampled, gates whose LATEST sample failed).
-
-    A gate counts as failed when its most recent committed driver record
-    shows ``hash_match: false`` / ``rows_match: false`` /
-    ``schema_match: false`` or a non-empty ``err`` — a later green
-    sample clears the flag.
-    """
-    here = os.path.dirname(os.path.abspath(__file__))
-    last_round: dict[str, int] = {}
-    last_ok: dict[str, bool] = {}
-    for path in glob.glob(os.path.join(here, "CORRECTNESS_r*.json")):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", os.path.basename(path))
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            with open(path, encoding="utf-8") as fh:
-                rec = json.load(fh)
-        except (OSError, ValueError):
-            continue
-        if not isinstance(rec, dict):
-            continue
-        for name, r in rec.items():
-            if rnd < last_round.get(name, -1):
-                continue
-            ok = True
-            if isinstance(r, dict):
-                ok = (
-                    not r.get("err")
-                    and r.get("rows_match") is not False
-                    and r.get("schema_match") is not False
-                    and r.get("hash_match") is not False
-                )
-            last_round[name] = rnd
-            last_ok[name] = ok
-    failed = {n for n, ok in last_ok.items() if not ok}
-    return last_round, failed
-
-
-def _rotated(names: list[str]) -> list[str]:
-    last_round, failed = _driver_history()
-    pos = {n: i for i, n in enumerate(names)}
-
-    def key(n: str) -> tuple[int, int, int]:
-        if n in failed:
-            return (0, 0, pos[n])
-        if n not in last_round:
-            # Within the never-sampled class, streaming twins sort LAST:
-            # each one closes with the same shared arithmetic as its
-            # already-driver-verified batch twin (hash equality is
-            # pytest-pinned), so their marginal driver-evidence value is
-            # the lowest in the pool — front the gates whose only
-            # evidence is local (r10 verdict ask #1).
-            return (1, 1 if n.startswith("streaming_") else 0, pos[n])
-        return (2, last_round[n], pos[n])
-
-    return sorted(names, key=key)
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -111,9 +23,8 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {n: QUERIES[n] for n in _rotated(list(QUERIES))}
+    return dict(QUERIES)
 
 
 def oracle_sql() -> dict[str, str]:
-    order = _rotated(list(QUERIES))
-    return {n: ORACLES[n] for n in order if n in ORACLES}
+    return dict(ORACLES)

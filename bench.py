@@ -6,24 +6,8 @@ Prints ONE JSON line:
 
 Config via env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
 SPARK_GRAFT_CPUS (default 32).  Each query is fully executed (collect) and
-timed individually after a warm-up of the input file listing.
-
-Two measurement-stability mechanisms (a 281-query registry in one session
-was drifting its end-of-run timings 1.2-1.5x):
-
-- SESSION RECYCLING: the SparkSession is stopped and rebuilt every
-  ``SPARK_GRAFT_BENCH_RECYCLE`` queries (default 64), with the warm-up
-  re-run afterwards, so block-manager / state-store / listener
-  accumulation from earlier families cannot tax later ones.  All plan
-  caches key on applicationId, so a fresh session rebuilds cleanly.
-- CANONICAL ORDER: queries execute AND report in registry-definition
-  order (NOT the driver-sampling rotation that ``__spark_entry__.
-  queries()`` applies), so per-query timings stay comparable
-  round-over-round even while the correctness sample rotates.
-
-``SPARK_GRAFT_BENCH_TIER=smoke|standard|full`` (default full) restricts
-the run to the registry's tier subsets — the local iteration loop; the
-driver runs the default full sweep.
+timed individually, in registry order, after a warm-up of the input
+file listing.
 """
 
 from __future__ import annotations
@@ -37,8 +21,8 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
 def _warm_up(spark, entry_mod, sf_dir: str) -> None:
-    # Untimed warm-up: JVM/codegen/parquet-reader/Python-worker initialization
-    # would otherwise be attributed to whichever query happens to run first.
+    # Untimed warm-up: JVM/codegen/parquet-reader initialization would
+    # otherwise be attributed to whichever query happens to run first.
     # Run the flagship query shape at the smallest SF so window execution,
     # exchanges, and timestamp conversion are all compiled before timing.
     warm_sf = "/root/testdata/sf0.001"
@@ -49,13 +33,6 @@ def _warm_up(spark, entry_mod, sf_dir: str) -> None:
     spark.read.parquet(f"{sf_dir}/nation.parquet").groupBy(
         "n_regionkey"
     ).count().write.format("noop").mode("overwrite").save()
-    # Python-worker spin-up (daemon fork + Arrow serializer init) costs
-    # 0.5-1 s and was being attributed to whichever Arrow-kernel query
-    # ran first after a session (re)build — the r8 bench showed
-    # text_compression_ratio at 2.7x its idle minimum from exactly this.
-    spark.range(32).repartition(4).mapInPandas(
-        lambda it: it, "id long"
-    ).write.format("noop").mode("overwrite").save()
 
 
 def main() -> None:
@@ -63,14 +40,7 @@ def main() -> None:
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
 
     import __spark_entry__ as entry_mod
-    from nl_railtraffic_etl_pipeline_spark.plans.registry import (
-        QUERIES,
-        tier_names,
-    )
     from nl_railtraffic_etl_pipeline_spark.session import get_spark
-
-    tier = os.environ.get("SPARK_GRAFT_BENCH_TIER", "full")
-    names = tier_names(tier)
 
     spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
@@ -78,20 +48,12 @@ def main() -> None:
 
     # min-of-N per query: single-shot timings on this box vary +/-50% on the
     # heavy queries (GC, virtio jitter); the min is the stable signal.
-    # 3 reps since warehouse tables / dedup+ANN artifacts are cached per
-    # application — later reps time the query proper, not artifact builds.
+    # 3 reps since the derived warehouse tables are cached per application
+    # — later reps time the query proper, not the derivation.
     reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))
-    recycle = int(os.environ.get("SPARK_GRAFT_BENCH_RECYCLE", "64"))
     timings: dict[str, float] = {}
     total = 0.0
-    for i, name in enumerate(names):
-        if recycle > 0 and i > 0 and i % recycle == 0:
-            spark.stop()
-            spark = get_spark("bench")
-            spark.sparkContext.setLogLevel("ERROR")
-            _warm_up(spark, entry_mod, sf_dir)
-            print(f"# session recycled before query {i}", file=sys.stderr)
-        fn = QUERIES[name]
+    for name, fn in entry_mod.queries().items():
         best = float("inf")
         for _ in range(reps):
             t0 = time.time()

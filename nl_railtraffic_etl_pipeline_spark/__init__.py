@@ -1,21 +1,17 @@
-"""PySpark-native analytics engine with the query and data-processing
-capabilities of the reference ETL pipeline (NS rail disruption analytics:
-ingest -> clean -> idempotent load -> windowed analytics SQL), rebuilt
-Spark-first: DataFrame/SQL logical plans, Catalyst optimization, partitioned
-Parquet lake, plus large-scale training-data operators (dedup, similarity
-search, text analysis, multimodal plumbing).
+"""PySpark-native rebuild of the reference NS rail-disruption ETL: a daily
+pipeline (ingest -> clean -> idempotent load into a parquet lake -> report)
+plus the six reference analytics queries, as DataFrame/SQL logical plans
+optimized by Catalyst.
 
 Layout:
     session.py    SparkSession factory (UTC, AQE, tuned shuffle partitions)
     schemas.py    explicit StructTypes for the raw/clean data model
-    sources/      JSON/JSONL/REST readers, partitioned lake writers
-    functions/    column-expression libraries (cleaning, compat shims, text,
-                  dedup, similarity, multimodal)
-    operators/    composite operators (idempotent upsert, interval join,
-                  daily rollup)
-    plans/        the analytics query library (DataFrame + SQL twins) and
-                  the driver-facing query registry
-    streaming/    incremental (Structured Streaming) variant of the pipeline
+    pipeline.py   SparkETLPipeline: extract -> transform -> load -> report
+    sources/      NS payload DataSource and readers, REST client, lake writers
+    functions/    column-expression libraries (cleaning, SQLite compat shims)
+    operators/    composite operators (idempotent upserts, daily rollup)
+    plans/        the analytics queries (DataFrame + SQL twins) and the
+                  query registry with its DuckDB oracles
 """
 
 __version__ = "0.1.0"

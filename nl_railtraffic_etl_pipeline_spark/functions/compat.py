@@ -18,8 +18,6 @@ __all__ = [
     "safe_div",
     "exact_avg",
     "csv_unnest",
-    "least_",
-    "greatest_",
     "day_name",
 ]
 
@@ -75,16 +73,6 @@ def csv_unnest(csv: Column) -> Column:
     ``IS NOT NULL`` — exactly as the reference does.
     """
     return F.explode(F.split(csv, ","))
-
-
-def least_(*cols: Column) -> Column:
-    """SQLite two-arg scalar ``MIN(a,b)`` (aggregators.py:313)."""
-    return F.least(*cols)
-
-
-def greatest_(*cols: Column) -> Column:
-    """SQLite two-arg scalar ``MAX(a,b)`` (aggregators.py:314)."""
-    return F.greatest(*cols)
 
 
 def day_name(dow: Column) -> Column:

@@ -26,6 +26,7 @@ from __future__ import annotations
 
 import datetime as _dt
 import logging
+from concurrent.futures import Future, ThreadPoolExecutor, wait
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -49,6 +50,22 @@ SEED_STATIONS = [
     ("GVC", "Den Haag Centraal", "NL", 52.0808, 4.3247),
     ("LEDN", "Leiden Centraal", "NL", 52.1664, 4.4817),
 ]
+
+
+def _results(*futures: Future) -> list:
+    """Results of concurrent stages, once every one has finished.
+
+    A single failure re-raises unchanged; when several stages fail, all
+    of their errors travel together in one ``ExceptionGroup`` instead of
+    all but the first being dropped.
+    """
+    wait(futures)
+    errors = [f.exception() for f in futures if f.exception() is not None]
+    if len(errors) == 1:
+        raise errors[0]
+    if errors:
+        raise ExceptionGroup("concurrent pipeline stages failed", errors)
+    return [f.result() for f in futures]
 
 
 class SparkETLPipeline:
@@ -152,15 +169,12 @@ class SparkETLPipeline:
         # the second job's tasks back-fill executors freed by the first
         # job's straggler tail, instead of idling through two serial
         # commit waits).
-        from concurrent.futures import ThreadPoolExecutor
-
         with ThreadPoolExecutor(max_workers=2) as pool:
-            f_raw = pool.submit(self._overwrite, "raw_disruptions", merged_raw)
-            f_clean = pool.submit(self._overwrite, "disruptions", merged_clean)
-            return {
-                "raw_total": f_raw.result(),
-                "clean_total": f_clean.result(),
-            }
+            raw_total, clean_total = _results(
+                pool.submit(self._overwrite, "raw_disruptions", merged_raw),
+                pool.submit(self._overwrite, "disruptions", merged_clean),
+            )
+        return {"raw_total": raw_total, "clean_total": clean_total}
 
     def ensure_stations(self, run_ts: _dt.datetime) -> int:
         """Seed the station dimension, ``INSERT ... ON CONFLICT DO NOTHING``
@@ -278,13 +292,11 @@ class SparkETLPipeline:
         cleaned = self.transform(raw, run_ts)
         # The station seed touches its own zone, independent of the
         # raw/clean merges — overlap it with stage 3 (guide §2.6).
-        from concurrent.futures import ThreadPoolExecutor
-
         with ThreadPoolExecutor(max_workers=2) as pool:
-            f_stations = pool.submit(self.ensure_stations, run_ts)
-            f_load = pool.submit(self.load, raw, cleaned, run_ts)
-            f_stations.result()
-            stats = f_load.result()
+            _, stats = _results(
+                pool.submit(self.ensure_stations, run_ts),
+                pool.submit(self.load, raw, cleaned, run_ts),
+            )
         if artifacts:
             stats["artifacts"] = self.write_run_artifacts(raw, cleaned, run_ts)
         # one scan resolution of the freshly-published zone serves both the

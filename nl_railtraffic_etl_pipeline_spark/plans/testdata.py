@@ -38,20 +38,6 @@ from pyspark.sql import functions as F
 
 from ..functions.cleaning import impact_level_col
 
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
-
 #: Runtime session confs the loaders depend on — set defensively so the
 #: registry works under ANY SparkSession (the driver passes its own, which
 #: need not come from session.get_spark):
@@ -106,8 +92,8 @@ def normalize_timestamps(df: DataFrame) -> DataFrame:
 #: parquet inputs from scratch.  What it avoids is the driver-side cost of
 #: re-resolving the same scan per query call (footer/schema read + relation
 #: resolution + the ``_spread`` partition probe: measured 90-130 ms per
-#: ``spark.read.parquet`` on this box), which a ~400-query bench paid
-#: hundreds of times per run.  Same pattern and key as _DISRUPTIONS_CACHE
+#: ``spark.read.parquet`` on a 4-core box).  Same pattern and key as
+#: _DISRUPTIONS_CACHE
 #: below; a stopped-and-recreated session gets fresh entries.
 #:
 #: STATIC-INPUT ASSUMPTION (ADVICE r11): the memo pins the file listing
@@ -121,6 +107,19 @@ def normalize_timestamps(df: DataFrame) -> DataFrame:
 _SCAN_CACHE: dict[tuple[str, str, str, bool], DataFrame] = {}
 
 
+def _spread(df: DataFrame) -> DataFrame:
+    """Repartition tiny inputs up to the session's default parallelism.
+
+    Small parquet files arrive as one input split, which would serialize
+    every downstream stage; at real scale the input already has
+    >= defaultParallelism partitions and this is a no-op.
+    """
+    target = df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() < target:
+        return df.repartition(target)
+    return df
+
+
 def load_table(
     spark: SparkSession, sf_dir: str, name: str, spread: bool = False
 ) -> DataFrame:
@@ -132,27 +131,16 @@ def load_table(
             spark.read.parquet(f"{sf_dir}/{name}.parquet")
         )
         if spread:
-            # Bench-scale files arrive as one input split, serializing the
-            # first stage of every consumer; no-op when the scan is already
-            # parallel.
-            from ..functions.dedup import _spread
-
             df = _spread(df)
         _SCAN_CACHE[key] = df
     return df
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every synthetic table as a temp view (same names DuckDB uses)."""
-    for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
 # ---------------------------------------------------------------------------
 # Spark-side derivation (DataFrame API — the idiomatic engine path)
 # ---------------------------------------------------------------------------
 
-_TYPE_MAP = {
+TYPE_MAP = {
     "error": "calamity",
     "view": "maintenance",
     "click": "disruption",
@@ -166,15 +154,10 @@ def _station_code(expr):
 
 
 def derive_disruptions(ev: DataFrame) -> DataFrame:
-    """Pure events → disruptions derivation (batch- and streaming-safe).
-
-    Only map-side expressions — no shuffle, no checkpoint — so the same
-    function defines the warehouse table for `disruptions_df` (batch) and
-    for the Structured-Streaming gate queries (`plans/streaming_queries.py`).
-    """
+    """Pure events → disruptions derivation (map-side expressions only)."""
     type_col = F.coalesce(
         F.element_at(
-            F.create_map(*[F.lit(x) for kv in _TYPE_MAP.items() for x in kv]),
+            F.create_map(*[F.lit(x) for kv in TYPE_MAP.items() for x in kv]),
             F.col("event_type"),
         ),
         F.col("event_type"),
@@ -218,8 +201,6 @@ _DISRUPTIONS_CACHE: dict[tuple[str, str], DataFrame] = {}
 
 def disruptions_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The ``disruptions`` warehouse table (events derivation, materialized)."""
-    from ..functions.dedup import _materialize, _spread
-
     key = (spark.sparkContext.applicationId, sf_dir)
     cached = _DISRUPTIONS_CACHE.get(key)
     if cached is not None:
@@ -235,8 +216,10 @@ def disruptions_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Materialized: every rail query consumes the derivation 1-3 times
     # (aggregation branches, window branches, self-joins); computing the
     # 600k-row expression pipeline once per application beats recomputing it
-    # per consumer branch and per query.
-    df = _materialize(derive_disruptions(ev))
+    # per consumer branch and per query.  Eager on purpose: a lazy
+    # checkpoint hit by several join branches of the SAME action is
+    # recomputed by each branch.
+    df = derive_disruptions(ev).localCheckpoint(eager=True)
     _DISRUPTIONS_CACHE[key] = df
     return df
 

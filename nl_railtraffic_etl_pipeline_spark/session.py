@@ -10,7 +10,6 @@ every knob that matters on a real cluster:
 - AQE on: runtime shuffle-partition coalescing, skew-join splitting and
   dynamic broadcast — the mechanisms that keep the same plans healthy at
   100 TB without re-tuning.
-- Arrow enabled for the few Pandas-UDF paths (similarity / multimodal).
 """
 
 from __future__ import annotations
@@ -41,14 +40,9 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Dimension tables (stations, nation, region) stay far under this;
         # Catalyst then plans broadcast joins with no shuffle of the fact side.
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
-        # The synthetic events table stores TIMESTAMP(NANOS) parquet, which
-        # Spark has no native type for: read as long and convert (testdata.py).
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "90g"))

@@ -1,13 +1,13 @@
-"""JSON payload readers: archived NS payloads (array JSON) and the JSONL lake.
+"""JSON payload readers: archived NS payloads and driver-side record lists.
 
 Maps the reference's ingest surface onto native Spark readers (SURVEY §2.1):
 
 - S1 fallback / tests: archived payload files (pretty-printed JSON arrays,
   ``/root/reference/data/raw/disruptions_*.json``) -> ``read_payload``.
-- S4/S8: one-object-per-line JSONL under Hive-style ``year/month/day``
-  partitions, read PERMISSIVE with a corrupt-record column — the Spark
-  equivalent of the Glue SerDe's ``ignore.malformed.json`` tolerance
-  (terraform/modules/athena/main.tf:70-77).
+- a live REST fetch already on the driver -> ``payload_from_records``.
+
+Both read PERMISSIVE with a corrupt-record column — the Spark equivalent
+of the Glue SerDe's ``ignore.malformed.json`` tolerance.
 """
 
 from __future__ import annotations
@@ -22,16 +22,6 @@ def read_payload(spark: SparkSession, path: str) -> DataFrame:
     return (
         spark.read.option("multiLine", True)
         .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .schema(RAW_DISRUPTION)
-        .json(path)
-    )
-
-
-def read_jsonl(spark: SparkSession, path: str) -> DataFrame:
-    """Read the JSONL lake zone (one record per line, partition dirs ok)."""
-    return (
-        spark.read.option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", "_corrupt_record")
         .schema(RAW_DISRUPTION)
         .json(path)

@@ -95,12 +95,6 @@ def _shingle_arrays(df: DataFrame, text_col: str, id_col: str, n: int) -> DataFr
     )
 
 
-def _shingled(df: DataFrame, text_col: str, id_col: str, n: int) -> DataFrame:
-    return _shingle_arrays(df, text_col, id_col, n).select(
-        "doc", F.explode("sh_arr").alias("shingle")
-    )
-
-
 def ngram_jaccard_pairs(
     df: DataFrame,
     text_col: str = "text",

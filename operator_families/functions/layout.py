@@ -155,35 +155,3 @@ def with_hilbert_key(
     return cur.select(*cols, F.col("_hd").alias(out))
 
 
-def hilbert_key_sql(
-    select_cols: str,
-    x: str,
-    y: str,
-    src: str,
-    out: str = "hkey",
-    bits: int = ZORDER_BITS,
-) -> str:
-    """The DuckDB twin: a generated chain of nested selects mirroring
-    :func:`with_hilbert_key` round for round.  ``select_cols`` are the
-    carried passthrough columns; ``src`` is a table or subquery."""
-    n = 1 << bits
-    mask = n - 1
-    q = (
-        f"SELECT {select_cols}, CAST({x} AS BIGINT) & {mask} AS hx, "
-        f"CAST({y} AS BIGINT) & {mask} AS hy, "
-        f"CAST(0 AS BIGINT) AS hd FROM {src}"
-    )
-    for b in range(bits - 1, -1, -1):
-        s = 1 << b
-        rx = f"((hx >> {b}) & 1)"
-        ry = f"((hy >> {b}) & 1)"
-        q = (
-            f"SELECT {select_cols}, "
-            f"CASE WHEN {ry} = 1 THEN hx "
-            f"WHEN {rx} = 1 THEN {n - 1} - hy ELSE hy END AS hx, "
-            f"CASE WHEN {ry} = 1 THEN hy "
-            f"WHEN {rx} = 1 THEN {n - 1} - hx ELSE hx END AS hy, "
-            f"hd + {s * s} * (xor(3 * {rx}, {ry})) AS hd "
-            f"FROM ({q})"
-        )
-    return f"SELECT {select_cols}, hd AS {out} FROM ({q})"

@@ -372,15 +372,6 @@ def vocab_coverage(
     )
 
 
-#: Linear quality-classifier weights, numerators over 100 (fixed public
-#: stand-in for a trained fasttext/logreg head: stopword share and length
-#: signals up-weight prose, punctuation noise down-weights it).
-QUALITY_CLASSIFIER_WEIGHTS = {
-    "stopword_ratio": 30,
-    "length_saturation": 25,   # min(n_tokens, 200) / 200
-    "token_len_saturation": 25,  # min(total_token_chars, 8*n) / 8n
-    "punct_ratio": -20,
-}
 #: keep iff score >= 22/100 (splits the synthetic corpus near its median;
 #: a trained head would set this from validation data).
 QUALITY_CLASSIFIER_THRESHOLD = (22, 100)

@@ -466,20 +466,6 @@ def robots_rule_regex(rule) -> F.Column:
     return F.concat(F.lit("^"), body)
 
 
-def robots_rule_regex_sql(col: str) -> str:
-    """The same translation as ANSI SQL text over column ``col`` —
-    built from the same ROBOTS_ESCAPES table so the DuckDB oracle
-    cannot drift from the Spark implementation."""
-    e = col
-    for s, r in ROBOTS_ESCAPES:
-        sq, rq = s.replace("'", "''"), r.replace("'", "''")
-        e = f"replace({e}, '{sq}', '{rq}')"
-    return (
-        f"('^' || CASE WHEN {col} LIKE '%$' "
-        f"THEN substr({e}, 1, length({e}) - 2) || '$' ELSE {e} END)"
-    )
-
-
 def robots_decisions(
     urls: DataFrame,
     robots: DataFrame,

@@ -1,8 +1,7 @@
 """r10 analysis gates: foreign-oracle string similarity, classical
-hypothesis testing, quantile-forecast evaluation, and symbolic
-time-series representation.
+hypothesis testing.
 
-Four first-class operators (X181-X184), each oracle-gated:
+Each operator is oracle-gated:
 
 - ``text_jaro_winkler``: blocked candidate pairs scored by a pure-Python
   Jaro-Winkler Arrow kernel (Spark has no built-in), hash-checked
@@ -12,10 +11,6 @@ Four first-class operators (X181-X184), each oracle-gated:
   pattern.
 - ``stats_anova_f``: one-way ANOVA with a deterministic left-fold over
   sorted group stats for the one order-sensitive double reduction.
-- ``ml_pinball_loss``: quantile-loss evaluation at tau in {.1,.5,.9},
-  exact decimal per-row terms.
-- ``events_sax_symbols``: SAX symbolization of per-type daily counts
-  (integer-exact normalization inputs).
 """
 
 from __future__ import annotations
@@ -23,9 +18,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from nl_railtraffic_etl_pipeline_spark.plans.testdata import load_table
+
 from .oracle_util import round_sql as _round_sql
 from .registry import query
-from .testdata import load_table
 
 # ---------------------------------------------------------------------------
 # Jaro-Winkler similarity over blocked candidate pairs
@@ -273,255 +269,3 @@ def _stats_anova_f(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events", spread=True)
     return anova_f(e, "event_type", "value")
 
-
-# ---------------------------------------------------------------------------
-# Pinball (quantile) loss at tau in {0.1, 0.5, 0.9}
-# (functions/mleval.py::pinball_loss).  The quantile forecast is the
-# hash-derived deterministic prediction q = (h32('pin:'||event_id) %
-# 8000) / 10 — the repo's shared md5 contract, so both engines score the
-# SAME forecast; every per-row term is exact decimal, one closing mean
-# division.
-# ---------------------------------------------------------------------------
-_PIN_H = (
-    "CAST(('0x' || substr(md5('pin:' || CAST(event_id AS VARCHAR)), 1, 8)) "
-    "AS BIGINT)"
-)
-
-
-@query(
-    "ml_pinball_loss",
-    f"""
-WITH b AS (
-    SELECT CAST(CAST(value AS VARCHAR) AS DECIMAL(18,6)) AS y,
-           CAST({_PIN_H} % 8000 AS DECIMAL(18,6))
-               * CAST(0.1 AS DECIMAL(2,1)) AS q
-    FROM events WHERE value IS NOT NULL AND event_id IS NOT NULL
-),
-t AS (
-    SELECT y, q, unnest([1, 5, 9]) AS t10 FROM b
-),
-loss AS (
-    SELECT t10,
-           greatest(
-               CAST(t10 AS DECIMAL(3,1)) / 10 * (y - q),
-               (CAST(t10 AS DECIMAL(3,1)) / 10 - 1) * (y - q)
-           ) AS term
-    FROM t
-)
-SELECT CAST(t10 AS DOUBLE) / 10 AS tau,
-       CAST(COUNT(*) AS BIGINT) AS n,
-       ROUND(CAST(SUM(term) AS DOUBLE) / COUNT(*), 9) AS pinball
-FROM loss GROUP BY t10
-ORDER BY tau
-""",
-)
-def _ml_pinball_loss(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.mleval import pinball_loss
-    from ..functions.text import hash32
-
-    e = load_table(spark, sf_dir, "events", spread=True).filter(
-        F.col("event_id").isNotNull()
-    )
-    pred = (
-        hash32(F.concat(F.lit("pin:"), F.col("event_id").cast("string")))
-        % 8000
-    ).cast("double") / 10
-    return pinball_loss(
-        e.withColumn("_pred", pred), "_pred", y_col="value"
-    )
-
-
-# ---------------------------------------------------------------------------
-# SAX symbolization of per-type daily counts
-# (functions/stats.py::sax_symbols): z-normalize the integer daily
-# counts within each event type and map to the 4-letter Gaussian-
-# quartile alphabet.  All normalization inputs are exact BIGINT sums;
-# z and the breakpoint comparisons are one fixed IEEE op tree.
-# ---------------------------------------------------------------------------
-@query(
-    "events_sax_symbols",
-    """
-WITH daily AS (
-    SELECT event_type, CAST(ts AS DATE) AS day,
-           CAST(COUNT(*) AS BIGINT) AS n
-    FROM events
-    WHERE event_type IS NOT NULL AND ts IS NOT NULL
-    GROUP BY 1, 2
-),
-st AS (
-    SELECT event_type, day, n,
-           COUNT(*) OVER (PARTITION BY event_type) AS k,
-           SUM(n) OVER (PARTITION BY event_type) AS s,
-           SUM(n * n) OVER (PARTITION BY event_type) AS ss
-    FROM daily
-),
-z AS (
-    SELECT event_type, day, n, k,
-           (CAST(ss AS DOUBLE) - CAST(s AS DOUBLE) * CAST(s AS DOUBLE)
-                / CAST(k AS DOUBLE)) / (CAST(k AS DOUBLE) - 1) AS sd2,
-           (CAST(n AS DOUBLE) - CAST(s AS DOUBLE) / CAST(k AS DOUBLE))
-               AS num
-    FROM st
-)
-SELECT event_type, day, n,
-       CASE WHEN k > 1 AND sd2 > 0
-            THEN ROUND(num / sqrt(sd2), 6) END AS z,
-       CASE WHEN k > 1 AND sd2 > 0 THEN
-           CASE WHEN num / sqrt(sd2) < -0.6745 THEN 'a'
-                WHEN num / sqrt(sd2) < 0 THEN 'b'
-                WHEN num / sqrt(sd2) < 0.6745 THEN 'c'
-                ELSE 'd' END
-       END AS sym
-FROM z
-""",
-)
-def _events_sax_symbols(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.stats import sax_symbols
-
-    e = load_table(spark, sf_dir, "events", spread=True)
-    return sax_symbols(e, "event_type")
-
-
-# ---------------------------------------------------------------------------
-# Kruskal-Wallis H across event types (functions/stats.py::
-# kruskal_wallis) — the rank-based companion to stats_anova_f, with
-# textbook midrank ties (doubled ranks keep every rank sum an exact
-# BIGINT) and the tie correction.  The oracle mirrors the doubled-rank
-# cumulative over the distinct-value frame, the value-keyed join back
-# to facts, and the same strict left fold over sorted group stats.
-# ---------------------------------------------------------------------------
-@query(
-    "stats_kruskal_wallis",
-    """
-WITH b AS (
-    SELECT event_type AS g, value AS v
-    FROM events WHERE event_type IS NOT NULL AND value IS NOT NULL
-),
-vc AS (SELECT v, CAST(COUNT(*) AS BIGINT) AS t FROM b GROUP BY v),
-rk AS (
-    SELECT v, t,
-           CAST(2 * COALESCE(SUM(t) OVER (ORDER BY v
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-               + t + 1 AS BIGINT) AS r2
-    FROM vc
-),
-per AS (
-    SELECT b.g, CAST(COUNT(*) AS BIGINT) AS ng,
-           CAST(SUM(rk.r2) AS BIGINT) AS s2
-    FROM b JOIN rk ON b.v = rk.v
-    GROUP BY b.g
-),
-fr AS (
-    SELECT CAST(COUNT(*) AS BIGINT) AS k,
-           CAST(SUM(ng) AS BIGINT) AS n,
-           list_reduce(
-               list_prepend(
-                   CAST(0 AS DOUBLE),
-                   list(CAST(s2 AS DOUBLE) * CAST(s2 AS DOUBLE) / ng
-                        ORDER BY g)
-               ),
-               (x, y) -> x + y
-           ) AS fold
-    FROM per
-),
-tr AS (SELECT CAST(SUM(t * t * t - t) AS BIGINT) AS tie FROM vc)
-SELECT k, n,
-       CASE WHEN k > 1 AND n > k THEN
-           ROUND(CAST(3 AS DOUBLE) * fold
-                     / (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) + 1))
-                 - CAST(3 AS DOUBLE) * (CAST(n AS DOUBLE) + 1), 9)
-       END AS h_stat,
-       CASE WHEN k > 1 AND n > k AND CAST(n AS DOUBLE) > 1 THEN
-           ROUND(CAST(1 AS DOUBLE) - CAST(tie AS DOUBLE)
-                 / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)
-                    * CAST(n AS DOUBLE) - CAST(n AS DOUBLE)), 9)
-       END AS tie_correction,
-       CASE WHEN k > 1 AND n > k
-                 AND CAST(1 AS DOUBLE) - CAST(tie AS DOUBLE)
-                     / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)
-                        * CAST(n AS DOUBLE) - CAST(n AS DOUBLE)) > 0
-            THEN
-           ROUND((CAST(3 AS DOUBLE) * fold
-                      / (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) + 1))
-                  - CAST(3 AS DOUBLE) * (CAST(n AS DOUBLE) + 1))
-                 / (CAST(1 AS DOUBLE) - CAST(tie AS DOUBLE)
-                    / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)
-                       * CAST(n AS DOUBLE) - CAST(n AS DOUBLE))), 9)
-       END AS h_corrected
-FROM fr CROSS JOIN tr
-""",
-)
-def _stats_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.stats import kruskal_wallis
-
-    e = load_table(spark, sf_dir, "events", spread=True)
-    return kruskal_wallis(e, "event_type", "value")
-
-
-# ---------------------------------------------------------------------------
-# Brown-Forsythe Levene test (functions/stats.py::levene_bf) — equality
-# of group variances via ANOVA over |value - group median|, the robust
-# variant scipy computes with center='median'.  The center is the LOWER
-# median (the element at 1-indexed position (n+1)//2 in sort order) so
-# both engines select the same concrete value with no interpolation
-# convention in play; z rides exact decimals and the closing arithmetic
-# is the anova_close fold contract verbatim (list_reduce over sorted
-# group stats).
-# ---------------------------------------------------------------------------
-@query(
-    "stats_levene_bf",
-    """
-WITH b AS (
-    SELECT event_type AS g,
-           CAST(CAST(value AS VARCHAR) AS DECIMAL(18,6)) AS dv
-    FROM events WHERE event_type IS NOT NULL AND value IS NOT NULL
-),
-m AS (
-    SELECT g, dv AS med FROM (
-        SELECT g, dv,
-               ROW_NUMBER() OVER (PARTITION BY g ORDER BY dv) AS rn,
-               COUNT(*) OVER (PARTITION BY g) AS ng
-        FROM b
-    ) WHERE rn = (ng + 1) // 2
-),
-z AS (
-    SELECT b.g,
-           CAST(CAST(ABS(b.dv - m.med) AS VARCHAR) AS DECIMAL(18,6)) AS dz
-    FROM b JOIN m USING (g)
-),
-gg AS (
-    SELECT g, COUNT(*) AS ng, SUM(dz) AS sg, SUM(dz * dz) AS ssg
-    FROM z GROUP BY 1
-),
-r AS (
-    SELECT CAST(COUNT(*) AS BIGINT) AS k,
-           CAST(SUM(ng) AS BIGINT) AS n,
-           CAST(SUM(sg) AS DOUBLE) AS s,
-           CAST(SUM(ssg) AS DOUBLE) AS ss,
-           list_reduce(
-               list_prepend(
-                   CAST(0 AS DOUBLE),
-                   list(CAST(sg AS DOUBLE) * CAST(sg AS DOUBLE) / ng
-                        ORDER BY g)
-               ),
-               (x, y) -> x + y
-           ) AS fold
-    FROM gg
-)
-SELECT k, n,
-       ROUND(fold - s * s / n, 6) AS ssb,
-       ROUND((ss - s * s / n) - (fold - s * s / n), 6) AS ssw,
-       CASE WHEN k > 1 AND n > k
-                 AND (ss - s * s / n) - (fold - s * s / n) > 0
-            THEN ROUND(
-                ((fold - s * s / n) / (k - 1))
-                / (((ss - s * s / n) - (fold - s * s / n)) / (n - k)), 9)
-       END AS w_stat
-FROM r
-""",
-)
-def _stats_levene_bf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.stats import levene_bf
-
-    e = load_table(spark, sf_dir, "events", spread=True)
-    return levene_bf(e, "event_type", "value")

@@ -14,9 +14,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from nl_railtraffic_etl_pipeline_spark.plans.testdata import load_table
+
 from ..functions.behavior import cohort_retention, event_transitions, funnel
 from .registry import query
-from .testdata import load_table
 
 _FUNNEL_STAGES = ("view", "click", "purchase")
 
@@ -609,62 +610,6 @@ def _trailing_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# RFM segmentation (behavior.rfm_segments): per-user recency/frequency/
-# monetary scores against EXACT corpus quartiles (two-pass broadcast, no
-# global NTILE window — the whale-safe formulation; see the docstring).
-# ---------------------------------------------------------------------------
-from ..functions.behavior import rfm_segments  # noqa: E402
-
-
-@query(
-    "events_rfm_segments",
-    f"""
-WITH per_user AS (
-    SELECT user_id,
-           CAST(date_diff('day', CAST(max(ts) AS DATE),
-                          (SELECT CAST(max(ts) AS DATE) FROM events))
-                AS INTEGER) AS recency_days,
-           CAST(COUNT(*) AS BIGINT) AS frequency,
-           CAST(SUM(CAST(CAST(value AS VARCHAR) AS DECIMAL(24,10)))
-                AS DOUBLE) AS monetary
-    FROM events GROUP BY user_id
-),
-q AS (
-    SELECT quantile_cont(recency_days, 0.25) AS r1,
-           quantile_cont(recency_days, 0.5) AS r2,
-           quantile_cont(recency_days, 0.75) AS r3,
-           quantile_cont(frequency, 0.25) AS f1,
-           quantile_cont(frequency, 0.5) AS f2,
-           quantile_cont(frequency, 0.75) AS f3,
-           quantile_cont(monetary, 0.25) AS m1,
-           quantile_cont(monetary, 0.5) AS m2,
-           quantile_cont(monetary, 0.75) AS m3
-    FROM per_user
-),
-scored AS (
-    SELECT user_id, recency_days, frequency,
-           {_round_sql('monetary', 4)} AS monetary,
-           CAST(1 + CAST(recency_days < r1 AS INTEGER)
-                  + CAST(recency_days < r2 AS INTEGER)
-                  + CAST(recency_days < r3 AS INTEGER) AS INTEGER) AS r_score,
-           CAST(1 + CAST(frequency > f1 AS INTEGER)
-                  + CAST(frequency > f2 AS INTEGER)
-                  + CAST(frequency > f3 AS INTEGER) AS INTEGER) AS f_score,
-           CAST(1 + CAST(monetary > m1 AS INTEGER)
-                  + CAST(monetary > m2 AS INTEGER)
-                  + CAST(monetary > m3 AS INTEGER) AS INTEGER) AS m_score
-    FROM per_user, q
-)
-SELECT *, CAST(r_score AS VARCHAR) || CAST(f_score AS VARCHAR)
-          || CAST(m_score AS VARCHAR) AS segment
-FROM scored
-""",
-)
-def _events_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return rfm_segments(load_table(spark, sf_dir, "events", spread=True))
-
-
-# ---------------------------------------------------------------------------
 # Statistical moments family (functions/stats.py): exact-decimal sums ->
 # one double cast -> fixed IEEE chain (+ correctly-rounded sqrt), so
 # mean/std/z/r/slope hash-match the oracle bit-for-bit — the thing
@@ -818,588 +763,6 @@ def _events_daily_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Window-primitive catalog: first_value / nth_value / cume_dist under a
-# total order (value, event_id) — the remaining SQL window primitives not
-# exercised by the rail/behavior gates.  cume_dist is rank/count (one
-# exact integer division), identical cross-engine under the unique order.
-# ---------------------------------------------------------------------------
-@query(
-    "events_window_catalog",
-    f"""
-SELECT event_id, event_type, value,
-       FIRST_VALUE(value) OVER w AS first_val,
-       NTH_VALUE(value, 3) OVER w AS third_val,
-       {_round_sql('CUME_DIST() OVER w', 6)} AS cume
-FROM events
-WHERE user_id % 97 = 0
-WINDOW w AS (PARTITION BY event_type ORDER BY value, event_id)
-""",
-)
-def _events_window_catalog(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    ev = load_table(spark, sf_dir, "events", spread=True).filter(
-        F.col("user_id") % 97 == 0
-    )
-    w = Window.partitionBy("event_type").orderBy(
-        F.col("value").asc(), F.col("event_id").asc()
-    )
-    return ev.select(
-        "event_id",
-        "event_type",
-        "value",
-        F.first("value").over(w).alias("first_val"),
-        F.nth_value("value", 3).over(w).alias("third_val"),
-        F.round(F.cume_dist().over(w), 6).alias("cume"),
-    )
-
-
-@query(
-    "events_ntile_buckets",
-    # NTILE with a bucket count that does NOT divide the partition size
-    # (7) alongside the even quartile case — the remainder distribution
-    # (first n%k buckets get one extra row) must agree across engines,
-    # which it does given the explicit (value, event_id) total order.
-    """
-SELECT event_id, event_type, value,
-       CAST(NTILE(4) OVER w AS INTEGER) AS quartile,
-       CAST(NTILE(7) OVER w AS INTEGER) AS septile
-FROM events
-WHERE value IS NOT NULL AND user_id % 31 = 0
-WINDOW w AS (PARTITION BY event_type ORDER BY value, event_id)
-""",
-)
-def _events_ntile_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ntile over a per-type total order — the one ranking window the
-    catalog gate (first/nth_value/cume_dist) and the rank family
-    (rail_q1..q5) did not yet cover."""
-    from pyspark.sql import Window
-
-    ev = load_table(spark, sf_dir, "events", spread=True).filter(
-        F.col("value").isNotNull() & (F.col("user_id") % 31 == 0)
-    )
-    w = Window.partitionBy("event_type").orderBy(
-        F.col("value").asc(), F.col("event_id").asc()
-    )
-    return ev.select(
-        "event_id",
-        "event_type",
-        "value",
-        F.ntile(4).over(w).alias("quartile"),
-        F.ntile(7).over(w).alias("septile"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# Interval-union coverage (functions/temporal.py): per-user union of the
-# [ts, ts + floor(value*60) s) activity intervals — merged seconds and
-# island counts, the complementary temporal aggregate to rail_q6's
-# who-overlaps join.  All integer epoch arithmetic; the oracle replays
-# the identical sweep (running-max window, island flags) in DuckDB.
-# ---------------------------------------------------------------------------
-from ..functions.temporal import interval_union  # noqa: E402
-
-
-@query(
-    "events_interval_coverage",
-    """
-WITH iv AS (
-    SELECT user_id,
-           CAST(floor(date_part('epoch', ts)) AS BIGINT) AS s,
-           CAST(floor(date_part('epoch', ts)) AS BIGINT)
-               + CAST(floor(value * 60) AS BIGINT) AS e,
-           event_id
-    FROM events
-    WHERE ts IS NOT NULL AND value IS NOT NULL AND value >= 0
-),
-swept AS (
-    SELECT user_id, s, e, event_id,
-           MAX(e) OVER (
-               PARTITION BY user_id ORDER BY s, e, event_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-           ) AS prev_max
-    FROM iv
-),
-flagged AS (
-    SELECT user_id, s, e,
-           CASE WHEN prev_max IS NULL OR s > prev_max THEN 1 ELSE 0 END
-               AS new_island,
-           ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY s, e, event_id)
-               AS rn
-    FROM swept
-),
-islands AS (
-    SELECT user_id, s, e,
-           SUM(new_island) OVER (
-               PARTITION BY user_id ORDER BY rn
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-           ) AS island
-    FROM flagged
-),
-per_island AS (
-    SELECT user_id, island, MIN(s) AS is_, MAX(e) AS ie
-    FROM islands GROUP BY user_id, island
-)
-SELECT user_id,
-       CAST(SUM(ie - is_) AS BIGINT) AS covered_seconds,
-       CAST(COUNT(*) AS BIGINT) AS n_islands
-FROM per_island GROUP BY user_id
-""",
-)
-def _events_interval_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events", spread=True).filter(
-        F.col("ts").isNotNull()
-        & F.col("value").isNotNull()
-        & (F.col("value") >= 0)
-    )
-    iv = ev.select(
-        "user_id",
-        "event_id",
-        F.col("ts").alias("start_ts"),
-        (
-            F.col("ts")
-            + F.make_interval(
-                secs=F.floor(F.col("value") * 60).cast("bigint")
-            )
-        ).alias("end_ts"),
-    )
-    return interval_union(
-        iv, "user_id", "start_ts", "end_ts", "event_id"
-    )
-
-
-# ---------------------------------------------------------------------------
-# Sequence-pattern matching (the MATCH_RECOGNIZE class, reduced to its
-# regex core): each user's event history becomes an ordered initial
-# string (v/c/p/s/e), and the gate counts non-overlapping matches of two
-# behavioral patterns — view->purchase adjacency and view->clicks->
-# purchase.  Both engines scan regex matches left-to-right non-
-# overlapping, so the counts are exact.  Scale: one user-keyed shuffle;
-# the per-user string is activity-bounded (whale users would need the
-# chunked variant documented in temporal.py).
-# ---------------------------------------------------------------------------
-_SEQ_PATTERNS = {"vp_adjacent": "vp", "v_clicks_p": "vc+p"}
-
-
-@query(
-    "events_sequence_pattern",
-    f"""
-WITH seqs AS (
-    SELECT user_id,
-           string_agg(substr(event_type, 1, 1), '' ORDER BY ts, event_id)
-               AS seq
-    FROM events GROUP BY user_id
-)
-SELECT user_id,
-       CAST(length(seq) AS BIGINT) AS n_events,
-       CAST(len(regexp_extract_all(seq,
-           '{_SEQ_PATTERNS["vp_adjacent"]}')) AS BIGINT) AS vp_adjacent,
-       CAST(len(regexp_extract_all(seq,
-           '{_SEQ_PATTERNS["v_clicks_p"]}')) AS BIGINT) AS v_clicks_p
-FROM seqs
-WHERE user_id % 7 = 0
-""",
-)
-def _events_sequence_pattern(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events", spread=True).filter(
-        F.col("user_id") % 7 == 0
-    )
-    seqs = (
-        ev.select(
-            "user_id",
-            F.struct(
-                F.col("ts"), F.col("event_id"),
-                F.substring("event_type", 1, 1).alias("ch"),
-            ).alias("_s"),
-        )
-        .groupBy("user_id")
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list("_s")), lambda s: s["ch"]
-                ),
-                "",
-            ).alias("seq")
-        )
-    )
-    return seqs.select(
-        "user_id",
-        F.length("seq").cast("bigint").alias("n_events"),
-        F.size(
-            F.regexp_extract_all(
-                F.col("seq"), F.lit(_SEQ_PATTERNS["vp_adjacent"]), 0
-            )
-        ).cast("bigint").alias("vp_adjacent"),
-        F.size(
-            F.regexp_extract_all(
-                F.col("seq"), F.lit(_SEQ_PATTERNS["v_clicks_p"]), 0
-            )
-        ).cast("bigint").alias("v_clicks_p"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# Robust statistics: median absolute deviation per type (the outlier
-# scale estimator variance-based zscores miss).  Two sort-based exact
-# medians (value, then |value - median|) — the second pass joins the
-# 6-row median table back as a broadcast, so the fact shuffles twice on
-# the same small key and nothing else moves.  The 3*MAD outlier fence is
-# one IEEE multiply on both engines — identical operands, identical
-# result, deterministic membership.
-# ---------------------------------------------------------------------------
-@query(
-    "events_mad_robust",
-    """
-WITH med AS (
-    SELECT event_type, quantile_cont(value, 0.5) AS median_value
-    FROM events GROUP BY event_type
-),
-dev AS (
-    SELECT e.event_type, e.value, m.median_value,
-           abs(e.value - m.median_value) AS adev
-    FROM events e JOIN med m USING (event_type)
-),
-mad AS (
-    SELECT event_type, median_value,
-           quantile_cont(adev, 0.5) AS mad_value
-    FROM dev GROUP BY event_type, median_value
-)
-SELECT d.event_type,
-       ROUND(d.median_value, 6) AS median_value,
-       ROUND(m.mad_value, 6) AS mad_value,
-       CAST(SUM(CASE WHEN d.adev > 3 * m.mad_value THEN 1 ELSE 0 END)
-            AS BIGINT) AS n_outliers,
-       CAST(COUNT(*) AS BIGINT) AS n
-FROM dev d JOIN mad m USING (event_type)
-GROUP BY d.event_type, d.median_value, m.mad_value
-""",
-)
-def _events_mad_robust(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events", spread=True)
-    med = ev.groupBy("event_type").agg(
-        F.percentile("value", 0.5).alias("median_value")
-    )
-    dev = ev.join(F.broadcast(med), "event_type").withColumn(
-        "adev", F.abs(F.col("value") - F.col("median_value"))
-    )
-    mad = dev.groupBy("event_type", "median_value").agg(
-        F.percentile("adev", 0.5).alias("mad_value")
-    )
-    return (
-        dev.join(F.broadcast(mad.drop("median_value")), "event_type")
-        .groupBy("event_type", "median_value", "mad_value")
-        .agg(
-            F.sum(
-                F.when(F.col("adev") > 3 * F.col("mad_value"), 1).otherwise(0)
-            ).alias("n_outliers"),
-            F.count("*").alias("n"),
-        )
-        .select(
-            "event_type",
-            F.round("median_value", 6).alias("median_value"),
-            F.round("mad_value", 6).alias("mad_value"),
-            "n_outliers",
-            "n",
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# Time-weighted average (TWAP): each observation holds until the next
-# one, so its weight is the gap to the successor — the telemetry/finance
-# average that plain AVG gets wrong under irregular sampling.  One
-# user-keyed shuffle, a lead window for the gap, exact DECIMAL x BIGINT
-# products, one IEEE division per user at the very end.
-# ---------------------------------------------------------------------------
-@query(
-    "events_time_weighted_avg",
-    """
-WITH obs AS (
-    SELECT user_id,
-           CAST(CAST(value AS VARCHAR) AS DECIMAL(18,6)) AS v,
-           LEAD(CAST(floor(date_part('epoch', ts)) AS BIGINT)) OVER w
-               - CAST(floor(date_part('epoch', ts)) AS BIGINT) AS dur
-    FROM events
-    WHERE user_id % 5 = 0
-    WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-)
-SELECT user_id,
-       CAST(SUM(dur) AS BIGINT) AS held_seconds,
-       ROUND(CAST(SUM(v * dur) AS DOUBLE) / CAST(SUM(dur) AS DOUBLE), 6)
-           AS twap
-FROM obs WHERE dur IS NOT NULL
-GROUP BY user_id
-HAVING SUM(dur) > 0
-""",
-)
-def _events_twap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    ev = load_table(spark, sf_dir, "events", spread=True).filter(
-        F.col("user_id") % 5 == 0
-    )
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    epoch = F.unix_timestamp("ts")
-    obs = ev.select(
-        "user_id",
-        F.col("value").cast("string").cast("decimal(18,6)").alias("v"),
-        (F.lead(epoch).over(w) - epoch).alias("dur"),
-    ).filter(F.col("dur").isNotNull())
-    return (
-        obs.groupBy("user_id")
-        .agg(
-            F.sum("dur").alias("held_seconds"),
-            F.round(
-                F.sum(F.col("v") * F.col("dur")).cast("double")
-                / F.sum("dur").cast("double"),
-                6,
-            ).alias("twap"),
-        )
-        .filter(F.col("held_seconds") > 0)
-    )
-
-
-# ---------------------------------------------------------------------------
-# Null-safe join semantics (`<=>` / IS NOT DISTINCT FROM): the join
-# family's last ungated member.  NULL keys (synthesized via NULLIF) must
-# MATCH each other under the null-safe operator — a plain equi-join
-# silently drops them, the classic dimension-bridge bug.
-# ---------------------------------------------------------------------------
-@query(
-    "events_nullsafe_join",
-    """
-WITH a AS (
-    SELECT NULLIF(user_id % 10, 3) AS k, CAST(COUNT(*) AS BIGINT) AS n_view
-    FROM events WHERE event_type = 'view' GROUP BY 1
-),
-b AS (
-    SELECT NULLIF(user_id % 10, 3) AS k,
-           CAST(COUNT(*) AS BIGINT) AS n_purchase
-    FROM events WHERE event_type = 'purchase' GROUP BY 1
-)
-SELECT a.k, a.n_view, b.n_purchase
-FROM a JOIN b ON a.k IS NOT DISTINCT FROM b.k
-""",
-)
-def _events_nullsafe_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events", spread=True)
-    k = F.nullif(F.col("user_id") % 10, F.lit(3)).alias("k")
-    a = (
-        ev.filter(F.col("event_type") == "view")
-        .groupBy(k)
-        .agg(F.count("*").alias("n_view"))
-    )
-    b = (
-        ev.filter(F.col("event_type") == "purchase")
-        .groupBy(k)
-        .agg(F.count("*").alias("n_purchase"))
-    )
-    return a.join(b, a["k"].eqNullSafe(b["k"])).select(
-        a["k"], "n_view", "n_purchase"
-    )
-
-
-# ---------------------------------------------------------------------------
-# Lag-1 autocorrelation per type (stats.pearson_corr over a lead/lag
-# pairing): the time-series memory signal.  The pair frame drops the
-# first row per partition (lag undefined) BEFORE the moment sums so n
-# and the sums agree cross-engine; the correlation itself is the exact
-# decimal cross-moment formula already gated by events_hour_value_corr.
-# ---------------------------------------------------------------------------
-@query(
-    "events_autocorrelation",
-    f"""
-WITH lagged AS (
-    SELECT event_type, value,
-           LAG(value) OVER (
-               PARTITION BY event_type ORDER BY ts, event_id
-           ) AS prev_value
-    FROM events
-),
-pairs AS (SELECT * FROM lagged WHERE prev_value IS NOT NULL),
-agg AS (
-    SELECT event_type,
-           CAST(COUNT(*) AS BIGINT) AS n,
-           CAST(SUM({_DECV}) AS DOUBLE) AS sx,
-           CAST(SUM(CAST(CAST(prev_value AS VARCHAR) AS DECIMAL(18,6)))
-               AS DOUBLE) AS sy,
-           CAST(SUM({_DECV} * {_DECV}) AS DOUBLE) AS sxx,
-           CAST(SUM(CAST(CAST(prev_value AS VARCHAR) AS DECIMAL(18,6))
-                    * CAST(CAST(prev_value AS VARCHAR) AS DECIMAL(18,6)))
-               AS DOUBLE) AS syy,
-           CAST(SUM({_DECV}
-                    * CAST(CAST(prev_value AS VARCHAR) AS DECIMAL(18,6)))
-               AS DOUBLE) AS sxy
-    FROM pairs GROUP BY event_type
-)
-SELECT event_type, n,
-       {_round_sql(
-           'CASE WHEN greatest(n * sxx - sx * sx, 0.0) > 0 '
-           'AND greatest(n * syy - sy * sy, 0.0) > 0 THEN '
-           '(n * sxy - sx * sy) / (sqrt(greatest(n * sxx - sx * sx, 0.0))'
-           ' * sqrt(greatest(n * syy - sy * sy, 0.0))) END', 6
-       )} AS r
-FROM agg
-""",
-)
-def _events_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    ev = load_table(spark, sf_dir, "events", spread=True)
-    w = Window.partitionBy("event_type").orderBy("ts", "event_id")
-    pairs = ev.select(
-        "event_type", "value", F.lag("value").over(w).alias("prev_value")
-    ).filter(F.col("prev_value").isNotNull())
-    c = stats.pearson_corr(pairs, "value", "prev_value", ["event_type"])
-    return c.select("event_type", "n", F.round("r", 6).alias("r"))
-
-
-# ---------------------------------------------------------------------------
-# Cumulative distinct users by day (growth accounting): each user's
-# first-seen day (one user-keyed MIN), daily new-user counts, and the
-# running total — which IS the exact cumulative distinct-user curve,
-# computed without any day x user re-scan.  All integers.
-# ---------------------------------------------------------------------------
-@query(
-    "events_cumulative_users",
-    """
-WITH first_seen AS (
-    SELECT user_id, MIN(CAST(ts AS DATE)) AS day FROM events
-    GROUP BY user_id
-),
-daily AS (
-    SELECT day, CAST(COUNT(*) AS BIGINT) AS new_users
-    FROM first_seen GROUP BY day
-)
-SELECT day, new_users,
-       CAST(SUM(new_users) OVER (
-           ORDER BY day ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-       ) AS BIGINT) AS cumulative_users
-FROM daily
-""",
-)
-def _events_cumulative_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    ev = load_table(spark, sf_dir, "events", spread=True)
-    first_seen = ev.groupBy("user_id").agg(
-        F.min(F.to_date("ts")).alias("day")
-    )
-    daily = first_seen.groupBy("day").agg(F.count("*").alias("new_users"))
-    w = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, 0)
-    # the running total runs over the DAY-GRAIN frame (rows = distinct
-    # days), so the single-partition window is bounded and cheap — the
-    # user-scale work happened in the two keyed aggregations before it
-    return daily.select(
-        "day",
-        "new_users",
-        F.sum("new_users").over(w).alias("cumulative_users"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# Rolling exact median (7-row trailing window): Spark 4 supports the
-# sort-based `percentile` aggregate OVER a row frame, and DuckDB's
-# windowed quantile_cont shares the interpolation contract already
-# proven by events_type_quantiles — so the rolling median is exact, not
-# a sketch.  One key shuffle; the frame re-sort is per-partition.
-# ---------------------------------------------------------------------------
-@query(
-    "events_rolling_median",
-    """
-SELECT event_id, event_type,
-       ROUND(quantile_cont(value, 0.5) OVER (
-           PARTITION BY event_type ORDER BY ts, event_id
-           ROWS BETWEEN 6 PRECEDING AND CURRENT ROW
-       ), 6) AS rolling_median
-FROM events WHERE user_id % 13 = 0
-""",
-)
-def _events_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    ev = load_table(spark, sf_dir, "events", spread=True).filter(
-        F.col("user_id") % 13 == 0
-    )
-    w = (
-        Window.partitionBy("event_type")
-        .orderBy("ts", "event_id")
-        .rowsBetween(-6, 0)
-    )
-    return ev.select(
-        "event_id",
-        "event_type",
-        F.round(F.percentile("value", 0.5).over(w), 6).alias(
-            "rolling_median"
-        ),
-    )
-
-
-# ---------------------------------------------------------------------------
-# Maximum drawdown per user (the finance/telemetry sequential metric):
-# cumulative value curve, running peak, worst peak-to-trough gap.  The
-# classic "needs a loop" computation expressed as two stacked windows
-# over ONE user-keyed shuffle — prefix sum, running max, one aggregate.
-# All sums are exact DECIMAL, so the curve and its extremes are
-# bit-identical cross-engine.
-# ---------------------------------------------------------------------------
-@query(
-    "events_max_drawdown",
-    """
-WITH curve AS (
-    SELECT user_id,
-           SUM(CAST(CAST(value AS VARCHAR) AS DECIMAL(18,6))) OVER (
-               PARTITION BY user_id ORDER BY ts, event_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-           ) AS cum,
-           ts, event_id
-    FROM events WHERE user_id % 11 = 0
-),
-peaks AS (
-    SELECT user_id, cum,
-           MAX(cum) OVER (
-               PARTITION BY user_id ORDER BY ts, event_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-           ) AS peak
-    FROM curve
-)
-SELECT user_id,
-       ROUND(CAST(MAX(peak - cum) AS DOUBLE), 6) AS max_drawdown,
-       ROUND(CAST(MAX(peak) AS DOUBLE), 6) AS peak_value,
-       ROUND(CAST(MAX(cum) AS DOUBLE), 6) AS final_peak_check
-FROM peaks GROUP BY user_id
-""",
-)
-def _events_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    ev = load_table(spark, sf_dir, "events", spread=True).filter(
-        F.col("user_id") % 11 == 0
-    )
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    curve = ev.select(
-        "user_id",
-        "ts",
-        "event_id",
-        F.sum(F.col("value").cast("string").cast("decimal(18,6)"))
-        .over(w)
-        .alias("cum"),
-    )
-    peaks = curve.withColumn("peak", F.max("cum").over(w))
-    return peaks.groupBy("user_id").agg(
-        F.round(
-            F.max(F.col("peak") - F.col("cum")).cast("double"), 6
-        ).alias("max_drawdown"),
-        F.round(F.max("peak").cast("double"), 6).alias("peak_value"),
-        F.round(F.max("cum").cast("double"), 6).alias("final_peak_check"),
-    )
-
-
-# ---------------------------------------------------------------------------
 # OHLC bars: the time-series downsample every market/telemetry pipeline
 # runs — per user x hour: first value (open), max (high), min (low),
 # last value (close), count.  The scale-correct plan is ONE hash
@@ -1441,85 +804,6 @@ def _ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("hour", F.date_trunc("hour", "ts"))
     )
     return ohlc_bars(ev, ["user_id", "hour"])
-
-
-# ---------------------------------------------------------------------------
-# Pareto frontier (skyline): per event_type, the points not weakly
-# dominated on (recency, value) — r survives iff no s has s.ts >= r.ts
-# AND s.value >= r.value with one strict.  The quadratic NOT-EXISTS spec
-# is the oracle; the engine's plan is the O(n log n) sweep — collapse to
-# the per-ts max, then one ts-desc window keeps rows strictly above the
-# running max of everything later.  ONE key shuffle, no self-join: the
-# dominance test a naive engine writes as n^2 comparisons becomes a sort
-# the cluster already knows how to do.
-# ---------------------------------------------------------------------------
-@query(
-    "events_pareto_frontier",
-    """
-WITH m AS (
-    SELECT event_type, ts, MAX(value) AS value
-    FROM events
-    WHERE ts IS NOT NULL AND value IS NOT NULL AND event_type IS NOT NULL
-    GROUP BY event_type, ts
-)
-SELECT event_type, ts, value
-FROM m r
-WHERE NOT EXISTS (
-    SELECT 1 FROM m s
-    WHERE s.event_type = r.event_type
-      AND s.ts > r.ts AND s.value >= r.value
-)
-""",
-)
-def _pareto_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.behavior import pareto_frontier
-
-    ev = load_table(spark, sf_dir, "events", spread=True).filter(
-        F.col("ts").isNotNull()
-        & F.col("value").isNotNull()
-        & F.col("event_type").isNotNull()
-    )
-    return pareto_frontier(ev, ["event_type"])
-
-
-# ---------------------------------------------------------------------------
-# Top event trigrams (sequential pattern mining's frequency floor): the
-# 20 most common 3-step event-type paths across users, under the
-# engine-wide (ts, event_id) total order.  Plan: two leads over ONE
-# user-keyed shuffle build the trigram stream in place — no self-joins,
-# no explode — then a domain-bounded aggregate (<= |types|^3 groups) and
-# a fully tiebroken top-k that compiles to TakeOrderedAndProject (each
-# partition keeps its own 20, the driver merges 20 per partition).
-# ---------------------------------------------------------------------------
-@query(
-    "events_trigram_paths",
-    """
-WITH seq AS (
-    SELECT event_type AS e1,
-           lead(event_type, 1) OVER w AS e2,
-           lead(event_type, 2) OVER w AS e3
-    FROM events
-    WHERE ts IS NOT NULL AND event_type IS NOT NULL
-    WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-)
-SELECT e1, e2, e3, CAST(COUNT(*) AS BIGINT) AS n_paths
-FROM seq WHERE e2 IS NOT NULL AND e3 IS NOT NULL
-GROUP BY e1, e2, e3
-ORDER BY n_paths DESC, e1, e2, e3
-LIMIT 20
-""",
-)
-def _trigram_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.behavior import event_ngram_counts
-
-    ev = load_table(spark, sf_dir, "events", spread=True).filter(
-        F.col("ts").isNotNull() & F.col("event_type").isNotNull()
-    )
-    return (
-        event_ngram_counts(ev, n=3)
-        .orderBy(F.desc("n_paths"), "e1", "e2", "e3")
-        .limit(20)
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -2016,49 +1300,6 @@ def _winsorize_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("double"),
             6,
         ).alias("winsorized_sum"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# Modal hour per event_type — the argmax-over-counts classic (peak
-# activity hour).  Spark picks via lexicographic MAX(struct(n, -hour))
-# (ties toward the EARLIEST hour); the oracle replays with a
-# row_number window over (n DESC, hour) — different mechanisms that
-# must agree.  Two metadata-scale aggregates after one (type, hour)
-# partial-agg shuffle.
-# ---------------------------------------------------------------------------
-@query(
-    "events_modal_hour",
-    """
-WITH h AS (
-    SELECT event_type, EXTRACT(hour FROM ts) AS hr, COUNT(*) AS n
-    FROM events WHERE event_type IS NOT NULL
-    GROUP BY 1, 2
-)
-SELECT event_type, CAST(hr AS BIGINT) AS modal_hour, n AS n_events
-FROM (
-    SELECT *, row_number() OVER (PARTITION BY event_type
-                                 ORDER BY n DESC, hr) AS rn
-    FROM h
-) WHERE rn = 1
-""",
-)
-def _modal_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events", spread=True).filter(
-        F.col("event_type").isNotNull()
-    )
-    h = ev.groupBy(
-        "event_type", F.hour("ts").alias("hr")
-    ).agg(F.count("*").alias("n"))
-    best = h.groupBy("event_type").agg(
-        F.max(
-            F.struct(F.col("n"), (-F.col("hr")).alias("neg_hr"))
-        ).alias("b")
-    )
-    return best.select(
-        "event_type",
-        (-F.col("b.neg_hr")).cast("bigint").alias("modal_hour"),
-        F.col("b.n").alias("n_events"),
     )
 
 
@@ -3840,55 +3081,6 @@ def _peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Inter-arrival time quantiles per event type: the point-process health
-# readout (burstiness / dead-air).  Gaps are exact BIGINT microseconds
-# between a user's consecutive events; quantiles are the sort-based
-# interpolated exact family (quantile_cont twin).
-# ---------------------------------------------------------------------------
-@query(
-    "events_interarrival_quantiles",
-    """
-WITH g AS (
-    SELECT event_type,
-           epoch_us(ts) - LAG(epoch_us(ts)) OVER (
-               PARTITION BY user_id ORDER BY ts, event_id
-           ) AS gap_us
-    FROM events
-    WHERE user_id IS NOT NULL AND ts IS NOT NULL
-      AND event_type IS NOT NULL
-)
-SELECT event_type,
-       CAST(COUNT(gap_us) AS BIGINT) AS n_gaps,
-       ROUND(quantile_cont(gap_us, 0.5), 6) AS p50_us,
-       ROUND(quantile_cont(gap_us, 0.9), 6) AS p90_us,
-       ROUND(quantile_cont(gap_us, 0.99), 6) AS p99_us
-FROM g GROUP BY event_type
-""",
-)
-def _interarrival_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window as _W
-
-    ev = load_table(spark, sf_dir, "events", spread=True).filter(
-        F.col("user_id").isNotNull()
-        & F.col("ts").isNotNull()
-        & F.col("event_type").isNotNull()
-    )
-    w = _W.partitionBy("user_id").orderBy("ts", "event_id")
-    g = ev.select(
-        "event_type",
-        (
-            F.unix_micros("ts") - F.lag(F.unix_micros("ts")).over(w)
-        ).alias("gap_us"),
-    )
-    return g.groupBy("event_type").agg(
-        F.count("gap_us").alias("n_gaps"),
-        F.round(F.percentile("gap_us", 0.5), 6).alias("p50_us"),
-        F.round(F.percentile("gap_us", 0.9), 6).alias("p90_us"),
-        F.round(F.percentile("gap_us", 0.99), 6).alias("p99_us"),
-    )
-
-
-# ---------------------------------------------------------------------------
 # Growth accounting: each active (user, day) classified as new /
 # retained / resurrected, plus churned = active yesterday, absent
 # today.  The canonical DAU decomposition (new + retained + resurrected
@@ -3984,59 +3176,6 @@ def _growth_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.coalesce(F.col("churned"), F.lit(0).cast("bigint")).alias(
             "churned_from_prev_day"
         ),
-    )
-
-
-# ---------------------------------------------------------------------------
-# Hodges-Lehmann pseudo-median of the daily-count series per type: the
-# median of all pairwise MEANS — the location companion of the
-# Theil-Sen slope (same bounded-pair contract: aggregate to the time
-# axis first, pair second).  Pair means are exact halves of BIGINTs.
-# ---------------------------------------------------------------------------
-@query(
-    "events_hodges_lehmann",
-    """
-WITH daily AS (
-    SELECT event_type, CAST(ts AS DATE) AS day,
-           CAST(COUNT(*) AS BIGINT) AS y
-    FROM events WHERE event_type IS NOT NULL AND ts IS NOT NULL
-    GROUP BY 1, 2
-),
-pairs AS (
-    SELECT a.event_type,
-           CAST(a.y + b.y AS DOUBLE) / CAST(2 AS DOUBLE) AS m
-    FROM daily a JOIN daily b
-      ON a.event_type = b.event_type AND a.day <= b.day
-)
-SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_pairs,
-       {hl} AS pseudo_median
-FROM pairs GROUP BY event_type
-""".format(hl=_round_sql("MEDIAN(m)", 9)),
-)
-def _hodges_lehmann(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events", spread=True).filter(
-        F.col("event_type").isNotNull() & F.col("ts").isNotNull()
-    )
-    daily = ev.groupBy("event_type", F.to_date("ts").alias("day")).agg(
-        F.count("*").alias("y")
-    )
-    a = daily.select(
-        "event_type", F.col("day").alias("_d1"), F.col("y").alias("_y1")
-    )
-    b = daily.select(
-        "event_type", F.col("day").alias("_d2"), F.col("y").alias("_y2")
-    )
-    pairs = a.join(b, "event_type").filter(F.col("_d1") <= F.col("_d2"))
-    m = (F.col("_y1") + F.col("_y2")).cast("double") / F.lit(2).cast(
-        "double"
-    )
-    return (
-        pairs.select("event_type", m.alias("_m"))
-        .groupBy("event_type")
-        .agg(
-            F.count("*").alias("n_pairs"),
-            F.round(F.median("_m"), 9).alias("pseudo_median"),
-        )
     )
 
 
@@ -4207,322 +3346,6 @@ def _transition_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Symmetric trimmed mean per event type (functions/stats.py::
-# trimmed_mean): drop the bottom/top floor(10% * n) order statistics,
-# exact-decimal sum of the middle, one closing division — the robust
-# location estimate between events_winsorize (which clamps) and the
-# median (trim 50).
-# ---------------------------------------------------------------------------
-@query(
-    "stats_trimmed_mean",
-    """
-WITH base AS (
-    SELECT event_type, CAST(value AS DECIMAL(18,6)) AS v
-    FROM events WHERE value IS NOT NULL
-),
-rn AS (
-    SELECT event_type, v,
-           CAST(ROW_NUMBER() OVER (
-               PARTITION BY event_type ORDER BY v) AS BIGINT) AS rn,
-           CAST(COUNT(*) OVER (PARTITION BY event_type) AS BIGINT) AS n
-    FROM base
-),
-t AS (SELECT *, (10 * n) // 100 AS tr FROM rn)
-SELECT event_type,
-       CAST(MAX(n) AS BIGINT) AS n,
-       CAST(MAX(tr) AS BIGINT) AS n_trimmed,
-       CASE WHEN COUNT(*) FILTER (rn > tr AND rn <= n - tr) > 0 THEN
-           ROUND(CAST(SUM(CASE WHEN rn > tr AND rn <= n - tr THEN v END)
-                      AS DOUBLE)
-                 / CAST(COUNT(*) FILTER (rn > tr AND rn <= n - tr)
-                        AS DOUBLE), 9)
-       END AS trimmed_mean
-FROM t GROUP BY 1
-""",
-)
-def _stats_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.stats import trimmed_mean
-
-    return trimmed_mean(
-        load_table(spark, sf_dir, "events", spread=True).filter(
-            F.col("event_type").isNotNull()
-        ),
-        ["event_type"],
-        "value",
-        trim_pct=10,
-    )
-
-
-# ---------------------------------------------------------------------------
-# Simpson's-paradox audit (functions/stats.py::simpson_flip): does any
-# event type's weekend-vs-weekday value direction contradict the
-# aggregate direction?  Directions are signs of exact cross-multiplied
-# DECIMAL x BIGINT products (never float comparisons); means/gap are
-# fixed IEEE closing chains.  Weekend = isodow 6/7 == Spark weekday()+1.
-# ---------------------------------------------------------------------------
-@query(
-    "stats_simpson_flip",
-    """
-WITH base AS (
-    SELECT event_type,
-           CASE WHEN isodow(CAST(ts AS DATE)) >= 6 THEN 1 ELSE 0 END AS f,
-           CAST(value AS DECIMAL(18,6)) AS v
-    FROM events
-    WHERE value IS NOT NULL AND ts IS NOT NULL AND event_type IS NOT NULL
-),
-per AS (
-    SELECT event_type,
-           CAST(COUNT(*) FILTER (f = 0) AS BIGINT) AS n0,
-           CAST(COUNT(*) FILTER (f = 1) AS BIGINT) AS n1,
-           SUM(CASE WHEN f = 0 THEN v END) AS s0,
-           SUM(CASE WHEN f = 1 THEN v END) AS s1
-    FROM base GROUP BY 1
-    HAVING COUNT(*) FILTER (f = 0) > 0 AND COUNT(*) FILTER (f = 1) > 0
-),
-tot AS (
-    SELECT CAST(SUM(n0) AS BIGINT) AS tn0, CAST(SUM(n1) AS BIGINT) AS tn1,
-           SUM(s0) AS ts0, SUM(s1) AS ts1
-    FROM per
-),
-dirs AS (
-    SELECT per.*,
-           CASE WHEN s1 * n0 - s0 * n1 > 0 THEN 1
-                WHEN s1 * n0 - s0 * n1 < 0 THEN -1 ELSE 0 END AS sd,
-           CASE WHEN ts1 * tn0 - ts0 * tn1 > 0 THEN 1
-                WHEN ts1 * tn0 - ts0 * tn1 < 0 THEN -1 ELSE 0 END AS ad
-    FROM per, tot
-)
-SELECT event_type, n0, n1,
-       ROUND(CAST(s0 AS DOUBLE) / CAST(n0 AS DOUBLE), 9) AS mean0,
-       ROUND(CAST(s1 AS DOUBLE) / CAST(n1 AS DOUBLE), 9) AS mean1,
-       ROUND(CAST(s1 AS DOUBLE) / CAST(n1 AS DOUBLE)
-             - CAST(s0 AS DOUBLE) / CAST(n0 AS DOUBLE), 9) AS gap,
-       CAST(sd AS INTEGER) AS stratum_dir,
-       CAST(ad AS INTEGER) AS aggregate_dir,
-       sd * ad = -1 AS flips_aggregate
-FROM dirs
-""",
-)
-def _stats_simpson_flip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.stats import simpson_flip
-
-    ev = load_table(spark, sf_dir, "events", spread=True).filter(
-        F.col("event_type").isNotNull() & F.col("ts").isNotNull()
-    )
-    flagged = ev.withColumn(
-        "_is_weekend",
-        ((F.weekday(F.to_date("ts")) + 1) >= 6).cast("int"),
-    )
-    return simpson_flip(flagged, ["event_type"], "_is_weekend", "value")
-
-
-# ---------------------------------------------------------------------------
-# k-anonymity / l-diversity audit (functions/profile.py::k_anonymity)
-# over the (event_type, hour, isodow) quasi-identifier grid with
-# user_id as the sensitive attribute — the release-gate privacy check.
-# All-integer outputs; isodow == Spark weekday()+1 (the simpson_flip
-# calendar contract).
-# ---------------------------------------------------------------------------
-@query(
-    "dq_k_anonymity",
-    """
-SELECT event_type,
-       CAST(hour(ts) AS INTEGER) AS hour_of_day,
-       CAST(isodow(CAST(ts AS DATE)) AS INTEGER) AS dow,
-       CAST(COUNT(*) AS BIGINT) AS class_size,
-       CAST(COUNT(DISTINCT user_id) AS BIGINT) AS distinct_sensitive,
-       COUNT(*) >= 5 AS k_anonymous,
-       COUNT(DISTINCT user_id) >= 3 AS l_diverse
-FROM events
-WHERE event_type IS NOT NULL AND ts IS NOT NULL AND user_id IS NOT NULL
-GROUP BY 1, 2, 3
-""",
-)
-def _dq_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.profile import k_anonymity
-
-    ev = (
-        load_table(spark, sf_dir, "events", spread=True)
-        .filter(
-            F.col("event_type").isNotNull()
-            & F.col("ts").isNotNull()
-            & F.col("user_id").isNotNull()
-        )
-        .select(
-            "event_type",
-            F.hour("ts").alias("hour_of_day"),
-            (F.weekday(F.to_date("ts")) + 1).cast("int").alias("dow"),
-            "user_id",
-        )
-    )
-    return k_anonymity(
-        ev, ["event_type", "hour_of_day", "dow"], "user_id", k=5, l=3
-    )
-
-
-# ---------------------------------------------------------------------------
-# Per-column Shannon-entropy profile (functions/profile.py::
-# column_entropy) — the identifier/constant detector.  The oracle never
-# compares stringified values (the output carries only counts and
-# entropies), so it groups each raw column directly; the transcendental
-# terms ride the ndcg quantized-term contract (round 12 -> DECIMAL sum).
-# ---------------------------------------------------------------------------
-_ENTROPY_COLS = ("event_type", "user_id", "value", "props")
-
-
-def _entropy_col_sql(col: str) -> str:
-    term = _round_sql(
-        "-(CAST(c AS DOUBLE) / CAST(n AS DOUBLE))"
-        " * log2(CAST(c AS DOUBLE) / CAST(n AS DOUBLE))",
-        12,
-    )
-    norm = _round_sql(
-        "CAST(COALESCE(hsum, 0) AS DOUBLE)"
-        " / log2(CAST(n_distinct AS DOUBLE))",
-        9,
-    )
-    return f"""
-SELECT '{col}' AS column_name, n_values, n_null, n_distinct,
-       ROUND(CAST(COALESCE(hsum, 0) AS DOUBLE), 9) AS entropy_bits,
-       CASE WHEN n_distinct > 1 THEN {norm} END AS normalized_entropy
-FROM (
-    SELECT CAST(SUM(CASE WHEN v IS NOT NULL THEN c ELSE 0 END) AS BIGINT)
-               AS n_values,
-           CAST(SUM(CASE WHEN v IS NULL THEN c ELSE 0 END) AS BIGINT)
-               AS n_null,
-           CAST(COUNT(*) FILTER (v IS NOT NULL) AS BIGINT) AS n_distinct,
-           SUM(CASE WHEN v IS NOT NULL THEN
-               CAST({term} AS DECIMAL(28,12)) END) AS hsum
-    FROM (
-        SELECT v, c,
-               SUM(CASE WHEN v IS NOT NULL THEN c ELSE 0 END) OVER () AS n
-        FROM (
-            SELECT {col} AS v, CAST(COUNT(*) AS BIGINT) AS c
-            FROM events GROUP BY 1
-        )
-    )
-)"""
-
-
-@query(
-    "dq_column_entropy",
-    "\nUNION ALL\n".join(_entropy_col_sql(c) for c in _ENTROPY_COLS),
-)
-def _dq_column_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.profile import column_entropy
-
-    return column_entropy(
-        load_table(spark, sf_dir, "events", spread=True),
-        list(_ENTROPY_COLS),
-    )
-
-
-# ---------------------------------------------------------------------------
-# Population Stability Index (functions/mleval.py::psi_drift) of the
-# value distribution between the first and second half of the observed
-# date range — the industry drift monitor next to the exact TVD/chi2
-# gate (events_transition_drift shares the same period split).  Deciles
-# from the REFERENCE period only (X20 quantile contract), Laplace
-# smoothing, quantized-term PSI sum.
-# ---------------------------------------------------------------------------
-_PSI_BUCKETS = 10
-
-
-def _psi_oracle_sql() -> str:
-    edge_list = ", ".join(
-        f"ROUND(quantile_cont(v, {i}.0 / {_PSI_BUCKETS}), 6)"
-        for i in range(1, _PSI_BUCKETS)
-    )
-    pr = (
-        f"(CAST(cnt_ref + 1 AS DOUBLE)"
-        f" / CAST(nr + {_PSI_BUCKETS} AS DOUBLE))"
-    )
-    pc = (
-        f"(CAST(cnt_cur + 1 AS DOUBLE)"
-        f" / CAST(nc + {_PSI_BUCKETS} AS DOUBLE))"
-    )
-    contrib = _round_sql(f"({pc} - {pr}) * ln({pc} / {pr})", 12)
-    return f"""
-WITH base AS (
-    SELECT value AS v, CAST(ts AS DATE) AS d
-    FROM events WHERE value IS NOT NULL AND ts IS NOT NULL
-),
-bounds AS (SELECT MIN(d) AS d0, MAX(d) AS d1 FROM base),
-flagged AS (
-    SELECT v,
-           CASE WHEN d >= d0 + CAST((d1 - d0) // 2 AS INTEGER)
-                THEN 1 ELSE 0 END AS p
-    FROM base, bounds
-),
-edges AS (
-    SELECT [{edge_list}] AS e FROM flagged WHERE p = 0
-),
-binned AS (
-    SELECT CAST(len(list_filter(e, x -> v >= x)) AS INTEGER) AS bucket, p
-    FROM flagged, edges
-),
-observed AS (
-    SELECT bucket,
-           CAST(COUNT(*) FILTER (p = 0) AS BIGINT) AS cnt_ref,
-           CAST(COUNT(*) FILTER (p = 1) AS BIGINT) AS cnt_cur
-    FROM binned GROUP BY 1
-),
--- full 0..n-1 spine: buckets empty in BOTH periods still contribute
--- their Laplace-smoothed PSI term (mleval.psi_drift mirrors this)
-per AS (
-    SELECT CAST(s.bucket AS INTEGER) AS bucket,
-           CAST(COALESCE(o.cnt_ref, 0) AS BIGINT) AS cnt_ref,
-           CAST(COALESCE(o.cnt_cur, 0) AS BIGINT) AS cnt_cur
-    FROM (SELECT unnest(generate_series(0, {_PSI_BUCKETS - 1})) AS bucket)
-         s LEFT JOIN observed o ON s.bucket = o.bucket
-),
-tot AS (
-    SELECT CAST(SUM(cnt_ref) AS BIGINT) AS nr,
-           CAST(SUM(cnt_cur) AS BIGINT) AS nc
-    FROM per
-),
-rows_ AS (
-    SELECT bucket, cnt_ref, cnt_cur,
-           {_round_sql(pr, 9)} AS share_ref,
-           {_round_sql(pc, 9)} AS share_cur,
-           CAST({contrib} AS DECIMAL(28,12)) AS contrib
-    FROM per, tot
-),
-total AS (SELECT SUM(contrib) AS psi FROM rows_)
-SELECT bucket, cnt_ref, cnt_cur, share_ref, share_cur,
-       ROUND(CAST(contrib AS DOUBLE), 9) AS psi_contrib,
-       ROUND(CAST(psi AS DOUBLE), 9) AS psi_total
-FROM rows_, total
-"""
-
-
-@query("ml_psi_drift", _psi_oracle_sql())
-def _ml_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.mleval import psi_drift
-
-    ev = load_table(spark, sf_dir, "events", spread=True).filter(
-        F.col("value").isNotNull() & F.col("ts").isNotNull()
-    )
-    bounds = ev.agg(
-        F.min(F.to_date("ts")).alias("_d0"),
-        F.max(F.to_date("ts")).alias("_d1"),
-    )
-    flagged = ev.crossJoin(F.broadcast(bounds)).select(
-        "value",
-        (
-            F.col("ts").cast("date")
-            >= F.date_add(
-                F.col("_d0"),
-                F.floor(F.datediff("_d1", "_d0") / 2).cast("int"),
-            )
-        )
-        .cast("int")
-        .alias("period"),
-    )
-    return psi_drift(flagged, "value", "period", n_buckets=_PSI_BUCKETS)
-
-
-# ---------------------------------------------------------------------------
 # Holt double-exponential smoothing (functions/stats.py::holt_linear):
 # per-user level+trend state replayed as a fixed IEEE chain — the
 # trend-aware member of the EWMA family; the oracle folds the identical
@@ -4588,306 +3411,6 @@ def _events_holt_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Markov entropy rate (functions/behavior.py::entropy_rate): how
-# predictable is the next event type given the current one — the
-# information-theoretic closing number over the events_transitions
-# matrix.  Quantized-term contract for both entropy levels.
-# ---------------------------------------------------------------------------
-@query(
-    "events_entropy_rate",
-    f"""
-WITH seq AS (
-    SELECT event_type AS src,
-           LEAD(event_type) OVER (
-               PARTITION BY user_id ORDER BY ts, event_id
-           ) AS dst
-    FROM events
-),
-pairs AS (
-    SELECT src, dst, CAST(COUNT(*) AS BIGINT) AS n
-    FROM seq WHERE dst IS NOT NULL GROUP BY src, dst
-),
-st AS (
-    SELECT src, CAST(SUM(n) AS BIGINT) AS ns,
-           CAST(COUNT(*) AS BIGINT) AS n_dst_distinct
-    FROM pairs GROUP BY 1
-),
-terms AS (
-    SELECT p.src, st.ns, st.n_dst_distinct,
-           CAST({_round_sql(
-               "-(CAST(p.n AS DOUBLE) / CAST(st.ns AS DOUBLE))"
-               " * log2(CAST(p.n AS DOUBLE) / CAST(st.ns AS DOUBLE))",
-               12,
-           )} AS DECIMAL(28,12)) AS t
-    FROM pairs p JOIN st ON p.src = st.src
-),
-per_src AS (
-    SELECT src, MAX(ns) AS n_src, MAX(n_dst_distinct) AS n_dst_distinct,
-           CAST(SUM(t) AS DOUBLE) AS h
-    FROM terms GROUP BY 1
-),
-grand AS (SELECT CAST(SUM(n_src) AS BIGINT) AS tot FROM per_src),
-rows_ AS (
-    SELECT src, n_src, n_dst_distinct, h,
-           {_round_sql(
-               "CAST(n_src AS DOUBLE) / CAST(tot AS DOUBLE)", 9
-           )} AS src_share,
-           CAST({_round_sql(
-               "(CAST(n_src AS DOUBLE) / CAST(tot AS DOUBLE)) * h", 12
-           )} AS DECIMAL(28,12)) AS c
-    FROM per_src, grand
-),
-total AS (SELECT CAST(SUM(c) AS DOUBLE) AS rate FROM rows_)
-SELECT src, n_src, n_dst_distinct,
-       ROUND(h, 9) AS h_bits,
-       src_share,
-       ROUND(CAST(c AS DOUBLE), 9) AS rate_contrib,
-       ROUND(rate, 9) AS entropy_rate_bits
-FROM rows_, total
-""",
-)
-def _events_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.behavior import entropy_rate
-
-    return entropy_rate(load_table(spark, sf_dir, "events", spread=True))
-
-
-# ---------------------------------------------------------------------------
-# Benjamini-Hochberg FDR (functions/stats.py::bh_fdr) over the
-# (event_type, isodow) cell grid.  The per-cell p-values are
-# hash-uniform by construction (the md5-h32 contract shared with the
-# sketch family) — the gate pins the step-up adjustment MECHANICS
-# (ranking, n/rank scaling, suffix minimum, clamp), which is the
-# operator; any real test family plugs its own p column in.
-# ---------------------------------------------------------------------------
-from .oracle_util import H32_SQL as _H32_SQL  # noqa: E402
-
-_BH_H = _H32_SQL.format(
-    x="'bh:' || event_type || ':' || CAST(dow AS VARCHAR)"
-)
-
-
-@query(
-    "stats_bh_fdr",
-    f"""
-WITH cells AS (
-    SELECT event_type,
-           CAST(isodow(CAST(ts AS DATE)) AS INTEGER) AS dow
-    FROM events WHERE event_type IS NOT NULL AND ts IS NOT NULL
-    GROUP BY 1, 2
-),
-p AS (
-    SELECT event_type, dow,
-           CAST(({_BH_H} % 1000000 + 1) AS DOUBLE)
-               / CAST(1000000 AS DOUBLE) AS pv
-    FROM cells
-),
-r AS (
-    SELECT *,
-           CAST(ROW_NUMBER() OVER (ORDER BY pv, event_type, dow)
-                AS INTEGER) AS rank,
-           CAST(COUNT(*) OVER () AS BIGINT) AS n
-    FROM p
-),
-a AS (
-    SELECT *,
-           LEAST(MIN(pv * CAST(n AS DOUBLE) / CAST(rank AS DOUBLE)) OVER (
-               ORDER BY rank DESC
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-           ), CAST(1 AS DOUBLE)) AS adj
-    FROM r
-)
-SELECT event_type, dow,
-       ROUND(pv, 9) AS p_value,
-       rank,
-       n AS n_tests,
-       {_round_sql("adj", 9)} AS adj_p,
-       adj <= CAST('0.1' AS DOUBLE) AS significant
-FROM a
-""",
-)
-def _stats_bh_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.stats import bh_fdr
-    from ..functions.text import hash32
-
-    cells = (
-        load_table(spark, sf_dir, "events", spread=True)
-        .filter(F.col("event_type").isNotNull() & F.col("ts").isNotNull())
-        .select(
-            "event_type",
-            (F.weekday(F.to_date("ts")) + 1).cast("int").alias("dow"),
-        )
-        .distinct()
-    )
-    p = cells.withColumn(
-        "pv",
-        (
-            hash32(
-                F.concat(
-                    F.lit("bh:"),
-                    F.col("event_type"),
-                    F.lit(":"),
-                    F.col("dow").cast("string"),
-                )
-            )
-            % 1000000
-            + 1
-        ).cast("double")
-        / F.lit(1000000).cast("double"),
-    )
-    return bh_fdr(p, "pv", ["event_type", "dow"], alpha=0.1)
-
-
-# ---------------------------------------------------------------------------
-# Mann-Kendall trend test (functions/stats.py::mann_kendall) per event
-# type over the DAILY value series — exact BIGINT S and tie-corrected
-# variance, two IEEE closing ops for z.  The deliberate O(series^2)
-# pair join runs on the aggregated daily frame, never raw events.
-# ---------------------------------------------------------------------------
-@query(
-    "stats_mann_kendall",
-    f"""
-WITH daily AS (
-    SELECT event_type, CAST(ts AS DATE) AS d,
-           SUM(CAST(CAST(value AS VARCHAR) AS DECIMAL(18,6))) AS v
-    FROM events
-    WHERE value IS NOT NULL AND ts IS NOT NULL AND event_type IS NOT NULL
-    GROUP BY 1, 2
-),
-t AS (
-    SELECT event_type, d,
-           CAST(CAST(v AS VARCHAR) AS DECIMAL(18,6)) AS v
-    FROM daily
-),
-s AS (
-    SELECT a.event_type,
-           CAST(SUM(CAST(sign(CAST(b.v - a.v AS DOUBLE)) AS BIGINT))
-                AS BIGINT) AS s_stat
-    FROM t a JOIN t b ON a.event_type = b.event_type AND a.d < b.d
-    GROUP BY 1
-),
-ng AS (
-    SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n
-    FROM t GROUP BY 1
-),
-ties AS (
-    SELECT event_type,
-           CAST(SUM(c * (c - 1) * (2 * c + 5)) AS BIGINT) AS tie_term
-    FROM (
-        SELECT event_type, v, CAST(COUNT(*) AS BIGINT) AS c
-        FROM t GROUP BY 1, 2
-    ) GROUP BY 1
-),
-j AS (
-    SELECT ng.event_type, ng.n,
-           COALESCE(s.s_stat, 0) AS s_stat,
-           CAST(ng.n * (ng.n - 1) * (2 * ng.n + 5) - ties.tie_term
-                AS BIGINT) AS var_num
-    FROM ng
-    JOIN ties ON ng.event_type = ties.event_type
-    LEFT JOIN s ON ng.event_type = s.event_type
-)
-SELECT event_type, n, s_stat,
-       {_round_sql("CAST(var_num AS DOUBLE) / CAST('18' AS DOUBLE)", 9)}
-           AS var_s,
-       CASE WHEN var_num <= 0 THEN NULL
-            WHEN s_stat > 0 THEN {_round_sql(
-                "CAST(s_stat - 1 AS DOUBLE)"
-                " / sqrt(CAST(var_num AS DOUBLE) / CAST('18' AS DOUBLE))",
-                9,
-            )}
-            WHEN s_stat < 0 THEN {_round_sql(
-                "CAST(s_stat + 1 AS DOUBLE)"
-                " / sqrt(CAST(var_num AS DOUBLE) / CAST('18' AS DOUBLE))",
-                9,
-            )}
-            ELSE CAST(0 AS DOUBLE) END AS z
-FROM j
-""",
-)
-def _stats_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.stats import mann_kendall
-
-    ev = load_table(spark, sf_dir, "events", spread=True).filter(
-        F.col("value").isNotNull()
-        & F.col("ts").isNotNull()
-        & F.col("event_type").isNotNull()
-    )
-    daily = ev.groupBy(
-        "event_type", F.to_date("ts").alias("d")
-    ).agg(
-        F.sum(
-            F.col("value").cast("string").cast("decimal(18,6)")
-        ).alias("v")
-    )
-    return mann_kendall(daily, ["event_type"], "d", "v")
-
-
-# ---------------------------------------------------------------------------
-# A/B sizing (functions/stats.py::power_mde): per event type, the
-# minimum detectable effect at the observed n and the per-arm n
-# required for a 5%-of-mean effect, from exact decimal moments.
-# z constants bound once as repr-exact doubles.
-# ---------------------------------------------------------------------------
-_PW_ZSUM = 1.959963985 + 0.841621234
-
-
-@query(
-    "ml_power_mde",
-    f"""
-WITH a AS (
-    SELECT event_type,
-           CAST(COUNT(*) AS BIGINT) AS n,
-           CAST(SUM(CAST(CAST(value AS VARCHAR) AS DECIMAL(18,6)))
-                AS DOUBLE) AS s,
-           CAST(SUM(CAST(CAST(value AS VARCHAR) AS DECIMAL(18,6))
-                    * CAST(CAST(value AS VARCHAR) AS DECIMAL(18,6)))
-                AS DOUBLE) AS ss
-    FROM events WHERE value IS NOT NULL AND event_type IS NOT NULL
-    GROUP BY 1
-),
-m AS (
-    SELECT event_type, n,
-           s / CAST(n AS DOUBLE) AS mean,
-           GREATEST((ss - s * s / CAST(n AS DOUBLE))
-                    / (CAST(n AS DOUBLE) - 1), CAST(0 AS DOUBLE)) AS v
-    FROM a
-)
-SELECT event_type, n,
-       {_round_sql("mean", 9)} AS mean,
-       {_round_sql("v", 9)} AS variance,
-       CASE WHEN n > 1 AND v > 0 THEN {_round_sql(
-           f"CAST('{_PW_ZSUM!r}' AS DOUBLE)"
-           " * sqrt(CAST('2' AS DOUBLE) * v / CAST(n AS DOUBLE))",
-           9,
-       )} END AS mde,
-       CASE WHEN n > 1 AND v > 0 AND mean <> 0 THEN {_round_sql(
-           f"CAST('{_PW_ZSUM!r}' AS DOUBLE)"
-           " * sqrt(CAST('2' AS DOUBLE) * v / CAST(n AS DOUBLE))"
-           " / mean * CAST('100' AS DOUBLE)",
-           9,
-       )} END AS mde_pct_of_mean,
-       {_round_sql("CAST('0.05' AS DOUBLE) * mean", 9)} AS delta_target,
-       CASE WHEN n > 1 AND v > 0 AND mean <> 0 THEN
-           CAST(ceil(CAST('2' AS DOUBLE) * v
-                     * CAST('{_PW_ZSUM!r}' AS DOUBLE)
-                     * CAST('{_PW_ZSUM!r}' AS DOUBLE)
-                     / ((CAST('0.05' AS DOUBLE) * mean)
-                        * (CAST('0.05' AS DOUBLE) * mean))) AS BIGINT)
-       END AS n_required
-FROM m
-""",
-)
-def _ml_power_mde(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.stats import power_mde
-
-    ev = load_table(spark, sf_dir, "events", spread=True).filter(
-        F.col("event_type").isNotNull()
-    )
-    return power_mde(ev, ["event_type"], "value")
-
-
-# ---------------------------------------------------------------------------
 # Benford first-digit audit (functions/profile.py::benford_deviation)
 # of o_totalprice — the fraud / synthetic-data / unit-mixup detector.
 # Values quantize to integer cents (round of the SAME IEEE product on
@@ -4943,142 +3466,3 @@ def _dq_benford_totalprice(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "orders", spread=True), "o_totalprice"
     )
 
-
-# ---------------------------------------------------------------------------
-# Referential-integrity audit (functions/profile.py::fk_integrity):
-# orphan rates of the warehouse's two load-bearing foreign keys.  NULL
-# FKs counted separately (modeling choice vs corruption).  The orphan
-# join runs on DISTINCT-key frames, never facts.
-# ---------------------------------------------------------------------------
-@query(
-    "dq_fk_integrity",
-    """
-WITH lk AS (
-    SELECT l_orderkey AS k, CAST(COUNT(*) AS BIGINT) AS n
-    FROM lineitem WHERE l_orderkey IS NOT NULL GROUP BY 1
-),
-lo AS (
-    SELECT CAST(COALESCE(SUM(n), 0) AS BIGINT) AS n_orphan,
-           CAST(COUNT(*) AS BIGINT) AS n_orphan_keys
-    FROM lk LEFT JOIN (SELECT DISTINCT o_orderkey FROM orders) o
-        ON lk.k = o.o_orderkey
-    WHERE o.o_orderkey IS NULL
-),
-lt AS (
-    SELECT CAST(COUNT(*) AS BIGINT) AS n_child,
-           CAST(COUNT(*) FILTER (l_orderkey IS NULL) AS BIGINT) AS n_null_fk
-    FROM lineitem
-),
-ok_ AS (
-    SELECT o_custkey AS k, CAST(COUNT(*) AS BIGINT) AS n
-    FROM orders WHERE o_custkey IS NOT NULL GROUP BY 1
-),
-oo AS (
-    SELECT CAST(COALESCE(SUM(n), 0) AS BIGINT) AS n_orphan,
-           CAST(COUNT(*) AS BIGINT) AS n_orphan_keys
-    FROM ok_ LEFT JOIN (SELECT DISTINCT c_custkey FROM customer) c
-        ON ok_.k = c.c_custkey
-    WHERE c.c_custkey IS NULL
-),
-ot AS (
-    SELECT CAST(COUNT(*) AS BIGINT) AS n_child,
-           CAST(COUNT(*) FILTER (o_custkey IS NULL) AS BIGINT) AS n_null_fk
-    FROM orders
-)
-SELECT 'lineitem->orders' AS relation, lt.n_child, lt.n_null_fk,
-       lo.n_orphan, lo.n_orphan_keys,
-       ROUND(CAST(lo.n_orphan AS DOUBLE) / lt.n_child, 9) AS orphan_rate
-FROM lt, lo
-UNION ALL
-SELECT 'orders->customer' AS relation, ot.n_child, ot.n_null_fk,
-       oo.n_orphan, oo.n_orphan_keys,
-       ROUND(CAST(oo.n_orphan AS DOUBLE) / ot.n_child, 9) AS orphan_rate
-FROM ot, oo
-""",
-)
-def _dq_fk_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.profile import fk_integrity
-
-    li = load_table(spark, sf_dir, "lineitem", spread=True)
-    orders = load_table(spark, sf_dir, "orders", spread=True)
-    cust = load_table(spark, sf_dir, "customer", spread=True)
-    return fk_integrity(
-        li, orders, "l_orderkey", "o_orderkey", "lineitem->orders"
-    ).unionByName(
-        fk_integrity(
-            orders, cust, "o_custkey", "c_custkey", "orders->customer"
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# Page-Hinkley sequential drift test (functions/stats.py::page_hinkley)
-# per event type over the (ts, event_id)-ordered value series — the
-# standard stream-drift detector beside CUSUM's retrospective
-# change-point.  Quantized-term running-mean deviations accumulate as
-# exact decimals; running min + alarm compare are exact.
-# ---------------------------------------------------------------------------
-_PH_DELTA, _PH_LAMBDA = 0.05, 10.0
-
-
-@query(
-    "events_page_hinkley",
-    f"""
-WITH base AS (
-    SELECT event_type, event_id,
-           CAST(value AS DOUBLE) AS x,
-           SUM(CAST(CAST(value AS VARCHAR) AS DECIMAL(18,6))) OVER (
-               PARTITION BY event_type ORDER BY ts, event_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS s,
-           ROW_NUMBER() OVER (
-               PARTITION BY event_type ORDER BY ts, event_id) AS i
-    FROM events
-    WHERE event_type IS NOT NULL AND ts IS NOT NULL AND value IS NOT NULL
-),
-termed AS (
-    SELECT event_type, event_id, i,
-           CAST({_round_sql(
-               f"x - CAST(s AS DOUBLE) / i - CAST('{_PH_DELTA!r}' AS DOUBLE)",
-               9,
-           )} AS DECIMAL(28,12)) AS term
-    FROM base
-),
-m AS (
-    SELECT event_type, event_id, i,
-           SUM(term) OVER (
-               PARTITION BY event_type ORDER BY i
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS m
-    FROM termed
-),
-p AS (
-    SELECT event_type, event_id, i,
-           m - MIN(m) OVER (
-               PARTITION BY event_type ORDER BY i
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS ph
-    FROM m
-),
-a AS (
-    SELECT *, ph > CAST('{_PH_LAMBDA!r}' AS DECIMAL(28,12)) AS alarm
-    FROM p
-)
-SELECT event_type,
-       CAST(COUNT(*) AS BIGINT) AS n,
-       CAST(COUNT(*) FILTER (alarm) AS BIGINT) AS n_alarms,
-       CAST(MIN(CASE WHEN alarm THEN i END) AS INTEGER) AS first_alarm_idx,
-       arg_min(event_id, i) FILTER (WHERE alarm) AS first_alarm_event_id,
-       {_round_sql("CAST(MAX(ph) AS DOUBLE)", 9)} AS max_ph
-FROM a GROUP BY 1
-""",
-)
-def _events_page_hinkley(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.stats import page_hinkley
-
-    ev = load_table(spark, sf_dir, "events", spread=True).filter(
-        F.col("event_type").isNotNull()
-        & F.col("ts").isNotNull()
-        & F.col("value").isNotNull()
-    )
-    return page_hinkley(
-        ev, ["event_type"], "value", "ts", "event_id",
-        delta=_PH_DELTA, lam=_PH_LAMBDA,
-    )

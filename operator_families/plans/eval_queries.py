@@ -14,11 +14,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from nl_railtraffic_etl_pipeline_spark.plans.testdata import load_table
+
 from ..functions.mleval import auc_roc, calibration_report, categorical_drift
 from ..functions.text import hash32, lm_score
 from .oracle_util import round_sql as _r
 from .registry import query
-from .testdata import load_table
 
 _H32_SQL = "CAST(('0x' || substr(md5(CAST(event_id AS VARCHAR)), 1, 8)) AS BIGINT)"
 _DENOM = 2**32
@@ -553,580 +554,6 @@ def _fairness_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round("_tg", 9).alias("tpr_gap"),
         F.round("_fg", 9).alias("fpr_gap"),
     )
-
-
-# ---------------------------------------------------------------------------
-# Split-conformal prediction intervals with a held-out coverage audit
-# (functions/mleval.py::conformal_bounds): calibration median as the
-# point, |v - med| conformity scores, qhat = the ceil(0.9*(n+1))-th
-# smallest score by INTEGER rank arithmetic, coverage on post-cutoff
-# rows.  Exact decimals/bigints until the one closing division.
-# ---------------------------------------------------------------------------
-@query(
-    "ml_conformal_bounds",
-    """
-WITH base AS (
-    SELECT event_type, CAST(value AS DECIMAL(18,6)) AS v,
-           ts < TIMESTAMP '2024-01-22 00:00:00' AS cal
-    FROM events
-    WHERE value IS NOT NULL AND ts IS NOT NULL AND event_type IS NOT NULL
-),
-c AS (SELECT event_type, v FROM base WHERE cal),
-rn AS (
-    SELECT event_type, v,
-           CAST(ROW_NUMBER() OVER (
-               PARTITION BY event_type ORDER BY v) AS BIGINT) AS rn,
-           CAST(COUNT(*) OVER (PARTITION BY event_type) AS BIGINT) AS n
-    FROM c
-),
-med AS (
-    SELECT event_type, v AS med, n AS n_cal FROM rn WHERE rn = (n + 1) // 2
-),
-scores AS (
-    SELECT c.event_type, ABS(c.v - m.med) AS r, m.n_cal
-    FROM c JOIN med m ON c.event_type = m.event_type
-),
-srn AS (
-    SELECT event_type, r, n_cal,
-           CAST(ROW_NUMBER() OVER (
-               PARTITION BY event_type ORDER BY r) AS BIGINT) AS rn
-    FROM scores
-),
-q AS (
-    SELECT event_type, n_cal, r AS qhat FROM srn
-    WHERE rn = LEAST(n_cal, (90 * (n_cal + 1) + 99) // 100)
-),
-t AS (
-    SELECT b.event_type, q.n_cal, b.v, m.med, q.qhat
-    FROM base b
-    JOIN med m ON b.event_type = m.event_type
-    JOIN q ON b.event_type = q.event_type
-    WHERE NOT b.cal
-)
-SELECT event_type, n_cal,
-       CAST(COUNT(*) AS BIGINT) AS n_test,
-       CAST(med AS DOUBLE) AS point,
-       CAST(qhat AS DOUBLE) AS qhat,
-       CAST(COUNT(*) FILTER (ABS(v - med) <= qhat) AS BIGINT) AS covered,
-       ROUND(CAST(COUNT(*) FILTER (ABS(v - med) <= qhat) AS DOUBLE)
-             / CAST(COUNT(*) AS DOUBLE), 9) AS coverage
-FROM t GROUP BY event_type, n_cal, med, qhat
-""",
-)
-def _ml_conformal_bounds(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.mleval import conformal_bounds
-
-    return conformal_bounds(
-        load_table(spark, sf_dir, "events", spread=True),
-        ["event_type"],
-        "value",
-        "ts",
-        cutoff="2024-01-22 00:00:00",
-        alpha_pct=10,
-    ).filter(F.col("event_type").isNotNull())
-
-
-# ---------------------------------------------------------------------------
-# Weight of Evidence / Information Value (functions/mleval.py::woe_iv):
-# feature screening of event_type against the afternoon-conversion label
-# hour(ts) >= 12.  Laplace-smoothed shares (the psi_drift convention),
-# quantized-term IV sum.
-# ---------------------------------------------------------------------------
-_WOE_PE = "(CAST(n_event + 1 AS DOUBLE) / CAST(ne + k AS DOUBLE))"
-_WOE_PN = "(CAST(n_nonevent + 1 AS DOUBLE) / CAST(nn + k AS DOUBLE))"
-
-
-@query(
-    "ml_woe_iv",
-    f"""
-WITH base AS (
-    SELECT event_type AS b,
-           CASE WHEN hour(ts) >= 12 THEN 1 ELSE 0 END AS y
-    FROM events WHERE event_type IS NOT NULL AND ts IS NOT NULL
-),
-per AS (
-    SELECT b,
-           CAST(COUNT(*) FILTER (y = 1) AS BIGINT) AS n_event,
-           CAST(COUNT(*) FILTER (y = 0) AS BIGINT) AS n_nonevent
-    FROM base GROUP BY 1
-),
-tot AS (
-    SELECT CAST(SUM(n_event) AS BIGINT) AS ne,
-           CAST(SUM(n_nonevent) AS BIGINT) AS nn,
-           CAST(COUNT(*) AS BIGINT) AS k
-    FROM per
-),
-rows_ AS (
-    SELECT b, n_event, n_nonevent,
-           {_r(_WOE_PE, 9)} AS share_event,
-           {_r(_WOE_PN, 9)} AS share_nonevent,
-           {_r(f"ln({_WOE_PE} / {_WOE_PN})", 9)} AS woe,
-           CAST({_r(
-               f"({_WOE_PE} - {_WOE_PN}) * ln({_WOE_PE} / {_WOE_PN})", 12
-           )} AS DECIMAL(28,12)) AS c
-    FROM per, tot
-),
-total AS (SELECT CAST(SUM(c) AS DOUBLE) AS iv FROM rows_)
-SELECT b AS event_type, n_event, n_nonevent, share_event, share_nonevent,
-       woe,
-       ROUND(CAST(c AS DOUBLE), 9) AS iv_contrib,
-       ROUND(iv, 9) AS iv_total
-FROM rows_, total
-""",
-)
-def _ml_woe_iv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.mleval import woe_iv
-
-    ev = (
-        load_table(spark, sf_dir, "events", spread=True)
-        .filter(F.col("event_type").isNotNull() & F.col("ts").isNotNull())
-        .select(
-            "event_type",
-            (F.hour("ts") >= 12).cast("int").alias("_y"),
-        )
-    )
-    return woe_iv(ev, "event_type", "_y")
-
-
-# ---------------------------------------------------------------------------
-# Difference-in-differences (functions/mleval.py::diff_in_diff): the
-# before/after x treated/control 2x2 estimator over the value stream —
-# treated = odd user_id, period = second half of the date range (the
-# transition_drift split).  Exact DECIMAL cell sums, fixed closing chain.
-# ---------------------------------------------------------------------------
-@query(
-    "ml_diff_in_diff",
-    """
-WITH base AS (
-    SELECT CAST(CAST(value AS VARCHAR) AS DECIMAL(28,6)) AS v,
-           CAST(user_id % 2 AS INTEGER) AS t,
-           CAST(ts AS DATE) AS d
-    FROM events
-    WHERE value IS NOT NULL AND ts IS NOT NULL AND user_id IS NOT NULL
-),
-bounds AS (SELECT MIN(d) AS d0, MAX(d) AS d1 FROM base),
-f AS (
-    SELECT v, t,
-           CASE WHEN d >= d0 + CAST((d1 - d0) // 2 AS INTEGER)
-                THEN 1 ELSE 0 END AS p
-    FROM base, bounds
-),
-a AS (
-    SELECT CAST(COUNT(*) FILTER (t = 0 AND p = 0) AS BIGINT) AS n_c0,
-           CAST(COUNT(*) FILTER (t = 0 AND p = 1) AS BIGINT) AS n_c1,
-           CAST(COUNT(*) FILTER (t = 1 AND p = 0) AS BIGINT) AS n_t0,
-           CAST(COUNT(*) FILTER (t = 1 AND p = 1) AS BIGINT) AS n_t1,
-           SUM(CASE WHEN t = 0 AND p = 0 THEN v END) AS s_c0,
-           SUM(CASE WHEN t = 0 AND p = 1 THEN v END) AS s_c1,
-           SUM(CASE WHEN t = 1 AND p = 0 THEN v END) AS s_t0,
-           SUM(CASE WHEN t = 1 AND p = 1 THEN v END) AS s_t1
-    FROM f
-)
-SELECT n_c0, n_c1, n_t0, n_t1,
-       ROUND(CAST(s_c0 AS DOUBLE) / CAST(n_c0 AS DOUBLE), 9) AS mean_c0,
-       ROUND(CAST(s_c1 AS DOUBLE) / CAST(n_c1 AS DOUBLE), 9) AS mean_c1,
-       ROUND(CAST(s_t0 AS DOUBLE) / CAST(n_t0 AS DOUBLE), 9) AS mean_t0,
-       ROUND(CAST(s_t1 AS DOUBLE) / CAST(n_t1 AS DOUBLE), 9) AS mean_t1,
-       ROUND(CAST(s_t1 AS DOUBLE) / CAST(n_t1 AS DOUBLE)
-             - CAST(s_t0 AS DOUBLE) / CAST(n_t0 AS DOUBLE), 9)
-           AS delta_treated,
-       ROUND(CAST(s_c1 AS DOUBLE) / CAST(n_c1 AS DOUBLE)
-             - CAST(s_c0 AS DOUBLE) / CAST(n_c0 AS DOUBLE), 9)
-           AS delta_control,
-       ROUND((CAST(s_t1 AS DOUBLE) / CAST(n_t1 AS DOUBLE)
-              - CAST(s_t0 AS DOUBLE) / CAST(n_t0 AS DOUBLE))
-             - (CAST(s_c1 AS DOUBLE) / CAST(n_c1 AS DOUBLE)
-                - CAST(s_c0 AS DOUBLE) / CAST(n_c0 AS DOUBLE)), 9) AS did
-FROM a
-""",
-)
-def _ml_diff_in_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.mleval import diff_in_diff
-
-    ev = load_table(spark, sf_dir, "events", spread=True).filter(
-        F.col("value").isNotNull()
-        & F.col("ts").isNotNull()
-        & F.col("user_id").isNotNull()
-    )
-    bounds = ev.agg(
-        F.min(F.to_date("ts")).alias("_d0"),
-        F.max(F.to_date("ts")).alias("_d1"),
-    )
-    flagged = ev.crossJoin(F.broadcast(bounds)).select(
-        "value",
-        (F.col("user_id") % 2).cast("int").alias("treat"),
-        (
-            F.to_date("ts")
-            >= F.date_add(
-                F.col("_d0"),
-                F.floor(F.datediff("_d1", "_d0") / 2).cast("int"),
-            )
-        )
-        .cast("int")
-        .alias("period"),
-    )
-    return diff_in_diff(flagged, "value", "treat", "period")
-
-
-# ---------------------------------------------------------------------------
-# Propensity matching (functions/mleval.py::propensity_match): 1-NN
-# with-replacement caliper match of odd-user treated units to even-user
-# controls on an integer hash propensity; outcome = per-user exact-avg
-# value.  The ENGINE uses the blocked equi-join (never a cross join);
-# the oracle verifies with the naive theta join — two candidate
-# generators, one answer.
-# ---------------------------------------------------------------------------
-_PS_H = "CAST(('0x' || substr(md5('ps:' || CAST(user_id AS VARCHAR)), 1, 8)) AS BIGINT)"
-_PS_CALIPER = 10000
-
-
-@query(
-    "ml_propensity_match",
-    f"""
-WITH u AS (
-    SELECT user_id,
-           CAST({_PS_H} % 1000000 AS BIGINT) AS s,
-           CAST(user_id % 2 AS INTEGER) AS t,
-           CAST(SUM(CAST(CAST(value AS VARCHAR) AS DECIMAL(28,6)))
-                AS DOUBLE) / COUNT(*) AS y
-    FROM events WHERE user_id IS NOT NULL AND value IS NOT NULL
-    GROUP BY user_id
-),
-tr AS (SELECT user_id, s, y FROM u WHERE t = 1),
-co AS (SELECT user_id AS cid, s AS cs, y AS cy FROM u WHERE t = 0),
-cand AS (
-    SELECT tr.user_id, tr.s, tr.y, co.cid, co.cs, co.cy,
-           ABS(tr.s - co.cs) AS dist
-    FROM tr JOIN co ON ABS(tr.s - co.cs) <= {_PS_CALIPER}
-),
-best AS (
-    SELECT * FROM (
-        SELECT *, ROW_NUMBER() OVER (
-            PARTITION BY user_id ORDER BY dist, cid
-        ) AS rn FROM cand
-    ) WHERE rn = 1
-),
-rows_ AS (
-    SELECT tr.user_id, tr.s AS score,
-           b.cid AS matched_control, b.cs AS control_score,
-           b.dist AS score_dist,
-           {_r("tr.y", 9)} AS outcome_treated,
-           {_r("b.cy", 9)} AS outcome_control,
-           b.cid IS NOT NULL AS matched,
-           CASE WHEN b.cid IS NOT NULL THEN
-               CAST({_r("tr.y - b.cy", 12)} AS DECIMAL(28,12))
-           END AS pt
-    FROM tr LEFT JOIN best b ON tr.user_id = b.user_id
-),
-att AS (
-    SELECT CASE WHEN COUNT(pt) > 0 THEN
-               CAST(SUM(pt) AS DOUBLE) / CAST(COUNT(pt) AS DOUBLE)
-           END AS a
-    FROM rows_
-)
-SELECT user_id, score, matched_control, control_score, score_dist,
-       outcome_treated, outcome_control, matched,
-       ROUND(a, 9) AS att_mean
-FROM rows_, att
-""",
-)
-def _ml_propensity_match(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.mleval import propensity_match
-
-    ev = load_table(spark, sf_dir, "events", spread=True).filter(
-        F.col("user_id").isNotNull() & F.col("value").isNotNull()
-    )
-    units = ev.groupBy("user_id").agg(
-        (
-            F.sum(F.col("value").cast("string").cast("decimal(28,6)"))
-            .cast("double")
-            / F.count("*").cast("double")
-        ).alias("outcome"),
-    ).select(
-        "user_id",
-        "outcome",
-        (
-            hash32(F.concat(F.lit("ps:"), F.col("user_id").cast("string")))
-            % 1000000
-        ).alias("score"),
-        (F.col("user_id") % 2).cast("int").alias("treat"),
-    )
-    return propensity_match(
-        units, "user_id", "score", "treat", "outcome",
-        caliper=_PS_CALIPER,
-    )
-
-
-# ---------------------------------------------------------------------------
-# CUPED variance reduction (functions/mleval.py::cuped): pre-period
-# covariate x = first-half per-user exact-avg value, metric y = second
-# half, treated = odd user_id.  One aggregation pass of quantized
-# cross-moments; arm-level adjustment identity (no per-unit adjusted
-# values ever materialize).
-# ---------------------------------------------------------------------------
-_CU_N = "CAST(n AS DOUBLE)"
-_CU_MX = f"(sx / {_CU_N})"
-_CU_COV = f"(sxy - sx * sy / {_CU_N})"
-_CU_VARX = f"(sxx - sx * sx / {_CU_N})"
-_CU_VARY = f"(syy - sy * sy / {_CU_N})"
-_CU_MY0 = "(sy0 / CAST(n0 AS DOUBLE))"
-_CU_MY1 = "(sy1 / CAST(n1 AS DOUBLE))"
-_CU_MX0 = "(sx0 / CAST(n0 AS DOUBLE))"
-_CU_MX1 = "(sx1 / CAST(n1 AS DOUBLE))"
-_CU_ADJ0 = f"({_CU_MY0} - ({_CU_COV} / {_CU_VARX}) * ({_CU_MX0} - {_CU_MX}))"
-_CU_ADJ1 = f"({_CU_MY1} - ({_CU_COV} / {_CU_VARX}) * ({_CU_MX1} - {_CU_MX}))"
-
-
-@query(
-    "ml_cuped",
-    f"""
-WITH base AS (
-    SELECT user_id, CAST(CAST(value AS VARCHAR) AS DECIMAL(28,6)) AS v,
-           CAST(ts AS DATE) AS d
-    FROM events
-    WHERE user_id IS NOT NULL AND value IS NOT NULL AND ts IS NOT NULL
-),
-bounds AS (SELECT MIN(d) AS d0, MAX(d) AS d1 FROM base),
-f AS (
-    SELECT user_id, v,
-           CASE WHEN d >= d0 + CAST((d1 - d0) // 2 AS INTEGER)
-                THEN 1 ELSE 0 END AS p
-    FROM base, bounds
-),
-u AS (
-    SELECT user_id,
-           CAST(SUM(CASE WHEN p = 0 THEN v END) AS DOUBLE)
-               / NULLIF(COUNT(*) FILTER (p = 0), 0) AS x,
-           CAST(SUM(CASE WHEN p = 1 THEN v END) AS DOUBLE)
-               / NULLIF(COUNT(*) FILTER (p = 1), 0) AS y,
-           CAST(user_id % 2 AS INTEGER) AS t
-    FROM f GROUP BY user_id
-),
-m AS (
-    SELECT CAST(COUNT(*) AS BIGINT) AS n,
-           CAST(COUNT(*) FILTER (t = 0) AS BIGINT) AS n0,
-           CAST(COUNT(*) FILTER (t = 1) AS BIGINT) AS n1,
-           CAST(SUM(CAST({_r("x", 12)} AS DECIMAL(28,12))) AS DOUBLE) AS sx,
-           CAST(SUM(CAST({_r("y", 12)} AS DECIMAL(28,12))) AS DOUBLE) AS sy,
-           CAST(SUM(CAST({_r("x * x", 12)} AS DECIMAL(28,12))) AS DOUBLE)
-               AS sxx,
-           CAST(SUM(CAST({_r("x * y", 12)} AS DECIMAL(28,12))) AS DOUBLE)
-               AS sxy,
-           CAST(SUM(CAST({_r("y * y", 12)} AS DECIMAL(28,12))) AS DOUBLE)
-               AS syy,
-           CAST(SUM(CASE WHEN t = 0 THEN
-               CAST({_r("x", 12)} AS DECIMAL(28,12)) END) AS DOUBLE) AS sx0,
-           CAST(SUM(CASE WHEN t = 1 THEN
-               CAST({_r("x", 12)} AS DECIMAL(28,12)) END) AS DOUBLE) AS sx1,
-           CAST(SUM(CASE WHEN t = 0 THEN
-               CAST({_r("y", 12)} AS DECIMAL(28,12)) END) AS DOUBLE) AS sy0,
-           CAST(SUM(CASE WHEN t = 1 THEN
-               CAST({_r("y", 12)} AS DECIMAL(28,12)) END) AS DOUBLE) AS sy1
-    FROM u WHERE x IS NOT NULL AND y IS NOT NULL
-)
-SELECT n0, n1,
-       {_r(_CU_MY0, 9)} AS mean_y_control,
-       {_r(_CU_MY1, 9)} AS mean_y_treated,
-       {_r(_CU_MX, 9)} AS mean_x,
-       CASE WHEN {_CU_VARX} > 0 THEN
-           {_r(f"{_CU_COV} / {_CU_VARX}", 9)} END AS theta,
-       CASE WHEN {_CU_VARX} > 0 THEN {_r(_CU_ADJ0, 9)} END AS adj_control,
-       CASE WHEN {_CU_VARX} > 0 THEN {_r(_CU_ADJ1, 9)} END AS adj_treated,
-       {_r(f"{_CU_MY1} - {_CU_MY0}", 9)} AS effect_raw,
-       CASE WHEN {_CU_VARX} > 0 THEN
-           {_r(f"{_CU_ADJ1} - {_CU_ADJ0}", 9)} END AS effect_cuped,
-       CASE WHEN {_CU_VARX} > 0 AND {_CU_VARY} > 0 THEN
-           {_r(f"{_CU_COV} * {_CU_COV} / ({_CU_VARX} * {_CU_VARY})", 9)}
-       END AS rho2
-FROM m
-""",
-)
-def _ml_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.mleval import cuped
-
-    ev = load_table(spark, sf_dir, "events", spread=True).filter(
-        F.col("user_id").isNotNull()
-        & F.col("value").isNotNull()
-        & F.col("ts").isNotNull()
-    )
-    bounds = ev.agg(
-        F.min(F.to_date("ts")).alias("_d0"),
-        F.max(F.to_date("ts")).alias("_d1"),
-    )
-    flagged = ev.crossJoin(F.broadcast(bounds)).select(
-        "user_id",
-        F.col("value").cast("string").cast("decimal(28,6)").alias("_v"),
-        (
-            F.to_date("ts")
-            >= F.date_add(
-                F.col("_d0"),
-                F.floor(F.datediff("_d1", "_d0") / 2).cast("int"),
-            )
-        )
-        .cast("int")
-        .alias("_p"),
-    )
-    units = flagged.groupBy("user_id").agg(
-        (
-            F.sum(F.when(F.col("_p") == 0, F.col("_v"))).cast("double")
-            / F.nullif(
-                F.count_if(F.col("_p") == 0), F.lit(0)
-            ).cast("double")
-        ).alias("x"),
-        (
-            F.sum(F.when(F.col("_p") == 1, F.col("_v"))).cast("double")
-            / F.nullif(
-                F.count_if(F.col("_p") == 1), F.lit(0)
-            ).cast("double")
-        ).alias("y"),
-    ).withColumn("t", (F.col("user_id") % 2).cast("int"))
-    return cuped(units, "x", "y", "t")
-
-
-# ---------------------------------------------------------------------------
-# Murphy Brier decomposition (functions/mleval.py::brier_decomposition):
-# Brier = reliability - resolution + uncertainty over forecast bins.
-# Score = the md5 contract quantized to 2^20 so the Brier numerator
-# sum((s - y*D)^2) stays exact BIGINT end-to-end; the per-bin rel/res
-# terms (divisions) ride the quantized-term DECIMAL(28,12) contract.
-# ---------------------------------------------------------------------------
-_BRIER_D = 2**20
-
-
-@query(
-    "ml_brier_decomposition",
-    f"""
-WITH base AS (
-    SELECT {_H32_SQL} % {_BRIER_D} AS s,
-           CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS y
-    FROM events WHERE event_type IS NOT NULL
-),
-b AS (
-    SELECT CAST(floor(s * 10 / {_BRIER_D}) AS INTEGER) AS bin,
-           CAST(COUNT(*) AS BIGINT) AS n,
-           CAST(SUM(y) AS BIGINT) AS pos,
-           CAST(SUM(s) AS BIGINT) AS sum_s,
-           CAST(SUM((s - y * {_BRIER_D}) * (s - y * {_BRIER_D}))
-                AS BIGINT) AS brier_num
-    FROM base GROUP BY 1
-),
-t AS (
-    SELECT CAST(SUM(n) AS BIGINT) AS total_n,
-           CAST(SUM(pos) AS BIGINT) AS p,
-           CAST(SUM(brier_num) AS BIGINT) AS bn
-    FROM b
-),
-terms AS (
-    SELECT b.bin, b.n, b.pos, t.total_n, t.p, t.bn,
-           {_r(f"CAST(b.sum_s AS DOUBLE) / CAST(b.n * {_BRIER_D} AS DOUBLE)",
-               9)} AS bin_confidence,
-           {_r("CAST(b.pos AS DOUBLE) / CAST(b.n AS DOUBLE)", 9)}
-               AS bin_accuracy,
-           CAST({_r(
-               f"CAST(b.n AS DOUBLE)"
-               f" * (CAST(b.sum_s AS DOUBLE) / CAST(b.n * {_BRIER_D} AS DOUBLE)"
-               f"    - CAST(b.pos AS DOUBLE) / CAST(b.n AS DOUBLE))"
-               f" * (CAST(b.sum_s AS DOUBLE) / CAST(b.n * {_BRIER_D} AS DOUBLE)"
-               f"    - CAST(b.pos AS DOUBLE) / CAST(b.n AS DOUBLE))", 12
-           )} AS DECIMAL(28,12)) AS rel_t,
-           CAST({_r(
-               "CAST(b.n AS DOUBLE)"
-               " * (CAST(b.pos AS DOUBLE) / CAST(b.n AS DOUBLE)"
-               "    - CAST(t.p AS DOUBLE) / CAST(t.total_n AS DOUBLE))"
-               " * (CAST(b.pos AS DOUBLE) / CAST(b.n AS DOUBLE)"
-               "    - CAST(t.p AS DOUBLE) / CAST(t.total_n AS DOUBLE))", 12
-           )} AS DECIMAL(28,12)) AS res_t
-    FROM b, t
-),
-comp AS (SELECT SUM(rel_t) AS rel_s, SUM(res_t) AS res_s FROM terms)
-SELECT bin, n, pos, bin_confidence, bin_accuracy,
-       {_r("CAST(p AS DOUBLE) / CAST(total_n AS DOUBLE)", 9)} AS base_rate,
-       {_r(f"CAST(bn AS DOUBLE) / (CAST(total_n AS DOUBLE)"
-           f" * CAST({float(_BRIER_D) * float(_BRIER_D)!r} AS DOUBLE))",
-           9)} AS brier,
-       {_r("CAST(rel_s AS DOUBLE) / CAST(total_n AS DOUBLE)", 9)}
-           AS reliability,
-       {_r("CAST(res_s AS DOUBLE) / CAST(total_n AS DOUBLE)", 9)}
-           AS resolution,
-       {_r("(CAST(p AS DOUBLE) / CAST(total_n AS DOUBLE))"
-           " * (CAST(1 AS DOUBLE)"
-           "    - CAST(p AS DOUBLE) / CAST(total_n AS DOUBLE))", 9)}
-           AS uncertainty,
-       total_n
-FROM terms, comp
-""",
-)
-def _brier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brier decomposition over the md5-contract pseudo-score quantized
-    to 2^20 — proves the exact arithmetic; a real model plugs in any
-    integer-quantized probability column."""
-    from ..functions.mleval import brier_decomposition
-
-    ev = load_table(spark, sf_dir, "events", spread=True).filter(
-        F.col("event_type").isNotNull()
-    )
-    base = ev.select(
-        (hash32(F.col("event_id").cast("string")) % _BRIER_D).alias(
-            "score"
-        ),
-        (F.col("event_type") == "purchase").cast("int").alias("label"),
-    )
-    return brier_decomposition(
-        base, "score", "label", n_bins=10, denom=_BRIER_D
-    )
-
-
-@query(
-    "ml_cumulative_gains",
-    f"""
-WITH base AS (
-    SELECT {_H32_SQL} AS s,
-           CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS y
-    FROM events WHERE event_type IS NOT NULL
-),
-b AS (
-    SELECT CAST(floor(s * 10 / {_DENOM}) AS INTEGER) AS bin,
-           CAST(COUNT(*) AS BIGINT) AS n,
-           CAST(SUM(y) AS BIGINT) AS pos
-    FROM base GROUP BY 1
-),
-c AS (
-    SELECT bin, n, pos,
-           CAST(SUM(n) OVER (ORDER BY bin DESC
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-               AS BIGINT) AS cum_n,
-           CAST(SUM(pos) OVER (ORDER BY bin DESC
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-               AS BIGINT) AS cum_pos
-    FROM b
-),
-t AS (SELECT CAST(SUM(n) AS BIGINT) AS tn, CAST(SUM(pos) AS BIGINT) AS tp
-      FROM b)
-SELECT bin, n, pos, cum_n, cum_pos,
-       CASE WHEN tp > 0 THEN
-           {_r("CAST(cum_pos AS DOUBLE) / CAST(tp AS DOUBLE)", 9)}
-       END AS gain,
-       CASE WHEN tp > 0 THEN
-           {_r("CAST(cum_pos * tn AS DOUBLE) / CAST(cum_n * tp AS DOUBLE)",
-               9)}
-       END AS lift
-FROM c, t
-""",
-)
-def _cumulative_gains(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gains/lift over the md5-contract pseudo-score — proves the exact
-    cross-multiplied arithmetic and the value-range (tie-stable)
-    bucketing; a real model plugs in any integer-quantized score."""
-    from ..functions.mleval import cumulative_gains
-
-    ev = load_table(spark, sf_dir, "events", spread=True).filter(
-        F.col("event_type").isNotNull()
-    )
-    base = ev.select(
-        hash32(F.col("event_id").cast("string")).alias("score"),
-        (F.col("event_type") == "purchase").cast("int").alias("label"),
-    )
-    return cumulative_gains(base, "score", "label", n_buckets=10, denom=_DENOM)
 
 
 # ---------------------------------------------------------------------------

@@ -19,10 +19,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from nl_railtraffic_etl_pipeline_spark.plans.testdata import load_table
+
 from ..functions.geo import grid_nearest_neighbors
 from ..functions.text import hash32
 from .registry import query
-from .testdata import load_table
 
 _RADIUS = 150  # hundredths of a degree (1.5 deg); r^2 = 22500
 

@@ -2,17 +2,11 @@
 threshold-sweep classifier evaluation, proper scoring, and phonetic
 encoding.
 
-Six first-class operators, each oracle-gated:
+Each operator is oracle-gated:
 
-- ``stats_friedman``: Friedman rank test over complete (date, type)
-  blocks — integer-exact via doubled midranks; the tie-corrected
-  statistic (Conover form) needs just ONE closing division.
 - ``stats_cramers_v``: chi-square association effect size over the
   (event_type x ISO dow) contingency table, cell terms folded with the
   anova_f strict-left-fold contract.
-- ``stats_kendall_tau``: exact tau-b with full tie corrections over a
-  deterministically fenced sample frame (pair counts bounded by the
-  fence^2 by construction — never corpus-quadratic).
 - ``ml_mcc``: Matthews correlation across a 9-threshold sweep of the
   md5 pseudo-score, derived from ONE bucket-keyed pass (no
   per-threshold corpus re-scan).
@@ -34,80 +28,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from nl_railtraffic_etl_pipeline_spark.plans.testdata import load_table
+
 from .oracle_util import round_sql as _r
 from .registry import query
-from .testdata import load_table
 
 _H32_SQL = (
     "CAST(('0x' || substr(md5(CAST(event_id AS VARCHAR)), 1, 8)) AS BIGINT)"
 )
 _DENOM = 2**32
-
-
-# ---------------------------------------------------------------------------
-# Friedman rank test (functions/stats.py::friedman_q): blocks = dates,
-# treatments = event types, response = the cell's event count.  Blocks
-# missing any treatment are excluded deterministically on both engines
-# (the textbook complete-block requirement).  Doubled midranks keep the
-# Conover tie-corrected statistic integer until one closing division.
-# ---------------------------------------------------------------------------
-@query(
-    "stats_friedman",
-    """
-WITH cells AS (
-    SELECT CAST(ts AS DATE) AS b, event_type AS t,
-           CAST(COUNT(*) AS BIGINT) AS v
-    FROM events WHERE ts IS NOT NULL AND event_type IS NOT NULL
-    GROUP BY 1, 2
-),
-kk AS (SELECT COUNT(DISTINCT t) AS k FROM cells),
-complete AS (
-    SELECT b FROM cells GROUP BY b
-    HAVING COUNT(*) = (SELECT k FROM kk)
-),
-kept AS (SELECT cells.* FROM cells JOIN complete USING (b)),
-pv AS (SELECT b, v, CAST(COUNT(*) AS BIGINT) AS tc FROM kept GROUP BY 1, 2),
-rv AS (
-    SELECT b, v,
-           2 * COALESCE(SUM(tc) OVER (
-               PARTITION BY b ORDER BY v
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-           + tc + 1 AS r2
-    FROM pv
-),
-rk AS (SELECT kept.t, rv.r2 FROM kept JOIN rv ON kept.b = rv.b AND kept.v = rv.v),
-pt AS (
-    SELECT t, CAST(SUM(r2) AS BIGINT) AS rt2,
-           CAST(SUM(r2 * r2) AS BIGINT) AS rsq,
-           CAST(COUNT(*) AS BIGINT) AS nb
-    FROM rk GROUP BY 1
-),
-r AS (
-    SELECT CAST(COUNT(*) AS BIGINT) AS k,
-           CAST(MAX(nb) AS BIGINT) AS b,
-           CAST(SUM(rt2 * rt2) AS BIGINT) AS num_s,
-           CAST(SUM(rsq) AS BIGINT) AS den_s
-    FROM pt
-)
-SELECT k, b,
-       CASE WHEN k > 1 AND b > 0
-                 AND den_s - b * k * (k + 1) * (k + 1) > 0
-            THEN ROUND(
-                CAST(k - 1 AS DOUBLE)
-                * CAST(num_s - b * b * k * (k + 1) * (k + 1) AS DOUBLE)
-                / CAST(den_s - b * k * (k + 1) * (k + 1) AS DOUBLE), 9)
-       END AS q_stat
-FROM r
-""",
-)
-def _stats_friedman(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.stats import friedman_q
-
-    e = load_table(spark, sf_dir, "events", spread=True)
-    base = e.filter(
-        F.col("ts").isNotNull() & F.col("event_type").isNotNull()
-    ).select(F.to_date("ts").alias("day"), "event_type")
-    return friedman_q(base, "day", "event_type")
 
 
 # ---------------------------------------------------------------------------
@@ -171,68 +100,6 @@ def _stats_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.weekday(F.to_date("ts")) + 1).cast("bigint").alias("iso_dow"),
     )
     return cramers_v(base, "event_type", "iso_dow")
-
-
-# ---------------------------------------------------------------------------
-# Exact Kendall tau-b (functions/stats.py::kendall_tau_b) between value
-# and hour-of-day over a deterministically fenced sample (event_id
-# window + modulus — a FIXED row budget independent of corpus scale, so
-# the pair enumeration is bounded by construction).  All counts are
-# exact BIGINTs; ties in both coordinates exercise every correction
-# branch.
-# ---------------------------------------------------------------------------
-_KT_MOD, _KT_CAP = 17, 6000
-
-
-@query(
-    "stats_kendall_tau",
-    f"""
-WITH s AS (
-    SELECT value AS x, CAST(EXTRACT(hour FROM ts) AS BIGINT) AS y,
-           ROW_NUMBER() OVER (
-               ORDER BY value, EXTRACT(hour FROM ts), event_id) AS rn
-    FROM events
-    WHERE event_id % {_KT_MOD} = 0 AND event_id < {_KT_CAP}
-          AND value IS NOT NULL AND ts IS NOT NULL
-),
-p AS (
-    SELECT sign(a.x - b.x) AS sx, CAST(sign(a.y - b.y) AS DOUBLE) AS sy
-    FROM s a JOIN s b ON a.rn < b.rn
-),
-agg AS (
-    SELECT CAST(COUNT(*) AS BIGINT) AS npairs,
-           CAST(COUNT(*) FILTER (sx * sy > 0) AS BIGINT) AS concordant,
-           CAST(COUNT(*) FILTER (sx * sy < 0) AS BIGINT) AS discordant,
-           CAST(COUNT(*) FILTER (sx = 0 AND sy <> 0) AS BIGINT) AS ties_x,
-           CAST(COUNT(*) FILTER (sy = 0 AND sx <> 0) AS BIGINT) AS ties_y,
-           CAST(COUNT(*) FILTER (sx = 0 AND sy = 0) AS BIGINT) AS txy
-    FROM p
-),
-n_ AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM s)
-SELECT n, concordant, discordant, ties_x, ties_y,
-       CASE WHEN npairs > ties_x + txy AND npairs > ties_y + txy
-            THEN ROUND(
-                CAST(concordant - discordant AS DOUBLE)
-                / sqrt(CAST(npairs - ties_x - txy AS DOUBLE)
-                       * CAST(npairs - ties_y - txy AS DOUBLE)), 9)
-       END AS tau_b
-FROM agg, n_
-""",
-)
-def _stats_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.stats import kendall_tau_b
-
-    e = load_table(spark, sf_dir, "events", spread=True)
-    sample = e.filter(
-        (F.col("event_id") % _KT_MOD == 0)
-        & (F.col("event_id") < _KT_CAP)
-        & F.col("value").isNotNull()
-        & F.col("ts").isNotNull()
-    ).select(
-        F.col("value").alias("x"),
-        F.hour("ts").cast("bigint").alias("y"),
-    )
-    return kendall_tau_b(sample, "x", "y")
 
 
 # ---------------------------------------------------------------------------
@@ -411,84 +278,6 @@ def _text_soundex(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Krippendorff's alpha (functions/mleval.py::krippendorff_alpha_nominal)
-# over a deterministic 3-rater panel with MISSING ratings: rater r's
-# label for doc d is h32('ka:r:d') % 4, skipped when h32 % 5 = 0 — so
-# units carry 0..3 ratings and the unpairable (< 2) exclusion, the
-# per-unit disagreement closed form, and the marginal expectation are
-# all exercised.  Doubled disagreement stays integer (raters <= 3).
-# ---------------------------------------------------------------------------
-_KA_H32 = (
-    "CAST(('0x' || substr(md5('ka:' || CAST(r AS VARCHAR) || ':'"
-    " || CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT)"
-)
-
-
-@query(
-    "ml_krippendorff_alpha",
-    f"""
-WITH ratings AS (
-    SELECT doc_id, r, {_KA_H32} % 4 AS label
-    FROM documents, (SELECT unnest(range(0, 3)) AS r)
-    WHERE {_KA_H32} % 5 <> 0
-),
-cells AS (
-    SELECT doc_id AS u, label AS c, CAST(COUNT(*) AS BIGINT) AS nuc
-    FROM ratings GROUP BY 1, 2
-),
-per_u AS (
-    SELECT u, CAST(SUM(nuc) AS BIGINT) AS mu,
-           CAST(SUM(nuc * nuc) AS BIGINT) AS sq
-    FROM cells GROUP BY 1 HAVING SUM(nuc) >= 2
-),
-do_ AS (
-    SELECT CAST(COUNT(*) AS BIGINT) AS n_units,
-           CAST(SUM(mu) AS BIGINT) AS n,
-           CAST(SUM((2 * (mu * mu - sq)) // (mu - 1)) AS BIGINT) AS do2
-    FROM per_u
-),
-marg AS (
-    SELECT c, CAST(SUM(nuc) AS BIGINT) AS nc
-    FROM cells JOIN per_u ON cells.u = per_u.u GROUP BY 1
-),
-de_ AS (
-    SELECT CAST(COUNT(*) AS BIGINT) AS n_values,
-           CAST(SUM(nc * nc) AS BIGINT) AS sqc
-    FROM marg
-)
-SELECT n_units, n_values, n, do2,
-       CAST(n * n - sqc AS BIGINT) AS de_num,
-       CASE WHEN n > 1 AND n * n - sqc > 0 THEN
-           ROUND(CAST(1 AS DOUBLE)
-                 - CAST(n - 1 AS DOUBLE) * CAST(do2 AS DOUBLE)
-                   / (CAST(2 AS DOUBLE) * CAST(n * n - sqc AS DOUBLE)), 9)
-       END AS alpha
-FROM do_, de_
-""",
-)
-def _ml_krippendorff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.mleval import krippendorff_alpha_nominal
-    from ..functions.text import hash32
-
-    d = load_table(spark, sf_dir, "documents", spread=True)
-    raters = spark.range(0, 3).select(F.col("id").alias("r"))
-    h = hash32(
-        F.concat(
-            F.lit("ka:"), F.col("r").cast("string"), F.lit(":"),
-            F.col("doc_id").cast("string"),
-        )
-    )
-    ratings = (
-        d.select("doc_id")
-        .crossJoin(F.broadcast(raters))
-        .withColumn("_h", h)
-        .filter(F.col("_h") % 5 != 0)
-        .select("doc_id", (F.col("_h") % 4).alias("label"))
-    )
-    return krippendorff_alpha_nominal(ratings, "doc_id", "label")
-
-
-# ---------------------------------------------------------------------------
 # Sitemap parse (pure whole-stage-codegen, ZERO Python): one sitemap
 # XML per source assembled from the documents (url entries with
 # lastmod, changefreq/priority decoys, and 'skip' paths for
@@ -602,41 +391,6 @@ def _web_sitemap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Parquet footer trust check (sources/lake.py::parquet_footer_stats):
-# the engine reads ONLY the documents.parquet FOOTER (the metadata
-# plane predicate pushdown relies on) and reports per-column
-# num_values / null_count / min / max; the oracle recomputes the same
-# numbers from the DATA.  Equality IS the verification that the file's
-# statistics can be trusted for pruning — a writer that mis-stamps
-# stats hash-mismatches here before it silently breaks a pushdown.
-# ---------------------------------------------------------------------------
-@query(
-    "lake_parquet_footer",
-    """
-SELECT 'doc_id' AS "column",
-       CAST(COUNT(doc_id) AS BIGINT) AS n_values,
-       CAST(COUNT(*) - COUNT(doc_id) AS BIGINT) AS n_nulls,
-       CAST(MIN(doc_id) AS BIGINT) AS min_val,
-       CAST(MAX(doc_id) AS BIGINT) AS max_val
-FROM documents
-UNION ALL
-SELECT 'n_chars',
-       CAST(COUNT(n_chars) AS BIGINT),
-       CAST(COUNT(*) - COUNT(n_chars) AS BIGINT),
-       CAST(MIN(n_chars) AS BIGINT),
-       CAST(MAX(n_chars) AS BIGINT)
-FROM documents
-""",
-)
-def _lake_parquet_footer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..sources.lake import parquet_footer_stats
-
-    return parquet_footer_stats(
-        spark, f"{sf_dir}/documents.parquet", ["doc_id", "n_chars"]
-    )
-
-
-# ---------------------------------------------------------------------------
 # Generalized-ESD anomaly rounds (functions/stats.py::esd_rounds) over
 # per-day event counts: three remove-the-max-z iterations, each
 # recomputing mean/std over the remainder.  The oracle unrolls the
@@ -745,385 +499,6 @@ def _text_utf8_validity(spark: SparkSession, sf_dir: str) -> DataFrame:
         gen, "doc_id long, payload binary"
     )
     return utf8_validity_stats(payload)
-
-
-# ---------------------------------------------------------------------------
-# Additive Holt-Winters (functions/stats.py::holt_winters_additive)
-# over daily event counts, weekly seasonality — the seasonal member of
-# the EWMA/Holt family.  The oracle replays the identical DOUBLE[10]
-# list_reduce (level, trend, 7 seasonals, position) with recomputed
-# l_t token sequences; a swapped update order or a drifting seasonal
-# slot hash-mismatches.
-# ---------------------------------------------------------------------------
-_HW_A = "CAST('0.3' AS DOUBLE)"
-_HW_OMA = "CAST('0.7' AS DOUBLE)"
-_HW_B = "CAST('0.1' AS DOUBLE)"
-_HW_OMB = "CAST('0.9' AS DOUBLE)"
-_HW_G = "CAST('0.2' AS DOUBLE)"
-_HW_OMG = "CAST('0.8' AS DOUBLE)"
-_HW_L0 = (
-    "((" + " + ".join(f"l[{j}].v" for j in range(1, 8))
-    + ") / CAST(7 AS DOUBLE))"
-)
-_HW_IDX = "(CAST(acc[10] AS INTEGER) % 7)"
-_HW_SLOT = f"acc[3 + {_HW_IDX}]"
-_HW_LT = (
-    f"({_HW_A} * (x[1] - {_HW_SLOT})"
-    f" + {_HW_OMA} * (acc[1] + acc[2]))"
-)
-_HW_BT = f"({_HW_B} * ({_HW_LT} - acc[1]) + {_HW_OMB} * acc[2])"
-_HW_ST = f"({_HW_G} * (x[1] - {_HW_LT}) + {_HW_OMG} * {_HW_SLOT})"
-
-
-@query(
-    "events_holt_winters",
-    f"""
-WITH daily AS (
-    SELECT CAST(ts AS DATE) AS d, CAST(COUNT(*) AS DOUBLE) AS v
-    FROM events WHERE ts IS NOT NULL GROUP BY 1
-),
-packed AS (
-    SELECT list(struct_pack(d := d, v := v) ORDER BY d) AS l FROM daily
-),
-ok AS (
-    SELECT l, CAST(len(l) AS BIGINT) AS n FROM packed WHERE len(l) >= 8
-),
-folded AS (
-    SELECT n,
-           list_reduce(
-               list_prepend(
-                   list_concat(list_concat(
-                       [{_HW_L0}, CAST(0.0 AS DOUBLE)],
-                       list_transform([0, 1, 2, 3, 4, 5, 6],
-                                      j -> l[j + 1].v - {_HW_L0})),
-                       [CAST(7.0 AS DOUBLE)]),
-                   list_transform(l[8:], e -> [e.v])),
-               (acc, x) -> list_concat(list_concat(
-                   [{_HW_LT}, {_HW_BT}],
-                   list_transform([0, 1, 2, 3, 4, 5, 6],
-                                  j -> CASE WHEN j = {_HW_IDX}
-                                            THEN {_HW_ST}
-                                            ELSE acc[3 + j] END)),
-                   [acc[10] + CAST(1.0 AS DOUBLE)])
-           ) AS s
-    FROM ok
-)
-SELECT n,
-       ROUND(s[1], 9) AS level,
-       ROUND(s[2], 9) AS trend,
-       {", ".join(f"ROUND(s[{3 + j}], 9) AS s{j}" for j in range(7))},
-       ROUND(s[1] + s[2] + s[3 + n % 7], 9) AS forecast_next
-FROM folded
-""",
-)
-def _events_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.stats import holt_winters_additive
-
-    e = load_table(spark, sf_dir, "events", spread=True)
-    daily = (
-        e.filter(F.col("ts").isNotNull())
-        .groupBy(F.to_date("ts").alias("day"))
-        .agg(F.count("*").alias("value"))
-    )
-    return holt_winters_additive(daily)
-
-
-# ---------------------------------------------------------------------------
-# TextRank keywords (functions/text.py::textrank_keywords): integer
-# PageRank over the adjacent-token co-occurrence graph fenced to the
-# top-200 vocabulary — graph centrality where RAKE/top-terms rank by
-# frequency.  The oracle rebuilds the same graph (post-filter
-# renumbered adjacency, both directions, vocab-restricted) and replays
-# the 5 integer PR rounds.
-# ---------------------------------------------------------------------------
-_TR_VOCAB, _TR_TOPK, _TR_ITERS = 200, 20, 5
-_TR_UNIT, _TR_TELEPORT = 10**12, 15 * 10**12 // 100
-
-
-def _tr_step_sql(k: int) -> str:
-    return f"""
-pr{k + 1} AS (
-    SELECT v.word AS node,
-           CAST({_TR_TELEPORT} + (85 * COALESCE(s.s, 0)) // 100 AS BIGINT)
-               AS r
-    FROM vocab v
-    LEFT JOIN (
-        SELECT e.dst AS nd, SUM(p.r // o.d) AS s
-        FROM edges e
-        JOIN pr{k} p ON e.src = p.node
-        JOIN outdeg o ON e.src = o.src
-        GROUP BY e.dst
-    ) s ON v.word = s.nd
-)"""
-
-
-@query(
-    "text_textrank_keywords",
-    f"""
-WITH toks AS (
-    SELECT doc_id,
-           unnest([{{'p': i, 'w': w[i]}} for i in range(1, len(w) + 1)])
-               AS u
-    FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents
-          WHERE text IS NOT NULL)
-),
-tok2 AS (
-    SELECT doc_id, u.w AS w,
-           ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY u.p) AS rn
-    FROM toks WHERE u.w <> ''
-),
-counts AS (SELECT w, COUNT(*) AS n FROM tok2 GROUP BY 1),
-vocab AS (
-    SELECT w AS word FROM (
-        SELECT w, ROW_NUMBER() OVER (ORDER BY n DESC, w) AS rn
-        FROM counts
-    ) WHERE rn <= {_TR_VOCAB}
-),
-adj AS (
-    SELECT t1.w AS a, t2.w AS b
-    FROM tok2 t1 JOIN tok2 t2
-      ON t1.doc_id = t2.doc_id AND t2.rn = t1.rn + 1
-    WHERE t1.w <> t2.w
-),
-bidir AS (SELECT a, b FROM adj UNION ALL SELECT b AS a, a AS b FROM adj),
-edges AS (
-    SELECT DISTINCT bidir.a AS src, bidir.b AS dst
-    FROM bidir
-    JOIN vocab va ON bidir.a = va.word
-    JOIN vocab vb ON bidir.b = vb.word
-),
-outdeg AS (SELECT src, COUNT(*) AS d FROM edges GROUP BY 1),
-pr0 AS (SELECT word AS node, CAST({_TR_UNIT} AS BIGINT) AS r FROM vocab),"""
-    + ",".join(_tr_step_sql(k) for k in range(_TR_ITERS))
-    + f"""
-SELECT CAST(rn AS INTEGER) AS rank, node AS word, r AS pr_units FROM (
-    SELECT node, r, ROW_NUMBER() OVER (ORDER BY r DESC, node) AS rn
-    FROM pr{_TR_ITERS}
-) WHERE rn <= {_TR_TOPK}
-""",
-)
-def _text_textrank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.text import textrank_keywords
-
-    d = load_table(spark, sf_dir, "documents", spread=True).filter(
-        F.col("text").isNotNull()
-    )
-    return textrank_keywords(
-        d, vocab_size=_TR_VOCAB, top_k=_TR_TOPK, iterations=_TR_ITERS
-    )
-
-
-# ---------------------------------------------------------------------------
-# Content-defined chunking (functions/chunking.py::cdc_chunk_stats):
-# stateless 4-byte-window rolling hash (Knuth multiplicative), boundary
-# where the hash hits the 1/64 mask — sub-document dedup alignment that
-# survives insertions.  Pure window functions on both engines.
-# ---------------------------------------------------------------------------
-@query(
-    "dedup_cdc_chunks",
-    """
-WITH chars AS (
-    SELECT doc_id,
-           unnest([{'p': i, 'b': ascii(c[i])} for i in range(1, len(c) + 1)])
-               AS u
-    FROM (SELECT doc_id, string_split(text, '') AS c FROM documents
-          WHERE text IS NOT NULL)
-),
-ch AS (SELECT doc_id, u.p AS p, u.b AS b FROM chars),
-lagged AS (
-    SELECT doc_id, p, b,
-           LAG(b, 3) OVER w AS b3,
-           LAG(b, 2) OVER w AS b2,
-           LAG(b, 1) OVER w AS b1
-    FROM ch WINDOW w AS (PARTITION BY doc_id ORDER BY p)
-),
-flags AS (
-    SELECT doc_id, p, b,
-           CASE WHEN b3 IS NOT NULL
-                     AND (8 * ((b3 * 2654435761) % 4294967296)
-                          + 4 * ((b2 * 2654435761) % 4294967296)
-                          + 2 * ((b1 * 2654435761) % 4294967296)
-                          + ((b * 2654435761) % 4294967296))
-                         % 4294967296 % 64 = 0
-                THEN 1 ELSE 0 END AS cut
-    FROM lagged
-),
-assigned AS (
-    SELECT doc_id, b,
-           COALESCE(SUM(cut) OVER (
-               PARTITION BY doc_id ORDER BY p
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-               AS chunk
-    FROM flags
-),
-per_chunk AS (
-    SELECT doc_id, chunk, CAST(COUNT(*) AS BIGINT) AS cb,
-           CAST(SUM(b) AS BIGINT) AS cs
-    FROM assigned GROUP BY 1, 2
-)
-SELECT doc_id,
-       CAST(SUM(cb) AS BIGINT) AS n_bytes,
-       CAST(COUNT(*) AS BIGINT) AS n_chunks,
-       CAST(MAX(cb) AS BIGINT) AS max_chunk_bytes,
-       CAST(SUM((chunk + 1) * cs) AS BIGINT) AS chunks_weighted
-FROM per_chunk GROUP BY 1
-""",
-)
-def _dedup_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.chunking import cdc_chunk_stats
-
-    d = load_table(spark, sf_dir, "documents", spread=True).filter(
-        F.col("text").isNotNull()
-    )
-    return cdc_chunk_stats(d)
-
-
-_COS_SQL_INF = """
-ROUND(
-  list_sum(list_transform(list_zip(a.{va}, b.{vb}),
-           x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-  / (sqrt(list_sum(list_transform(a.{va}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-     * sqrt(list_sum(list_transform(b.{vb}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))),
-6)
-"""
-
-
-# ---------------------------------------------------------------------------
-# Semi-hard triplet mining (functions/simsearch.py::triplet_mining):
-# per fenced anchor the hardest positive and the FaceNet semi-hard
-# negative (most similar different-label vector still below the
-# positive), hardest-negative fallback flagged.  Integer cos6
-# comparisons keep the semi-hard boundary and every argmax exact.
-# ---------------------------------------------------------------------------
-_TRIP_MOD = 50
-
-
-@query(
-    "emb_triplet_mining",
-    f"""
-WITH anchors AS (
-    SELECT vec_id AS anchor_id, embedding AS av, label AS alab
-    FROM embeddings WHERE vec_id % {_TRIP_MOD} = 0
-),
-scored AS (
-    SELECT a.anchor_id, a.alab, b.vec_id AS cand_id, b.label AS clab,
-           CAST(ROUND(({_COS_SQL_INF.format(va='av', vb='embedding')})
-                      * 1000000) AS BIGINT) AS cos6
-    FROM embeddings b CROSS JOIN anchors a
-    WHERE b.vec_id <> a.anchor_id
-),
-pos AS (
-    SELECT anchor_id, cand_id AS pos_id, cos6 AS pos_cos6 FROM (
-        SELECT *, ROW_NUMBER() OVER (
-            PARTITION BY anchor_id ORDER BY cos6 DESC, cand_id) AS rn
-        FROM scored WHERE clab = alab
-    ) WHERE rn = 1
-),
-negs AS (
-    SELECT s.anchor_id, s.cand_id, s.cos6, p.pos_cos6
-    FROM scored s JOIN pos p USING (anchor_id)
-    WHERE s.clab <> s.alab
-),
-semineg AS (
-    SELECT anchor_id, cand_id AS neg_id, cos6 AS neg_cos6,
-           TRUE AS semi_hard
-    FROM (
-        SELECT *, ROW_NUMBER() OVER (
-            PARTITION BY anchor_id ORDER BY cos6 DESC, cand_id) AS rn
-        FROM negs WHERE cos6 < pos_cos6
-    ) WHERE rn = 1
-),
-hardest AS (
-    SELECT anchor_id, cand_id AS neg_id, cos6 AS neg_cos6,
-           FALSE AS semi_hard
-    FROM (
-        SELECT n.anchor_id, n.cand_id, n.cos6, ROW_NUMBER() OVER (
-            PARTITION BY n.anchor_id ORDER BY n.cos6 DESC, n.cand_id)
-            AS rn
-        FROM negs n LEFT JOIN semineg x ON n.anchor_id = x.anchor_id
-        WHERE x.neg_id IS NULL
-    ) WHERE rn = 1
-)
-SELECT p.anchor_id, p.pos_id, p.pos_cos6, q.neg_id, q.neg_cos6,
-       q.semi_hard
-FROM pos p
-JOIN (SELECT * FROM semineg UNION ALL SELECT * FROM hardest) q
-  USING (anchor_id)
-""",
-)
-def _emb_triplets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.simsearch import triplet_mining
-
-    return triplet_mining(
-        load_table(spark, sf_dir, "embeddings"), anchor_mod=_TRIP_MOD
-    )
-
-
-# ---------------------------------------------------------------------------
-# DTW distance (functions/stats.py::dtw_distance_units) between the
-# even-day and odd-day hourly count profiles — the alignment-tolerant
-# series distance (a one-hour phase shift destroys pointwise L1 but
-# barely moves DTW).  Integer-exact DP replayed in the oracle as the
-# same NESTED list_reduce (outer over a's points carrying the previous
-# DP row, inner rebuilding the row left-to-right).
-# ---------------------------------------------------------------------------
-_DTW_ROW0 = (
-    "list_reduce(list_prepend([abs(av[1] - bv[1])], "
-    "list_transform(bv[2:], y -> [y])), "
-    "(acc, x) -> list_concat(acc, "
-    "[acc[len(acc)] + abs(av[1] - x[1])]))"
-)
-_DTW_STEP = (
-    "list_reduce(list_prepend(" + _DTW_ROW0 + ", "
-    "list_transform(av[2:], xa -> [xa])), "
-    "(prev, xe) -> list_reduce("
-    "list_prepend([abs(xe[1] - bv[1]) + prev[1]], "
-    "list_transform(bv[2:], y -> [y])), "
-    "(acc, x) -> list_concat(acc, [abs(xe[1] - x[1]) + least("
-    "prev[len(acc) + 1], prev[len(acc)], acc[len(acc)])])))"
-)
-
-
-@query(
-    "events_dtw_profiles",
-    f"""
-WITH hourly AS (
-    SELECT CAST(CAST(ts AS DATE) AS DATE) AS d,
-           CAST(EXTRACT(day FROM CAST(ts AS DATE)) % 2 AS INTEGER)
-               AS part,
-           CAST(EXTRACT(hour FROM ts) AS INTEGER) AS h
-    FROM events WHERE ts IS NOT NULL
-),
-prof AS (
-    SELECT part, h, CAST(COUNT(*) AS BIGINT) AS v
-    FROM hourly GROUP BY 1, 2
-),
-packed AS (
-    SELECT list(v ORDER BY h) FILTER (part = 0) AS av,
-           list(v ORDER BY h) FILTER (part = 1) AS bv
-    FROM prof
-),
-ok AS (SELECT av, bv FROM packed WHERE len(av) > 0 AND len(bv) > 0)
-SELECT CAST(len(av) AS BIGINT) AS n_a,
-       CAST(len(bv) AS BIGINT) AS n_b,
-       CAST(({_DTW_STEP})[len(bv)] AS BIGINT) AS dtw_units
-FROM ok
-""",
-)
-def _events_dtw(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.stats import dtw_distance_units
-
-    e = load_table(spark, sf_dir, "events", spread=True)
-    prof = (
-        e.filter(F.col("ts").isNotNull())
-        .select(
-            (F.dayofmonth(F.to_date("ts")) % 2).cast("int").alias("part"),
-            F.hour("ts").cast("int").alias("h"),
-        )
-        .groupBy("part", "h")
-        .agg(F.count("*").cast("bigint").alias("v"))
-    )
-    return dtw_distance_units(prof, "part", "h", "v")
 
 
 # ---------------------------------------------------------------------------
@@ -1329,57 +704,3 @@ def _sample_systematic(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("rn") - 1) % _SYS_K == F.col("phase")
     ).select("event_type", "event_id", "rn")
 
-
-# ---------------------------------------------------------------------------
-# Theil's uncertainty coefficient (functions/stats.py::theil_u) over
-# the same (event_type x ISO dow) table as Cramér's V — the asymmetric
-# "how much does the weekday tell you about the event type" companion.
-# Quantized-term contract for the entropy chain.
-# ---------------------------------------------------------------------------
-@query(
-    "stats_theil_u",
-    f"""
-WITH base AS (
-    SELECT event_type AS r, CAST(isodow(CAST(ts AS DATE)) AS BIGINT) AS c
-    FROM events WHERE event_type IS NOT NULL AND ts IS NOT NULL
-),
-cells AS (SELECT r, c, CAST(COUNT(*) AS BIGINT) AS o FROM base GROUP BY 1, 2),
-cm AS (SELECT c, CAST(SUM(o) AS BIGINT) AS ct FROM cells GROUP BY 1),
-rm AS (SELECT r, CAST(SUM(o) AS BIGINT) AS rt FROM cells GROUP BY 1),
-tot AS (SELECT CAST(SUM(o) AS BIGINT) AS n FROM cells),
-hr AS (
-    SELECT SUM(CAST({_r(
-        "-(CAST(rt AS DOUBLE) / CAST(n AS DOUBLE))"
-        " * ln(CAST(rt AS DOUBLE) / CAST(n AS DOUBLE))",
-        12,
-    )} AS DECIMAL(28,12))) AS h FROM rm, tot
-),
-hc AS (
-    SELECT SUM(CAST({_r(
-        "-(CAST(o AS DOUBLE) / CAST(n AS DOUBLE))"
-        " * ln(CAST(o AS DOUBLE) / CAST(ct AS DOUBLE))",
-        12,
-    )} AS DECIMAL(28,12))) AS h
-    FROM cells JOIN cm USING (c), tot
-)
-SELECT tot.n,
-       ROUND(CAST(hr.h AS DOUBLE), 9) AS h_r,
-       ROUND(CAST(hc.h AS DOUBLE), 9) AS h_r_given_c,
-       CASE WHEN CAST(hr.h AS DOUBLE) > 0 THEN
-           ROUND((CAST(hr.h AS DOUBLE) - CAST(hc.h AS DOUBLE))
-                 / CAST(hr.h AS DOUBLE), 9)
-       END AS u
-FROM tot, hr, hc
-""",
-)
-def _stats_theil_u(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.stats import theil_u
-
-    e = load_table(spark, sf_dir, "events", spread=True)
-    base = e.filter(
-        F.col("event_type").isNotNull() & F.col("ts").isNotNull()
-    ).select(
-        "event_type",
-        (F.weekday(F.to_date("ts")) + 1).cast("bigint").alias("iso_dow"),
-    )
-    return theil_u(base, "event_type", "iso_dow")

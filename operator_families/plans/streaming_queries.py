@@ -31,15 +31,16 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.compat import exact_avg
-from ..streaming.incremental import sessionize_stream
-from .registry import query
-from .testdata import (
+from nl_railtraffic_etl_pipeline_spark.functions.compat import exact_avg
+from nl_railtraffic_etl_pipeline_spark.plans.testdata import (
     derive_disruptions,
     ensure_session_confs,
     normalize_timestamps,
     rail_oracle_prelude,
 )
+
+from ..streaming.incremental import sessionize_stream
+from .registry import query
 
 _DRAIN_TIMEOUT_S = 300
 
@@ -378,7 +379,7 @@ GROUP BY 1, 2
 """,
 )
 def _streaming_enriched_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .testdata import stations_df
+    from nl_railtraffic_etl_pipeline_spark.plans.testdata import stations_df
 
     dis = derive_disruptions(
         _events_stream(spark, sf_dir).select(
@@ -943,7 +944,7 @@ from .oracle_util import (  # noqa: E402
 @query("streaming_cm_frequency", CM_FREQUENCY_ORACLE_SQL)
 def _streaming_cm_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.sketch import cm_build, cm_query
-    from .testdata import load_table
+    from nl_railtraffic_etl_pipeline_spark.plans.testdata import load_table
 
     state = cm_build(
         _events_stream(spark, sf_dir), "user_id", width=_CM_W, depth=_CM_D

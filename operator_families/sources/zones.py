@@ -477,7 +477,7 @@ class VersionedZone:
     ) -> tuple[int, int]:
         """Latest-wins upsert as a zone commit — the multi-writer form of
         ``operators.upsert.upsert_latest_wins`` behind the same semantics."""
-        from ..operators.upsert import upsert_latest_wins
+        from nl_railtraffic_etl_pipeline_spark.operators.upsert import upsert_latest_wins
 
         return self.commit(
             lambda base: upsert_latest_wins(base, updates, keys, order_col),

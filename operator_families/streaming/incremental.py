@@ -29,8 +29,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..functions.cleaning import clean
-from ..schemas import RAW_DISRUPTION
+from nl_railtraffic_etl_pipeline_spark.functions.cleaning import clean
+from nl_railtraffic_etl_pipeline_spark.schemas import RAW_DISRUPTION
 
 SESSION_SCHEMA = (
     "user_id bigint, session_start timestamp, session_end timestamp, "
@@ -69,7 +69,7 @@ def start_incremental_load(
     stops (the cron-replacement mode); pass ``available_now=False`` for a
     long-running tail.
     """
-    from ..pipeline import SparkETLPipeline
+    from nl_railtraffic_etl_pipeline_spark.pipeline import SparkETLPipeline
 
     pipe = SparkETLPipeline(spark, lake_path)
 

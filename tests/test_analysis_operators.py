@@ -13,7 +13,7 @@ def test_jaro_winkler_known_values():
     """Textbook pairs (Winkler 1990 convention: prefix <= 4, scale 0.1,
     boost only above jaro 0.7) plus the empty-string = 0 edge that
     DuckDB's native implementation uses."""
-    from nl_railtraffic_etl_pipeline_spark.functions.fuzzy import (
+    from operator_families.functions.fuzzy import (
         _jaro_winkler,
     )
 
@@ -35,7 +35,7 @@ def test_jaro_winkler_matches_duckdb_native():
 
     import duckdb
 
-    from nl_railtraffic_etl_pipeline_spark.functions.fuzzy import (
+    from operator_families.functions.fuzzy import (
         _jaro_winkler,
     )
 
@@ -54,7 +54,7 @@ def test_blocked_text_pairs_blocking_and_fence(spark):
     """Pairs come only from within (first token, length bucket) blocks;
     blocks over max_block are dropped entirely (deterministic exclusion,
     not truncation)."""
-    from nl_railtraffic_etl_pipeline_spark.functions.fuzzy import (
+    from operator_families.functions.fuzzy import (
         blocked_text_pairs,
     )
 
@@ -89,7 +89,7 @@ def test_blocked_text_pairs_sharp_three_tiers(spark):
     DuckDB mirror of the gate's rank-salt SQL."""
     import duckdb
 
-    from nl_railtraffic_etl_pipeline_spark.functions.fuzzy import (
+    from operator_families.functions.fuzzy import (
         blocked_text_pairs_sharp,
     )
 
@@ -161,7 +161,7 @@ def test_damerau_levenshtein_known_values_and_duckdb():
 
     import duckdb
 
-    from nl_railtraffic_etl_pipeline_spark.functions.fuzzy import (
+    from operator_families.functions.fuzzy import (
         _damerau_levenshtein,
     )
 
@@ -186,7 +186,7 @@ def test_levene_bf_hand_computed(spark):
     """Brown-Forsythe on two groups with hand-computable lower medians:
     g1 = [1,2,3,4] (lower median 2 -> z = [1,0,1,2]),
     g2 = [10,10,40] (median 10 -> z = [0,0,30]).  W = ANOVA F over z."""
-    from nl_railtraffic_etl_pipeline_spark.functions.stats import levene_bf
+    from operator_families.functions.stats import levene_bf
 
     rows = [("a", 1.0), ("a", 2.0), ("a", 3.0), ("a", 4.0),
             ("b", 10.0), ("b", 10.0), ("b", 40.0)]
@@ -205,7 +205,7 @@ def test_g711_expansion_reference_points():
     """ITU-T G.711 table anchors: mu-law spans +-32124 with 0xFF/0x7F
     as +0/-0; A-law spans +-32256 with the INVERTED sign convention
     (0x80 set = positive) and 0xD5/0x55 as +8/-8."""
-    from nl_railtraffic_etl_pipeline_spark.functions.multimodal import (
+    from operator_families.functions.multimodal import (
         _g711_tables,
         _wav_decode_g711,
         wav_encode_g711,
@@ -233,7 +233,7 @@ def test_ico_container_walk():
     entry quarantines per-entry without hiding siblings."""
     import struct
 
-    from nl_railtraffic_etl_pipeline_spark.functions.multimodal import (
+    from operator_families.functions.multimodal import (
         _ico_decode_entries,
         ico_encode_png_entries,
     )
@@ -271,7 +271,7 @@ def test_ico_container_walk():
 
 def test_anova_f_hand_computed(spark):
     """3 groups with textbook values: F = (SSB/(k-1)) / (SSW/(n-k))."""
-    from nl_railtraffic_etl_pipeline_spark.functions.stats import anova_f
+    from operator_families.functions.stats import anova_f
 
     data = (
         [("a", v) for v in (1.0, 2.0, 3.0)]
@@ -297,7 +297,7 @@ def test_kruskal_wallis_hand_computed(spark):
     {1,2} vs {3,4} -> H = 2.4, C = 1; {1,1} vs {2,2} -> same rank sums
     through midranks (1.5,1.5,3.5,3.5) so H = 2.4, tie mass 12,
     C = 1 - 12/60 = 0.8, H' = 3.0."""
-    from nl_railtraffic_etl_pipeline_spark.functions.stats import (
+    from operator_families.functions.stats import (
         kruskal_wallis,
     )
 
@@ -324,7 +324,7 @@ def test_kruskal_wallis_hand_computed(spark):
 def test_pinball_loss_hand_computed(spark):
     """One observation, known prediction: loss at tau is
     max(tau*(y-q), (tau-1)*(y-q))."""
-    from nl_railtraffic_etl_pipeline_spark.functions.mleval import (
+    from operator_families.functions.mleval import (
         pinball_loss,
     )
 
@@ -344,7 +344,7 @@ def test_isotonic_pav_hand_computed(spark):
     """PAV pooling on a textbook violator sequence: rates
     [0/2, 2/2, 1/2, 1/2] pool bins 1..3 into one 4/6 = 2/3 block;
     monotonicity and mass conservation hold; fractions are gcd-reduced."""
-    from nl_railtraffic_etl_pipeline_spark.functions.mleval import (
+    from operator_families.functions.mleval import (
         isotonic_calibration,
     )
 
@@ -375,7 +375,7 @@ def test_isotonic_pav_hand_computed(spark):
 def test_sax_symbols_hand_computed(spark):
     """Four equally-spaced daily counts map to a,b,c,d; constant series
     yields NULL symbols."""
-    from nl_railtraffic_etl_pipeline_spark.functions.stats import (
+    from operator_families.functions.stats import (
         sax_symbols,
     )
 
@@ -411,7 +411,7 @@ def test_duckdb_pair_kernels_match_python_reference(spark):
     and multi-batch row alignment (the ORDER BY _rn pin)."""
     import random
 
-    from nl_railtraffic_etl_pipeline_spark.functions.fuzzy import (
+    from operator_families.functions.fuzzy import (
         _damerau_levenshtein,
         _jaro_winkler,
         damerau_levenshtein_pairs,
@@ -452,7 +452,7 @@ def test_duckdb_pair_kernels_non_ascii_scope(spark):
     computes for non-ASCII input."""
     import duckdb
 
-    from nl_railtraffic_etl_pipeline_spark.functions.fuzzy import (
+    from operator_families.functions.fuzzy import (
         _damerau_levenshtein,
         _jaro_winkler,
         damerau_levenshtein_pairs,

@@ -41,9 +41,9 @@ def _spark_rows(df) -> list[str]:
 
 
 def test_artifact_lookup_survives_second_scale_factor(spark):
-    import __spark_entry__ as e
+    from operator_families.plans.registry import ORACLES as oracles
+    from operator_families.plans.registry import QUERIES as qs
 
-    qs, oracles = e.queries(), e.oracle_sql()
     for name in (
         "text_compression_ratio",
         "text_bpe_encode",

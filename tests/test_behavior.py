@@ -7,12 +7,12 @@ import datetime as dt
 
 from pyspark.sql import functions as F
 
-from nl_railtraffic_etl_pipeline_spark.functions.behavior import (
+from operator_families.functions.behavior import (
     cohort_retention,
     event_transitions,
     funnel,
 )
-from nl_railtraffic_etl_pipeline_spark.functions.sketch import (
+from operator_families.functions.sketch import (
     kmv_distinct,
     kmv_merge,
     kmv_sketch,
@@ -108,7 +108,7 @@ def test_pps_sample_pick_total_and_heavy_items(spark):
     2/n of the total weight must be picked at least twice; zero-weight
     rows never appear."""
     from pyspark.sql import Row
-    from nl_railtraffic_etl_pipeline_spark.functions.sketch import (
+    from operator_families.functions.sketch import (
         pps_systematic_sample,
     )
 
@@ -127,7 +127,7 @@ def test_pps_sample_pick_total_and_heavy_items(spark):
 
 
 def test_pps_sample_partition_invariant(spark):
-    from nl_railtraffic_etl_pipeline_spark.functions.sketch import (
+    from operator_families.functions.sketch import (
         pps_systematic_sample,
     )
     from nl_railtraffic_etl_pipeline_spark.plans.testdata import load_table
@@ -181,7 +181,7 @@ def test_rfm_segments_scoring(spark):
 
     from pyspark.sql import Row
 
-    from nl_railtraffic_etl_pipeline_spark.functions.behavior import (
+    from operator_families.functions.behavior import (
         rfm_segments,
     )
 
@@ -212,7 +212,7 @@ def test_attribute_conversions_credit_models(spark):
     with coincident-touch inclusion; touchless conversions are absent."""
     import datetime as dt
 
-    from nl_railtraffic_etl_pipeline_spark.functions.behavior import (
+    from operator_families.functions.behavior import (
         attribute_conversions,
     )
 
@@ -257,7 +257,7 @@ def test_attribute_conversions_custom_event_type_col(spark):
     attribution as the default-named twin."""
     import datetime as dt
 
-    from nl_railtraffic_etl_pipeline_spark.functions.behavior import (
+    from operator_families.functions.behavior import (
         attribute_conversions,
     )
 
@@ -282,7 +282,7 @@ def test_interval_union_merge_touch_nest(spark):
     import datetime as dt
 
     from pyspark.sql import Row
-    from nl_railtraffic_etl_pipeline_spark.functions.temporal import (
+    from operator_families.functions.temporal import (
         interval_union,
     )
 

@@ -3,7 +3,7 @@
 import pytest
 from pyspark.sql import Row
 
-from nl_railtraffic_etl_pipeline_spark.functions.chunking import (
+from operator_families.functions.chunking import (
     chunk_documents,
     pack_sequences,
 )
@@ -82,7 +82,7 @@ def test_running_total_matches_naive_window_three_levels(spark):
     sum, with block_size small enough that blocks, superblocks, AND the
     final superblock window all hold multiple rows."""
     from pyspark.sql import functions as F
-    from nl_railtraffic_etl_pipeline_spark.functions.prefixsum import running_total
+    from operator_families.functions.prefixsum import running_total
 
     rows = [(i, (i * 37) % 11) for i in range(100)]
     df = spark.createDataFrame(rows, "id bigint, v bigint").repartition(7)
@@ -98,7 +98,7 @@ def test_running_total_matches_naive_window_three_levels(spark):
 
 def test_running_total_rejects_string_ids(spark):
     from pyspark.sql import functions as F
-    from nl_railtraffic_etl_pipeline_spark.functions.prefixsum import running_total
+    from operator_families.functions.prefixsum import running_total
 
     df = spark.createDataFrame([("a", 1)], "id string, v bigint")
     with pytest.raises(TypeError, match="integral"):
@@ -108,7 +108,7 @@ def test_running_total_rejects_string_ids(spark):
 def test_pps_sample_no_bigint_overflow(spark):
     """Grid products run in decimal(38,0): weights big enough that
     hi * n overflows 64-bit must still match exact integer arithmetic."""
-    from nl_railtraffic_etl_pipeline_spark.functions.sketch import (
+    from operator_families.functions.sketch import (
         pps_systematic_sample,
     )
 
@@ -134,7 +134,7 @@ def test_pps_sample_no_bigint_overflow(spark):
 def test_encode_tokens_semantics(spark):
     """Known-vocab terms map to their ids in stream order, OOV terms to
     oov_id and counted, empty docs yield an empty array."""
-    from nl_railtraffic_etl_pipeline_spark.functions.chunking import (
+    from operator_families.functions.chunking import (
         encode_tokens,
     )
 
@@ -177,10 +177,10 @@ def test_whale_doc_quarantine_caps(spark):
     reassembly buffer, never contributing spans/lines), while the small
     docs' results are identical to the uncapped run on them alone; the
     uncapped schema is unchanged."""
-    from nl_railtraffic_etl_pipeline_spark.functions.chunking import (
+    from operator_families.functions.chunking import (
         encode_tokens,
     )
-    from nl_railtraffic_etl_pipeline_spark.functions.text import (
+    from operator_families.functions.text import (
         remove_boilerplate_lines,
         remove_repeated_spans,
     )
@@ -252,7 +252,7 @@ def test_whale_doc_quarantine_caps(spark):
 
 def test_encode_tokens_null_text_routes_to_base_when_capped(spark):
     from pyspark.sql import Row
-    from nl_railtraffic_etl_pipeline_spark.functions.chunking import (
+    from operator_families.functions.chunking import (
         encode_tokens,
     )
 
@@ -276,7 +276,7 @@ def test_span_corruption_whale_guard(spark):
     n_tokens) while normal docs mask identically to the uncapped call."""
     from pyspark.sql import Row
 
-    from nl_railtraffic_etl_pipeline_spark.functions.chunking import (
+    from operator_families.functions.chunking import (
         span_corruption_masks,
     )
 

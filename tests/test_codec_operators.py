@@ -16,7 +16,7 @@ def test_ima_state_machine_textbook_steps():
     7, so nibble 4 (bit2 set, positive) moves pred by 7 and bumps the
     index by +2; nibble 0 moves by step>>3 = 0 and decrements the
     index (clamped at 0)."""
-    from nl_railtraffic_etl_pipeline_spark.functions.multimodal import (
+    from operator_families.functions.multimodal import (
         _ima_block_samples,
     )
 
@@ -33,7 +33,7 @@ def test_adpcm_wav_roundtrip_and_quarantine():
     """The encoder's fixture decodes to exactly spb*n_blocks samples
     whose first per-block sample is the header predictor; truncation
     quarantines."""
-    from nl_railtraffic_etl_pipeline_spark.functions.multimodal import (
+    from operator_families.functions.multimodal import (
         _wav_decode_adpcm,
         wav_encode_adpcm,
     )
@@ -52,7 +52,7 @@ def test_adpcm_matches_independent_python_decode():
     """Decode the encoder's nibble stream with a from-scratch textbook
     IMA implementation (written against the published spec, not the
     engine's helper) — the two must agree sample-for-sample."""
-    from nl_railtraffic_etl_pipeline_spark.functions.multimodal import (
+    from operator_families.functions.multimodal import (
         _IMA_INDEX,
         _IMA_STEPS,
         _wav_decode_adpcm,
@@ -87,7 +87,7 @@ def test_tar_encoder_parses_with_stdlib_tarfile():
     """The fixture must be a REAL tar: the stdlib tarfile module (a
     foreign implementation) extracts identical names, sizes, and
     contents to the engine's walker."""
-    from nl_railtraffic_etl_pipeline_spark.functions.multimodal import (
+    from operator_families.functions.multimodal import (
         _tar_members,
         tar_encode,
     )
@@ -110,7 +110,7 @@ def test_tar_encoder_parses_with_stdlib_tarfile():
 def test_tar_walk_quarantine_and_checksum():
     """Truncation mid-member quarantines; a corrupted checksum field is
     reported per-member, not fatal."""
-    from nl_railtraffic_etl_pipeline_spark.functions.multimodal import (
+    from operator_families.functions.multimodal import (
         _tar_members,
         tar_encode,
     )
@@ -127,7 +127,7 @@ def test_tar_walk_quarantine_and_checksum():
 def test_harmonic_bounded_cycle(spark):
     """Directed 4-cycle a->b->c->d->a: every node reaches one node at
     each of hops 1..3, harmonic_num = 6+3+2 = 11 over 6."""
-    from nl_railtraffic_etl_pipeline_spark.functions.graph import (
+    from operator_families.functions.graph import (
         harmonic_bounded,
     )
 
@@ -148,7 +148,7 @@ def test_harmonic_bounded_cycle(spark):
 def test_harmonic_bounded_no_double_count(spark):
     """A node reachable at hops 1 AND 2 counts only at its minimum
     hop; self-loops are excluded."""
-    from nl_railtraffic_etl_pipeline_spark.functions.graph import (
+    from operator_families.functions.graph import (
         harmonic_bounded,
     )
 

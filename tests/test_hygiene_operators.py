@@ -11,9 +11,7 @@ sys.path.insert(0, "/root/repo")
 def test_parquet_footer_matches_data(spark, tmp_path):
     """Footer stats over a freshly written file equal the data-derived
     truth, including a column with nulls."""
-    from nl_railtraffic_etl_pipeline_spark.sources.lake import (
-        parquet_footer_stats,
-    )
+    from operator_families.sources.lake_tools import parquet_footer_stats
 
     df = spark.createDataFrame(
         [(1, 10), (2, None), (3, 30), (4, 40)], "a long, b long"
@@ -38,7 +36,7 @@ def test_esd_removes_in_magnitude_order(spark):
     z is computed WITHOUT it (the re-estimation that defines ESD)."""
     import datetime
 
-    from nl_railtraffic_etl_pipeline_spark.functions.stats import (
+    from operator_families.functions.stats import (
         esd_rounds,
     )
 
@@ -66,7 +64,7 @@ def test_esd_deterministic_tiebreak(spark):
     """Identical z values resolve by earliest day on both engines."""
     import datetime
 
-    from nl_railtraffic_etl_pipeline_spark.functions.stats import (
+    from operator_families.functions.stats import (
         esd_rounds,
     )
 
@@ -86,7 +84,7 @@ def test_esd_deterministic_tiebreak(spark):
 def test_utf8_validity_counts(spark):
     """Isolated 0xFF bytes each produce one U+FFFD; valid multibyte
     UTF-8 counts characters, not bytes."""
-    from nl_railtraffic_etl_pipeline_spark.functions.text import (
+    from operator_families.functions.text import (
         utf8_validity_stats,
     )
 

@@ -14,7 +14,7 @@ def test_friedman_textbook_no_ties(spark):
     """b=4 blocks x k=3 treatments, distinct in-block values: classic
     Q = 12/(bk(k+1)) sum R_j^2 - 3b(k+1) = 2.0 (hand-computed), and the
     Conover tie-corrected form must coincide when there are no ties."""
-    from nl_railtraffic_etl_pipeline_spark.functions.stats import friedman_q
+    from operator_families.functions.stats import friedman_q
 
     counts = {
         ("b1", "A"): 1, ("b1", "B"): 2, ("b1", "C"): 3,
@@ -31,7 +31,7 @@ def test_friedman_textbook_no_ties(spark):
 
 def test_friedman_incomplete_block_excluded(spark):
     """A block missing one treatment must drop out entirely."""
-    from nl_railtraffic_etl_pipeline_spark.functions.stats import friedman_q
+    from operator_families.functions.stats import friedman_q
 
     rows = [("b1", "A"), ("b1", "B"), ("b2", "A")]  # b2 lacks B
     df = spark.createDataFrame(rows, "blk string, trt string")
@@ -41,7 +41,7 @@ def test_friedman_incomplete_block_excluded(spark):
 
 def test_cramers_v_known_2x2(spark):
     """[[10,20],[20,10]]: chi2 = 60/9, V = 1/3 (hand-computed)."""
-    from nl_railtraffic_etl_pipeline_spark.functions.stats import cramers_v
+    from operator_families.functions.stats import cramers_v
 
     rows = (
         [("r1", "c1")] * 10 + [("r1", "c2")] * 20
@@ -57,7 +57,7 @@ def test_cramers_v_known_2x2(spark):
 def test_kendall_tau_no_ties(spark):
     """y = [1,2,3,5,4] against x = [1..5]: one discordant pair of 10,
     tau-b = 0.8."""
-    from nl_railtraffic_etl_pipeline_spark.functions.stats import (
+    from operator_families.functions.stats import (
         kendall_tau_b,
     )
 
@@ -73,7 +73,7 @@ def test_kendall_tau_no_ties(spark):
 def test_kendall_tau_tie_corrections(spark):
     """x=[1,1,2], y=[1,2,2]: C=1, D=0, one x-tie pair, one y-tie pair,
     tau-b = 1/sqrt(4) = 0.5 (hand-computed)."""
-    from nl_railtraffic_etl_pipeline_spark.functions.stats import (
+    from operator_families.functions.stats import (
         kendall_tau_b,
     )
 
@@ -90,7 +90,7 @@ def test_mcc_thresholds_perfect_and_partial(spark):
     """Perfect separation at the midpoint threshold gives MCC = 1; at
     threshold 90 the confusion is (tp=1 fn=1 tn=2 fp=0) so MCC =
     2/sqrt(12) (hand-computed)."""
-    from nl_railtraffic_etl_pipeline_spark.functions.mleval import (
+    from operator_families.functions.mleval import (
         mcc_thresholds,
     )
 
@@ -112,7 +112,7 @@ def test_mcc_thresholds_perfect_and_partial(spark):
 
 def test_mcc_empty_bucket_thresholds_present(spark):
     """Thresholds above every score still emit a row (tp = fp = 0)."""
-    from nl_railtraffic_etl_pipeline_spark.functions.mleval import (
+    from operator_families.functions.mleval import (
         mcc_thresholds,
     )
 
@@ -126,7 +126,7 @@ def test_mcc_empty_bucket_thresholds_present(spark):
 def test_log_loss_hand_computed(spark):
     """denom=8: p=(s+1)/10; rows (8,1) and (1,0) give
     -(ln .9 + ln .8) summed, mean of two (hand-computed)."""
-    from nl_railtraffic_etl_pipeline_spark.functions.mleval import log_loss
+    from operator_families.functions.mleval import log_loss
 
     df = spark.createDataFrame([(8, 1), (1, 0)], "score long, label int")
     out = log_loss(df, "score", "label", 8).collect()[0]
@@ -165,7 +165,7 @@ def test_soundex_oracle_sql_matches_native(spark):
     identical code for every token — the dual-implementation contract."""
     import duckdb
 
-    from nl_railtraffic_etl_pipeline_spark.plans.registry import ORACLES
+    from operator_families.plans.registry import ORACLES
     from pyspark.sql import functions as F
 
     df = spark.createDataFrame([(t,) for t in _SDX_TOKENS], "token string")
@@ -186,7 +186,7 @@ def test_soundex_oracle_sql_matches_native(spark):
 def test_theil_u_known_table(spark):
     """Perfect determinism (each column value maps to one row value)
     gives U = 1; independence gives U = 0."""
-    from nl_railtraffic_etl_pipeline_spark.functions.stats import theil_u
+    from operator_families.functions.stats import theil_u
 
     det = spark.createDataFrame(
         [("a", 1)] * 5 + [("b", 2)] * 5, "r string, c int"
@@ -202,7 +202,7 @@ def test_theil_u_known_table(spark):
 
 
 def test_streaming_sign_test_matches_batch(spark):
-    from nl_railtraffic_etl_pipeline_spark.plans.registry import QUERIES
+    from operator_families.plans.registry import QUERIES
 
     sf = "/root/testdata/sf0.001"
     got = {tuple(r) for r in

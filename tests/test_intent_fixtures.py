@@ -14,7 +14,7 @@ stays green.
 
 from pyspark.sql import Row, functions as F
 
-from nl_railtraffic_etl_pipeline_spark.functions import text, web
+from operator_families.functions import text, web
 
 
 def _collect_map(df, key, *cols):
@@ -292,7 +292,7 @@ def test_registered_domain_psl_equivalence_with_static(spark):
 # ---------------------------------------------------------------------------
 
 def test_parse_image_headers_real_bytes(spark):
-    from nl_railtraffic_etl_pipeline_spark.functions import multimodal as mm
+    from operator_families.functions import multimodal as mm
 
     png = (
         b"\x89PNG\r\n\x1a\n"            # signature
@@ -339,7 +339,7 @@ def test_language_id_intent(spark):
     """Real sentences in each profiled language classify correctly;
     ambiguous marker ties resolve by the documented en>de>fr>es order;
     markers count once per DISTINCT token, not per occurrence."""
-    from nl_railtraffic_etl_pipeline_spark.functions.text import (
+    from operator_families.functions.text import (
         predicted_lang,
         tokens,
     )
@@ -371,7 +371,7 @@ def test_zorder_key_intent(spark):
     """Hand-computed Morton interleaves: x bits at even positions, y at
     odd; masking clips the high bits; the key preserves 2-D locality in
     the small (curve-order vs row-order) sense."""
-    from nl_railtraffic_etl_pipeline_spark.functions.layout import zorder_key
+    from operator_families.functions.layout import zorder_key
 
     cases = [
         # (x, y, expected): interleave(x@even, y@odd)
@@ -564,7 +564,7 @@ def test_sequence_pattern_intent(spark):
 
 
 def test_triangle_count_intent(spark):
-    from nl_railtraffic_etl_pipeline_spark.functions.graph import (
+    from operator_families.functions.graph import (
         triangle_count,
     )
 
@@ -586,7 +586,7 @@ def test_triangle_count_intent(spark):
 
 
 def test_bloom_prejoin_no_false_negatives_intent(spark):
-    from nl_railtraffic_etl_pipeline_spark.functions.sketch import (
+    from operator_families.functions.sketch import (
         bloom_build,
         bloom_probe,
     )
@@ -605,7 +605,7 @@ def test_bloom_prejoin_no_false_negatives_intent(spark):
 def test_ohlc_bars_intent(spark):
     import datetime as dt
 
-    from nl_railtraffic_etl_pipeline_spark.functions.behavior import (
+    from operator_families.functions.behavior import (
         ohlc_bars,
     )
 
@@ -631,7 +631,7 @@ def test_ohlc_bars_intent(spark):
 def test_pareto_frontier_intent(spark):
     import datetime as dt
 
-    from nl_railtraffic_etl_pipeline_spark.functions.behavior import (
+    from operator_families.functions.behavior import (
         pareto_frontier,
     )
 
@@ -656,7 +656,7 @@ def test_pareto_frontier_intent(spark):
 
 
 def test_chisq_cells_intent(spark):
-    from nl_railtraffic_etl_pipeline_spark.functions.stats import (
+    from operator_families.functions.stats import (
         chisq_cells,
     )
 
@@ -687,7 +687,7 @@ def test_chisq_cells_intent(spark):
 def test_event_ngram_counts_intent(spark):
     import datetime as dt
 
-    from nl_railtraffic_etl_pipeline_spark.functions.behavior import (
+    from operator_families.functions.behavior import (
         event_ngram_counts,
     )
 
@@ -719,7 +719,7 @@ def test_event_ngram_counts_intent(spark):
 
 
 def test_weighted_median_intent(spark):
-    from nl_railtraffic_etl_pipeline_spark.functions.stats import (
+    from operator_families.functions.stats import (
         weighted_median,
     )
 
@@ -746,7 +746,7 @@ def test_weighted_median_intent(spark):
 
 
 def test_gini_intent(spark):
-    from nl_railtraffic_etl_pipeline_spark.functions.stats import (
+    from operator_families.functions.stats import (
         gini_concentration,
     )
 
@@ -775,7 +775,7 @@ def test_gini_intent(spark):
 def test_cusum_changepoint_intent(spark):
     import datetime as dt
 
-    from nl_railtraffic_etl_pipeline_spark.functions.stats import (
+    from operator_families.functions.stats import (
         cusum_changepoint,
     )
 
@@ -796,7 +796,7 @@ def test_cusum_changepoint_intent(spark):
 def test_cohort_value_matrix_intent(spark):
     import datetime as dt
 
-    from nl_railtraffic_etl_pipeline_spark.functions.behavior import (
+    from operator_families.functions.behavior import (
         cohort_value_matrix,
     )
 
@@ -827,7 +827,7 @@ def test_cohort_value_matrix_intent(spark):
 def test_spearman_intent(spark):
     import datetime as dt
 
-    from nl_railtraffic_etl_pipeline_spark.functions.stats import (
+    from operator_families.functions.stats import (
         spearman_rank_corr,
     )
 
@@ -860,7 +860,7 @@ def test_spearman_intent(spark):
 
 
 def test_cooccurrence_lift_intent(spark):
-    from nl_railtraffic_etl_pipeline_spark.functions.behavior import (
+    from operator_families.functions.behavior import (
         type_cooccurrence_lift,
     )
 
@@ -884,7 +884,7 @@ def test_cooccurrence_lift_intent(spark):
 
 
 def test_mann_whitney_intent(spark):
-    from nl_railtraffic_etl_pipeline_spark.functions.stats import (
+    from operator_families.functions.stats import (
         mann_whitney_u,
     )
 
@@ -914,7 +914,7 @@ def test_mann_whitney_intent(spark):
 def test_welch_t_intent(spark):
     import math
 
-    from nl_railtraffic_etl_pipeline_spark.functions.stats import welch_t
+    from operator_families.functions.stats import welch_t
 
     # side 0 = {1,2,3}: mean 2, sample var 1; side 1 = {4,6,8}: mean 6,
     # sample var 4.  t = (2-6)/sqrt(1/3 + 4/3) — derived from the
@@ -939,7 +939,7 @@ def test_welch_t_intent(spark):
 
 
 def test_ks_statistic_intent(spark):
-    from nl_railtraffic_etl_pipeline_spark.functions.stats import (
+    from operator_families.functions.stats import (
         ks_statistic,
     )
 
@@ -968,7 +968,7 @@ def test_ks_statistic_intent(spark):
 
 
 def test_winsorize_intent(spark):
-    from nl_railtraffic_etl_pipeline_spark.functions.stats import winsorize
+    from operator_families.functions.stats import winsorize
 
     # 0..10: p05 = 0.5, p95 = 9.5 (linear interpolation) -> 0 clips up
     # to 0.5, 10 clips down to 9.5, everything else untouched.
@@ -987,7 +987,7 @@ def test_winsorize_intent(spark):
 
 
 def test_gini_zero_total_is_null(spark):
-    from nl_railtraffic_etl_pipeline_spark.functions.stats import (
+    from operator_families.functions.stats import (
         gini_concentration,
     )
 
@@ -1004,7 +1004,7 @@ def test_gini_zero_total_is_null(spark):
 def test_cohort_value_matrix_drops_null_users(spark):
     import datetime as dt
 
-    from nl_railtraffic_etl_pipeline_spark.functions.behavior import (
+    from operator_families.functions.behavior import (
         cohort_value_matrix,
     )
 
@@ -1024,7 +1024,7 @@ def test_cohort_value_matrix_drops_null_users(spark):
 def test_rolling_ols_slope_intent(spark):
     import datetime as dt
 
-    from nl_railtraffic_etl_pipeline_spark.functions.stats import (
+    from operator_families.functions.stats import (
         rolling_ols_slope,
     )
 
@@ -1050,7 +1050,7 @@ def test_rolling_ols_slope_intent(spark):
 
 
 def test_quantile_normalize_intent(spark):
-    from nl_railtraffic_etl_pipeline_spark.functions.stats import (
+    from operator_families.functions.stats import (
         quantile_normalize,
     )
 
@@ -1077,7 +1077,7 @@ def test_quantile_normalize_intent(spark):
 def test_longest_streak_intent(spark):
     import datetime as dt
 
-    from nl_railtraffic_etl_pipeline_spark.functions.behavior import (
+    from operator_families.functions.behavior import (
         longest_streak,
     )
 
@@ -1104,7 +1104,7 @@ def test_longest_streak_intent(spark):
 
 
 def test_seasonal_dow_index_intent(spark):
-    from nl_railtraffic_etl_pipeline_spark.functions.stats import (
+    from operator_families.functions.stats import (
         seasonal_dow_index,
     )
 
@@ -1130,7 +1130,7 @@ def test_seasonal_dow_index_intent(spark):
 
 
 def test_wilson_interval_intent(spark):
-    from nl_railtraffic_etl_pipeline_spark.functions.stats import (
+    from operator_families.functions.stats import (
         wilson_interval,
     )
 
@@ -1159,7 +1159,7 @@ def test_wilson_interval_intent(spark):
 def test_new_vs_returning_intent(spark):
     import datetime as dt
 
-    from nl_railtraffic_etl_pipeline_spark.functions.behavior import (
+    from operator_families.functions.behavior import (
         new_vs_returning,
     )
 
@@ -1188,7 +1188,7 @@ def test_new_vs_returning_intent(spark):
 def test_interpolate_daily_linear_intent(spark):
     import datetime as dt
 
-    from nl_railtraffic_etl_pipeline_spark.functions.temporal import (
+    from operator_families.functions.temporal import (
         interpolate_daily_linear,
     )
 
@@ -1218,7 +1218,7 @@ def test_interpolate_daily_linear_intent(spark):
 def test_rolling_corr_intent(spark):
     import datetime as dt
 
-    from nl_railtraffic_etl_pipeline_spark.functions.stats import (
+    from operator_families.functions.stats import (
         rolling_corr,
     )
 
@@ -1255,7 +1255,7 @@ def test_rolling_corr_intent(spark):
 
 
 def test_category_diversity_intent(spark):
-    from nl_railtraffic_etl_pipeline_spark.functions.stats import (
+    from operator_families.functions.stats import (
         category_diversity,
     )
 
@@ -1282,7 +1282,7 @@ def test_category_diversity_intent(spark):
 def test_transition_smoothed_intent(spark):
     import datetime as dt
 
-    from nl_railtraffic_etl_pipeline_spark.functions.behavior import (
+    from operator_families.functions.behavior import (
         transition_smoothed,
     )
 
@@ -1316,7 +1316,7 @@ def test_transition_smoothed_intent(spark):
 
 
 def test_item_cosine_intent(spark):
-    from nl_railtraffic_etl_pipeline_spark.functions.reco import (
+    from operator_families.functions.reco import (
         item_cosine_similarity,
     )
 
@@ -1344,7 +1344,7 @@ def test_item_cosine_intent(spark):
 
 
 def test_item_cosine_whale_basket_quarantine(spark):
-    from nl_railtraffic_etl_pipeline_spark.functions.reco import (
+    from operator_families.functions.reco import (
         item_cosine_similarity,
     )
 
@@ -1375,7 +1375,7 @@ def test_item_cosine_whale_basket_quarantine(spark):
 def test_funnel_windowed_intent(spark):
     import datetime as dt
 
-    from nl_railtraffic_etl_pipeline_spark.functions.behavior import (
+    from operator_families.functions.behavior import (
         funnel_windowed,
     )
 
@@ -1411,7 +1411,7 @@ def test_funnel_windowed_intent(spark):
 
 
 def test_decile_lift_intent(spark):
-    from nl_railtraffic_etl_pipeline_spark.functions.stats import decile_lift
+    from operator_families.functions.stats import decile_lift
 
     # 10 rows, scores 10..1, positives at scores 10, 9, and 2.  With 5
     # buckets of 2 rows each: bucket 1 captures 2/3 of positives
@@ -1432,7 +1432,7 @@ def test_decile_lift_intent(spark):
 def test_seasonal_naive_backtest_intent(spark):
     import datetime as dt
 
-    from nl_railtraffic_etl_pipeline_spark.functions.stats import (
+    from operator_families.functions.stats import (
         seasonal_naive_backtest,
     )
 
@@ -1457,7 +1457,7 @@ def test_seasonal_naive_backtest_intent(spark):
 def test_feature_hash_intent(spark):
     import hashlib
 
-    from nl_railtraffic_etl_pipeline_spark.functions.corpus import (
+    from operator_families.functions.corpus import (
         feature_hash,
     )
 
@@ -1496,7 +1496,7 @@ def test_feature_hash_intent(spark):
 def test_churn_labels_intent(spark):
     import datetime as dt
 
-    from nl_railtraffic_etl_pipeline_spark.functions.behavior import (
+    from operator_families.functions.behavior import (
         churn_labels,
     )
 
@@ -1530,7 +1530,7 @@ def test_churn_labels_intent(spark):
 
 
 def test_corr_matrix_intent(spark):
-    from nl_railtraffic_etl_pipeline_spark.functions.stats import corr_matrix
+    from operator_families.functions.stats import corr_matrix
 
     import pytest as _pytest
 
@@ -1560,7 +1560,7 @@ def test_corr_matrix_intent(spark):
 def test_time_to_convert_intent(spark):
     import datetime as dt
 
-    from nl_railtraffic_etl_pipeline_spark.functions.behavior import (
+    from operator_families.functions.behavior import (
         time_to_convert,
     )
 
@@ -1587,7 +1587,7 @@ def test_time_to_convert_intent(spark):
 def test_point_in_time_join_intent(spark):
     import datetime as dt
 
-    from nl_railtraffic_etl_pipeline_spark.operators.pit import (
+    from operator_families.operators.pit import (
         point_in_time_join,
     )
 
@@ -1628,7 +1628,7 @@ def test_point_in_time_join_intent(spark):
 def test_period_decomposition_intent(spark):
     import datetime as dt
 
-    from nl_railtraffic_etl_pipeline_spark.functions.stats import (
+    from operator_families.functions.stats import (
         period_decomposition,
     )
 
@@ -1661,7 +1661,7 @@ def test_period_decomposition_intent(spark):
 def test_dow_adjusted_intent(spark):
     import datetime as dt
 
-    from nl_railtraffic_etl_pipeline_spark.functions.stats import (
+    from operator_families.functions.stats import (
         dow_adjusted,
     )
 
@@ -1684,7 +1684,7 @@ def test_dow_adjusted_intent(spark):
 
 
 def test_silhouette_intent(spark):
-    from nl_railtraffic_etl_pipeline_spark.functions.simsearch import (
+    from operator_families.functions.simsearch import (
         silhouette,
     )
 
@@ -1715,7 +1715,7 @@ def test_silhouette_intent(spark):
 
 
 def test_kmv_difference_intent(spark):
-    from nl_railtraffic_etl_pipeline_spark.functions.sketch import (
+    from operator_families.functions.sketch import (
         kmv_difference,
         kmv_sketch,
     )
@@ -1732,7 +1732,7 @@ def test_kmv_difference_intent(spark):
 
 
 def test_ngram_containment_vs_jaccard_intent(spark):
-    from nl_railtraffic_etl_pipeline_spark.functions.dedup import (
+    from operator_families.functions.dedup import (
         ngram_containment_pairs,
         ngram_jaccard_pairs,
     )
@@ -1754,7 +1754,7 @@ def test_ngram_containment_vs_jaccard_intent(spark):
 def test_dau_wau_stickiness_intent(spark):
     import datetime as dt
 
-    from nl_railtraffic_etl_pipeline_spark.functions.behavior import (
+    from operator_families.functions.behavior import (
         dau_wau_stickiness,
     )
 
@@ -1783,7 +1783,7 @@ def test_dau_wau_stickiness_intent(spark):
 def test_freshness_report_intent(spark):
     import datetime as dt
 
-    from nl_railtraffic_etl_pipeline_spark.functions.profile import (
+    from operator_families.functions.profile import (
         freshness_report,
     )
 
@@ -1809,7 +1809,7 @@ def test_freshness_report_intent(spark):
 def test_session_funnel_intent(spark):
     import datetime as dt
 
-    from nl_railtraffic_etl_pipeline_spark.functions.behavior import (
+    from operator_families.functions.behavior import (
         session_funnel,
     )
 
@@ -1848,7 +1848,7 @@ def test_session_funnel_intent(spark):
 def test_rate_limit_violations_intent(spark):
     import datetime as dt
 
-    from nl_railtraffic_etl_pipeline_spark.functions.behavior import (
+    from operator_families.functions.behavior import (
         rate_limit_violations,
     )
 
@@ -1880,7 +1880,7 @@ def test_rate_limit_violations_intent(spark):
 def test_temporal_split_intent(spark):
     import datetime as dt
 
-    from nl_railtraffic_etl_pipeline_spark.functions.corpus import (
+    from operator_families.functions.corpus import (
         temporal_split,
     )
 
@@ -1905,7 +1905,7 @@ def test_temporal_split_intent(spark):
 
 
 def test_share_of_parent_intent(spark):
-    from nl_railtraffic_etl_pipeline_spark.functions.stats import (
+    from operator_families.functions.stats import (
         share_of_parent,
     )
 
@@ -1927,7 +1927,7 @@ def test_share_of_parent_intent(spark):
 
 
 def test_poisson_bootstrap_ci_intent(spark):
-    from nl_railtraffic_etl_pipeline_spark.functions.stats import (
+    from operator_families.functions.stats import (
         poisson_bootstrap_ci,
     )
 
@@ -1966,10 +1966,10 @@ def test_poisson_bootstrap_weights_mean_one(spark):
     show up immediately."""
     from pyspark.sql import functions as F
 
-    from nl_railtraffic_etl_pipeline_spark.functions.stats import (
+    from operator_families.functions.stats import (
         _POISSON1_CDF,
     )
-    from nl_railtraffic_etl_pipeline_spark.functions.text import hash32
+    from operator_families.functions.text import hash32
 
     df = spark.range(1, 2001).select(
         F.explode(F.sequence(F.lit(1), F.lit(20))).alias("b"),
@@ -1991,7 +1991,7 @@ def test_poisson_bootstrap_weights_mean_one(spark):
 
 
 def test_association_rules_intent(spark):
-    from nl_railtraffic_etl_pipeline_spark.functions.reco import (
+    from operator_families.functions.reco import (
         association_rules,
     )
 
@@ -2023,7 +2023,7 @@ def test_association_rules_intent(spark):
 def test_scd2_merge_equals_full_rebuild(spark):
     import datetime as dt
 
-    from nl_railtraffic_etl_pipeline_spark.operators.scd2 import scd2_merge
+    from operator_families.operators.scd2 import scd2_merge
 
     t = lambda h: dt.datetime(2024, 1, 1, h)  # noqa: E731
     # full change stream: u1 has 3 changes (one arriving LATE in the
@@ -2070,7 +2070,7 @@ def test_scd2_merge_equals_full_rebuild(spark):
 
 
 def test_lsh_recall_composition_intent(spark):
-    from nl_railtraffic_etl_pipeline_spark.functions import dedup
+    from operator_families.functions import dedup
 
     # two identical docs + one unrelated: exactly one exact pair, which
     # LSH must also find (identical docs share every band) -> 100%
@@ -2095,7 +2095,7 @@ def test_lsh_recall_composition_intent(spark):
 
 
 def test_run_quality_checks_intent(spark):
-    from nl_railtraffic_etl_pipeline_spark.functions.profile import (
+    from operator_families.functions.profile import (
         run_quality_checks,
     )
 
@@ -2145,7 +2145,7 @@ def test_run_quality_checks_intent(spark):
 def test_flag_runs_intent(spark):
     import datetime as dt
 
-    from nl_railtraffic_etl_pipeline_spark.functions.stats import flag_runs
+    from operator_families.functions.stats import flag_runs
 
     import pytest as _pytest
 
@@ -2179,7 +2179,7 @@ def test_flag_runs_intent(spark):
 # ---------------------------------------------------------------------------
 
 def test_auc_roc_intent(spark):
-    from nl_railtraffic_etl_pipeline_spark.functions.mleval import auc_roc
+    from operator_families.functions.mleval import auc_roc
 
     rows = [
         # group "t": scores [1,1,2,3], labels [0,1,0,1].
@@ -2207,7 +2207,7 @@ def test_auc_roc_intent(spark):
 
 
 def test_calibration_report_intent(spark):
-    from nl_railtraffic_etl_pipeline_spark.functions.mleval import (
+    from operator_families.functions.mleval import (
         calibration_report,
     )
 
@@ -2240,7 +2240,7 @@ def test_calibration_report_intent(spark):
 
 
 def test_categorical_drift_intent(spark):
-    from nl_railtraffic_etl_pipeline_spark.functions.mleval import (
+    from operator_families.functions.mleval import (
         categorical_drift,
     )
 
@@ -2265,7 +2265,7 @@ def test_categorical_drift_intent(spark):
 
 
 def test_lm_score_intent(spark):
-    from nl_railtraffic_etl_pipeline_spark.functions.text import lm_score
+    from operator_families.functions.text import lm_score
 
     # corpus: "a b a" + "b".  c1: a=2, b=2; V=2.
     # doc 1 bigrams (a,b),(b,a), each count 1 -> p = (1+1)/(2+2) = 0.5
@@ -2284,7 +2284,7 @@ def test_lm_score_intent(spark):
 # ---------------------------------------------------------------------------
 
 def test_kaplan_meier_intent(spark):
-    from nl_railtraffic_etl_pipeline_spark.functions.stats import (
+    from operator_families.functions.stats import (
         kaplan_meier,
     )
 
@@ -2307,7 +2307,7 @@ def test_kaplan_meier_intent(spark):
 
 
 def test_theil_sen_slope_intent(spark):
-    from nl_railtraffic_etl_pipeline_spark.functions.stats import (
+    from operator_families.functions.stats import (
         theil_sen_slope,
     )
 
@@ -2329,7 +2329,7 @@ def test_theil_sen_slope_intent(spark):
 
 
 def test_grid_nearest_neighbors_intent(spark):
-    from nl_railtraffic_etl_pipeline_spark.functions.geo import (
+    from operator_families.functions.geo import (
         grid_nearest_neighbors,
     )
 
@@ -2356,7 +2356,7 @@ def test_grid_nearest_neighbors_intent(spark):
 
 
 def test_lexical_shift_scores_intent(spark):
-    from nl_railtraffic_etl_pipeline_spark.functions.corpus import (
+    from operator_families.functions.corpus import (
         lexical_shift_scores,
     )
 
@@ -2381,7 +2381,7 @@ def test_lexical_shift_scores_intent(spark):
 # ---------------------------------------------------------------------------
 
 def test_pr_curve_intent(spark):
-    from nl_railtraffic_etl_pipeline_spark.functions.mleval import pr_curve
+    from operator_families.functions.mleval import pr_curve
 
     # scores [2,2,1,0], labels [1,0,1,0]; P=2.
     # t=2: pp=2 tp=1 -> prec .5, rec .5, f1 2*1/(2+2)=.5
@@ -2403,7 +2403,7 @@ def test_pr_curve_intent(spark):
 
 
 def test_shortest_paths_intent(spark):
-    from nl_railtraffic_etl_pipeline_spark.functions.graph import (
+    from operator_families.functions.graph import (
         shortest_paths,
     )
 
@@ -2431,7 +2431,7 @@ def test_shortest_paths_intent(spark):
 
 
 def test_runs_test_intent(spark):
-    from nl_railtraffic_etl_pipeline_spark.functions.stats import runs_test
+    from operator_families.functions.stats import runs_test
 
     # values [1,9,1,9,5]: median 5, the 5 itself is DROPPED (tie), signs
     # 0,1,0,1 -> runs=4, n1=n2=2; E[R]=3, Var=2/3,
@@ -2457,7 +2457,7 @@ def test_runs_test_intent(spark):
 # ---------------------------------------------------------------------------
 
 def test_pq_encode_intent(spark):
-    from nl_railtraffic_etl_pipeline_spark.functions.simsearch import (
+    from operator_families.functions.simsearch import (
         pq_encode,
     )
 
@@ -2489,7 +2489,7 @@ def test_pq_encode_intent(spark):
 
 
 def test_k_core_intent(spark):
-    from nl_railtraffic_etl_pipeline_spark.functions.graph import k_core
+    from operator_families.functions.graph import k_core
 
     # triangle 1-2-3 plus pendant 4: first peel drops 4 (degree 1),
     # second recount leaves the triangle at degree 2 each.
@@ -2526,7 +2526,7 @@ def test_k_core_intent(spark):
 
 
 def test_stratified_ate_intent(spark):
-    from nl_railtraffic_etl_pipeline_spark.functions.mleval import (
+    from operator_families.functions.mleval import (
         stratified_ate,
     )
 
@@ -2557,7 +2557,7 @@ def test_stratified_ate_intent(spark):
 # ---------------------------------------------------------------------------
 
 def test_target_encode_intent(spark):
-    from nl_railtraffic_etl_pipeline_spark.functions.mleval import (
+    from operator_families.functions.mleval import (
         target_encode,
     )
 
@@ -2585,7 +2585,7 @@ def test_target_encode_intent(spark):
 
 
 def test_span_corruption_masks_intent(spark):
-    from nl_railtraffic_etl_pipeline_spark.functions.chunking import (
+    from operator_families.functions.chunking import (
         span_corruption_masks,
     )
 
@@ -2628,7 +2628,7 @@ def test_span_corruption_masks_intent(spark):
 def test_peak_concurrency_intent(spark):
     import datetime as dt
 
-    from nl_railtraffic_etl_pipeline_spark.functions.temporal import (
+    from operator_families.functions.temporal import (
         peak_concurrency,
     )
 
@@ -2651,7 +2651,7 @@ def test_peak_concurrency_intent(spark):
 
 
 def test_pq_fidelity_intent(spark):
-    from nl_railtraffic_etl_pipeline_spark.functions.simsearch import (
+    from operator_families.functions.simsearch import (
         pq_encode,
         pq_fidelity,
     )
@@ -2682,7 +2682,7 @@ def test_pq_fidelity_intent(spark):
 # ---------------------------------------------------------------------------
 
 def test_training_order_intent(spark):
-    from nl_railtraffic_etl_pipeline_spark.functions.corpus import (
+    from operator_families.functions.corpus import (
         training_order,
     )
 
@@ -2716,7 +2716,7 @@ def test_training_order_intent(spark):
 # ---------------------------------------------------------------------------
 
 def test_compression_ratio_intent(spark):
-    from nl_railtraffic_etl_pipeline_spark.functions.text import (
+    from operator_families.functions.text import (
         compression_ratio,
     )
 
@@ -2749,7 +2749,7 @@ def test_node_jaccard_hub_degree_fence(spark):
     fence the hub is quarantined (removed from the induced subgraph) and
     the candidate pair space collapses to the honest structure among the
     low-degree nodes."""
-    from nl_railtraffic_etl_pipeline_spark.functions.graph import (
+    from operator_families.functions.graph import (
         node_jaccard,
     )
 
@@ -2781,7 +2781,7 @@ def test_node_jaccard_hub_degree_fence(spark):
 
 
 def test_extract_links_intent(spark):
-    from nl_railtraffic_etl_pipeline_spark.functions.web import extract_links
+    from operator_families.functions.web import extract_links
 
     rows = [
         Row(
@@ -2806,7 +2806,7 @@ def test_extract_links_intent(spark):
 
 
 def test_negative_sampling_intent(spark):
-    from nl_railtraffic_etl_pipeline_spark.functions.simsearch import (
+    from operator_families.functions.simsearch import (
         negative_sampling,
     )
 
@@ -2837,7 +2837,7 @@ def test_negative_sampling_intent(spark):
 
 
 def test_conformal_bounds_intent(spark):
-    from nl_railtraffic_etl_pipeline_spark.functions.mleval import (
+    from operator_families.functions.mleval import (
         conformal_bounds,
     )
 
@@ -2872,7 +2872,7 @@ def test_conformal_bounds_intent(spark):
 
 
 def test_trimmed_mean_intent(spark):
-    from nl_railtraffic_etl_pipeline_spark.functions.stats import (
+    from operator_families.functions.stats import (
         trimmed_mean,
     )
 
@@ -2895,7 +2895,7 @@ def test_trimmed_mean_intent(spark):
 
 
 def test_simpson_flip_intent(spark):
-    from nl_railtraffic_etl_pipeline_spark.functions.stats import (
+    from operator_families.functions.stats import (
         simpson_flip,
     )
 
@@ -2929,7 +2929,7 @@ def test_simpson_flip_intent(spark):
 
 
 def test_rake_keywords_intent(spark):
-    from nl_railtraffic_etl_pipeline_spark.functions.text import (
+    from operator_families.functions.text import (
         rake_keywords,
     )
 

@@ -22,7 +22,7 @@ import random
 import numpy as np
 import pytest
 
-from nl_railtraffic_etl_pipeline_spark.functions.multimodal import (
+from operator_families.functions.multimodal import (
     _JPEG_ZZ,
     _idct_basis,
     _jpeg_decode_pixels,
@@ -180,7 +180,7 @@ def test_randomized_scan_machinery_roundtrip():
 
 
 def test_quarantines_never_raise(monkeypatch):
-    import nl_railtraffic_etl_pipeline_spark.functions.multimodal as mm
+    import operator_families.functions.multimodal as mm
 
     full = jpeg_encode_progressive_pixels(5, 2, 2)
     # truncations at every interesting boundary

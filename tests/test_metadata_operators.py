@@ -12,7 +12,7 @@ sys.path.insert(0, "/root/repo")
 def test_tiff_both_byte_orders_and_strips():
     """II and MM fixtures decode identically-shaped stats; strip count
     follows RowsPerStrip=2; truncation quarantines."""
-    from nl_railtraffic_etl_pipeline_spark.functions.multimodal import (
+    from operator_families.functions.multimodal import (
         _tiff_decode,
         tiff_encode,
     )
@@ -31,7 +31,7 @@ def test_tiff_both_byte_orders_and_strips():
 def test_tiff_pixel_sums_match_formula():
     """Channel sums and the row-order weighted sum equal the closed
     forms the oracle recomputes."""
-    from nl_railtraffic_etl_pipeline_spark.functions.multimodal import (
+    from operator_families.functions.multimodal import (
         _tiff_decode,
         tiff_encode,
     )
@@ -53,7 +53,7 @@ def test_tiff_pixel_sums_match_formula():
 def test_exif_meta_fields_and_quarantine():
     """Orientation/Make/XResolution come back exactly; SOF dims are
     read from the frame header; truncation quarantines."""
-    from nl_railtraffic_etl_pipeline_spark.functions.multimodal import (
+    from operator_families.functions.multimodal import (
         _exif_meta,
         jpeg_exif_encode,
     )
@@ -75,7 +75,7 @@ def test_krippendorff_alpha_textbook(spark):
     observers, 10 units rated 0/1 with one disagreement... use the
     hand-computable case: units A-D rated by 2 raters, one unit
     disagrees -> alpha = 1 - (n-1)*Do2/(2*De)."""
-    from nl_railtraffic_etl_pipeline_spark.functions.mleval import (
+    from operator_families.functions.mleval import (
         krippendorff_alpha_nominal,
     )
 
@@ -99,7 +99,7 @@ def test_krippendorff_alpha_textbook(spark):
 
 def test_krippendorff_perfect_agreement(spark):
     """All raters agree on every unit -> alpha = 1."""
-    from nl_railtraffic_etl_pipeline_spark.functions.mleval import (
+    from operator_families.functions.mleval import (
         krippendorff_alpha_nominal,
     )
 
@@ -114,7 +114,7 @@ def test_krippendorff_perfect_agreement(spark):
 
 def test_krippendorff_excludes_singleton_units(spark):
     """Units with a single rating are unpairable and must not count."""
-    from nl_railtraffic_etl_pipeline_spark.functions.mleval import (
+    from operator_families.functions.mleval import (
         krippendorff_alpha_nominal,
     )
 
@@ -127,10 +127,10 @@ def test_krippendorff_excludes_singleton_units(spark):
 def test_sitemap_parse_counts(spark):
     """The regex chain extracts every <loc>, keeps non-skip paths, and
     min/max lastmod are real dates from the entries."""
-    from nl_railtraffic_etl_pipeline_spark.plans.registry import QUERIES
+    from operator_families.plans.registry import QUERIES
     import duckdb
 
-    from nl_railtraffic_etl_pipeline_spark.plans.registry import ORACLES
+    from operator_families.plans.registry import ORACLES
 
     con = duckdb.connect()
     con.execute(

@@ -12,7 +12,7 @@ def test_textrank_hub_word_outranks_frequency(spark):
     """A word adjacent to MANY distinct words outranks a word that is
     merely frequent next to one partner — the graph-centrality
     property frequency ranking lacks."""
-    from nl_railtraffic_etl_pipeline_spark.functions.text import (
+    from operator_families.functions.text import (
         textrank_keywords,
     )
 
@@ -28,7 +28,7 @@ def test_textrank_hub_word_outranks_frequency(spark):
 
 
 def test_textrank_deterministic_ranks(spark):
-    from nl_railtraffic_etl_pipeline_spark.functions.text import (
+    from operator_families.functions.text import (
         textrank_keywords,
     )
 
@@ -47,7 +47,7 @@ def test_cdc_boundaries_shift_locally_on_insertion(spark):
     prefix changes chunk alignment only near the edit — the chunk
     CONTENT sums far from the edit recur (fixed-size blocks would all
     shift)."""
-    from nl_railtraffic_etl_pipeline_spark.functions.chunking import (
+    from operator_families.functions.chunking import (
         cdc_chunk_stats,
     )
 
@@ -84,7 +84,7 @@ def test_cdc_stateless_window_reference():
         if h % 64 == 0:
             cuts += 1
     expected_chunks = cuts + 1
-    from nl_railtraffic_etl_pipeline_spark.functions.chunking import (
+    from operator_families.functions.chunking import (
         cdc_chunk_stats,
     )
     from nl_railtraffic_etl_pipeline_spark.session import get_spark
@@ -99,7 +99,7 @@ def test_triplet_semi_hard_selection(spark):
     """The semi-hard negative is the most similar different-label
     vector BELOW the positive similarity; a closer negative must be
     skipped in favor of it."""
-    from nl_railtraffic_etl_pipeline_spark.functions.simsearch import (
+    from operator_families.functions.simsearch import (
         triplet_mining,
     )
 
@@ -127,7 +127,7 @@ def test_triplet_semi_hard_selection(spark):
 def test_triplet_hardest_fallback_flagged(spark):
     """When every negative is MORE similar than the positive, the
     fallback picks the hardest one and flags semi_hard = false."""
-    from nl_railtraffic_etl_pipeline_spark.functions.simsearch import (
+    from operator_families.functions.simsearch import (
         triplet_mining,
     )
 
@@ -151,7 +151,7 @@ def test_triplet_hardest_fallback_flagged(spark):
 def test_dtw_known_distance(spark):
     """Hand-checkable DP: dtw([3,1,4,1,5], [2,7,1,8]) = 8, and a pure
     shift has a much smaller DTW than L1."""
-    from nl_railtraffic_etl_pipeline_spark.functions.stats import (
+    from operator_families.functions.stats import (
         dtw_distance_units,
     )
 
@@ -174,7 +174,7 @@ def test_dtw_known_distance(spark):
 
 def test_sign_test_direction(spark):
     """The week-on-week z is positive when the series grows."""
-    from nl_railtraffic_etl_pipeline_spark.plans.registry import QUERIES
+    from operator_families.plans.registry import QUERIES
 
     out = QUERIES["stats_sign_test"](
         __import__(

@@ -4,7 +4,7 @@ covered by tools/check_correctness.py; these cover semantics)."""
 import pytest
 from pyspark.sql import Row, functions as F
 
-from nl_railtraffic_etl_pipeline_spark.functions import dedup, multimodal, simsearch
+from operator_families.functions import dedup, multimodal, simsearch
 
 
 def _docs(spark, texts):
@@ -94,7 +94,7 @@ def test_flag_contaminated_ngram_overlap(spark):
 def test_bm25_ranking_semantics(spark):
     """Rarer terms weigh more (rational idf), repeated terms saturate
     (k1), and longer docs are penalized (b); unmatched docs are absent."""
-    from nl_railtraffic_etl_pipeline_spark.functions.search import bm25_topk
+    from operator_families.functions.search import bm25_topk
 
     df = spark.createDataFrame(
         [
@@ -112,7 +112,7 @@ def test_bm25_ranking_semantics(spark):
 
 
 def test_token_repetition_stats(spark):
-    from nl_railtraffic_etl_pipeline_spark.functions.text import (
+    from operator_families.functions.text import (
         token_repetition_stats,
     )
 
@@ -240,7 +240,7 @@ def test_duplicate_clusters_deep_chain_log_rounds(spark):
 def test_clean_corpus_drops_dups_and_junk(spark):
     """Exact-dup loser, near-dup cluster loser, and a too-short doc all
     fall out; survivors carry their token counts."""
-    from nl_railtraffic_etl_pipeline_spark.functions.corpus import clean_corpus
+    from operator_families.functions.corpus import clean_corpus
 
     base = "the quick brown fox jumps over the lazy dog again and again"
     docs = _docs(
@@ -443,13 +443,15 @@ def test_registry_oracle_coverage():
     rows-only exception (text_compression_ratio) now rides the
     published-artifact pattern: a driver-local pyarrow+zlib reference
     sweep the oracle joins (plans/ml_queries.py)."""
-    from nl_railtraffic_etl_pipeline_spark.plans.registry import ORACLES, QUERIES
+    from nl_railtraffic_etl_pipeline_spark.plans import registry as rail
+    from operator_families.plans import registry as families
 
-    assert set(QUERIES) == set(ORACLES)
+    for reg in (rail, families):
+        assert set(reg.QUERIES) == set(reg.ORACLES)
 
 
 def test_kmv_distinct_exact_below_k_and_close_above(spark):
-    from nl_railtraffic_etl_pipeline_spark.functions.sketch import kmv_distinct
+    from operator_families.functions.sketch import kmv_distinct
 
     rows = [(g, v % (30 if g == "small" else 5000))
             for g in ("small", "big") for v in range(20000)]
@@ -461,7 +463,7 @@ def test_kmv_distinct_exact_below_k_and_close_above(spark):
 
 
 def test_bottom_k_sample_deterministic_across_partitioning(spark):
-    from nl_railtraffic_etl_pipeline_spark.functions.sketch import (
+    from operator_families.functions.sketch import (
         bottom_k_sample,
     )
 
@@ -482,7 +484,7 @@ def test_bottom_k_sample_deterministic_across_partitioning(spark):
 def test_bernoulli_samples_are_nested_and_deterministic(spark):
     """Membership is a pure function of the key: lower-rate samples are
     subsets of higher-rate ones, and partitioning cannot change the draw."""
-    from nl_railtraffic_etl_pipeline_spark.functions.sketch import (
+    from operator_families.functions.sketch import (
         bernoulli_sample,
     )
 
@@ -500,7 +502,7 @@ def test_bernoulli_samples_are_nested_and_deterministic(spark):
 
 
 def test_stratified_bernoulli_rates_and_dropped_stratum(spark):
-    from nl_railtraffic_etl_pipeline_spark.functions.sketch import (
+    from operator_families.functions.sketch import (
         stratified_bernoulli_sample,
     )
 
@@ -528,7 +530,7 @@ def test_duplicate_clusters_raises_when_unconverged(spark):
 
 
 def test_group_centroids_partition_invariant(spark):
-    from nl_railtraffic_etl_pipeline_spark.functions.simsearch import group_centroids
+    from operator_families.functions.simsearch import group_centroids
     from nl_railtraffic_etl_pipeline_spark.plans.testdata import load_table
 
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
@@ -542,7 +544,7 @@ def test_group_centroids_partition_invariant(spark):
 
 def test_mixture_plan_smallest_source_keeps_all(spark):
     from pyspark.sql import Row
-    from nl_railtraffic_etl_pipeline_spark.functions.corpus import mixture_plan
+    from operator_families.functions.corpus import mixture_plan
 
     docs = spark.createDataFrame(
         [Row(doc_id=i, source="big" if i < 8 else "small",
@@ -559,7 +561,7 @@ def test_mixture_plan_tokenless_source_excluded(spark):
     sum) must not poison the minimum and zero every other source's rate;
     it gets rate 0.0 and the minimum runs over positive-token sources."""
     from pyspark.sql import Row
-    from nl_railtraffic_etl_pipeline_spark.functions.corpus import mixture_plan
+    from operator_families.functions.corpus import mixture_plan
 
     docs = spark.createDataFrame(
         [Row(doc_id=i, source="big", text="tok " * 10) for i in range(8)]
@@ -577,7 +579,7 @@ def test_group_centroids_nonfinite_excluded(spark):
     """NULL/NaN/Inf vector elements are excluded from sum AND count —
     the mean is over finite values only, never silently biased by a
     mismatched denominator."""
-    from nl_railtraffic_etl_pipeline_spark.functions.simsearch import group_centroids
+    from operator_families.functions.simsearch import group_centroids
 
     emb = spark.createDataFrame(
         [
@@ -598,7 +600,7 @@ def test_scrub_pii_redaction_and_counts(spark):
     """Email/URL/long-digit redaction: counts are per-category matches on
     the original text; replacement order (URL first) keeps a URL's query
     digits from being double-redacted."""
-    from nl_railtraffic_etl_pipeline_spark.functions.text import scrub_pii
+    from operator_families.functions.text import scrub_pii
 
     df = spark.createDataFrame(
         [
@@ -623,7 +625,7 @@ def test_scrub_pii_redaction_and_counts(spark):
 def test_strip_html_tags_entities_whitespace(spark):
     """Tags out first, then entity decode (so &lt; cannot fabricate a
     strippable tag), then blank-run collapse + trim."""
-    from nl_railtraffic_etl_pipeline_spark.functions.text import strip_html
+    from operator_families.functions.text import strip_html
 
     df = spark.createDataFrame(
         [(1, "<p>Hello &amp; welcome</p><br/> <a href='https://z.z'>x</a> "
@@ -638,7 +640,7 @@ def test_strip_html_tags_entities_whitespace(spark):
 def test_repeated_span_stats(spark):
     """A doc sharing a 5-gram run with another doc counts those positions
     (with multiplicity); unique text scores zero; short docs are excluded."""
-    from nl_railtraffic_etl_pipeline_spark.functions.text import repeated_span_stats
+    from operator_families.functions.text import repeated_span_stats
 
     df = spark.createDataFrame(
         [
@@ -661,7 +663,7 @@ def test_incremental_near_dup_matches_full_pair_generator(spark):
     """Cross-split pairs from incremental_near_dup must equal the
     new×index subset of the full-corpus pair generator (same shingles,
     same Jaccard, same threshold)."""
-    from nl_railtraffic_etl_pipeline_spark.functions.dedup import (
+    from operator_families.functions.dedup import (
         incremental_near_dup,
         ngram_jaccard_pairs,
     )
@@ -695,7 +697,7 @@ def test_incremental_near_dup_matches_full_pair_generator(spark):
 def test_remove_boilerplate_lines(spark):
     """Lines shared by >= min_docs docs vanish (normalization-insensitive);
     unique lines survive in order; an all-boilerplate doc becomes ''."""
-    from nl_railtraffic_etl_pipeline_spark.functions.text import (
+    from operator_families.functions.text import (
         remove_boilerplate_lines,
     )
 
@@ -725,7 +727,7 @@ def test_remove_boilerplate_lines(spark):
 def test_web_domain_parsing_and_cap(spark):
     """Host parse (port/case), registered-domain suffix rule, and the
     two-level per-domain cap equal to the single-window definition."""
-    from nl_railtraffic_etl_pipeline_spark.functions import web
+    from operator_families.functions import web
 
     rows = [
         Row(doc_id=0, url="https://News.Example.co.uk:8443/a"),
@@ -757,7 +759,7 @@ def test_web_domain_parsing_and_cap(spark):
         by_dom.setdefault(r["domain"], []).append((r["sample_rank"], r["doc_id"]))
     assert len(by_dom["whale.org"]) == 10
     # two-level result == single-window definition (exactness of the split)
-    from nl_railtraffic_etl_pipeline_spark.functions.sketch import _rank_hash
+    from operator_families.functions.sketch import _rank_hash
     ranked = (
         df.withColumn("host", web.url_host(F.col("url")))
         .withColumn("domain", web.registered_domain(F.col("host")))
@@ -774,7 +776,7 @@ def test_web_domain_parsing_and_cap(spark):
 def test_quality_classifier_score_and_keep(spark):
     """Exact rational score; keep decision flips with content; degenerate
     docs score NULL and keep=False."""
-    from nl_railtraffic_etl_pipeline_spark.functions.text import (
+    from operator_families.functions.text import (
         quality_classifier,
     )
 
@@ -793,7 +795,7 @@ def test_quality_classifier_score_and_keep(spark):
 
 
 def test_vocab_coverage_curve(spark):
-    from nl_railtraffic_etl_pipeline_spark.functions.text import vocab_coverage
+    from operator_families.functions.text import vocab_coverage
 
     docs = _docs(spark, ["a a a b b c", "a b d"])
     out = vocab_coverage(docs, k=3).collect()
@@ -805,7 +807,7 @@ def test_vocab_coverage_curve(spark):
 
 
 def test_quantize_int8_roundtrip(spark):
-    from nl_railtraffic_etl_pipeline_spark.functions.simsearch import (
+    from operator_families.functions.simsearch import (
         quantize_int8,
     )
 
@@ -825,7 +827,7 @@ def test_quantize_int8_roundtrip(spark):
 def test_trailing_anomalies_cold_start_and_flag(spark):
     import datetime as dt
 
-    from nl_railtraffic_etl_pipeline_spark.functions.behavior import (
+    from operator_families.functions.behavior import (
         trailing_anomalies,
     )
 
@@ -845,7 +847,7 @@ def test_trailing_anomalies_cold_start_and_flag(spark):
 def test_apply_cdc_log_delete_and_latest(spark):
     import datetime as dt
 
-    from nl_railtraffic_etl_pipeline_spark.operators.upsert import apply_cdc_log
+    from operator_families.operators.cdc import apply_cdc_log
 
     t0 = dt.datetime(2024, 1, 1)
     rows = [
@@ -871,7 +873,7 @@ def test_apply_cdc_log_delete_and_latest(spark):
 def test_pagerank_deterministic_and_sensible(spark):
     """Hub node outranks leaves; result invariant under repartitioning;
     per-node mass stays within [teleport, total]."""
-    from nl_railtraffic_etl_pipeline_spark.functions.graph import (
+    from operator_families.functions.graph import (
         PAGERANK_UNIT,
         pagerank_units,
     )
@@ -899,7 +901,7 @@ def test_grid_quantile_sketch_merge_equals_direct(spark):
     """States built over disjoint slices (shared bounds) merge to the
     direct sketch; estimates land within one bin width of the exact
     quantile."""
-    from nl_railtraffic_etl_pipeline_spark.functions.sketch import (
+    from operator_families.functions.sketch import (
         grid_quantile_estimate,
         grid_quantile_merge,
         grid_quantile_sketch,
@@ -951,7 +953,7 @@ def test_grid_quantile_merge_rejects_mismatched_bounds(spark):
     """Merging states binned against DIFFERENT grids is a silent-garbage
     hazard — the merge must fail loudly, not sum incompatible counts."""
     import pytest
-    from nl_railtraffic_etl_pipeline_spark.functions.sketch import (
+    from operator_families.functions.sketch import (
         grid_quantile_merge,
         grid_quantile_sketch,
     )
@@ -969,7 +971,7 @@ def test_grid_quantile_merge_rejects_mismatched_bounds(spark):
 
 
 def test_plan_audio_chunks_windows(spark):
-    from nl_railtraffic_etl_pipeline_spark.functions.multimodal import (
+    from operator_families.functions.multimodal import (
         plan_audio_chunks,
     )
 
@@ -986,7 +988,7 @@ def test_plan_audio_chunks_windows(spark):
 
 
 def test_key_skew_profile_orders_and_shares(spark):
-    from nl_railtraffic_etl_pipeline_spark.operators.skew import (
+    from operator_families.operators.skew import (
         key_skew_profile,
     )
 
@@ -1000,7 +1002,7 @@ def test_key_skew_profile_orders_and_shares(spark):
 
 
 def test_shard_assignment_stable_and_balanced(spark):
-    from nl_railtraffic_etl_pipeline_spark.functions.corpus import (
+    from operator_families.functions.corpus import (
         assign_shards,
         shard_stats,
     )
@@ -1019,7 +1021,7 @@ def test_shard_assignment_stable_and_balanced(spark):
 
 
 def test_canonical_url_and_blocklist(spark):
-    from nl_railtraffic_etl_pipeline_spark.functions import web
+    from operator_families.functions import web
 
     df = spark.createDataFrame(
         [
@@ -1071,7 +1073,7 @@ def test_canonical_url_and_blocklist(spark):
 def test_stats_moments_zscore_corr_ols(spark):
     import math
 
-    from nl_railtraffic_etl_pipeline_spark.functions import stats
+    from operator_families.functions import stats
 
     rows = [Row(g="a", x=float(i), y=2.0 * i + 1) for i in range(10)] + [
         Row(g="b", x=5.0, y=1.0) for _ in range(3)
@@ -1102,7 +1104,7 @@ def test_sliding_distinct_kmv_exact_below_k(spark):
     against a brute-force trailing distinct count."""
     import datetime as dt
 
-    from nl_railtraffic_etl_pipeline_spark.functions.sketch import (
+    from operator_families.functions.sketch import (
         sliding_distinct_kmv,
     )
 
@@ -1123,7 +1125,7 @@ def test_sliding_distinct_kmv_exact_below_k(spark):
 
 
 def test_bloom_no_false_negatives_and_merge(spark):
-    from nl_railtraffic_etl_pipeline_spark.functions.sketch import (
+    from operator_families.functions.sketch import (
         bloom_build,
         bloom_probe,
     )
@@ -1173,7 +1175,7 @@ def test_prefix_filter_equals_full_inverted_index(spark):
 
 
 def test_hard_negatives_label_mismatch_only(spark):
-    from nl_railtraffic_etl_pipeline_spark.functions.simsearch import (
+    from operator_families.functions.simsearch import (
         hard_negatives,
     )
 
@@ -1190,7 +1192,7 @@ def test_hard_negatives_label_mismatch_only(spark):
 
 
 def test_novelty_first_doc_wins(spark):
-    from nl_railtraffic_etl_pipeline_spark.functions.text import novelty_scores
+    from operator_families.functions.text import novelty_scores
 
     docs = _docs(
         spark,
@@ -1207,7 +1209,7 @@ def test_novelty_first_doc_wins(spark):
 
 
 def test_zorder_key_interleaves_and_localizes(spark):
-    from nl_railtraffic_etl_pipeline_spark.functions.layout import zorder_key
+    from operator_families.functions.layout import zorder_key
 
     df = spark.createDataFrame(
         [Row(x=x, y=y) for x in range(4) for y in range(4)]
@@ -1227,7 +1229,7 @@ def test_zorder_key_interleaves_and_localizes(spark):
 
 
 def test_leakproof_split_group_atomicity(spark):
-    from nl_railtraffic_etl_pipeline_spark.functions.corpus import (
+    from operator_families.functions.corpus import (
         leakproof_split,
     )
 
@@ -1249,7 +1251,7 @@ def test_leakproof_split_group_atomicity(spark):
 
 
 def test_table_profile_and_rules(spark):
-    from nl_railtraffic_etl_pipeline_spark.functions.profile import (
+    from operator_families.functions.profile import (
         check_rules,
         table_profile,
     )
@@ -1285,7 +1287,7 @@ def test_fit_quality_weights_matches_numpy_ridge(spark):
     ridge solve on the same design matrix, and the trained head separates
     an obviously-labeled corpus."""
     import numpy as np
-    from nl_railtraffic_etl_pipeline_spark.functions.text import (
+    from operator_families.functions.text import (
         STOPWORDS,
         apply_quality_weights,
         fit_quality_weights,
@@ -1331,7 +1333,7 @@ def test_fit_quality_weights_matches_numpy_ridge(spark):
 
 def test_fit_quality_weights_singular_raises(spark):
     import pytest
-    from nl_railtraffic_etl_pipeline_spark.functions.text import (
+    from operator_families.functions.text import (
         fit_quality_weights,
     )
 
@@ -1348,7 +1350,7 @@ def test_kmv_set_ops_estimates_overlap(spark):
     """Union/intersection/Jaccard estimates land near ground truth on two
     overlapping id sets, are exact below k, and depend only on the
     sketches (not the raw data)."""
-    from nl_railtraffic_etl_pipeline_spark.functions.sketch import (
+    from operator_families.functions.sketch import (
         kmv_set_ops,
         kmv_sketch,
     )
@@ -1384,7 +1386,7 @@ def test_remove_repeated_spans_semantics(spark):
     """Positions covered by any shared n-gram are deleted (overlapping
     occurrences union, not double-delete); short and unique docs pass
     through; a fully-templated doc empties out."""
-    from nl_railtraffic_etl_pipeline_spark.functions.text import (
+    from operator_families.functions.text import (
         remove_repeated_spans,
     )
 
@@ -1417,7 +1419,7 @@ def test_remove_repeated_spans_semantics(spark):
 def test_quantile_bucketize_semantics(spark):
     """Edges are exact quantiles; boundary values go UP; NULLs get NULL
     buckets; grouped mode bins against each group's own distribution."""
-    from nl_railtraffic_etl_pipeline_spark.functions.stats import (
+    from operator_families.functions.stats import (
         quantile_bucketize,
     )
 
@@ -1452,7 +1454,7 @@ def test_mixture_plan_temperature(spark):
     """alpha spans natural mix (1.0, all rates 1) to equalized (0.0,
     original behavior); intermediate alpha tempers monotonically; the
     realized token mass under the rates is proportional to n^alpha."""
-    from nl_railtraffic_etl_pipeline_spark.functions.corpus import (
+    from operator_families.functions.corpus import (
         mixture_plan,
     )
 
@@ -1480,7 +1482,7 @@ def test_mixture_plan_temperature(spark):
 def test_tfidf_top_terms_semantics(spark):
     """Doc-unique terms outrank corpus-wide ones at equal tf; higher tf
     outranks within equal df; rank is a total order with term tiebreak."""
-    from nl_railtraffic_etl_pipeline_spark.functions.search import (
+    from operator_families.functions.search import (
         tfidf_top_terms,
     )
 
@@ -1512,7 +1514,7 @@ def test_kfold_assign_group_integrity(spark):
     ranges, assignment is partitioning-invariant, and fold 0 equals the
     groups leakproof_split carves out at rate (1, k) under the same
     salt semantics (interval-partition consistency)."""
-    from nl_railtraffic_etl_pipeline_spark.functions.corpus import (
+    from operator_families.functions.corpus import (
         kfold_assign,
     )
 
@@ -1539,7 +1541,7 @@ def test_sliding_distinct_sketch_within_kmv_error_of_exact(spark):
     sigma as the test bound), over the same day domain."""
     import datetime as dt
 
-    from nl_railtraffic_etl_pipeline_spark.functions.sketch import (
+    from operator_families.functions.sketch import (
         sliding_distinct_exact,
         sliding_distinct_kmv,
     )
@@ -1569,7 +1571,7 @@ def test_cm_sketch_one_sided_error_and_merge(spark):
     match exact counts when the table is collision-light, and states
     over disjoint slices merge by summing to the whole-corpus state."""
     from pyspark.sql import functions as SF
-    from nl_railtraffic_etl_pipeline_spark.functions.sketch import (
+    from operator_families.functions.sketch import (
         cm_build,
         cm_query,
     )
@@ -1610,7 +1612,7 @@ def test_mixture_plan_rejects_out_of_range_alpha(spark):
     loudly at plan-build time, not hand bad rates downstream."""
     import pytest
 
-    from nl_railtraffic_etl_pipeline_spark.functions.corpus import mixture_plan
+    from operator_families.functions.corpus import mixture_plan
 
     docs = spark.createDataFrame(
         [("a", "x y z"), ("b", "x")], ["source", "text"]
@@ -1628,7 +1630,7 @@ def test_kmv_set_ops_rejects_oversized_sketch(spark):
     silently bias the union estimate — the guard must abort instead."""
     import pytest
 
-    from nl_railtraffic_etl_pipeline_spark.functions.sketch import (
+    from operator_families.functions.sketch import (
         kmv_set_ops,
         kmv_sketch,
     )
@@ -1653,7 +1655,7 @@ def test_ewma_general_alpha_bit_exact(spark):
 
     import pytest
 
-    from nl_railtraffic_etl_pipeline_spark.functions.stats import (
+    from operator_families.functions.stats import (
         ewma,
         ewma_halving,
     )
@@ -1700,7 +1702,7 @@ def test_ewma_general_alpha_bit_exact(spark):
 # BFS hop distance (functions/graph.py::bfs_hops)
 # ---------------------------------------------------------------------------
 def test_bfs_hops_chain_and_bound(spark):
-    from nl_railtraffic_etl_pipeline_spark.functions.graph import bfs_hops
+    from operator_families.functions.graph import bfs_hops
 
     # 0 -> 1 -> 2 -> 3 -> 4 chain plus a shortcut 0 -> 3
     edges = spark.createDataFrame(
@@ -1715,7 +1717,7 @@ def test_bfs_hops_chain_and_bound(spark):
 
 
 def test_bfs_hops_disconnected_and_cycle(spark):
-    from nl_railtraffic_etl_pipeline_spark.functions.graph import bfs_hops
+    from operator_families.functions.graph import bfs_hops
 
     edges = spark.createDataFrame(
         [Row(src=0, dst=1), Row(src=1, dst=0), Row(src=5, dst=6)]
@@ -1730,7 +1732,7 @@ def test_bfs_hops_disconnected_and_cycle(spark):
 # Edit-distance dictionary join (functions/fuzzy.py)
 # ---------------------------------------------------------------------------
 def test_edit_distance_join_bounds_and_passthrough(spark):
-    from nl_railtraffic_etl_pipeline_spark.functions.fuzzy import (
+    from operator_families.functions.fuzzy import (
         edit_distance_join,
     )
 
@@ -1750,7 +1752,7 @@ def test_edit_distance_join_bounds_and_passthrough(spark):
 
 
 def test_edit_distance_join_length_band_is_complete(spark):
-    from nl_railtraffic_etl_pipeline_spark.functions.fuzzy import (
+    from operator_families.functions.fuzzy import (
         edit_distance_join,
     )
 
@@ -1763,7 +1765,7 @@ def test_edit_distance_join_length_band_is_complete(spark):
 
 
 def test_remove_repeated_spans_null_text_survives_cap(spark):
-    from nl_railtraffic_etl_pipeline_spark.functions.text import (
+    from operator_families.functions.text import (
         remove_repeated_spans,
     )
 
@@ -1833,7 +1835,7 @@ def _png_with_filter(f, w, h, ch, color_type):
 
 
 def test_png_decode_all_filters_and_color_types():
-    from nl_railtraffic_etl_pipeline_spark.functions.multimodal import (
+    from operator_families.functions.multimodal import (
         _png_decode_pixels,
         png_encode_rgb,
     )
@@ -1907,7 +1909,7 @@ def test_png_adam7_interlace():
 
     import numpy as np
 
-    from nl_railtraffic_etl_pipeline_spark.functions.multimodal import (
+    from operator_families.functions.multimodal import (
         _PNG_ADAM7,
         _png_decode_pixels,
         png_encode_rgb,
@@ -1971,7 +1973,7 @@ def test_warc_record_walk():
     payload sums), metadata records carry no target URI, and malformed
     archives (bad version line, clipped terminator, trailing garbage)
     quarantine rather than mis-split."""
-    from nl_railtraffic_etl_pipeline_spark.functions.web import (
+    from operator_families.functions.web import (
         _warc_records,
         warc_encode,
     )
@@ -2005,7 +2007,7 @@ def test_zip_entry_walk():
     import io
     import zipfile
 
-    from nl_railtraffic_etl_pipeline_spark.functions.multimodal import (
+    from operator_families.functions.multimodal import (
         _zip_entries,
         zip_encode,
     )
@@ -2035,7 +2037,7 @@ def test_zip_entry_walk():
 
 
 def test_png_pixel_stats_kernel(spark):
-    from nl_railtraffic_etl_pipeline_spark.functions.multimodal import (
+    from operator_families.functions.multimodal import (
         decode_png_pixel_stats,
         png_encode_rgb,
     )
@@ -2053,7 +2055,7 @@ def test_png_pixel_stats_kernel(spark):
 
 
 def test_reciprocal_rank_fusion_semantics(spark):
-    from nl_railtraffic_etl_pipeline_spark.functions.search import (
+    from operator_families.functions.search import (
         reciprocal_rank_fusion,
     )
 
@@ -2086,7 +2088,7 @@ def test_reciprocal_rank_fusion_semantics(spark):
 def test_ndcg_at_k_hand_case(spark):
     import math
 
-    from nl_railtraffic_etl_pipeline_spark.functions.mleval import ndcg_at_k
+    from operator_families.functions.mleval import ndcg_at_k
 
     # ranking with rels [1, 3, 0]: dcg = 1/log2(2) + 3/log2(3) + 0
     # ideal order [3, 1, 0]: idcg = 3/log2(2) + 1/log2(3)
@@ -2108,7 +2110,7 @@ def test_ndcg_at_k_hand_case(spark):
 
 
 def test_cohens_kappa_textbook(spark):
-    from nl_railtraffic_etl_pipeline_spark.functions.mleval import (
+    from operator_families.functions.mleval import (
         cohens_kappa,
     )
 
@@ -2138,7 +2140,7 @@ def test_cohens_kappa_textbook(spark):
 def test_winnow_fingerprint_guarantee(spark):
     """MOSS guarantee: two docs sharing a run of >= k+w-1 tokens share at
     least one fingerprint; short docs yield none."""
-    from nl_railtraffic_etl_pipeline_spark.functions.text import (
+    from operator_families.functions.text import (
         winnow_fingerprints,
     )
 
@@ -2165,7 +2167,7 @@ def test_winnow_fingerprint_guarantee(spark):
 def test_pmi_collocations_ranking(spark):
     import math
 
-    from nl_railtraffic_etl_pipeline_spark.functions.text import (
+    from operator_families.functions.text import (
         pmi_collocations,
     )
 
@@ -2195,7 +2197,7 @@ def test_pmi_collocations_ranking(spark):
 
 
 def test_label_vote_majority_and_ties(spark):
-    from nl_railtraffic_etl_pipeline_spark.functions.mleval import label_vote
+    from operator_families.functions.mleval import label_vote
 
     rows = [
         (1, 1, 1, 0),        # 2 pos vs 1 neg -> 1
@@ -2223,7 +2225,7 @@ def test_duplicate_clusters_as_graph_components(spark):
     """duplicate_clusters doubles as the connected-components primitive:
     a two-triangle + bridge + isolate-pair fixture labels exactly by
     component minimum."""
-    from nl_railtraffic_etl_pipeline_spark.functions.dedup import (
+    from operator_families.functions.dedup import (
         duplicate_clusters,
     )
 
@@ -2241,7 +2243,7 @@ def test_duplicate_clusters_as_graph_components(spark):
 
 
 def test_jpeg_dc_roundtrip_and_quarantine():
-    from nl_railtraffic_etl_pipeline_spark.functions.multimodal import (
+    from operator_families.functions.multimodal import (
         _jpeg_decode_dc,
         jpeg_encode_gray_blocks,
     )
@@ -2276,7 +2278,7 @@ def test_jpeg_dc_ac_skip_alignment():
     decodes wrong."""
     import struct
 
-    from nl_railtraffic_etl_pipeline_spark.functions.multimodal import (
+    from operator_families.functions.multimodal import (
         _JPEG_STD_DC_BITS,
         _JPEG_STD_DC_VALS,
         _huff_canonical,
@@ -2342,7 +2344,7 @@ def test_hits_units_hand_computed_and_partition_invariant(spark):
     """Two unrolled rounds on a 5-node hub/authority fixture match the
     hand-computed power iteration exactly; invariant under
     repartitioning (integer arithmetic has no accumulation order)."""
-    from nl_railtraffic_etl_pipeline_spark.functions.graph import hits_units
+    from operator_families.functions.graph import hits_units
 
     nodes = spark.createDataFrame([Row(id=i) for i in range(5)])
     edges = spark.createDataFrame(
@@ -2374,7 +2376,7 @@ def test_hits_units_hand_computed_and_partition_invariant(spark):
 def test_degree_assortativity_star_and_cycle(spark):
     """A star is perfectly disassortative (-1); a cycle has zero degree
     variance (NULL); duplicate/reversed/self edges are canonicalized."""
-    from nl_railtraffic_etl_pipeline_spark.functions.graph import (
+    from operator_families.functions.graph import (
         degree_assortativity,
     )
 
@@ -2396,7 +2398,7 @@ def test_degree_assortativity_star_and_cycle(spark):
 def test_local_clustering_hand_computed(spark):
     """Two shared triangles + a pendant pair: per-node triangle counts
     and coefficients match the closed form; degree-1 nodes get NULL."""
-    from nl_railtraffic_etl_pipeline_spark.functions.graph import (
+    from operator_families.functions.graph import (
         local_clustering,
     )
 
@@ -2427,7 +2429,7 @@ def test_local_clustering_hand_computed(spark):
 def test_k_anonymity_classes_and_flags(spark):
     """Class sizes, distinct-sensitive counts, and both flags match the
     hand-built fixture; NULL-sensitive rows still count toward size."""
-    from nl_railtraffic_etl_pipeline_spark.functions.profile import (
+    from operator_families.functions.profile import (
         k_anonymity,
     )
 
@@ -2453,7 +2455,7 @@ def test_k_anonymity_classes_and_flags(spark):
 def test_column_entropy_uniform_constant_null(spark):
     """A 2-value uniform column scores exactly 1 bit, a constant scores
     0 with NULL normalization, and NULLs are profiled separately."""
-    from nl_railtraffic_etl_pipeline_spark.functions.profile import (
+    from operator_families.functions.profile import (
         column_entropy,
     )
 
@@ -2481,7 +2483,7 @@ def test_column_entropy_uniform_constant_null(spark):
 def test_psi_drift_identical_periods_zero(spark):
     """Identical reference/current distributions give PSI == 0 in every
     bucket (Laplace smoothing cancels when counts and totals match)."""
-    from nl_railtraffic_etl_pipeline_spark.functions.mleval import psi_drift
+    from operator_families.functions.mleval import psi_drift
 
     rows = [Row(v=float(i), p=per) for i in range(100) for per in (0, 1)]
     out = psi_drift(
@@ -2496,7 +2498,7 @@ def test_psi_drift_identical_periods_zero(spark):
 def test_js_divergence_identical_and_disjoint(spark):
     """JSD is 0 bits for identical distributions and exactly 1 bit for
     disjoint supports (the log2 upper bound)."""
-    from nl_railtraffic_etl_pipeline_spark.functions.corpus import (
+    from operator_families.functions.corpus import (
         js_divergence,
     )
 
@@ -2516,7 +2518,7 @@ def test_js_divergence_identical_and_disjoint(spark):
 def test_zipf_fit_perfect_inverse_law(spark):
     """Counts exactly proportional to 1/rank fit slope -1 with r2 == 1
     (up to the 12-digit term quantization)."""
-    from nl_railtraffic_etl_pipeline_spark.functions.text import zipf_fit
+    from operator_families.functions.text import zipf_fit
 
     text = " ".join(["a"] * 12 + ["b"] * 6 + ["c"] * 4 + ["d"] * 3)
     docs = spark.createDataFrame([Row(doc_id=0, text=text)])
@@ -2529,7 +2531,7 @@ def test_zipf_fit_perfect_inverse_law(spark):
 
 def test_type_token_stats_hand_computed(spark):
     """'a a b c' -> 4 tokens, 3 types, ttr .75, 2 hapax, ratio .5."""
-    from nl_railtraffic_etl_pipeline_spark.functions.text import (
+    from operator_families.functions.text import (
         type_token_stats,
     )
 
@@ -2550,7 +2552,7 @@ def test_type_token_stats_hand_computed(spark):
 def test_term_burstiness_bursty_vs_even(spark):
     """A term concentrated in one doc scores fano 3.0; a term spread one
     per doc scores 0 (sub-Poisson regular); min_df prunes."""
-    from nl_railtraffic_etl_pipeline_spark.functions.text import (
+    from operator_families.functions.text import (
         term_burstiness,
     )
 
@@ -2576,7 +2578,7 @@ def test_holt_linear_matches_python_replay(spark):
     repartitioning."""
     import datetime
 
-    from nl_railtraffic_etl_pipeline_spark.functions.stats import holt_linear
+    from operator_families.functions.stats import holt_linear
 
     vals = [10.0, 12.0, 14.0, 13.0, 20.0]
     rows = [
@@ -2605,7 +2607,7 @@ def test_holt_linear_matches_python_replay(spark):
 def test_fifo_allocate_clamps_and_tiebreaks(spark):
     """Budget 100 against [60, 30, 30]: full, full, partial 10; ties on
     (order, amount) produce an order-invariant output multiset."""
-    from nl_railtraffic_etl_pipeline_spark.functions.temporal import (
+    from operator_families.functions.temporal import (
         fifo_allocate,
     )
 
@@ -2643,7 +2645,7 @@ def test_png_thumbnail_pixels_samples_floor_grid(spark):
     """The 4x3 thumbnail of a formula-valued PNG equals the encode
     formula at the floor-mapped source indices; a truncated payload
     quarantines as one decoded=false row."""
-    from nl_railtraffic_etl_pipeline_spark.functions.multimodal import (
+    from operator_families.functions.multimodal import (
         png_encode_rgb,
         png_thumbnail_pixels,
     )
@@ -2671,7 +2673,7 @@ def test_entropy_rate_deterministic_vs_uniform(spark):
     50/50 contributes exactly 1 bit weighted by its share."""
     import datetime as dt
 
-    from nl_railtraffic_etl_pipeline_spark.functions.behavior import (
+    from operator_families.functions.behavior import (
         entropy_rate,
     )
 
@@ -2710,7 +2712,7 @@ def test_bh_fdr_textbook_example(spark):
     """The classic BH worked example: p = [.01, .04, .03, .005] at
     alpha=.05 -> all four significant (the suffix-min rescue of .04);
     adj_p is the running minimum of p*n/rank from the bottom."""
-    from nl_railtraffic_etl_pipeline_spark.functions.stats import bh_fdr
+    from operator_families.functions.stats import bh_fdr
 
     df = spark.createDataFrame(
         [Row(k="a", p=0.01), Row(k="b", p=0.04),
@@ -2732,7 +2734,7 @@ def test_bh_fdr_textbook_example(spark):
 def test_survivorship_pick_quality_then_id(spark):
     """Longest member wins; equal quality tie-breaks on the LOWEST id;
     member counts and ranks are per cluster."""
-    from nl_railtraffic_etl_pipeline_spark.functions.dedup import (
+    from operator_families.functions.dedup import (
         survivorship_pick,
     )
 
@@ -2755,7 +2757,7 @@ def test_survivorship_pick_quality_then_id(spark):
 def test_woe_iv_symmetric_and_flat(spark):
     """A bucket with balanced labels under balanced totals has woe 0;
     mirrored buckets get mirrored woe; IV is the shared total."""
-    from nl_railtraffic_etl_pipeline_spark.functions.mleval import woe_iv
+    from operator_families.functions.mleval import woe_iv
 
     rows = (
         [Row(b="hi", y=1)] * 8 + [Row(b="hi", y=0)] * 2
@@ -2774,7 +2776,7 @@ def test_woe_iv_symmetric_and_flat(spark):
 def test_diff_in_diff_recovers_planted_effect(spark):
     """Control drifts +5, treated drifts +5 plus a +3 effect: did == 3
     exactly (decimal cell sums, fixed closing chain)."""
-    from nl_railtraffic_etl_pipeline_spark.functions.mleval import (
+    from operator_families.functions.mleval import (
         diff_in_diff,
     )
 
@@ -2793,7 +2795,7 @@ def test_diff_in_diff_recovers_planted_effect(spark):
 def test_propensity_match_caliper_and_att(spark):
     """Nearest in-caliper control wins with id tiebreak; out-of-caliper
     treated units stay unmatched; ATT averages matched pair diffs."""
-    from nl_railtraffic_etl_pipeline_spark.functions.mleval import (
+    from operator_families.functions.mleval import (
         propensity_match,
     )
 
@@ -2824,7 +2826,7 @@ def test_cuped_theta_and_imbalance_correction(spark):
     """Balanced arms with y = x + 3t: theta == 1 and both effects read
     exactly 3.  Pure x imbalance with y = x (no effect): the raw effect
     reads 2, CUPED removes all of it (rho2 == 1)."""
-    from nl_railtraffic_etl_pipeline_spark.functions.mleval import cuped
+    from operator_families.functions.mleval import cuped
 
     balanced = [Row(x=float(x), y=float(x), t=0) for x in (1, 2, 3)] + [
         Row(x=float(x), y=float(x + 3), t=1) for x in (1, 2, 3)
@@ -2845,7 +2847,7 @@ def test_cuped_theta_and_imbalance_correction(spark):
 def test_mann_kendall_monotone_and_flat(spark):
     """A strictly increasing series maxes S = n(n-1)/2 with positive z;
     a constant series has S = 0 and NULL z (variance fully tied out)."""
-    from nl_railtraffic_etl_pipeline_spark.functions.stats import (
+    from operator_families.functions.stats import (
         mann_kendall,
     )
 
@@ -2867,7 +2869,7 @@ def test_power_mde_closed_form(spark):
     by hand on a tiny group."""
     import math
 
-    from nl_railtraffic_etl_pipeline_spark.functions.stats import power_mde
+    from operator_families.functions.stats import power_mde
 
     vals = [10.0, 12.0, 14.0, 16.0]
     df = spark.createDataFrame([Row(g="a", v=x) for x in vals])
@@ -2884,7 +2886,7 @@ def test_power_mde_closed_form(spark):
 def test_source_divergence_outlier_source(spark):
     """A source disjoint from the rest scores 1 bit; a source that
     mirrors the complement distribution scores ~0."""
-    from nl_railtraffic_etl_pipeline_spark.functions.corpus import (
+    from operator_families.functions.corpus import (
         source_divergence,
     )
 
@@ -2912,7 +2914,7 @@ def test_robots_decisions_longest_match_and_allow_tie(spark):
     """Longest rule wins (re-Allow under a Disallow tree), Allow wins a
     length tie, unmatched URLs default to allowed, and the rules come
     from PARSED raw text."""
-    from nl_railtraffic_etl_pipeline_spark.functions.web import (
+    from operator_families.functions.web import (
         robots_decisions,
     )
 
@@ -2949,7 +2951,7 @@ def test_robots_decisions_rfc9309_wildcards_and_groups(spark):
     ignored, consecutive UA lines share one group, rules above any
     group header are dropped, and regex metachars in rules stay
     literal."""
-    from nl_railtraffic_etl_pipeline_spark.functions.web import (
+    from operator_families.functions.web import (
         robots_decisions,
     )
 
@@ -2998,7 +3000,7 @@ def test_psi_drift_both_empty_buckets_still_contribute(spark):
     yet their Laplace-smoothed contribution is nonzero whenever
     n_ref != n_cur — the full bucket spine must keep them in the
     output (and in psi_total) instead of silently dropping them."""
-    from nl_railtraffic_etl_pipeline_spark.functions.mleval import psi_drift
+    from operator_families.functions.mleval import psi_drift
 
     rows = [Row(v=1.0, p=0) for _ in range(10)] + [
         Row(v=1.0, p=1) for _ in range(5)
@@ -3025,7 +3027,7 @@ def test_jpeg_pixels_roundtrip_exact():
     level shift -> fixed-point YCbCr->RGB) reproduces the fixture's
     closed-form sample values EXACTLY — every channel sum and the
     position-weighted luma sum."""
-    from nl_railtraffic_etl_pipeline_spark.functions.multimodal import (
+    from operator_families.functions.multimodal import (
         _jpeg_decode_pixels,
         jpeg_encode_ycbcr_blocks,
     )
@@ -3074,7 +3076,7 @@ def test_jpeg_pixels_quarantine_and_gray_crosscheck():
     agrees with the r8 DC-only fixture: constant blocks decode to the
     exact block-mean image (y_sum = 64 * sum of block values, chroma and
     RGB sums None for 1-component input)."""
-    from nl_railtraffic_etl_pipeline_spark.functions.multimodal import (
+    from operator_families.functions.multimodal import (
         _jpeg_decode_pixels,
         jpeg_encode_gray_blocks,
         jpeg_encode_ycbcr_blocks,
@@ -3098,7 +3100,7 @@ def test_jpeg_subsampled_pixels_roundtrip_exact():
     chroma replication, and partial-MCU crop ALL reproduce the fixture's
     closed form exactly — including cropped widths/heights that cut
     through a replicated chroma footprint."""
-    from nl_railtraffic_etl_pipeline_spark.functions.multimodal import (
+    from operator_families.functions.multimodal import (
         _jpeg_decode_pixels,
         jpeg_encode_ycbcr_subsampled,
     )
@@ -3166,7 +3168,7 @@ def test_jpeg_subsampled_quarantine_envelope():
     """Out-of-envelope sampling still quarantines: truncated 4:2:0
     payloads, sampling factors > 2, and chroma sampled ABOVE 1x1 all
     return None instead of raising or mis-decoding."""
-    from nl_railtraffic_etl_pipeline_spark.functions.multimodal import (
+    from operator_families.functions.multimodal import (
         _jpeg_decode_pixels,
         jpeg_encode_ycbcr_subsampled,
     )
@@ -3191,7 +3193,7 @@ def test_jpeg_subsampled_quarantine_envelope():
 def test_wav_pcm_roundtrip_and_quarantine():
     """RIFF chunk walk (incl. the odd-chunk pad byte), PCM16 LE sample
     extraction, and exact integer stats; truncated/garbage quarantines."""
-    from nl_railtraffic_etl_pipeline_spark.functions.multimodal import (
+    from operator_families.functions.multimodal import (
         _wav_decode_pcm16,
         wav_encode_pcm16,
     )
@@ -3213,7 +3215,7 @@ def test_wav_pcm_roundtrip_and_quarantine():
 def test_bmp_roundtrip_flip_and_quarantine():
     """Bottom-up row flip, BGR order, and 4-byte padding all verified by
     the channel sums and the position-weighted (flip-sensitive) sum."""
-    from nl_railtraffic_etl_pipeline_spark.functions.multimodal import (
+    from operator_families.functions.multimodal import (
         _bmp_decode_pixels,
         bmp_encode_rgb,
     )
@@ -3244,7 +3246,7 @@ def test_benford_deviation_spine_and_exact_digits(spark):
     strings), the 1..9 spine keeps absent digits with their n*expected
     chi-square term, and a perfectly Benford-ish single-digit column
     shows share_obs 1.0 on its digit."""
-    from nl_railtraffic_etl_pipeline_spark.functions.profile import (
+    from operator_families.functions.profile import (
         benford_deviation,
     )
 
@@ -3268,7 +3270,7 @@ def test_gif_lzw_decoder_pinned_and_roundtrip():
     mid-stream, the KwKwK deferred-insert case) — independent of the
     fixture compressor — and the full GIF roundtrip matches the formula,
     including dictionary growth on long repetitive streams."""
-    from nl_railtraffic_etl_pipeline_spark.functions.multimodal import (
+    from operator_families.functions.multimodal import (
         _gif_decode_pixels,
         _lzw_decode,
         _lzw_encode,
@@ -3320,7 +3322,7 @@ def test_jpeg_progressive_dc_roundtrip_and_envelope():
     exactly (incl. negative values — arithmetic shift + OR identity);
     incomplete chains, AC scans, truncation, and sequential SOF0 input
     all quarantine."""
-    from nl_railtraffic_etl_pipeline_spark.functions.multimodal import (
+    from operator_families.functions.multimodal import (
         _jpeg_decode_progressive_dc,
         jpeg_encode_gray_blocks,
         jpeg_encode_progressive_dc,
@@ -3344,7 +3346,7 @@ def test_jpeg_progressive_dc_roundtrip_and_envelope():
         jpeg_encode_gray_blocks(3, 2, 2)
     ) is None
     # and the progressive file is out of the sequential decoders'
-    from nl_railtraffic_etl_pipeline_spark.functions.multimodal import (
+    from operator_families.functions.multimodal import (
         _jpeg_decode_dc,
         _jpeg_decode_pixels,
     )
@@ -3358,7 +3360,7 @@ def test_gif_frame_sampling_exact_and_skip():
     per-frame formula sums WITH the right GCE delay attached; stride
     skips frames structurally; NETSCAPE looping ext is walked; malformed
     payloads quarantine."""
-    from nl_railtraffic_etl_pipeline_spark.functions.multimodal import (
+    from operator_families.functions.multimodal import (
         _gif_decode_frames,
         gif_encode_animated,
     )
@@ -3401,7 +3403,7 @@ def test_bpe_word_pieces_hand_computed():
     merges ALL its occurrences; merged symbols only re-merge when the
     concatenated pair is itself in the table; no-merge words stay
     character-split."""
-    from nl_railtraffic_etl_pipeline_spark.functions.chunking import (
+    from operator_families.functions.chunking import (
         bpe_word_pieces,
     )
 
@@ -3419,7 +3421,7 @@ def test_bpe_merge_table_and_encode_consistency(spark):
     """The Spark-built merge table ranks by (count desc, pair asc), and
     encode's character mass conserves the ASCII word bytes while pieces
     shrink monotonically with merges applied."""
-    from nl_railtraffic_etl_pipeline_spark.functions.chunking import (
+    from operator_families.functions.chunking import (
         bpe_encode_pieces,
         bpe_merge_table,
     )
@@ -3449,7 +3451,7 @@ def test_brier_decomposition_identity_and_perfect_calibration(spark):
     """Murphy identity Brier = REL - RES + UNC holds (the bin forecast
     is the bin mean, so the identity is exact up to output rounding);
     a perfectly sharp calibrated forecaster has REL = 0 and RES = UNC."""
-    from nl_railtraffic_etl_pipeline_spark.functions.mleval import (
+    from operator_families.functions.mleval import (
         brier_decomposition,
     )
 
@@ -3484,7 +3486,7 @@ def test_hilbert_key_reference_and_adjacency(spark):
     grid, and the curve's defining property holds: consecutive keys are
     ADJACENT cells (Manhattan distance exactly 1) — the locality
     guarantee Z-order lacks at quadrant boundaries."""
-    from nl_railtraffic_etl_pipeline_spark.functions.layout import (
+    from operator_families.functions.layout import (
         hilbert_xy2d,
         with_hilbert_key,
     )
@@ -3507,7 +3509,7 @@ def test_hilbert_key_reference_and_adjacency(spark):
 def test_unicode_nfc_stats_composes_and_counts(spark):
     """NFC collapses combining sequences (counts drop), leaves composed
     text unchanged, and quarantines NULL text as NULL stats."""
-    from nl_railtraffic_etl_pipeline_spark.functions.text import (
+    from operator_families.functions.text import (
         unicode_nfc_stats,
     )
 
@@ -3530,7 +3532,7 @@ def test_unicode_nfc_stats_composes_and_counts(spark):
 
 
 def test_fk_integrity_orphans_and_nulls_separate(spark):
-    from nl_railtraffic_etl_pipeline_spark.functions.profile import (
+    from operator_families.functions.profile import (
         fk_integrity,
     )
 
@@ -3549,7 +3551,7 @@ def test_fk_integrity_orphans_and_nulls_separate(spark):
 def test_cumulative_gains_perfect_ranker(spark):
     """A perfect ranker's top bin captures all positives: gain hits 1.0
     immediately and lift equals N/P in the first bin, decaying to 1."""
-    from nl_railtraffic_etl_pipeline_spark.functions.mleval import (
+    from operator_families.functions.mleval import (
         cumulative_gains,
     )
 
@@ -3570,7 +3572,7 @@ def test_cumulative_gains_perfect_ranker(spark):
 def test_page_hinkley_detects_level_shift(spark):
     """A flat series never alarms; a series whose level jumps after the
     midpoint alarms shortly after the shift (the PH guarantee)."""
-    from nl_railtraffic_etl_pipeline_spark.functions.stats import (
+    from operator_families.functions.stats import (
         page_hinkley,
     )
 
@@ -3593,7 +3595,7 @@ def test_page_hinkley_detects_level_shift(spark):
 def test_flesch_readability_ordering(spark):
     """Short simple sentences score higher than a long vowel-dense
     run-on; counts are exact and NULL text quarantines."""
-    from nl_railtraffic_etl_pipeline_spark.functions.text import (
+    from operator_families.functions.text import (
         flesch_readability,
     )
 

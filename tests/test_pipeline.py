@@ -161,3 +161,46 @@ def test_second_payload_upserts(spark, lake):
     # rows present in both payloads carry the second run's updated_at
     both = disruptions.filter("updated_at > timestamp'2026-02-14 12:00:00'")
     assert both.count() > 0
+
+
+def test_concurrent_stage_failures_are_all_raised(spark, tmp_path, monkeypatch):
+    """The station seed and the zone load run concurrently; when both fail,
+    neither error may be dropped."""
+    import json
+
+    payload = tmp_path / "payload.json"
+    payload.write_text(json.dumps([
+        {"id": "1", "type": "MAINTENANCE", "title": "Werkzaamheden Utrecht",
+         "start": "2026-02-14T08:00:00+0100", "end": "2026-02-14T10:00:00+0100"},
+        {"id": "2", "type": "DISRUPTION", "title": "Storing Amsterdam",
+         "start": "2026-02-14T09:30:00+0100"},
+    ]))
+
+    class StationsDown(Exception):
+        pass
+
+    class LoadDown(Exception):
+        pass
+
+    def stations_fail(self, run_ts):
+        raise StationsDown("stations")
+
+    def load_fail(self, raw, cleaned, run_ts):
+        raise LoadDown("load")
+
+    monkeypatch.setattr(SparkETLPipeline, "ensure_stations", stations_fail)
+    monkeypatch.setattr(SparkETLPipeline, "load", load_fail)
+    p = SparkETLPipeline(spark, str(tmp_path / "lake"))
+    with pytest.raises(ExceptionGroup) as both:
+        p.run(str(payload), RUN_TS, artifacts=False)
+    assert sorted(type(e).__name__ for e in both.value.exceptions) == [
+        "LoadDown",
+        "StationsDown",
+    ]
+
+    # a single failure re-raises unchanged, not wrapped in a group
+    monkeypatch.setattr(
+        SparkETLPipeline, "ensure_stations", lambda self, run_ts: 0
+    )
+    with pytest.raises(LoadDown):
+        p.run(str(payload), RUN_TS, artifacts=False)

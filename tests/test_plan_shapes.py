@@ -7,19 +7,23 @@ import re
 import pytest
 
 import __spark_entry__ as entry_mod
+from operator_families.plans.registry import QUERIES as FAMILY_QUERIES
 
 SF = "/root/testdata/sf0.001"
 
+#: the driver gates, then the operator-family gates
+ALL_QUERIES = {**entry_mod.queries(), **FAMILY_QUERIES}
+
 
 def plan_of(spark, name: str) -> str:
-    df = entry_mod.queries()[name](spark, SF)
+    df = ALL_QUERIES[name](spark, SF)
     return df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted"
     )
 
 
 def test_no_cartesian_products_anywhere(spark):
-    for name in entry_mod.queries():
+    for name in ALL_QUERIES:
         assert "CartesianProduct" not in plan_of(spark, name), name
 
 
@@ -60,7 +64,7 @@ def test_blocked_embedding_kernel_is_executor_side(spark):
     assert "BroadcastExchange" not in txt
     import inspect
 
-    from nl_railtraffic_etl_pipeline_spark.functions import dedup
+    from operator_families.functions import dedup
 
     src = inspect.getsource(dedup)
     assert ".collect()" not in src, "corpus collect() reintroduced in dedup"
@@ -128,7 +132,7 @@ def test_grouped_sketch_paths_shuffle_on_group_key(spark):
 
 
 def test_python_only_in_arrow_kernels(spark):
-    for name in entry_mod.queries():
+    for name in ALL_QUERIES:
         txt = plan_of(spark, name)
         has_python = re.search(
             r"MapInPandas|FlatMapGroupsInPandas|ArrowEvalPython"

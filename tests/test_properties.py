@@ -11,7 +11,7 @@ import datetime as dt
 from hypothesis import example, given, settings, strategies as st
 from pyspark.sql import functions as F
 
-from nl_railtraffic_etl_pipeline_spark.functions.text import (
+from operator_families.functions.text import (
     tokens,
     word_shingles,
 )
@@ -131,7 +131,7 @@ def _py_components(edges: list[tuple[int, int]]) -> dict[int, int]:
     )
 )
 def test_duplicate_clusters_matches_union_find(spark, raw_edges):
-    from nl_railtraffic_etl_pipeline_spark.functions.dedup import (
+    from operator_families.functions.dedup import (
         duplicate_clusters,
     )
 
@@ -155,7 +155,7 @@ def test_duplicate_clusters_matches_union_find(spark, raw_edges):
 def test_pps_pick_total_is_exact(spark, weights):
     """Systematic PPS: for ANY nonnegative weight vector with positive
     total quantized mass, the picks sum exactly to n."""
-    from nl_railtraffic_etl_pipeline_spark.functions.sketch import (
+    from operator_families.functions.sketch import (
         pps_systematic_sample,
     )
 
@@ -202,7 +202,7 @@ def test_scrub_patterns_cross_engine(spark, texts):
     entity decodes, and match counts on adversarial spliced text."""
     import duckdb
 
-    from nl_railtraffic_etl_pipeline_spark.functions.text import (
+    from operator_families.functions.text import (
         BLANK_EDGE_RE,
         EMAIL_RE,
         HTML_ENTITIES,
@@ -274,8 +274,8 @@ def test_canonical_url_cross_engine(spark, pieces):
     written to the shared no-lookaround subset and this holds them to it."""
     import duckdb
 
-    from nl_railtraffic_etl_pipeline_spark.functions import web
-    from nl_railtraffic_etl_pipeline_spark.plans.ml_queries import _CANON_SQL
+    from operator_families.functions import web
+    from operator_families.plans.ml_queries import _CANON_SQL
 
     url = "".join(pieces)
     sdf = spark.createDataFrame([(url,)], ["url"])
@@ -300,7 +300,7 @@ def test_zorder_key_cross_engine(spark, x, y):
     writer and auditor silently destroys pruning."""
     import duckdb
 
-    from nl_railtraffic_etl_pipeline_spark.functions.layout import (
+    from operator_families.functions.layout import (
         zorder_key,
         zorder_key_sql,
     )
@@ -329,7 +329,7 @@ def test_zorder_key_cross_engine(spark, x, y):
 def test_quality_classifier_matches_oracle_formula(spark, text):
     """The classifier's integer num/den decomposition equals a direct
     python evaluation of the published formula on arbitrary text."""
-    from nl_railtraffic_etl_pipeline_spark.functions.text import (
+    from operator_families.functions.text import (
         STOPWORDS,
         quality_classifier,
     )
@@ -400,7 +400,7 @@ def test_registered_domain_psl_matches_referee(spark, hosts, suffixes):
     wins, +1 label; unmatched -> static heuristic) on arbitrary host and
     suffix-table shapes — including hosts that ARE suffixes, 1-label
     hosts, and empty suffix tables."""
-    from nl_railtraffic_etl_pipeline_spark.functions import web
+    from operator_families.functions import web
 
     def referee(host: str) -> str:
         labels = host.split(".")
@@ -452,7 +452,7 @@ def test_encode_tokens_matches_referee(spark, docs_tokens, vocab):
     """encode_tokens equals a plain-python positional encode for ANY
     doc/vocab shape — order preserved, OOV -> 0 and counted, duplicate
     vocab ids allowed, empty docs empty."""
-    from nl_railtraffic_etl_pipeline_spark.functions.chunking import (
+    from operator_families.functions.chunking import (
         encode_tokens,
     )
 
@@ -491,7 +491,7 @@ def test_cm_sketch_never_undercounts(spark, values):
     multisets — the one-sided guarantee as a property, not an example."""
     from collections import Counter
 
-    from nl_railtraffic_etl_pipeline_spark.functions.sketch import (
+    from operator_families.functions.sketch import (
         cm_build,
         cm_query,
     )
@@ -522,7 +522,7 @@ def test_remove_repeated_spans_matches_referee(spark, docs_tokens):
     """Span removal equals a plain-python referee (shared 3-gram
     positions unioned and deleted) on arbitrary tiny corpora — including
     overlapping occurrences, sub-n docs, and fully-covered docs."""
-    from nl_railtraffic_etl_pipeline_spark.functions.text import (
+    from operator_families.functions.text import (
         remove_repeated_spans,
     )
 
@@ -581,7 +581,7 @@ def test_ewma_halving_bit_identical_cross_engine(spark, rows):
 
     import duckdb
 
-    from nl_railtraffic_etl_pipeline_spark.functions.stats import ewma_halving
+    from operator_families.functions.stats import ewma_halving
 
     t0 = _dt.datetime(2026, 6, 1)
     data = [
@@ -662,7 +662,7 @@ def test_registered_domain_psl_full_rules_match_referee(spark, hosts, rules):
     algorithm (exception prevails with whole-host allowed, else longest
     PROPER match over plain+wildcard candidate keys, else static
     fallback)."""
-    from nl_railtraffic_etl_pipeline_spark.functions import web
+    from operator_families.functions import web
 
     def referee(host: str) -> str:
         labels = host.split(".")

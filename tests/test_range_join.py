@@ -5,7 +5,7 @@ import datetime as dt
 
 from pyspark.sql import functions as F
 
-from nl_railtraffic_etl_pipeline_spark.operators.range_join import (
+from operator_families.operators.range_join import (
     point_in_interval_join,
 )
 

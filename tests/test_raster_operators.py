@@ -11,7 +11,7 @@ sys.path.insert(0, "/root/repo")
 def test_pnm_all_four_variants():
     """P2/P3/P5/P6 all decode; format string and channel count match
     the variant; ASCII and binary agree on the same formula pixels."""
-    from nl_railtraffic_etl_pipeline_spark.functions.multimodal import (
+    from operator_families.functions.multimodal import (
         _pnm_decode,
         pnm_encode,
     )
@@ -33,7 +33,7 @@ def test_pnm_all_four_variants():
 def test_pnm_tokenizer_hazards():
     """Comments between header fields, CRLF, and multi-space runs all
     tokenize; truncated binary body and over-maxval ASCII quarantine."""
-    from nl_railtraffic_etl_pipeline_spark.functions.multimodal import (
+    from operator_families.functions.multimodal import (
         _pnm_decode,
     )
 
@@ -50,7 +50,7 @@ def test_qoi_known_stream_hand_decoded():
     INDEX ops decodes to the exact expected pixels."""
     import struct
 
-    from nl_railtraffic_etl_pipeline_spark.functions.multimodal import (
+    from operator_families.functions.multimodal import (
         _qoi_decode,
         _qoi_hash,
     )
@@ -79,7 +79,7 @@ def test_qoi_known_stream_hand_decoded():
 def test_qoi_encoder_emits_compact_ops():
     """The greedy encoder must actually use RUN (injected repeats) and
     produce a stream smaller than raw RGB for the fixture family."""
-    from nl_railtraffic_etl_pipeline_spark.functions.multimodal import (
+    from operator_families.functions.multimodal import (
         _qoi_decode,
         qoi_encode,
     )
@@ -96,7 +96,7 @@ def test_qoi_encoder_emits_compact_ops():
 def test_streaming_twins_match_batch(spark):
     """streaming_mcc / streaming_log_loss drain to the IDENTICAL rows
     as their batch twins at sf0.001 — the shared-close contract."""
-    from nl_railtraffic_etl_pipeline_spark.plans.registry import QUERIES
+    from operator_families.plans.registry import QUERIES
 
     sf = "/root/testdata/sf0.001"
     for s_name, b_name in [
@@ -115,7 +115,7 @@ def test_streaming_twins_match_batch(spark):
 def test_tga_orientations_and_rle():
     """Bottom-up and top-down storage decode to the same top-down
     stats; RLE and raw streams agree; truncation quarantines."""
-    from nl_railtraffic_etl_pipeline_spark.functions.multimodal import (
+    from operator_families.functions.multimodal import (
         _tga_decode,
         tga_encode,
     )
@@ -136,7 +136,7 @@ def test_tga_orientations_and_rle():
 def test_streaming_esd_and_cramers_match_batch(spark):
     """The two newest twins drain to identical rows as their batch
     gates at sf0.001."""
-    from nl_railtraffic_etl_pipeline_spark.plans.registry import QUERIES
+    from operator_families.plans.registry import QUERIES
 
     sf = "/root/testdata/sf0.001"
     for s_name, b_name in [
@@ -150,7 +150,7 @@ def test_streaming_esd_and_cramers_match_batch(spark):
 
 def test_systematic_sampling_even_spacing(spark):
     """Within each stratum the sampled ranks are exactly k apart."""
-    from nl_railtraffic_etl_pipeline_spark.plans.registry import QUERIES
+    from operator_families.plans.registry import QUERIES
 
     rows = QUERIES["sample_systematic"](
         spark, "/root/testdata/sf0.001"

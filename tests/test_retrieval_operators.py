@@ -19,7 +19,7 @@ def test_mmr_prefers_diverse_over_redundant(spark):
     """Query 0; candidates: two near-duplicates of the query direction
     and one orthogonal-ish vector.  Plain top-2 would take both
     duplicates; MMR's second pick must be the diverse one."""
-    from nl_railtraffic_etl_pipeline_spark.functions.simsearch import (
+    from operator_families.functions.simsearch import (
         mmr_rerank,
     )
 
@@ -44,7 +44,7 @@ def test_mmr_prefers_diverse_over_redundant(spark):
 
 
 def test_mmr_first_pick_is_pure_relevance(spark):
-    from nl_railtraffic_etl_pipeline_spark.functions.simsearch import (
+    from operator_families.functions.simsearch import (
         mmr_rerank,
     )
 
@@ -62,7 +62,7 @@ def test_mmr_first_pick_is_pure_relevance(spark):
 def test_mp4_walk_largesize_and_tracks():
     """Odd docs carry two tracks; doc % 3 == 1 uses the 64-bit
     largesize mdat; truncation quarantines."""
-    from nl_railtraffic_etl_pipeline_spark.functions.multimodal import (
+    from operator_families.functions.multimodal import (
         _mp4_walk,
         mp4_encode,
     )
@@ -81,7 +81,7 @@ def test_holt_winters_matches_reference_loop(spark):
     textbook additive recursions on the same series."""
     import datetime
 
-    from nl_railtraffic_etl_pipeline_spark.functions.stats import (
+    from operator_families.functions.stats import (
         holt_winters_additive,
     )
 
@@ -118,7 +118,7 @@ def test_holt_winters_matches_reference_loop(spark):
 def test_holt_winters_short_series_zero_rows(spark):
     import datetime
 
-    from nl_railtraffic_etl_pipeline_spark.functions.stats import (
+    from operator_families.functions.stats import (
         holt_winters_additive,
     )
 

@@ -3,7 +3,7 @@
 import pytest
 from pyspark.sql import functions as F
 
-from nl_railtraffic_etl_pipeline_spark.operators.skew import salted_join
+from operator_families.operators.skew import salted_join
 
 
 @pytest.fixture(scope="module")

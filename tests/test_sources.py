@@ -7,15 +7,13 @@ import pytest
 from pyspark.sql import functions as F
 
 from nl_railtraffic_etl_pipeline_spark.sources import rest_source
-from nl_railtraffic_etl_pipeline_spark.sources.json_source import (
-    read_payload,
-    read_jsonl,
-)
+from nl_railtraffic_etl_pipeline_spark.sources.json_source import read_payload
 from nl_railtraffic_etl_pipeline_spark.sources.lake import (
     with_date_partitions,
     write_csv_snapshot,
     write_raw_archive,
 )
+from operator_families.sources.lake_tools import read_jsonl
 
 PAYLOAD = "/root/reference/data/raw/disruptions_20260214_111810.json"
 RUN_TS = dt.datetime(2026, 2, 14, 11, 18, 10)
@@ -127,7 +125,7 @@ def test_read_jsonl_permissive(spark, tmp_path):
 
 
 def test_bucketed_tables_join_without_shuffle(spark, tmp_path):
-    from nl_railtraffic_etl_pipeline_spark.sources.lake import write_bucketed
+    from operator_families.sources.lake_tools import write_bucketed
 
     a = spark.range(10_000).select(
         F.col("id").alias("k"), (F.col("id") * 2).alias("va")
@@ -225,7 +223,7 @@ def test_compact_partitions_reduces_files_preserves_data(spark, tmp_path):
     (atomic swap)."""
     import os
 
-    from nl_railtraffic_etl_pipeline_spark.sources.lake import compact_partitions
+    from operator_families.sources.lake_tools import compact_partitions
 
     path = str(tmp_path / "zone")
     df = spark.createDataFrame(

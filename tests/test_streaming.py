@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from nl_railtraffic_etl_pipeline_spark.functions.cleaning import clean
 from nl_railtraffic_etl_pipeline_spark.sources.json_source import read_payload
-from nl_railtraffic_etl_pipeline_spark.streaming import (
+from operator_families.streaming import (
     sessionize_stream,
     start_incremental_load,
     streaming_daily_counts,
@@ -169,7 +169,7 @@ def test_dedup_stream_suppresses_cross_batch_redelivery(spark, tmp_path):
     """A key re-delivered in a LATER micro-batch (within the watermark
     horizon) must be suppressed — the state survives across batches; a
     genuinely new key in the later batch passes."""
-    from nl_railtraffic_etl_pipeline_spark.streaming.incremental import (
+    from operator_families.streaming.incremental import (
         dedup_stream,
     )
 
@@ -225,8 +225,8 @@ def test_ewma_stream_matches_batch_twin(spark, tmp_path):
     a cross-batch late event is dropped, never rewinds."""
     import datetime as dt
 
-    from nl_railtraffic_etl_pipeline_spark.functions.stats import ewma_halving
-    from nl_railtraffic_etl_pipeline_spark.streaming.incremental import (
+    from operator_families.functions.stats import ewma_halving
+    from operator_families.streaming.incremental import (
         ewma_stream,
     )
 
@@ -308,8 +308,8 @@ def test_ewma_stream_derived_schema_and_general_alpha(spark, tmp_path):
     import os
     import pathlib
 
-    from nl_railtraffic_etl_pipeline_spark.functions.stats import ewma
-    from nl_railtraffic_etl_pipeline_spark.streaming.incremental import (
+    from operator_families.functions.stats import ewma
+    from operator_families.streaming.incremental import (
         ewma_stream,
     )
 
@@ -370,17 +370,17 @@ def test_streaming_moments_bit_identical_to_batch(spark):
     bit for bit regardless of micro-batch partitioning: decimal sums are
     exact and commutative, and both sides close with the identical IEEE
     chain."""
-    import __spark_entry__ as entry_mod
     from pyspark.sql import functions as F
-    from nl_railtraffic_etl_pipeline_spark.functions.stats import (
+    from operator_families.functions.stats import (
         group_moments,
     )
     from nl_railtraffic_etl_pipeline_spark.plans.testdata import load_table
+    from operator_families.plans.registry import QUERIES
 
     sf = "/root/testdata/sf0.001"
     streamed = {
         r.event_type: (r.n, r.mean, r.std)
-        for r in entry_mod.queries()["streaming_moments"](spark, sf).collect()
+        for r in QUERIES["streaming_moments"](spark, sf).collect()
     }
     ev = load_table(spark, sf, "events").filter(
         F.col("event_type").isNotNull()
@@ -408,10 +408,10 @@ def test_rate_limit_stream_matches_batch_and_state(spark, tmp_path):
     import os
     import pathlib
 
-    from nl_railtraffic_etl_pipeline_spark.functions.behavior import (
+    from operator_families.functions.behavior import (
         rate_limit_violations,
     )
-    from nl_railtraffic_etl_pipeline_spark.streaming.incremental import (
+    from operator_families.streaming.incremental import (
         rate_limit_stream,
     )
 
@@ -473,8 +473,8 @@ def test_holt_stream_matches_batch_twin(spark, tmp_path):
     late event is dropped."""
     import datetime as dt
 
-    from nl_railtraffic_etl_pipeline_spark.functions.stats import holt_linear
-    from nl_railtraffic_etl_pipeline_spark.streaming.incremental import (
+    from operator_families.functions.stats import holt_linear
+    from operator_families.streaming.incremental import (
         holt_stream,
     )
 
@@ -543,7 +543,7 @@ def test_transitions_stream_matches_batch_pairs(spark, tmp_path):
     but never appear as dst; late arrivals drop."""
     import datetime as dt
 
-    from nl_railtraffic_etl_pipeline_spark.streaming.incremental import (
+    from operator_families.streaming.incremental import (
         transitions_stream,
     )
 
@@ -598,7 +598,7 @@ def test_drain_conf_restored_and_no_data_batch_scoped(spark):
     """r12: the drain helper's per-drain confs (shuffle partitions, the
     noDataMicroBatches opt-out) must be scoped to the start() call — the
     session the next query sees keeps its prior values either way."""
-    from nl_railtraffic_etl_pipeline_spark.plans.streaming_queries import (
+    from operator_families.plans.streaming_queries import (
         _drain_to_memory,
     )
 

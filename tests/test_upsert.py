@@ -62,7 +62,7 @@ def test_asof_join_semantics(spark):
     are NULL, tolerance nulls out stale matches."""
     import datetime as dt
 
-    from nl_railtraffic_etl_pipeline_spark.operators.asof import asof_join
+    from operator_families.operators.asof import asof_join
 
     t = lambda m: dt.datetime(2026, 1, 1, 10, m)
     left = spark.createDataFrame(
@@ -98,7 +98,7 @@ def test_asof_join_ignores_null_right_ts(spark):
     right_ts <= left_ts cannot match a NULL stamp)."""
     import datetime as dt
 
-    from nl_railtraffic_etl_pipeline_spark.operators.asof import asof_join
+    from operator_families.operators.asof import asof_join
 
     t = lambda m: dt.datetime(2026, 1, 1, 10, m)
     left = spark.createDataFrame([(1, t(5))], "k bigint, ts timestamp")
@@ -124,7 +124,7 @@ def test_asof_join_directions(spark):
     tolerance bounds the ABSOLUTE distance in every direction."""
     import datetime as dt
 
-    from nl_railtraffic_etl_pipeline_spark.operators.asof import asof_join
+    from operator_families.operators.asof import asof_join
 
     t = lambda m: dt.datetime(2026, 1, 1, 10, m)
     # rights at minute 0 and 20; lefts probe before/between/on/after
@@ -179,7 +179,7 @@ def test_asof_join_null_left_ts_matches_nothing(spark):
     row after every right row and hand it the EARLIEST right payload."""
     import datetime as dt
 
-    from nl_railtraffic_etl_pipeline_spark.operators.asof import asof_join
+    from operator_families.operators.asof import asof_join
 
     t = lambda m: dt.datetime(2026, 1, 1, 10, m)
     left = spark.createDataFrame(
@@ -214,7 +214,7 @@ def test_asof_join_null_left_ts_matches_nothing(spark):
 
 
 def _zone(spark, tmp_path, **kw):
-    from nl_railtraffic_etl_pipeline_spark.sources.zones import VersionedZone
+    from operator_families.sources.zones import VersionedZone
 
     return VersionedZone(spark, str(tmp_path / "zone"), **kw)
 
@@ -344,7 +344,7 @@ def test_versioned_zone_concurrent_upserts_no_lost_update(spark, tmp_path):
 def test_versioned_zone_audit_blocks_publish(spark, tmp_path):
     import pytest as _pytest
 
-    from nl_railtraffic_etl_pipeline_spark.sources.zones import ZoneAuditError
+    from operator_families.sources.zones import ZoneAuditError
 
     z = _zone(spark, tmp_path)
     z.upsert(

@@ -5,11 +5,11 @@ DuckDB over the same parquet tables, then compares row count, column names,
 and an order-insensitive value hash (columns sorted by name, rows sorted,
 values canonicalized).  Usage:
 
-    python tools/check_correctness.py [--json OUT.json] [--tier smoke|standard|full] [sf_dir] [query ...]
+    python tools/check_correctness.py [--json OUT.json] [sf_dir] [query ...]
 
 ``--json`` additionally writes per-query records in the driver's
 CORRECTNESS_r{N}.json schema (rows_match / schema_match / hash_match /
-spark_rows / oracle_rows / err) so full-registry runs are committable,
+spark_rows / oracle_rows / err) so registry runs are committable,
 machine-auditable evidence rather than prose claims.
 """
 
@@ -77,13 +77,9 @@ def table_sig(cols: list[str], rows: list[tuple]) -> tuple[int, str]:
 def main() -> int:
     args = sys.argv[1:]
     json_out = None
-    tier = "full"
     while args and args[0].startswith("--"):
         if args[0] == "--json":
             json_out = args[1]
-            args = args[2:]
-        elif args[0] == "--tier":
-            tier = args[1]
             args = args[2:]
         else:
             raise SystemExit(f"unknown flag {args[0]}")
@@ -91,11 +87,7 @@ def main() -> int:
     only = set(args[1:])
 
     import __spark_entry__ as e
-    from nl_railtraffic_etl_pipeline_spark.plans.registry import tier_names
     from nl_railtraffic_etl_pipeline_spark.session import get_spark
-
-    if tier != "full" and not only:
-        only = set(tier_names(tier))
 
     spark = get_spark("correctness-check", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")

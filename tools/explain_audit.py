@@ -60,9 +60,9 @@ def main() -> None:
         f"Generated by `tools/explain_audit.py` over `{sf_dir}`.  Columns:",
         "parquet scans / scans with non-empty `PushedFilters` / exchanges",
         "(shuffle or broadcast) / join strategies chosen by Catalyst+AQE /",
-        "Python eval nodes (Arrow kernels only — everything else is",
-        "JVM-codegen).  `Scan ExistingRDD` rows are checkpoint-materialized",
-        "intermediates (see functions/dedup.py `_materialize`).\n",
+        "Python eval nodes (none expected).  `Scan ExistingRDD` rows are",
+        "checkpoint-materialized intermediates (the derived `disruptions`",
+        "table, see plans/testdata.py `disruptions_df`).\n",
         "| query | scans | pushed | exchanges | joins | python | rdd scans |",
         "|---|---|---|---|---|---|---|",
     ]
@@ -77,35 +77,12 @@ def main() -> None:
     lines += [
         "",
         "Audit notes:",
-        "- Dimension joins (stations, nation, centroids, knn query side) are",
-        "  broadcast — no fact-side shuffle for enrichment joins.",
-        "- The only nested-loop joins are the documented pair generators",
-        "  (rail_q6 interval overlap; embedding all-pairs verification",
-        "  baseline) and 1-ROW scalar broadcasts (the crossJoin of a",
-        "  single-row aggregate standing in for a scalar subquery —",
-        "  tpch_q11/q15/q22, dq_referential_integrity, quantile-edge",
-        "  broadcasts) — every dedup/LSH candidate generator joins on a",
-        "  derived equi-key instead.",
-        "- Python appears only in the Arrow kernels (embedding cosine block",
-        "  join, multimodal decode) — text/dedup expression pipelines stay",
-        "  in whole-stage codegen.",
-        "- dedup_embedding_cosine's ShuffledHashJoin is the HINTED block×block",
-        "  join of the executor-side kernel: both sides group into id-hash",
-        "  blocks and meet through a shuffle, never a driver-collecting",
-        "  broadcast (plan-asserted in test_plan_shapes).",
-        "- dedup_embedding_lsh generates candidates with the",
-        "  first-matching-band guard instead of DISTINCT — no shuffle of the",
-        "  candidate pair set; verification reuses per-vector norms computed",
-        "  once before the join.",
-        "- dedup_clusters shows a near-empty plan because the returned frame",
-        "  is the converged label checkpoint; the per-round join/agg shuffles",
-        "  run inside the fixpoint loop (functions/dedup.py",
-        "  duplicate_clusters).",
-        "- graph_bfs_hops checkpoints each round's frontier (the",
-        "  dedup._materialize barrier), so its plan is the settled-union",
-        "  over per-round ExistingRDD scans instead of a k-deep unrolled",
-        "  tree; graph_pagerank's repeated-subtree plan is the documented",
-        "  5-round unroll over the persisted edge list.",
+        "- The station dimension join (rail_q2) is broadcast — no fact-side",
+        "  shuffle for enrichment.",
+        "- rail_q6's interval overlap is a bucketed equi-join; its only",
+        "  nested-loop joins are 1-ROW scalar broadcasts (the as-of date).",
+        "- No query has a Python eval node: every plan stays in JVM",
+        "  whole-stage codegen (plan-asserted in test_plan_shapes).",
     ]
     with open(out_md, "w") as fh:
         fh.write("\n".join(lines) + "\n")
