@@ -10,7 +10,7 @@ Layout:
     sources/      NS payload DataSource and readers, REST client, lake writers
     functions/    column-expression libraries (cleaning, SQLite compat shims)
     operators/    composite operators (idempotent upserts, daily rollup)
-    plans/        the analytics queries (DataFrame + SQL twins) and the
+    plans/        the analytics queries (one SQL text each) and the
                   query registry with its DuckDB oracles
 """
 

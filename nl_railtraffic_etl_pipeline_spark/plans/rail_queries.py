@@ -1,37 +1,19 @@
-"""The reference's six analytics queries as Spark DataFrame plans.
+"""The reference's six analytics queries, Q1-Q6, over given DataFrames.
 
-Each function is a pure ``DataFrame -> DataFrame`` plan builder mirroring one
-SQL constant in ``/root/reference/src/transformation/aggregators.py`` (line
-refs in each docstring).  Declarative DataFrame API throughout — Catalyst
-handles pushdown/pruning/join strategy; no UDFs, no collects inside plans.
-
-Cross-engine determinism deviations (documented, oracle matches them):
-- Window/LIMIT orderings gain explicit tiebreakers wherever the reference's
-  ordering is ambiguous under ties (row_number/rank over equal counts, top-k
-  boundaries) — the reference delegates tie order to SQLite internals, which
-  no two engines reproduce identically.
-- ``date('now', ...)`` anchors are taken from ``max(start_time)`` of the data
-  ("as-of" semantics) rather than wall-clock, for reproducible runs
-  (SURVEY §7.3.3).
+Each function runs its query's template from ``plans/sql_queries.py``, the
+one definition of the query, as ``spark.sql(template, disruptions=df)``.
+Spark binds each frame to a temporary view for that one call and drops the
+view once the text is analysed, so nothing global is registered and the
+result is an ordinary lazy DataFrame.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
-from ..functions.compat import (
-    csv_unnest,
-    day_name,
-    exact_avg,
-    hour_bucket,
-    julianday_minutes,
-    safe_div,
-    sqlite_dow,
-)
+from . import sql_queries as sq
 
 __all__ = [
-    "with_as_of",
     "rolling_trend",
     "station_severity",
     "day_over_day",
@@ -41,347 +23,37 @@ __all__ = [
 ]
 
 
-def with_as_of(disruptions: DataFrame) -> DataFrame:
-    """Attach the dataset's ``max(start_time)`` as an ``_as_of`` column.
-
-    Replaces the reference's wall-clock ``date('now')`` with data-derived
-    "now".  A single-row aggregate broadcast-joined onto the fact — no
-    driver-side collect, stays one lazy plan at any scale.
-    """
-    as_of = disruptions.agg(F.max("start_time").alias("_as_of"))
-    return disruptions.crossJoin(F.broadcast(as_of))
-
-
 def rolling_trend(disruptions: DataFrame) -> DataFrame:
-    """Q1 — 30-day trend with 7-row rolling sum/avg per type.
-
-    Ref: ROLLING_TREND_QUERY, aggregators.py:20-57.  Pre-aggregate to
-    (date, type) then ROWS BETWEEN 6 PRECEDING — deliberately rows-based,
-    not range-based (SURVEY §7.3.9).
-    """
-    daily = (
-        with_as_of(disruptions)
-        .filter(F.col("start_time") >= F.date_sub(F.to_date("_as_of"), 30))
-        .groupBy(
-            F.to_date("start_time").alias("disruption_date"),
-            "type",
-        )
-        .agg(
-            F.count("*").alias("incident_count"),
-            exact_avg(F.col("duration_minutes")).alias("_avg_dur"),
-        )
-    )
-    w = (
-        Window.partitionBy("type")
-        .orderBy("disruption_date")
-        .rowsBetween(-6, Window.currentRow)
-    )
-    return daily.select(
-        "disruption_date",
-        "type",
-        "incident_count",
-        F.round("_avg_dur", 1).alias("avg_duration_minutes"),
-        F.sum("incident_count").over(w).alias("rolling_7day_total"),
-        F.round(F.avg("incident_count").over(w), 2).alias("rolling_7day_avg"),
-    ).orderBy(F.desc("disruption_date"), F.desc("incident_count"))
+    """Q1 — 30-day trend with a 7-row rolling sum/avg per type."""
+    return disruptions.sparkSession.sql(sq.ROLLING_TREND_QUERY, disruptions=disruptions)
 
 
 def station_severity(disruptions: DataFrame, stations: DataFrame) -> DataFrame:
-    """Q2 — station severity percentile ranking.
-
-    Ref: STATION_SEVERITY_QUERY, aggregators.py:65-120.  CSV unnest ->
-    per-station aggregates -> percent_rank / dense_rank -> risk bucket ->
-    broadcast left join with the station dimension.
-    """
-    unnested = (
-        disruptions.filter(F.col("affected_stations").isNotNull())
-        .select(
-            "disruption_id",
-            "impact_level",
-            "duration_minutes",
-            csv_unnest(F.col("affected_stations")).alias("_code"),
-        )
-        .withColumn("station_code", F.trim(F.col("_code")))
-    )
-    agg = unnested.groupBy("station_code").agg(
-        F.countDistinct("disruption_id").alias("total_disruptions"),
-        exact_avg(F.col("duration_minutes")).alias("_avg_dur"),
-        F.avg("impact_level").alias("_avg_impact"),
-        F.max("impact_level").alias("max_impact_level"),
-    )
-    # percent_rank/dense_rank are tie-stable (peers share a value), so the
-    # reference's count-only ordering is already deterministic cross-engine.
-    w = Window.orderBy("total_disruptions")
-    w_desc = Window.orderBy(F.desc("total_disruptions"))
-    pr = F.percent_rank().over(w)
-    ranked = agg.select(
-        "station_code",
-        "total_disruptions",
-        F.round("_avg_dur", 1).alias("avg_duration_minutes"),
-        F.round("_avg_impact", 2).alias("avg_impact_level"),
-        "max_impact_level",
-        F.round(pr, 3).alias("disruption_percentile"),
-        F.dense_rank().over(w_desc).alias("severity_rank"),
-        F.when(pr > 0.9, "HIGH RISK")
-        .when(pr > 0.7, "MEDIUM RISK")
-        .otherwise("LOW RISK")
-        .alias("risk_category"),
-    )
-    return (
-        ranked.join(F.broadcast(stations), "station_code", "left")
-        .select(
-            "station_code",
-            "station_name",
-            "total_disruptions",
-            "avg_duration_minutes",
-            "avg_impact_level",
-            "disruption_percentile",
-            "severity_rank",
-            "risk_category",
-        )
-        .orderBy(F.desc("total_disruptions"), "station_code")
+    """Q2 — station severity percentile ranking, joined to the stations."""
+    return disruptions.sparkSession.sql(
+        sq.STATION_SEVERITY_QUERY, disruptions=disruptions, stations=stations
     )
 
 
 def day_over_day(disruptions: DataFrame) -> DataFrame:
-    """Q3 — day-over-day deltas with LAG/LEAD and safe division.
-
-    Ref: DAY_OVER_DAY_QUERY, aggregators.py:128-174.
-    """
-    daily = disruptions.groupBy(
-        F.to_date("start_time").alias("disruption_date")
-    ).agg(
-        F.count("*").alias("total_disruptions"),
-        F.sum(F.when(F.col("type") == "calamity", 1).otherwise(0)).alias("calamities"),
-        F.sum(F.when(F.col("type") == "maintenance", 1).otherwise(0)).alias("maintenance"),
-        F.sum(F.when(F.col("type") == "disruption", 1).otherwise(0)).alias("disruptions"),
-        F.round(exact_avg(F.col("duration_minutes")), 1).alias("avg_duration"),
-        F.max("impact_level").alias("max_impact"),
-    )
-    w = Window.orderBy("disruption_date")
-    prev = F.lag("total_disruptions", 1).over(w)
-    return daily.select(
-        "disruption_date",
-        "total_disruptions",
-        "avg_duration",
-        "max_impact",
-        prev.alias("prev_day_total"),
-        F.lead("total_disruptions", 1).over(w).alias("next_day_total"),
-        (F.col("total_disruptions") - prev).alias("dod_delta"),
-        F.round(
-            safe_div(100.0 * (F.col("total_disruptions") - prev), prev), 1
-        ).alias("dod_pct_change"),
-        F.sum("total_disruptions")
-        .over(w.rowsBetween(-6, Window.currentRow))
-        .alias("rolling_7day"),
-    ).orderBy(F.desc("disruption_date"))
+    """Q3 — day-over-day deltas with LAG/LEAD and safe division."""
+    return disruptions.sparkSession.sql(sq.DAY_OVER_DAY_QUERY, disruptions=disruptions)
 
 
-def peak_hours(disruptions: DataFrame, limit: int = 20) -> DataFrame:
-    """Q4 — peak (hour, weekday) buckets with the ranking trio.
-
-    Ref: PEAK_HOUR_QUERY, aggregators.py:182-218.  SQLite '%w' weekday
-    numbering preserved via the compat shim; explicit (dow, hour) tiebreak
-    makes row_number and the LIMIT boundary deterministic across engines.
-    """
-    hourly = (
-        disruptions.filter(F.col("start_time").isNotNull())
-        .groupBy(
-            hour_bucket(F.col("start_time")).alias("hour_of_day"),
-            sqlite_dow(F.col("start_time")).alias("day_of_week"),
-        )
-        .agg(
-            F.count("*").alias("disruption_count"),
-            F.round(exact_avg(F.col("duration_minutes")), 1).alias("avg_duration"),
-            F.round(F.avg("impact_level"), 2).alias("avg_impact"),
-        )
-    )
-    order = [F.desc("disruption_count"), F.col("day_of_week"), F.col("hour_of_day")]
-    w = Window.orderBy(*order)
-    w_ref = Window.orderBy(F.desc("disruption_count"))
-    return (
-        hourly.select(
-            day_name(F.col("day_of_week")).alias("day_name"),
-            F.concat(F.col("hour_of_day"), F.lit(":00")).alias("hour_label"),
-            "disruption_count",
-            "avg_duration",
-            "avg_impact",
-            F.row_number().over(w).alias("row_num"),
-            F.rank().over(w_ref).alias("rank_with_gaps"),
-            F.dense_rank().over(w_ref).alias("dense_rank"),
-        )
-        .orderBy(F.desc("disruption_count"), "row_num")
-        .limit(limit)
-    )
+def peak_hours(disruptions: DataFrame) -> DataFrame:
+    """Q4 — the 20 peak (hour, weekday) buckets with the ranking trio."""
+    return disruptions.sparkSession.sql(sq.PEAK_HOUR_QUERY, disruptions=disruptions)
 
 
 def complex_analytics(disruptions: DataFrame) -> DataFrame:
-    """Q5 — executive dashboard: mixed agg+window, FILTER rewrite, scalar pick.
-
-    Ref: COMPLEX_ANALYTICS_QUERY, aggregators.py:227-290.  Three reference
-    constructs that need Spark-first re-expression:
-
-    - ``SUM(COUNT(*)) OVER (ORDER BY date ROWS 6 PRECEDING)`` computed in the
-      same SELECT as the GROUP BY -> groupBy first, window over the
-      aggregated frame.  The reference's window order (date alone) is
-      ambiguous across same-date type rows; we order by (date, type).
-    - ``SUM(x) FILTER (WHERE type='cancellation') OVER (PARTITION BY date)``
-      — Spark does not support FILTER on window functions (SURVEY §7.3.1):
-      rewritten as ``sum(when(cond, x)).over(w)``.
-    - Correlated-looking scalar subquery (worst station) — uncorrelated in
-      practice: computed as a 1-row plan and broadcast-crossed in.
-    """
-    metrics = (
-        with_as_of(disruptions)
-        .filter(F.col("start_time") >= F.date_sub(F.to_date("_as_of"), 30))
-        .groupBy(F.to_date("start_time").alias("disruption_date"), "type")
-        .agg(
-            F.count("*").alias("incident_count"),
-            # exact_avg, not AVG: the julianday minutes are non-terminating
-            # decimals and a partition-order double sum flips ROUND at half
-            # boundaries vs the oracle (observed at sf0.001).
-            exact_avg(
-                julianday_minutes(F.col("start_time"), F.col("end_time"))
-            ).alias("_avg_dur"),
-        )
-    )
-    w_roll = Window.orderBy("disruption_date", "type").rowsBetween(
-        -6, Window.currentRow
-    )
-    metrics = metrics.withColumn(
-        "rolling_7day_total", F.sum("incident_count").over(w_roll)
-    )
-
-    station_counts = (
-        disruptions.filter(F.col("affected_stations").isNotNull())
-        .select(csv_unnest(F.col("affected_stations")).alias("_code"))
-        .select(F.trim(F.col("_code")).alias("station_code"))
-        .groupBy("station_code")
-        .count()
-        .withColumnRenamed("count", "disruption_count")
-    )
-    pr = F.percent_rank().over(Window.orderBy("disruption_count"))
-    # first() over the limited frame instead of the bare limit(1): a scalar
-    # subquery yields NULL when empty, but crossJoin with a 0-row frame
-    # would wipe the whole output — the agg always produces exactly 1 row.
-    worst = (
-        station_counts.withColumn("severity_percentile", pr)
-        .filter(F.col("severity_percentile") > 0.9)
-        .orderBy(F.desc("disruption_count"), "station_code")
-        .limit(1)
-        .agg(F.first("station_code").alias("worst_station"))
-    )
-
-    w_date = Window.partitionBy("disruption_date")
-    cancels = F.sum(
-        F.when(F.col("type") == "cancellation", F.col("incident_count"))
-    ).over(w_date)
-    total = F.sum("incident_count").over(w_date)
-    return (
-        metrics.crossJoin(F.broadcast(worst))
-        .select(
-            "disruption_date",
-            "type",
-            "incident_count",
-            F.round("_avg_dur", 2).alias("avg_duration"),
-            "rolling_7day_total",
-            "worst_station",
-            F.round(safe_div(100.0 * cancels, total), 2).alias(
-                "cancellation_rate_pct"
-            ),
-        )
-        .orderBy(F.desc("disruption_date"), F.desc("incident_count"))
+    """Q5 — executive dashboard: rolling totals, worst station, cancel rate."""
+    return disruptions.sparkSession.sql(
+        sq.COMPLEX_ANALYTICS_QUERY, disruptions=disruptions
     )
 
 
-def overlapping_disruptions(
-    disruptions: DataFrame, limit: int = 50, bucket_minutes: int | None = None
-) -> DataFrame:
-    """Q6 — interval-overlap self-join, top-k by overlap length.
-
-    Ref: OVERLAPPING_DISRUPTIONS_QUERY, aggregators.py:298-325.  The
-    reference's plain theta join (`a.start < b.end AND a.end > b.start`)
-    plans as a nested-loop cross product — O(n²) and a non-starter at scale.
-    Spark-first strategy: explode each interval into coarse time buckets and
-    equi-join on the bucket (hash join, shuffle on bucket key), keeping the
-    exact overlap predicates as residual filters.  Pairs spanning multiple
-    shared buckets are emitted once by the "first shared bucket" guard —
-    results are provably identical to the theta join FOR ANY bucket width,
-    which is what makes the width a pure tuning knob.
-
-    ``bucket_minutes=None`` (default) derives the width from the data: the
-    p99 interval duration, clamped to [30 min, 7 days] and rounded up to
-    the hour.  A fixed knob is wrong at both ends of the scale — too
-    narrow and long intervals explode into thousands of bucket rows, too
-    wide and every interval in an epoch lands in one bucket and the join
-    degenerates toward bucket².  p99 keeps 99% of intervals in <= 2
-    buckets while letting only the duration outliers replicate further
-    (bounded by 1% of rows).  The derivation is one map-side-combined
-    ``approx_percentile`` aggregate at plan-build time — the same
-    statistics-collection pattern AQE uses; pass an explicit value to
-    skip the extra pass when the distribution is known.
-
-    Deterministic top-k: tiebreak on (disruption_a, disruption_b).
-    """
-    # NULL end_time rows can never satisfy the overlap predicates (NULL
-    # comparisons), so dropping them up front matches the reference exactly.
-    base = with_as_of(disruptions).filter(F.col("end_time").isNotNull()).select(
-        "disruption_id", "type", "start_time", "end_time", "_as_of"
-    )
-    if bucket_minutes is None:
-        p99 = base.agg(
-            F.expr(
-                "approx_percentile(unix_timestamp(end_time)"
-                " - unix_timestamp(start_time), 0.99)"
-            )
-        ).first()[0]
-        secs = min(max(int(p99 or 21600), 1800), 7 * 86400)
-        bucket_secs = -(-secs // 3600) * 3600
-    else:
-        bucket_secs = bucket_minutes * 60
-    start_b = F.floor(F.unix_timestamp("start_time") / bucket_secs)
-    end_b = F.floor(F.unix_timestamp("end_time") / bucket_secs)
-    bucketed = base.select(
-        "*", F.explode(F.sequence(start_b, end_b)).alias("bucket")
-    )
-
-    # The reference's 7-day recency filter applies to side A only
-    # (aggregators.py:322); side B joins unrestricted.
-    a = bucketed.filter(
-        F.col("start_time") >= F.date_sub(F.to_date("_as_of"), 7)
-    ).alias("a")
-    b = bucketed.alias("b")
-    ac, bc = (lambda c: F.col(f"a.{c}")), (lambda c: F.col(f"b.{c}"))
-    first_shared = F.greatest(
-        F.floor(F.unix_timestamp(ac("start_time")) / bucket_secs),
-        F.floor(F.unix_timestamp(bc("start_time")) / bucket_secs),
-    )
-    pairs = a.join(
-        b,
-        (ac("bucket") == bc("bucket"))
-        & (ac("disruption_id") < bc("disruption_id"))
-        & (ac("start_time") < bc("end_time"))
-        & (ac("end_time") > bc("start_time"))
-        & (ac("bucket") == first_shared),
-        "inner",
-    )
-    return (
-        pairs.select(
-            ac("disruption_id").alias("disruption_a"),
-            bc("disruption_id").alias("disruption_b"),
-            ac("type").alias("type_a"),
-            bc("type").alias("type_b"),
-            ac("start_time").alias("a_start"),
-            ac("end_time").alias("a_end"),
-            bc("start_time").alias("b_start"),
-            bc("end_time").alias("b_end"),
-            julianday_minutes(
-                F.greatest(ac("start_time"), bc("start_time")),
-                F.least(ac("end_time"), bc("end_time")),
-            )
-            .cast("int")
-            .alias("overlap_minutes"),
-        )
-        .orderBy(F.desc("overlap_minutes"), "disruption_a", "disruption_b")
-        .limit(limit)
+def overlapping_disruptions(disruptions: DataFrame) -> DataFrame:
+    """Q6 — the 50 longest overlaps of recent disruptions with any other."""
+    return disruptions.sparkSession.sql(
+        sq.OVERLAPPING_DISRUPTIONS_QUERY, disruptions=disruptions
     )

@@ -1,16 +1,17 @@
-"""The reference's analytics as Spark-SQL TEXT — the SQL-constant surface.
+"""The reference's six analytics queries, Q1-Q6, as Spark-SQL text.
 
-The reference ships each query as a SQL string users run against the
-warehouse (``/root/reference/src/transformation/aggregators.py:20-325``);
-``plans/rail_queries.py`` is the DataFrame form of the same contracts.  This
-module completes SURVEY §3.3's promised dual surface: every query exists in
-BOTH dialects, ``tests/test_sql_queries.py`` asserts the two forms produce
-identical results, and ``register_warehouse_views`` publishes the warehouse
-tables (``disruptions`` / ``stations`` / ``daily_stats``) so the strings run
-with a bare ``spark.sql(...)``.
+This module is the one definition of each query.  The reference ships
+each as a SQL string run against the warehouse
+(``src/transformation/aggregators.py:20-325``); here each is a template
+whose table references are ``{disruptions}`` and ``{stations}``.  It is
+run two ways:
 
-Dialect translation notes (SQLite -> Spark SQL), mirroring the DataFrame
-builders exactly:
+- ``SQL_QUERIES[name]``: the template rendered over the warehouse view
+  names, for a bare ``spark.sql(...)`` after ``register_warehouse_views``;
+- ``plans/rail_queries.py``: the template run over given DataFrames with
+  ``spark.sql(template, disruptions=df)``.
+
+Dialect translation notes (SQLite -> Spark SQL):
 
 - ``date('now', '-30 days')`` -> as-of anchoring from the data's
   ``MAX(start_time)`` (scalar subquery; reproducible runs, SURVEY §7.3.3).
@@ -19,11 +20,13 @@ builders exactly:
 - ``STRFTIME('%w'/'%H')`` -> ``DAYOFWEEK(ts)-1`` / ``DATE_FORMAT(ts,'HH')``.
 - ``julianday`` minute deltas -> ``UNIX_TIMESTAMP`` epoch subtraction.
 - ``json_each`` CSV unnest -> ``LATERAL VIEW EXPLODE(SPLIT(...))``.
+- ``SUM(x) FILTER (WHERE ...) OVER (...)`` (Q5) -> ``SUM(CASE ...) OVER``:
+  Spark has no FILTER on window functions (SURVEY §7.3.1).
 - Q6's interval theta self-join -> time-bucket equi-join with the
-  first-shared-bucket dedup guard (the O(n²)-safe plan of
-  ``rail_queries.overlapping_disruptions``).
-- Window/LIMIT orderings carry the same explicit tiebreaks as the
-  DataFrame plans (cross-engine tie order is not portable).
+  first-shared-bucket dedup guard (see ``_BUCKET_SECS``).
+- Window/LIMIT orderings gain explicit tiebreaks wherever the reference's
+  order is ambiguous under ties: the reference leaves tie order to SQLite,
+  and no two engines reproduce it.
 """
 
 from __future__ import annotations
@@ -49,8 +52,9 @@ _EXACT_AVG = (
 )
 
 #: Data-derived "now" (the reference's date('now') under as-of semantics).
-_AS_OF = "(SELECT MAX(start_time) FROM disruptions)"
+_AS_OF = "(SELECT MAX(start_time) FROM {disruptions})"
 
+#: The reference's 7-day frames: rows-based, not range-based (SURVEY §7.3.9).
 _ROLLING = "ROWS BETWEEN 6 PRECEDING AND CURRENT ROW"
 
 
@@ -61,7 +65,7 @@ WITH daily_counts AS (
            type,
            COUNT(*) AS incident_count,
            {_EXACT_AVG.format(x='duration_minutes')} AS _avg_dur
-    FROM disruptions
+    FROM {{disruptions}}
     WHERE start_time >= DATE_SUB(TO_DATE({_AS_OF}), 30)
     GROUP BY 1, 2
 )
@@ -86,7 +90,7 @@ STATION_SEVERITY_QUERY = f"""
 WITH unnested AS (
     SELECT d.disruption_id, d.impact_level, d.duration_minutes,
            TRIM(s.code) AS station_code
-    FROM disruptions d
+    FROM {{disruptions}} d
     LATERAL VIEW EXPLODE(SPLIT(d.affected_stations, ',')) s AS code
     WHERE d.affected_stations IS NOT NULL
 ),
@@ -116,7 +120,7 @@ SELECT /*+ BROADCAST(st) */
         ELSE 'LOW RISK'
     END AS risk_category
 FROM station_aggregates sa
-LEFT JOIN stations st ON sa.station_code = st.station_code
+LEFT JOIN {{stations}} st ON sa.station_code = st.station_code
 ORDER BY sa.total_disruptions DESC, sa.station_code
 """
 
@@ -131,7 +135,7 @@ WITH daily_summary AS (
            SUM(CASE WHEN type = 'disruption' THEN 1 ELSE 0 END) AS disruptions,
            ROUND({_EXACT_AVG.format(x='duration_minutes')}, 1) AS avg_duration,
            MAX(impact_level) AS max_impact
-    FROM disruptions
+    FROM {{disruptions}}
     GROUP BY 1
 )
 SELECT
@@ -162,7 +166,7 @@ WITH hourly_stats AS (
            COUNT(*) AS disruption_count,
            ROUND({_EXACT_AVG.format(x='duration_minutes')}, 1) AS avg_duration,
            ROUND(AVG(impact_level), 2) AS avg_impact
-    FROM disruptions
+    FROM {{disruptions}}
     WHERE start_time IS NOT NULL
     GROUP BY 1, 2
 )
@@ -197,7 +201,7 @@ WITH metrics AS (
            type,
            COUNT(*) AS incident_count,
            {_EXACT_AVG.format(x=_JD_MIN)} AS _avg_dur
-    FROM disruptions
+    FROM {{disruptions}}
     WHERE start_time >= DATE_SUB(TO_DATE({_AS_OF}), 30)
     GROUP BY 1, 2
 ),
@@ -210,7 +214,7 @@ with_roll AS (
 ),
 station_counts AS (
     SELECT TRIM(s.code) AS station_code, COUNT(*) AS disruption_count
-    FROM disruptions d
+    FROM {{disruptions}} d
     LATERAL VIEW EXPLODE(SPLIT(d.affected_stations, ',')) s AS code
     WHERE d.affected_stations IS NOT NULL
     GROUP BY 1
@@ -247,14 +251,23 @@ ORDER BY m.disruption_date DESC, m.incident_count DESC
 """
 
 
-_BUCKET_SECS = 6 * 60 * 60  # 6h coarse buckets, as in the DataFrame plan
+#: Q6 bucket width.  The reference's plain theta join
+#: (``a.start < b.end AND a.end > b.start``) plans as a nested-loop cross
+#: product.  Each interval is exploded into the 6 h buckets it spans, and
+#: pairs equi-join on the bucket with the exact overlap predicates as
+#: residual filters.  A pair sharing several buckets is kept only in its
+#: first shared one, so the result equals the theta join for any width.
+_BUCKET_SECS = 6 * 60 * 60
 
-# Q6 — OVERLAPPING_DISRUPTIONS_QUERY (aggregators.py:298-325)
+# Q6 — OVERLAPPING_DISRUPTIONS_QUERY (aggregators.py:298-325).  A NULL
+# end_time never satisfies the overlap predicates, so those rows are dropped
+# up front; the 7-day recency filter applies to side A only, as in the
+# reference (aggregators.py:322).
 OVERLAPPING_DISRUPTIONS_QUERY = f"""
 WITH base AS (
     SELECT disruption_id, type, start_time, end_time,
            {_AS_OF} AS _as_of
-    FROM disruptions
+    FROM {{disruptions}}
     WHERE end_time IS NOT NULL
 ),
 bucketed AS (
@@ -292,14 +305,17 @@ LIMIT 50
 """
 
 
-#: name -> (SQL text, DataFrame twin in plans/rail_queries) — the dual surface.
+#: name -> SQL text over the views ``register_warehouse_views`` publishes.
 SQL_QUERIES: dict[str, str] = {
-    "rail_q1_rolling_trend": ROLLING_TREND_QUERY,
-    "rail_q2_station_severity": STATION_SEVERITY_QUERY,
-    "rail_q3_day_over_day": DAY_OVER_DAY_QUERY,
-    "rail_q4_peak_hours": PEAK_HOUR_QUERY,
-    "rail_q5_complex_analytics": COMPLEX_ANALYTICS_QUERY,
-    "rail_q6_overlapping": OVERLAPPING_DISRUPTIONS_QUERY,
+    name: template.format(disruptions="disruptions", stations="stations")
+    for name, template in {
+        "rail_q1_rolling_trend": ROLLING_TREND_QUERY,
+        "rail_q2_station_severity": STATION_SEVERITY_QUERY,
+        "rail_q3_day_over_day": DAY_OVER_DAY_QUERY,
+        "rail_q4_peak_hours": PEAK_HOUR_QUERY,
+        "rail_q5_complex_analytics": COMPLEX_ANALYTICS_QUERY,
+        "rail_q6_overlapping": OVERLAPPING_DISRUPTIONS_QUERY,
+    }.items()
 }
 
 

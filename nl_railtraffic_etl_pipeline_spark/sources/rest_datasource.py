@@ -61,7 +61,7 @@ class _DisruptionsReader(DataSourceReader):
 
             records = fetch_disruptions(
                 api_key=opts.get("api_key", ""),
-                url=opts.get("url") or opts.get("endpoint") or DEFAULT_URL,
+                url=opts.get("url") or DEFAULT_URL,
             )
         for rec in records:
             rid = rec.get("id")

@@ -43,14 +43,12 @@ def fetch_disruptions(
             resp = requests.get(
                 url, headers=headers, params=params, timeout=timeout_s
             )
-            if resp.status_code in (401, 429):
-                # auth/rate-limit: retrying cannot help (api_client.py:80-84)
-                resp.raise_for_status()
             resp.raise_for_status()
             return resp.json()
         except Exception as exc:
             last_error = exc
             status = getattr(getattr(exc, "response", None), "status_code", None)
+            # auth/rate-limit: retrying cannot help (api_client.py:80-84)
             if status in (401, 429) or attempt == max_retries:
                 break
             backoff = 2**attempt

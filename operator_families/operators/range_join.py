@@ -3,7 +3,7 @@
 Spark plans a raw ``p.ts BETWEEN i.start AND i.end`` predicate as a
 nested-loop cross product — O(points × intervals).  Spark-first strategy
 (same family as rail_q6's interval-overlap self-join,
-``plans/rail_queries.py``): explode each interval into coarse time buckets,
+``plans/sql_queries.py``): explode each interval into coarse time buckets,
 bucket the points, and equi-join on the bucket with the exact BETWEEN
 predicate as a residual filter.  A point lies in exactly one bucket, so no
 dedup guard is needed — each (point, interval) match is produced once.
@@ -12,10 +12,9 @@ Cost: O(points + Σ interval-buckets + matches) through a hash shuffle on
 the bucket key.  ``bucket_minutes`` trades interval replication (long
 intervals explode into more buckets) against bucket density; AQE splits
 skewed buckets.  Left as ``None`` the width is derived from the interval
-data itself (p99 duration, clamped, rounded to the hour) — the same
-statistics-driven choice ``rail_queries.overlapping_disruptions`` makes,
-and the match set is identical for ANY width, so the knob only shapes
-the plan.
+data itself (p99 duration, clamped, rounded to the hour), at the cost of
+one aggregate job at plan time.  The match set is identical for ANY
+width, so the knob only shapes the plan.
 """
 
 from __future__ import annotations

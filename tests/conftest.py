@@ -1,8 +1,11 @@
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+#: The checkout these tests live in, and its tools/ (check_correctness).
+_REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path[:0] = [_REPO_ROOT, os.path.join(_REPO_ROOT, "tools")]
 
 from nl_railtraffic_etl_pipeline_spark.session import get_spark
 

@@ -4,10 +4,6 @@ functions/mleval.py pinball_loss)."""
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 
 def test_jaro_winkler_known_values():
     """Textbook pairs (Winkler 1990 convention: prefix <= 4, scale 0.1,

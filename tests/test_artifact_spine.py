@@ -13,11 +13,8 @@ process and asserts the first SF's oracle is still exact afterwards.
 
 from __future__ import annotations
 
-import sys
-
 import duckdb
 
-sys.path.insert(0, "/root/repo")
 
 TABLES = (
     "region", "nation", "customer", "supplier", "part",

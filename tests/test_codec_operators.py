@@ -5,10 +5,7 @@ foreign implementation), and bounded-radius harmonic centrality."""
 from __future__ import annotations
 
 import io
-import sys
 import tarfile
-
-sys.path.insert(0, "/root/repo")
 
 
 def test_ima_state_machine_textbook_steps():

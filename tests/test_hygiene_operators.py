@@ -3,10 +3,6 @@ footer trust check, generalized-ESD anomaly rounds, UTF-8 validity."""
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 
 def test_parquet_footer_matches_data(spark, tmp_path):
     """Footer stats over a freshly written file equal the data-derived

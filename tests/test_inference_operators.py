@@ -5,9 +5,6 @@ mcc_thresholds / log_loss, and the text_soundex dual implementation)."""
 from __future__ import annotations
 
 import math
-import sys
-
-sys.path.insert(0, "/root/repo")
 
 
 def test_friedman_textbook_no_ties(spark):

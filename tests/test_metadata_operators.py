@@ -4,10 +4,6 @@ the sitemap regex-parse chain."""
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 
 def test_tiff_both_byte_orders_and_strips():
     """II and MM fixtures decode identically-shaped stats; strip count

@@ -3,10 +3,6 @@ content-defined chunking, semi-hard triplet mining."""
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 
 def test_textrank_hub_word_outranks_frequency(spark):
     """A word adjacent to MANY distinct words outranks a word that is
@@ -68,9 +64,6 @@ def test_cdc_boundaries_shift_locally_on_insertion(spark):
 def test_cdc_stateless_window_reference():
     """The boundary rule is the documented closed form — recompute one
     document's chunk count with a from-scratch loop."""
-    import sys as _s
-
-    _s.path.insert(0, "/root/repo")
     text = "hello world this is a chunking test string " * 10
 
     def g(b):

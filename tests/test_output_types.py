@@ -15,12 +15,9 @@ so the class can't recur.
 from __future__ import annotations
 
 import decimal
-import sys
 
 import duckdb
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 from nl_railtraffic_etl_pipeline_spark.plans.registry import ORACLES, QUERIES
 
@@ -85,7 +82,6 @@ def test_oracle_output_types_are_driver_safe():
 def test_local_canon_rejects_decimal():
     """The local harness must flag DECIMAL outputs loudly — in r7 it
     str()'d them and passed 4 gates the driver failed."""
-    sys.path.insert(0, "/root/repo/tools")
     from check_correctness import canon
 
     with pytest.raises(ValueError, match="DECIMAL"):

@@ -3,10 +3,6 @@ streaming MCC / log-loss twins."""
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 
 def test_pnm_all_four_variants():
     """P2/P3/P5/P6 all decode; format string and channel count match

@@ -3,10 +3,6 @@ re-ranking, MP4 box walk, additive Holt-Winters."""
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 
 def _unit_embs(spark, vecs):
     return spark.createDataFrame(

@@ -19,12 +19,14 @@ import decimal
 import hashlib
 import json
 import math
+import os
 import sys
 import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+_REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _REPO_ROOT)
 
 TABLES = (
     "region", "nation", "customer", "supplier", "part",

@@ -10,10 +10,12 @@ boundaries — into ``PLANS.md``.  Run after any plan-shaping change:
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+_REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _REPO_ROOT)
 
 JOIN_KINDS = (
     "BroadcastHashJoin",
@@ -79,8 +81,8 @@ def main() -> None:
         "Audit notes:",
         "- The station dimension join (rail_q2) is broadcast — no fact-side",
         "  shuffle for enrichment.",
-        "- rail_q6's interval overlap is a bucketed equi-join; its only",
-        "  nested-loop joins are 1-ROW scalar broadcasts (the as-of date).",
+        "- rail_q6's interval overlap is a bucketed equi-join with no",
+        "  nested-loop join; its as-of date is a scalar subquery.",
         "- No query has a Python eval node: every plan stays in JVM",
         "  whole-stage codegen (plan-asserted in test_plan_shapes).",
     ]
