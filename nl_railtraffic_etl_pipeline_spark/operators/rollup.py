@@ -5,15 +5,18 @@ never populated (0 rows in data/nl_rail.db) — SURVEY §2.6 A9 calls for the
 obvious builder.  The run report mirrors ``ETLPipeline._generate_report``
 (pipeline.py:304-342).
 
-Mode-style picks (most_affected_station, peak_hour) are rank-over-aggregate
-with explicit tiebreaks — deterministic at any parallelism.
+Mode-style picks (most_affected_station, peak_hour) are
+``mode(..., deterministic=True)`` aggregates, which break ties towards the
+lowest value — deterministic at any parallelism.  The report is a list of
+conditional aggregates with no filter, so the pipeline can observe it on
+the clean-zone write instead of scanning the zone again.
 """
 
 from __future__ import annotations
 
 import datetime as _dt
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.compat import csv_unnest, exact_avg, hour_bucket
@@ -26,7 +29,9 @@ def build_daily_stats(
 
     Columns per schema.sql:48-57; most_affected_station is the modal station
     among that day's exploded ``affected_stations`` (ties -> lexicographically
-    first code), peak_hour the modal hour (ties -> earliest hour).
+    first code; a day with no station lists gets NULL), peak_hour the modal
+    hour (ties -> earliest hour: the zero-padded 'HH' bucket orders
+    lexically as numerically).
     """
     run_ts = run_ts or _dt.datetime.now(_dt.timezone.utc)
     base = disruptions.filter(F.col("start_time").isNotNull()).withColumn(
@@ -40,43 +45,19 @@ def build_daily_stats(
         .alias("total_cancellations"),
         exact_avg(F.col("duration_minutes")).alias("avg_duration_minutes"),
         F.max("duration_minutes").cast("int").alias("max_duration_minutes"),
-    )
-
-    # Both mode picks in ONE shuffle: union (date, kind, value) pairs,
-    # one groupBy count, one (date, kind)-partitioned rank, pivot back by
-    # kind.  The zero-padded 'HH' hour bucket makes lexical tiebreak order
-    # equal numeric order, so the pick matches the per-kind formulation.
-    pairs = base.filter(F.col("affected_stations").isNotNull()).select(
-        "date",
-        F.lit("station").alias("kind"),
-        csv_unnest(F.col("affected_stations")).alias("value"),
-    ).unionByName(
-        base.select(
-            "date",
-            F.lit("hour").alias("kind"),
-            hour_bucket(F.col("start_time")).alias("value"),
-        )
-    )
-    w = Window.partitionBy("date", "kind").orderBy(
-        F.desc("count"), F.asc("value")
-    )
-    picks = (
-        pairs.groupBy("date", "kind", "value")
-        .count()
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-    )
-    modes = picks.groupBy("date").agg(
-        F.max(F.when(F.col("kind") == "station", F.col("value"))).alias(
-            "most_affected_station"
-        ),
-        F.max(F.when(F.col("kind") == "hour", F.col("value")))
+        F.mode(hour_bucket(F.col("start_time")), deterministic=True)
         .cast("int")
         .alias("peak_hour"),
     )
+    stations = (
+        base.filter(F.col("affected_stations").isNotNull())
+        .select("date", csv_unnest(F.col("affected_stations")).alias("station"))
+        .groupBy("date")
+        .agg(F.mode("station", deterministic=True).alias("most_affected_station"))
+    )
 
     return (
-        core.join(modes, "date", "left")
+        core.join(stations, "date", "left")
         .withColumn("calculated_at", F.lit(run_ts))
         .select(
             "date",
@@ -91,28 +72,35 @@ def build_daily_stats(
     )
 
 
-def run_report(disruptions: DataFrame, as_of_date=None) -> DataFrame:
-    """The pipeline's end-of-run aggregate (pipeline.py:318-330).
+def report_metrics(as_of=None) -> list[Column]:
+    """The run report's six aggregates (pipeline.py:318-330) over the rows
+    whose ``created_at`` falls on ``as_of`` (the current date when None).
 
-    One row: today's totals by type, avg duration, max impact.  ``today`` is
-    the injected as_of date (created_at::DATE = CURRENT_DATE in the ref).
+    Each aggregate applies the day condition itself, so the list works as
+    ``observe`` metrics on any action over the whole table.  On a day with
+    no rows the count is 0 and every other value NULL, as the filtered
+    aggregate the reference runs gives.
     """
-    cond = (
-        F.to_date("created_at") == F.lit(as_of_date)
-        if as_of_date is not None
-        else F.to_date("created_at") == F.current_date()
+    today = F.to_date("created_at") == (
+        F.current_date() if as_of is None else F.lit(as_of)
     )
-    return disruptions.filter(cond).agg(
-        F.count("*").alias("total_records"),
-        F.sum(F.when(F.col("type") == "disruption", 1).otherwise(0)).alias(
-            "disruptions"
+
+    def of_type(kind: str) -> Column:
+        return F.sum(F.when(today & (F.col("type") == kind), 1).when(today, 0))
+
+    return [
+        F.count(F.when(today, 1)).alias("total_records"),
+        of_type("disruption").alias("disruptions"),
+        of_type("maintenance").alias("maintenance"),
+        of_type("calamity").alias("calamities"),
+        F.round(exact_avg(F.when(today, F.col("duration_minutes"))), 1).alias(
+            "avg_duration_minutes"
         ),
-        F.sum(F.when(F.col("type") == "maintenance", 1).otherwise(0)).alias(
-            "maintenance"
-        ),
-        F.sum(F.when(F.col("type") == "calamity", 1).otherwise(0)).alias(
-            "calamities"
-        ),
-        F.round(exact_avg(F.col("duration_minutes")), 1).alias("avg_duration_minutes"),
-        F.max("impact_level").alias("max_impact_level"),
-    )
+        F.max(F.when(today, F.col("impact_level"))).alias("max_impact_level"),
+    ]
+
+
+def run_report(disruptions: DataFrame, as_of_date=None) -> DataFrame:
+    """The pipeline's end-of-run aggregate as a one-row frame:
+    ``report_metrics`` over ``disruptions``."""
+    return disruptions.agg(*report_metrics(as_of_date))

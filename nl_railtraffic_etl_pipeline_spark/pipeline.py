@@ -1,15 +1,22 @@
 """End-to-end batch ETL: the Spark rebuild of ``ETLPipeline.run``.
 
 Mirrors the reference's four stages (pipeline.py:52-79) with DataFrames as
-the only IR and one action per sink (SURVEY §3.1):
+the only IR (SURVEY §3.1):
 
-    extract   archived payload / live fetch -> raw DataFrame
+    extract   archived payload / live fetch -> raw DataFrame, checkpointed
     transform 6-step cleaner (functions/cleaning.py)
     load      idempotent upserts into a parquet lake (operators/upsert.py)
-    report    one-row aggregate (operators/rollup.py)
+              and the daily roll-up of the merged clean zone
+    report    one-row aggregate (operators/rollup.py), observed on the
+              clean-zone write
+
+After the extract a run has ONE sink phase: the station seed, the load and
+the per-run artifacts touch disjoint paths, so they run at once.  The load
+stages every zone it rewrites next to the live one and publishes them only
+after every stage write has succeeded.
 
 The lake layout is the reference warehouse's four tables
-(``/root/reference/src/storage/schema.sql:7-57``) as parquet zones:
+(reference ``src/storage/schema.sql:7-57``) as parquet zones:
 
     <lake>/raw_disruptions/   (disruption_id, raw_json, fetched_at)
     <lake>/disruptions/       cleaned 12-column table
@@ -28,14 +35,20 @@ import datetime as _dt
 import logging
 from concurrent.futures import Future, ThreadPoolExecutor, wait
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .functions.cleaning import clean
-from .operators.rollup import build_daily_stats, run_report
+from .operators.rollup import build_daily_stats, report_metrics, run_report
 from .operators.upsert import insert_ignore, upsert_latest_wins
 from .schemas import CLEAN_DISRUPTION, RAW_DISRUPTION, STATIONS
-from .sources.lake import write_csv_snapshot, write_raw_archive
+from .sources.lake import (
+    hadoop_path,
+    replace,
+    write_csv_snapshot,
+    write_raw_archive,
+)
 from .sources.rest_datasource import register as register_rest_source
 
 logger = logging.getLogger(__name__)
@@ -75,15 +88,8 @@ class SparkETLPipeline:
         self.spark = spark
         self.lake = lake_path.rstrip("/")
 
-    # -- Hadoop FileSystem helpers (scheme-agnostic path ops) ---------------
-    def _fs_path(self, path: str):
-        jvm = self.spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path(path)
-        fs = hpath.getFileSystem(self.spark._jsc.hadoopConfiguration())
-        return fs, hpath
-
     def _exists(self, path: str) -> bool:
-        fs, hpath = self._fs_path(path)
+        fs, hpath = hadoop_path(self.spark, path)
         return fs.exists(hpath)
 
     # -- stage 1: extract ---------------------------------------------------
@@ -111,33 +117,35 @@ class SparkETLPipeline:
         return clean(raw, run_ts)
 
     def _recover_zone(self, name: str) -> None:
-        """Finish an interrupted swap: a crash between delete and rename
+        """Finish an interrupted publish: a crash between delete and rename
         leaves the zone absent with the complete staged copy on disk —
         promote it.  (An orphaned stage NEXT TO a live zone is a crashed
-        write before the swap began; the fresh write's overwrite replaces
-        it, so only the target-missing case needs action.)"""
+        write before the publish began; the fresh write's overwrite
+        replaces it, so only the target-missing case needs action.)"""
         path, tmp = f"{self.lake}/{name}", f"{self.lake}/{name}__stage"
         if not self._exists(path) and self._exists(tmp):
             logger.warning("recovering zone %s from staged copy", name)
-            fs, target = self._fs_path(path)
-            _, stage = self._fs_path(tmp)
-            if not fs.rename(stage, target):
-                raise IOError(f"zone recovery: failed to promote {tmp} -> {path}")
+            self._publish(name)
 
     # -- stage 3: load ------------------------------------------------------
-    def _read_zone(self, name: str, like: DataFrame) -> DataFrame:
+    def _read_zone(self, name: str, schema: T.StructType) -> DataFrame:
+        """The live zone, read with its declared schema (an inferred read
+        costs one more Spark job), or an empty frame before the first run."""
         self._recover_zone(name)
         path = f"{self.lake}/{name}"
         if self._exists(path):
-            return self.spark.read.parquet(path)
-        return self.spark.createDataFrame([], like.schema)
+            return self.spark.read.schema(schema).parquet(path)
+        return self.spark.createDataFrame([], schema)
 
     def load(self, raw: DataFrame, cleaned: DataFrame, run_ts: _dt.datetime) -> dict:
-        """Idempotent dual load: insert-ignore raw zone, latest-wins clean zone.
+        """Idempotent load: insert-ignore raw zone, latest-wins clean zone
+        and the ``daily_stats`` roll-up of the merged clean zone.
 
         The raw zone stores the VERBATIM record string when the extract
         carried one (``raw_json`` column); only parsed-only inputs (e.g.
-        the archive file stream) fall back to re-serialization.
+        the archive file stream) fall back to re-serialization.  The run
+        report rides the clean-zone write as observed metrics, so it needs
+        no read of its own.
         """
         raw_json = (
             F.col("raw_json")
@@ -151,30 +159,28 @@ class SparkETLPipeline:
             raw_json.alias("raw_json"),
             F.lit(run_ts).alias("fetched_at"),
         )
-        raw_existing = self._read_zone("raw_disruptions", raw_rows)
+        raw_existing = self._read_zone("raw_disruptions", raw_rows.schema)
         # raw_json is the within-batch tiebreak: dropDuplicates alone would
         # keep an arbitrary survivor, breaking raw-zone reproducibility.
         merged_raw = insert_ignore(
             raw_existing, raw_rows, ["disruption_id"], order_col="raw_json"
         )
-        clean_existing = self._read_zone(
-            "disruptions", self.spark.createDataFrame([], CLEAN_DISRUPTION)
-        )
+        clean_existing = self._read_zone("disruptions", CLEAN_DISRUPTION)
         merged_clean = upsert_latest_wins(
             clean_existing, cleaned, ["disruption_id"], "updated_at"
         )
-        # The two zone merges touch disjoint zones and share only the
-        # checkpointed extract, so their write jobs are independent —
-        # submit both and let the scheduler overlap them (guide §2.6:
-        # the second job's tasks back-fill executors freed by the first
-        # job's straggler tail, instead of idling through two serial
-        # commit waits).
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            raw_total, clean_total = _results(
-                pool.submit(self._overwrite, "raw_disruptions", merged_raw),
-                pool.submit(self._overwrite, "disruptions", merged_clean),
-            )
-        return {"raw_total": raw_total, "clean_total": clean_total}
+        staged = self._commit({
+            "raw_disruptions": (merged_raw,),
+            "disruptions": (merged_clean, *report_metrics(run_ts.date())),
+            "daily_stats": (build_daily_stats(merged_clean, run_ts),),
+        })
+        report = staged["disruptions"].get
+        return {
+            "raw_total": staged["raw_disruptions"].get["rows"],
+            "clean_total": report.pop("rows"),
+            "daily_stats_total": staged["daily_stats"].get["rows"],
+            "report": report,
+        }
 
     def ensure_stations(self, run_ts: _dt.datetime) -> int:
         """Seed the station dimension, ``INSERT ... ON CONFLICT DO NOTHING``
@@ -183,51 +189,70 @@ class SparkETLPipeline:
         When the zone already holds every seed code the merge result is
         byte-identical to the existing zone, so the rewrite is skipped —
         the reference's ON CONFLICT DO NOTHING never rewrites the table
-        either, and the anti-join emptiness probe is far cheaper than a
-        full stage-write-swap of the dimension (returns 0, meaning "no
-        rows written"; the return value has no consumers)."""
+        either.  The probe is one collect of the zone's codes, compared
+        with the seed on the driver (returns 0, meaning "no rows written";
+        the return value has no consumers)."""
+        existing = self._read_zone("stations", STATIONS)
+        codes = {row.station_code for row in existing.select("station_code").collect()}
+        if codes.issuperset(code for code, *_ in SEED_STATIONS):
+            return 0
         seed = self.spark.createDataFrame(
             [(*row, run_ts) for row in SEED_STATIONS], STATIONS
         )
-        existing = self._read_zone("stations", seed)
-        if self._exists(f"{self.lake}/stations") and (
-            seed.join(
-                existing.select("station_code"), ["station_code"], "left_anti"
-            ).isEmpty()
-        ):
-            return 0
-        return self._overwrite(
-            "stations", insert_ignore(existing, seed, ["station_code"])
+        staged = self._commit(
+            {"stations": (insert_ignore(existing, seed, ["station_code"]),)}
         )
+        return staged["stations"].get["rows"]
 
-    def _overwrite(self, name: str, df: DataFrame) -> int:
-        """Single-write stage + atomic rename swap.
+    def _commit(self, zones: dict[str, tuple]) -> dict[str, Observation]:
+        """Stage every zone concurrently, then publish them all.
 
-        The merged plan's lineage reads the CURRENT zone files (parquet
-        reads are lazy), so the zone cannot be overwritten in place.  The
-        plan is written ONCE to a staging dir — the row count rides along
-        as an ``observe`` metric, no second read — then the swap is two
-        filesystem metadata ops (delete + rename; atomic on local/HDFS).
-        A crash between them leaves the complete staged copy on disk for
-        recovery (``__stage`` is only ever removed by the rename).  On
-        rename-as-copy stores (S3A) a table format (Delta/Iceberg) replaces
-        this swap; the call sites would not change.
+        ``zones`` maps a zone name to its new contents and any extra
+        ``observe`` metrics (see ``_stage``).  Every merged plan's lineage
+        reads the CURRENT zone files (parquet reads are lazy), and one
+        zone's new contents may be built from another's (``daily_stats``
+        from the merged clean zone), so no publish starts before every
+        stage write has finished.  A failed stage write deletes this
+        commit's stage dirs before re-raising: left behind, a complete
+        stage next to a never-published zone would look like a crashed
+        publish to ``_recover_zone``.
         """
-        path, tmp = f"{self.lake}/{name}", f"{self.lake}/{name}__stage"
+        with ThreadPoolExecutor(max_workers=len(zones)) as pool:
+            futures = [
+                pool.submit(self._stage, name, *args) for name, args in zones.items()
+            ]
+            try:
+                staged = _results(*futures)
+            except BaseException:
+                for name in zones:
+                    fs, stage = hadoop_path(self.spark, f"{self.lake}/{name}__stage")
+                    if fs.exists(stage) and not fs.delete(stage, True):
+                        raise IOError(f"failed to delete {stage}")
+                raise
+        for name in zones:
+            self._publish(name)
+        return dict(zip(zones, staged))
+
+    def _stage(self, name: str, df: DataFrame, *metrics: Column) -> Observation:
+        """Write ``df`` ONCE to ``<zone>__stage``.  The row count (and any
+        further ``metrics``) rides along as an ``observe`` metric, no
+        second read."""
         obs = Observation()
-        df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
+        df.observe(obs, F.count(F.lit(1)).alias("rows"), *metrics).write.mode(
             "overwrite"
-        ).parquet(tmp)
-        fs, target = self._fs_path(path)
-        _, stage = self._fs_path(tmp)
-        # Hadoop FileSystem reports many delete/rename failures by returning
-        # false, not throwing — a silent false here would leave the zone
-        # deleted while the run still reports success (ADVICE r02).
-        if fs.exists(target) and not fs.delete(target, True):
-            raise IOError(f"zone swap: failed to delete {path}")
-        if not fs.rename(stage, target):
-            raise IOError(f"zone swap: failed to promote {tmp} -> {path}")
-        return obs.get["rows"]
+        ).parquet(f"{self.lake}/{name}__stage")
+        return obs
+
+    def _publish(self, name: str) -> None:
+        """Swap the staged zone in: two filesystem metadata ops (delete +
+        rename; atomic on local/HDFS).  A crash between them leaves the
+        complete staged copy on disk for ``_recover_zone`` (``__stage`` is
+        only ever removed by the rename or a failed commit).  On
+        rename-as-copy stores (S3A) a table format (Delta/Iceberg) replaces
+        this swap; the call sites would not change."""
+        fs, target = hadoop_path(self.spark, f"{self.lake}/{name}")
+        _, stage = hadoop_path(self.spark, f"{self.lake}/{name}__stage")
+        replace(fs, stage, target)
 
     # -- per-run side-effect artifacts --------------------------------------
     def write_run_artifacts(
@@ -261,7 +286,10 @@ class SparkETLPipeline:
     # -- stage 4: report ----------------------------------------------------
     def report(self, as_of_date=None) -> DataFrame:
         return run_report(
-            self.spark.read.parquet(f"{self.lake}/disruptions"), as_of_date
+            self.spark.read.schema(CLEAN_DISRUPTION).parquet(
+                f"{self.lake}/disruptions"
+            ),
+            as_of_date,
         )
 
     # -- orchestration ------------------------------------------------------
@@ -290,23 +318,23 @@ class SparkETLPipeline:
             logger.warning("no data extracted; stopping run")
             return {"raw_total": 0, "clean_total": 0}
         cleaned = self.transform(raw, run_ts)
-        # The station seed touches its own zone, independent of the
-        # raw/clean merges — overlap it with stage 3 (guide §2.6).
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            _, stats = _results(
+        # One sink phase: the station seed, the load (which also yields
+        # daily_stats and the report) and the artifacts write disjoint
+        # paths and read only the checkpointed extract and the live zones,
+        # so all of them are submitted at once and the scheduler overlaps
+        # their jobs (guide §2.6) instead of idling through serial commit
+        # waits.  In the reference the archives belong to extract and the
+        # CSV snapshot to transform, both before load.
+        with ThreadPoolExecutor(max_workers=3) as pool:
+            futures = [
                 pool.submit(self.ensure_stations, run_ts),
                 pool.submit(self.load, raw, cleaned, run_ts),
-            )
-        if artifacts:
-            stats["artifacts"] = self.write_run_artifacts(raw, cleaned, run_ts)
-        # one scan resolution of the freshly-published zone serves both the
-        # daily roll-up and the report (the read must follow the swap — the
-        # pre-merge plan's lineage points at the DELETED old zone files)
-        disruptions = self.spark.read.parquet(f"{self.lake}/disruptions")
-        stats["daily_stats_total"] = self._overwrite(
-            "daily_stats", build_daily_stats(disruptions, run_ts)
-        )
-        stats["report"] = (
-            run_report(disruptions, run_ts.date()).collect()[0].asDict()
-        )
+            ]
+            if artifacts:
+                futures.append(
+                    pool.submit(self.write_run_artifacts, raw, cleaned, run_ts)
+                )
+            _, stats, *written = _results(*futures)
+        if written:
+            stats["artifacts"] = written[0]
         return stats

@@ -8,6 +8,9 @@ access path the Glue partition projection provides (athena/main.tf:35-48).
 
 At 100 TB: date partitioning bounds each daily write to its own directory,
 and readers prune to the queried days.
+
+``hadoop_path`` and ``replace`` are the FileSystem primitives that the CSV
+snapshot's BOM re-head and the pipeline's zone swap share.
 """
 
 from __future__ import annotations
@@ -62,6 +65,26 @@ def write_raw_archive(
     )
 
 
+def hadoop_path(spark, path: str):
+    """``path`` as a Hadoop ``(FileSystem, Path)`` pair, for any scheme
+    (``file://``, ``hdfs://``, ``s3a://``)."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
+
+
+def replace(fs, src, dst) -> None:
+    """Move ``src`` onto ``dst``, deleting ``dst`` first if it exists.
+
+    Hadoop FileSystem reports many delete/rename failures by returning
+    false, not throwing; a silent false would leave ``dst`` deleted or
+    half-replaced while the caller still reports success.
+    """
+    if fs.exists(dst) and not fs.delete(dst, True):
+        raise IOError(f"failed to delete {dst}")
+    if not fs.rename(src, dst):
+        raise IOError(f"failed to rename {src} -> {dst}")
+
+
 def write_csv_snapshot(df: DataFrame, path: str, bom: bool = True) -> None:
     """S5: single-file CSV snapshot of the cleaned frame (pipeline.py:103-110).
 
@@ -78,19 +101,16 @@ def write_csv_snapshot(df: DataFrame, path: str, bom: bool = True) -> None:
     if not bom:
         return
     spark = df.sparkSession
-    jvm = spark._jvm
     hconf = spark._jsc.hadoopConfiguration()
-    root = jvm.org.apache.hadoop.fs.Path(path)
-    fs = root.getFileSystem(hconf)
+    fs, root = hadoop_path(spark, path)
     for status in fs.listStatus(root):
         name = status.getPath().getName()
         if not (name.startswith("part-") and name.endswith(".csv")):
             continue
         src = status.getPath()
-        tmp = jvm.org.apache.hadoop.fs.Path(f"{path}/_bom_{name}")
+        tmp = spark._jvm.org.apache.hadoop.fs.Path(f"{path}/_bom_{name}")
         out = fs.create(tmp, True)
         out.write(bytearray(b"\xef\xbb\xbf"))
         # copyBytes(close=True) closes both streams.
-        jvm.org.apache.hadoop.io.IOUtils.copyBytes(fs.open(src), out, hconf, True)
-        fs.delete(src, False)
-        fs.rename(tmp, src)
+        spark._jvm.org.apache.hadoop.io.IOUtils.copyBytes(fs.open(src), out, hconf, True)
+        replace(fs, tmp, src)

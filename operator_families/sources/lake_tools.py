@@ -61,7 +61,7 @@ def compact_partitions(
     Plan: one read -> one shuffle keyed on the partition tuple (plus a
     salt when ``files_per_partition > 1``), so each output directory is
     written by exactly its own tasks -> staged write with the same
-    ``partitionBy`` -> the delete+rename swap ``pipeline._overwrite``
+    ``partitionBy`` -> the delete+rename swap ``pipeline._publish``
     uses (atomic on local/HDFS; a table format replaces the swap on
     rename-as-copy stores).  Data is byte-preserved — only file layout
     changes.  Returns (files_before, files_after).
@@ -102,7 +102,7 @@ def compact_partitions(
     hp_s = jvm.org.apache.hadoop.fs.Path(tmp)
     fs = hp_t.getFileSystem(conf)
     # Hadoop reports many delete/rename failures by returning false, not
-    # throwing (see pipeline._overwrite) — check both.
+    # throwing (see sources.lake.replace) — check both.
     if fs.exists(hp_t) and not fs.delete(hp_t, True):
         raise IOError(f"compact: failed to delete {path}")
     if not fs.rename(hp_s, hp_t):

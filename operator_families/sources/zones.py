@@ -1,7 +1,7 @@
 """Multi-writer-safe versioned zone: optimistic concurrency over plain
 parquet with a write-audit-publish commit protocol.
 
-The single-writer zone swap (``pipeline._overwrite``: stage -> delete ->
+The single-writer zone swap (``pipeline._stage``/``_publish``: stage -> delete ->
 rename) is atomic for readers but loses updates under concurrent writers:
 two writers both merge from snapshot N and the second rename silently
 shadows the first's rows.  This module is the multi-writer upgrade the

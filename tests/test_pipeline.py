@@ -164,8 +164,8 @@ def test_second_payload_upserts(spark, lake):
 
 
 def test_concurrent_stage_failures_are_all_raised(spark, tmp_path, monkeypatch):
-    """The station seed and the zone load run concurrently; when both fail,
-    neither error may be dropped."""
+    """The station seed, the zone load and the run artifacts run
+    concurrently; when all of them fail, no error may be dropped."""
     import json
 
     payload = tmp_path / "payload.json"
@@ -182,15 +182,31 @@ def test_concurrent_stage_failures_are_all_raised(spark, tmp_path, monkeypatch):
     class LoadDown(Exception):
         pass
 
+    class ArtifactsDown(Exception):
+        pass
+
     def stations_fail(self, run_ts):
         raise StationsDown("stations")
 
     def load_fail(self, raw, cleaned, run_ts):
         raise LoadDown("load")
 
+    def artifacts_fail(self, raw, cleaned, run_ts):
+        raise ArtifactsDown("artifacts")
+
     monkeypatch.setattr(SparkETLPipeline, "ensure_stations", stations_fail)
     monkeypatch.setattr(SparkETLPipeline, "load", load_fail)
+    monkeypatch.setattr(SparkETLPipeline, "write_run_artifacts", artifacts_fail)
     p = SparkETLPipeline(spark, str(tmp_path / "lake"))
+    with pytest.raises(ExceptionGroup) as every:
+        p.run(str(payload), RUN_TS)
+    assert sorted(type(e).__name__ for e in every.value.exceptions) == [
+        "ArtifactsDown",
+        "LoadDown",
+        "StationsDown",
+    ]
+
+    # without artifacts, their stage is not run at all
     with pytest.raises(ExceptionGroup) as both:
         p.run(str(payload), RUN_TS, artifacts=False)
     assert sorted(type(e).__name__ for e in both.value.exceptions) == [

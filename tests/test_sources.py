@@ -62,6 +62,35 @@ def test_csv_snapshot_single_file_roundtrip(spark, tmp_path):
     ]
 
 
+@pytest.mark.parametrize("op", ["delete", "rename"])
+def test_csv_snapshot_raises_when_the_fs_reports_false(spark, tmp_path, monkeypatch, op):
+    """Hadoop reports many delete/rename failures by returning false.  The
+    BOM re-head must raise then, not leave the snapshot without its part
+    file.  Root ignores permission bits, so the local FS cannot be made to
+    refuse; the real FileSystem is wrapped to return false instead."""
+    from nl_railtraffic_etl_pipeline_spark.sources import lake
+
+    hadoop_path = lake.hadoop_path
+
+    class Refusing:
+        def __init__(self, fs):
+            self.fs = fs
+
+        def __getattr__(self, name):
+            if name == op:
+                return lambda *args: False
+            return getattr(self.fs, name)
+
+    def refusing_path(spark, path):
+        fs, hpath = hadoop_path(spark, path)
+        return Refusing(fs), hpath
+
+    monkeypatch.setattr(lake, "hadoop_path", refusing_path)
+    df = spark.createDataFrame([(1, "a")], "id bigint, name string")
+    with pytest.raises(IOError, match=f"failed to {op}"):
+        write_csv_snapshot(df, str(tmp_path / "snap"))
+
+
 def test_raw_archive_verbatim_record_bytes(spark, tmp_path):
     """S2 fidelity: a raw-zone frame's record string survives the archive
     BYTE-identically (the reference stores json.dumps(item,
