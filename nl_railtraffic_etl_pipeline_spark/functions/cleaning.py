@@ -1,9 +1,13 @@
-"""The reference's 6-step cleaner as pure, columnar Spark transformations.
+"""The reference's 6-step cleaner as one columnar Spark projection.
 
-Mirrors ``DisruptionCleaner.clean`` (/root/reference/src/transformation/
-cleaners.py:25-61) step for step, but every row loop / ``apply(axis=1)`` /
+Mirrors ``DisruptionCleaner.clean`` (reference src/transformation/
+cleaners.py:25-61) rule for rule, but every row loop / ``apply(axis=1)`` /
 ``iterrows`` becomes a whole-stage-codegen expression — no UDFs anywhere
-(SURVEY §2.9: none are needed).
+(SURVEY §2.9: none are needed).  The input has the declared
+``schemas.RAW_DISRUPTION`` columns, so none of the reference's
+column-presence guards carry over: ``clean`` is one filter and one
+``select`` of the ``CLEAN_DISRUPTION`` columns, each one a Column helper
+of this module.
 
 Determinism: the reference leaks wall-clock ``now()`` into the data (end-time
 imputation, created/updated stamps).  Here ``run_ts`` is an injected
@@ -26,22 +30,6 @@ TYPE_MAPPING = {
     "calamiteit": "calamity",
     "storing": "disruption",
 }
-
-#: Final 12-column projection (cleaners.py:255-260).
-REQUIRED_COLUMNS = [
-    "disruption_id",
-    "type",
-    "title",
-    "description",
-    "start_time",
-    "end_time",
-    "duration_minutes",
-    "impact_level",
-    "affected_stations",
-    "is_resolved",
-    "created_at",
-    "updated_at",
-]
 
 #: NS timestamp format: ISO-8601 with no-colon offset, '2026-02-13T17:28:14+0100'.
 NS_TS_FORMAT = "yyyy-MM-dd'T'HH:mm:ssZ"
@@ -81,147 +69,96 @@ def _parse_ts(col: Column) -> Column:
     )
 
 
-def extract_basic_fields(df: DataFrame) -> DataFrame:
-    """Step 1 (cleaners.py:63-84): rename id, normalize type, tidy title."""
-    if "id" in df.columns:
-        df = df.withColumnRenamed("id", "disruption_id")
-    if "type" in df.columns:
-        lowered = F.lower(F.col("type"))
-        mapping = F.create_map(
-            *[F.lit(x) for kv in TYPE_MAPPING.items() for x in kv]
-        )
-        df = df.withColumn(
-            "type", F.coalesce(F.element_at(mapping, lowered), lowered)
-        )
-    if "title" in df.columns:
-        trimmed = F.trim(F.col("title"))
-        df = df.withColumn(
-            "title", F.when(F.length(trimmed) < 5, None).otherwise(trimmed)
-        )
-    return df
+def _type_col() -> Column:
+    """Step 1 (cleaners.py:63-84): lower-cased type, Dutch names mapped."""
+    lowered = F.lower(F.col("type"))
+    mapping = F.create_map(*[F.lit(x) for kv in TYPE_MAPPING.items() for x in kv])
+    return F.coalesce(F.element_at(mapping, lowered), lowered)
 
 
-def process_timestamps(df: DataFrame, run_ts: _dt.datetime) -> DataFrame:
-    """Step 2 (cleaners.py:86-107): parse to UTC, flag + impute ongoing."""
-    if "start" in df.columns:
-        df = df.withColumn("start_time", _parse_ts(F.col("start")))
-    if "end" in df.columns:
-        df = df.withColumn("end_time", _parse_ts(F.col("end")))
-        df = df.withColumn("is_ongoing", F.col("end_time").isNull())
-        df = df.withColumn(
-            "end_time",
-            F.coalesce(
-                F.col("end_time"),
-                F.lit(run_ts) + F.expr("INTERVAL 2 HOURS"),
-            ),
-        )
-    return df
+def _title_col() -> Column:
+    """Step 1: trimmed title, NULL when shorter than five characters."""
+    trimmed = F.trim(F.col("title"))
+    return F.when(F.length(trimmed) < 5, None).otherwise(trimmed)
 
 
-def calculate_metrics(df: DataFrame) -> DataFrame:
-    """Step 3 (cleaners.py:109-131): float duration minutes + impact level.
+def _duration_col(start: Column, end: Column) -> Column:
+    """Step 3 (cleaners.py:109-131): float minutes, negative -> NULL.
 
     Sub-minute precision preserved via unix_micros (pandas total_seconds()
-    keeps microseconds); negative durations nulled (cleaners.py:126).
+    keeps microseconds).  The divisor stays a Python float: it becomes a
+    double literal, where the SQL text ``60000000.0`` would be a decimal.
     """
-    if "start_time" in df.columns and "end_time" in df.columns:
-        dur = (
-            F.unix_micros(F.col("end_time")) - F.unix_micros(F.col("start_time"))
-        ) / 60_000_000.0
-        df = df.withColumn(
-            "duration_minutes", F.when(dur < 0, None).otherwise(dur)
-        )
-    else:
-        df = df.withColumn("duration_minutes", F.lit(None).cast("double"))
-    df = df.withColumn(
-        "impact_level",
-        impact_level_col(
-            F.coalesce(F.col("type"), F.lit("")) if "type" in df.columns else F.lit(""),
-            F.col("duration_minutes"),
-        ),
-    )
-    return df
+    dur = (F.unix_micros(end) - F.unix_micros(start)) / 60_000_000.0
+    return F.when(dur < 0, None).otherwise(dur)
 
 
-def extract_stations(df: DataFrame) -> DataFrame:
+def _stations_col(title: Column) -> Column:
     """Step 4 (cleaners.py:173-229): 3-strategy station extraction, natively.
 
     Strategies 1+2 union (``section.stations[].uicCode`` and
     ``timespans[].situation.stations[].stationCode``); regex fallback over
-    the title only when both come up empty; sorted/deduped CSV; empty -> NULL.
-    The reference's per-row try/except becomes null-safe expressions.
+    the cleaned title only when both come up empty; sorted/deduped CSV;
+    empty -> NULL.  The reference's per-row try/except becomes null-safe
+    expressions.
     """
     empty = F.array().cast("array<string>")
-
-    s1 = empty
-    if "section" in df.columns:
-        s1 = F.coalesce(
-            F.filter(
-                F.transform(F.col("section.stations"), lambda s: s["uicCode"]),
-                lambda c: c.isNotNull(),
-            ),
-            empty,
+    s1 = F.coalesce(
+        F.filter(
+            F.transform(F.col("section.stations"), lambda s: s["uicCode"]),
+            lambda c: c.isNotNull(),
+        ),
+        empty,
+    )
+    flat = F.flatten(
+        F.filter(
+            F.transform(F.col("timespans"), lambda t: t["situation"]["stations"]),
+            lambda a: a.isNotNull(),
         )
-
-    s2 = empty
-    if "timespans" in df.columns:
-        flat = F.flatten(
-            F.filter(
-                F.transform(
-                    F.col("timespans"), lambda t: t["situation"]["stations"]
-                ),
-                lambda a: a.isNotNull(),
-            )
-        )
-        codes = F.transform(
+    )
+    s2 = F.coalesce(
+        F.transform(
             # reference keeps only truthy codes (cleaners.py:208-210)
             F.filter(
                 flat,
                 lambda s: s["stationCode"].isNotNull() & (s["stationCode"] != ""),
             ),
             lambda s: s["stationCode"],
-        )
-        s2 = F.coalesce(codes, empty)
-
-    declared = F.array_union(s1, s2)
-    regex = (
-        F.regexp_extract_all(F.col("title"), F.lit(r"\b[A-Z]{2,5}\b"), 0)
-        if "title" in df.columns
-        else empty
+        ),
+        empty,
     )
+    declared = F.array_union(s1, s2)
+    regex = F.regexp_extract_all(title, F.lit(r"\b[A-Z]{2,5}\b"), 0)
     combined = F.when(F.size(declared) > 0, declared).otherwise(
         F.coalesce(regex, empty)
     )
     csv = F.array_join(F.array_sort(F.array_distinct(combined)), ",")
-    return df.withColumn(
-        "affected_stations", F.when(F.length(csv) > 0, csv)
+    return F.when(F.length(csv) > 0, csv)
+
+
+def clean(df: DataFrame, run_ts: _dt.datetime) -> DataFrame:
+    """Raw payload frame (``RAW_DISRUPTION`` columns) -> warehouse frame.
+
+    Step 2 (cleaners.py:86-107) parses both timestamps to UTC and imputes
+    an unparseable or missing end as ``run_ts`` + 2 h; step 6
+    (cleaners.py:231-266) drops null ids, stamps the run and projects the
+    12 ``CLEAN_DISRUPTION`` columns.
+    """
+    kind, title, stamp = _type_col(), _title_col(), F.lit(run_ts)
+    start = _parse_ts(F.col("start"))
+    end = F.coalesce(_parse_ts(F.col("end")), stamp + F.expr("INTERVAL 2 HOURS"))
+    duration = _duration_col(start, end)
+    return df.filter(F.col("id").isNotNull()).select(
+        F.col("id").alias("disruption_id"),
+        kind.alias("type"),
+        title.alias("title"),
+        F.col("description"),
+        start.alias("start_time"),
+        end.alias("end_time"),
+        duration.alias("duration_minutes"),
+        impact_level_col(kind, duration).alias("impact_level"),
+        _stations_col(title).alias("affected_stations"),
+        F.lit(False).alias("is_resolved"),
+        stamp.alias("created_at"),
+        stamp.alias("updated_at"),
     )
-
-
-def validate_and_clean(df: DataFrame, run_ts: _dt.datetime) -> DataFrame:
-    """Step 6 (cleaners.py:231-266): drop null ids, clip impact, stamp, project."""
-    if "disruption_id" in df.columns:
-        df = df.filter(F.col("disruption_id").isNotNull())
-    if "impact_level" in df.columns:
-        df = df.withColumn(
-            "impact_level",
-            F.least(F.greatest(F.col("impact_level"), F.lit(1)), F.lit(5)).cast(
-                "int"
-            ),
-        )
-    df = (
-        df.withColumn("is_resolved", F.lit(False))
-        .withColumn("created_at", F.lit(run_ts))
-        .withColumn("updated_at", F.lit(run_ts))
-    )
-    return df.select([c for c in REQUIRED_COLUMNS if c in df.columns])
-
-
-def clean(df: DataFrame, run_ts: _dt.datetime | None = None) -> DataFrame:
-    """Full 6-step cleaning pipeline: raw payload frame -> warehouse frame."""
-    run_ts = run_ts or _dt.datetime.now(_dt.timezone.utc)
-    df = extract_basic_fields(df)
-    df = process_timestamps(df, run_ts)
-    df = calculate_metrics(df)
-    df = extract_stations(df)
-    return validate_and_clean(df, run_ts)

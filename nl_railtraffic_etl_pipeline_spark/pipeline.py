@@ -4,7 +4,8 @@ Mirrors the reference's four stages (pipeline.py:52-79) with DataFrames as
 the only IR (SURVEY §3.1):
 
     extract   archived payload / live fetch -> raw DataFrame, checkpointed
-    transform 6-step cleaner (functions/cleaning.py)
+    transform the reference's 6 cleaning steps as one projection
+              (functions/cleaning.py)
     load      idempotent upserts into a parquet lake (operators/upsert.py)
               and the daily roll-up of the merged clean zone
     report    one-row aggregate (operators/rollup.py), observed on the
@@ -100,7 +101,9 @@ class SparkETLPipeline:
         reference's raw zone stores it (``json.dumps(item,
         ensure_ascii=False)``, reference pipeline.py:151) plus the falsy-id
         skip; the typed columns the cleaner consumes are a ``from_json``
-        over that same string, so raw-zone archiving never re-serializes.
+        over that same string with ``RAW_DISRUPTION``, which declares only
+        the fields the cleaner reads, so raw-zone archiving never
+        re-serializes and the parse skips every other key.
         """
         register_rest_source(self.spark)
         rows = (
@@ -143,7 +146,8 @@ class SparkETLPipeline:
 
         The raw zone stores the VERBATIM record string when the extract
         carried one (``raw_json`` column); only parsed-only inputs (e.g.
-        the archive file stream) fall back to re-serialization.  The run
+        the archive file stream) fall back to re-serializing their
+        declared ``RAW_DISRUPTION`` fields.  The run
         report rides the clean-zone write as observed metrics, so it needs
         no read of its own.
         """
@@ -261,13 +265,13 @@ class SparkETLPipeline:
         """The reference's per-run side effects (reference pipeline.py:103-110,
         api_client.py:90-171), as lake artifacts:
 
-        - ``archive/raw/``    S2/S3: date-prefixed verbatim raw archive.  The
-          record string is carried byte-verbatim from the DataSource (never
-          re-serialized) under the same ``YYYY/MM/DD`` layout the reference
-          assembles by hand for S3.
-        - ``archive/athena/`` S4: the Athena-facing JSONL dual-write — one
-          compact JSON object per line, date-partitioned so the external
-          table prunes day partitions.
+        - ``archive/raw/``    S2/S3/S4: date-prefixed verbatim raw archive.
+          The record string is carried byte-verbatim from the DataSource
+          (never re-serialized) under the same ``YYYY/MM/DD`` layout the
+          reference assembles by hand for S3.  It is already date-partitioned
+          JSON lines, so the Athena/Glue external table points at it: the
+          reference's separate JSONL copy (S4) exists only because its raw
+          archive is a pretty-printed array.
         - ``processed/cleaned_<ts>/`` S5: single-file CSV snapshot of the
           cleaned batch with the UTF-8 BOM (``utf-8-sig``) for Excel-bound
           consumers.
@@ -275,11 +279,9 @@ class SparkETLPipeline:
         stamp = run_ts.strftime("%Y%m%d_%H%M%S")
         paths = {
             "archive_raw": f"{self.lake}/archive/raw",
-            "archive_athena": f"{self.lake}/archive/athena",
             "csv_snapshot": f"{self.lake}/processed/cleaned_{stamp}",
         }
-        write_raw_archive(raw, paths["archive_raw"], run_ts, fmt="json")
-        write_raw_archive(raw, paths["archive_athena"], run_ts, fmt="json")
+        write_raw_archive(raw, paths["archive_raw"], run_ts)
         write_csv_snapshot(cleaned, paths["csv_snapshot"], bom=True)
         return paths
 
@@ -302,7 +304,7 @@ class SparkETLPipeline:
         run_ts = run_ts or _dt.datetime.now(_dt.timezone.utc)
         # Materialize the extract ONCE: the parsed payload feeds the
         # emptiness probe, the raw-zone merge, the clean-zone merge and
-        # (with artifacts) both archive writers — each a separate action
+        # (with artifacts) the archive writer — each a separate action
         # that would otherwise re-execute the single-partition Python
         # data source end to end (guide §5: cut lineage of a reused
         # intermediate; the payload is one bounded HTTP response, so the

@@ -1,11 +1,13 @@
 """Explicit StructTypes for the engine's data model.
 
-The reference is schema-tolerant at ingest (pandas infers dtypes; every
+The reference is schema-tolerant at ingest (pandas infers dtypes, so every
 cleaning step guards on column presence) and schema-fixed at the warehouse
-(``/root/reference/src/storage/schema.sql:7-57``).  Spark mapping: explicit
-nested StructType for the raw NS payload (shape verified against
-``/root/reference/data/raw/disruptions_*.json``, SURVEY §1.2), PERMISSIVE
-read mode for tolerance, and a flat typed schema for the cleaned table.
+(reference ``src/storage/schema.sql:7-57``).  Here the raw NS payload has a
+declared schema instead: ``RAW_DISRUPTION`` names the nested paths the
+cleaner reads and nothing else, so the cleaner needs no presence guards and
+the JSON reader skips every other key.  Malformed records are tolerated by
+PERMISSIVE reads into ``_corrupt_record``.  The cleaned table and the
+station dimension are flat typed schemas.
 """
 
 from __future__ import annotations
@@ -13,154 +15,40 @@ from __future__ import annotations
 from pyspark.sql import types as T
 
 
-def _station() -> T.StructType:
-    return T.StructType(
-        [
-            T.StructField("name", T.StringType()),
-            T.StructField("stationCode", T.StringType()),
-            T.StructField("uicCode", T.StringType()),
-            T.StructField("countryCode", T.StringType()),
-            T.StructField(
-                "coordinate",
-                T.StructType(
-                    [
-                        T.StructField("lat", T.DoubleType()),
-                        T.StructField("lng", T.DoubleType()),
-                    ]
-                ),
-            ),
-        ]
+def _stations(code: str) -> T.StructField:
+    """A ``stations`` array of which only the ``code`` field is read."""
+    return T.StructField(
+        "stations", T.ArrayType(T.StructType([T.StructField(code, T.StringType())]))
     )
 
 
-def _travel_time() -> T.StructType:
-    return T.StructType(
-        [
-            T.StructField("label", T.StringType()),
-            T.StructField("shortLabel", T.StringType()),
-            T.StructField("minimumDurationInMinutes", T.IntegerType()),
-            T.StructField("maximumDurationInMinutes", T.IntegerType()),
-        ]
-    )
-
-
-def _section() -> T.StructType:
-    return T.StructType(
-        [
-            T.StructField("stations", T.ArrayType(_station())),
-            T.StructField("direction", T.StringType()),
-        ]
-    )
-
-
-#: Raw NS /disruptions payload (JSON array element).  Nested shapes cover
-#: everything the cleaner's declared extraction probes (cleaners.py:184-218)
-#: plus the scalar surface of the Glue external table (athena/main.tf:82-110).
+#: Raw NS /disruptions payload (JSON array element): exactly the fields the
+#: cleaner reads (functions/cleaning.py).  Undeclared keys are skipped by
+#: the JSON reader, so a change to the cleaner's inputs is one edit here.
 RAW_DISRUPTION = T.StructType(
     [
         T.StructField("id", T.StringType()),
         T.StructField("type", T.StringType()),
         T.StructField("title", T.StringType()),
         T.StructField("description", T.StringType()),
-        T.StructField("isActive", T.BooleanType()),
-        T.StructField("local", T.BooleanType()),
-        T.StructField("topic", T.StringType()),
-        T.StructField("url", T.StringType()),
-        T.StructField("priority", T.StringType()),
-        T.StructField("registrationTime", T.StringType()),
-        T.StructField("releaseTime", T.StringType()),
         T.StructField("start", T.StringType()),
         T.StructField("end", T.StringType()),
-        T.StructField("period", T.StringType()),
-        T.StructField(
-            "phase",
-            T.StructType(
-                [
-                    T.StructField("id", T.StringType()),
-                    T.StructField("label", T.StringType()),
-                ]
-            ),
-        ),
-        T.StructField(
-            "impact", T.StructType([T.StructField("value", T.IntegerType())])
-        ),
-        T.StructField(
-            "expectedDuration",
-            T.StructType(
-                [
-                    T.StructField("description", T.StringType()),
-                    T.StructField("endTime", T.StringType()),
-                ]
-            ),
-        ),
-        T.StructField("summaryAdditionalTravelTime", _travel_time()),
-        # Probed by declared station-extraction strategy 1 (cleaners.py:186-195).
-        T.StructField("section", _section()),
+        # Declared station extraction, strategy 1 (cleaners.py:186-195).
+        T.StructField("section", T.StructType([_stations("uicCode")])),
+        # Strategy 2 (cleaners.py:197-210).
         T.StructField(
             "timespans",
             T.ArrayType(
                 T.StructType(
                     [
-                        T.StructField("start", T.StringType()),
-                        T.StructField("end", T.StringType()),
-                        T.StructField("period", T.StringType()),
                         T.StructField(
-                            "situation",
-                            T.StructType(
-                                [
-                                    T.StructField("label", T.StringType()),
-                                    # Strategy 2 probe (cleaners.py:197-210).
-                                    T.StructField(
-                                        "stations", T.ArrayType(_station())
-                                    ),
-                                ]
-                            ),
-                        ),
-                        T.StructField(
-                            "cause",
-                            T.StructType(
-                                [
-                                    T.StructField("label", T.StringType()),
-                                    T.StructField("type", T.StringType()),
-                                ]
-                            ),
-                        ),
-                        T.StructField("additionalTravelTime", _travel_time()),
-                        T.StructField(
-                            "alternativeTransport",
-                            T.StructType(
-                                [
-                                    T.StructField("label", T.StringType()),
-                                    T.StructField("shortLabel", T.StringType()),
-                                ]
-                            ),
-                        ),
-                        T.StructField("advices", T.ArrayType(T.StringType())),
+                            "situation", T.StructType([_stations("stationCode")])
+                        )
                     ]
                 )
             ),
         ),
-        T.StructField(
-            "publicationSections",
-            T.ArrayType(
-                T.StructType(
-                    [
-                        T.StructField("section", _section()),
-                        T.StructField(
-                            "consequence",
-                            T.StructType(
-                                [
-                                    T.StructField("section", _section()),
-                                    T.StructField("description", T.StringType()),
-                                    T.StructField("level", T.StringType()),
-                                ]
-                            ),
-                        ),
-                        T.StructField("sectionType", T.StringType()),
-                    ]
-                )
-            ),
-        ),
+        # Filled by the PERMISSIVE readers for a malformed record.
         T.StructField("_corrupt_record", T.StringType()),
     ]
 )
@@ -192,20 +80,5 @@ STATIONS = T.StructType(
         T.StructField("latitude", T.DoubleType()),
         T.StructField("longitude", T.DoubleType()),
         T.StructField("last_updated", T.TimestampType()),
-    ]
-)
-
-#: Daily roll-up (schema.sql:48-57) — declared but never populated in the
-#: reference; built by operators/rollup.py.
-DAILY_STATS = T.StructType(
-    [
-        T.StructField("date", T.DateType(), nullable=False),
-        T.StructField("total_disruptions", T.IntegerType()),
-        T.StructField("total_cancellations", T.IntegerType()),
-        T.StructField("avg_duration_minutes", T.DoubleType()),
-        T.StructField("max_duration_minutes", T.IntegerType()),
-        T.StructField("most_affected_station", T.StringType()),
-        T.StructField("peak_hour", T.IntegerType()),
-        T.StructField("calculated_at", T.TimestampType()),
     ]
 )

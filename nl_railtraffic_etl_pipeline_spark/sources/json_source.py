@@ -3,11 +3,13 @@
 Maps the reference's ingest surface onto native Spark readers (SURVEY §2.1):
 
 - S1 fallback / tests: archived payload files (pretty-printed JSON arrays,
-  ``/root/reference/data/raw/disruptions_*.json``) -> ``read_payload``.
+  the reference's ``data/raw/disruptions_*.json``) -> ``read_payload``.
 - a live REST fetch already on the driver -> ``payload_from_records``.
 
-Both read PERMISSIVE with a corrupt-record column — the Spark equivalent
-of the Glue SerDe's ``ignore.malformed.json`` tolerance.
+Both read with ``RAW_DISRUPTION``, the fields the cleaner reads, so the
+frame they return is parsed-only: every other key of the payload is
+skipped.  Both read PERMISSIVE with a corrupt-record column — the Spark
+equivalent of the Glue SerDe's ``ignore.malformed.json`` tolerance.
 """
 
 from __future__ import annotations

@@ -1,10 +1,13 @@
-"""Partitioned Parquet/JSON lake writers — the engine's sink surface.
+"""The lake's per-run file sinks: the raw archive and the CSV snapshot.
 
-Maps the reference's five sinks (SURVEY §2.1 S2-S5) onto Spark's native
-output formats.  The Hive-style ``year/month/day`` S3 layout the reference
-assembles by hand (api_client.py:119,160) is Spark's ``partitionBy`` — which
-also buys partition pruning on every downstream date-filtered read, the same
-access path the Glue partition projection provides (athena/main.tf:35-48).
+Maps the reference's file sinks (SURVEY §2.1 S2-S5) onto Spark's native
+output formats.  Its raw archive (S2/S3) and the JSONL copy for Athena
+(S4) become one date-partitioned JSON-lines archive; the cleaned batch's
+CSV snapshot (S5) stays one file.  The Hive-style ``year/month/day`` S3
+layout the reference assembles by hand (api_client.py:119,160) is Spark's
+``partitionBy`` — which also buys partition pruning on every downstream
+date-filtered read, the same access path the Glue partition projection
+provides (athena/main.tf:35-48).
 
 At 100 TB: date partitioning bounds each daily write to its own directory,
 and readers prune to the queried days.
@@ -34,16 +37,16 @@ def with_date_partitions(df: DataFrame, ts_col: str = "fetched_at") -> DataFrame
     )
 
 
-def write_raw_archive(
-    df: DataFrame, path: str, run_ts: _dt.datetime, fmt: str = "json"
-) -> None:
-    """S2/S3/S4: archive the verbatim payload under date partitions.
+def write_raw_archive(df: DataFrame, path: str, run_ts: _dt.datetime) -> None:
+    """S2/S3/S4: archive the verbatim payload as date-partitioned JSON lines.
 
     Keeps one ``raw_json`` string column per record alongside the ingest
-    timestamp.  When the frame already carries ``raw_json`` (the raw-zone
-    shape the ``ns_disruptions`` DataSource yields) the string is archived
-    BYTE-VERBATIM — the reference's archive contract (api_client.py:105-110);
-    parsed-only frames fall back to a canonical ``to_json`` re-serialization.
+    timestamp; the Athena/Glue external table reads this same archive.
+    When the frame already carries ``raw_json`` (the raw-zone shape the
+    ``ns_disruptions`` DataSource yields) the string is archived
+    BYTE-VERBATIM — the reference's archive contract
+    (api_client.py:105-110); parsed-only frames fall back to a canonical
+    ``to_json`` re-serialization of their declared fields.
     """
     raw_json = (
         F.col("raw_json")
@@ -60,8 +63,7 @@ def write_raw_archive(
         with_date_partitions(out)
         .write.mode("append")
         .partitionBy("year", "month", "day")
-        .format(fmt)
-        .save(path)
+        .json(path)
     )
 
 

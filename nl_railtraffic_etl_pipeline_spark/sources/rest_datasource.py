@@ -3,8 +3,9 @@
 ``spark.read.format("ns_disruptions")`` — the Spark-native form of the
 driver-side REST fetch (sources/rest_source.py): the payload surfaces as the
 RAW-ZONE shape (id, raw_json, fetched_at), one row per record, and the
-nested parse is a downstream ``from_json(raw_json, RAW_DISRUPTION)`` so the
-existing cleaner consumes it unchanged.
+nested parse is a downstream ``from_json(raw_json, RAW_DISRUPTION)`` of just
+the fields the cleaner reads; the verbatim string keeps every other key for
+the raw zone and the archive.
 
 Options:
 - ``payload_path``: read an archived payload file instead of the network

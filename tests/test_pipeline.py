@@ -75,7 +75,7 @@ def test_run_materializes_all_reference_tables(spark, lake):
 def test_run_writes_reference_side_effect_artifacts(spark, lake):
     """Every run must leave the reference's full side-effect set
     (reference pipeline.py:103-110, api_client.py:90-171): date-prefixed
-    verbatim raw archive, Athena JSONL dual-write, BOM CSV snapshot."""
+    verbatim raw archive (also the Athena table's JSONL), BOM CSV snapshot."""
     import glob
     import json
     import os
@@ -84,11 +84,8 @@ def test_run_writes_reference_side_effect_artifacts(spark, lake):
     stats = p.run(PAYLOAD_1, RUN_TS)
     arts = stats["artifacts"]
 
-    # S3-style YYYY/MM/DD partition layout on both archive writes
-    for key in ("archive_raw", "archive_athena"):
-        assert os.path.isdir(
-            f"{arts[key]}/year=2026/month=02/day=14"
-        ), key
+    # S3-style YYYY/MM/DD partition layout
+    assert os.path.isdir(f"{arts['archive_raw']}/year=2026/month=02/day=14")
 
     # archived records byte-equal the DataSource's verbatim strings
     with open(PAYLOAD_1, encoding="utf-8") as fh:
@@ -105,9 +102,6 @@ def test_run_writes_reference_side_effect_artifacts(spark, lake):
         json.loads(r.value)["raw_json"] for r in archived.collect()
     }
     assert got == want
-    # JSONL dual-write: one compact JSON object per line, same record set
-    athena = spark.read.json(arts["archive_athena"])
-    assert athena.count() == len(want)
 
     # CSV snapshot: single part file, UTF-8 BOM head, full cleaned batch
     parts = glob.glob(f"{arts['csv_snapshot']}/part-*.csv")

@@ -86,6 +86,16 @@ def test_first_run_on_empty_lake(lake):
         with open(part, encoding="utf-8") as fh:
             archived += [json.loads(line)["raw_json"] for line in fh]
     assert sorted(archived) == sorted(raw for raw, _ in lake.fold.raw.values())
+    # the raw archive is the only archive: no second JSONL copy
+    assert not os.path.exists(f"{lake.root}/archive/athena")
+    # the CSV snapshot is one part file, UTF-8 BOM first, one row per record
+    snapshot = stats["artifacts"]["csv_snapshot"]
+    parts = glob.glob(f"{snapshot}/part-*.csv")
+    assert len(parts) == 1
+    with open(parts[0], "rb") as fh:
+        assert fh.read(3) == b"\xef\xbb\xbf"
+    snap = lake.spark.read.option("header", True).option("multiLine", True)
+    assert snap.csv(snapshot).count() == stats["clean_total"]
 
 
 def test_payload_of_falsy_ids_stops_before_load(lake):
