@@ -27,22 +27,16 @@ from pyspark.sql import functions as F
 
 
 def dedup_batch(
-    batch: DataFrame, keys: Sequence[str], order_col=None
+    batch: DataFrame, keys: Sequence[str], order_col: str | None = None
 ) -> DataFrame:
     """Deterministic within-batch dedup: latest by order_col, else any-one.
 
     ``dropDuplicates`` picks an arbitrary survivor; with ``order_col`` (a
-    column name, a Column, or a list of either — e.g. ``[F.desc("ts"),
-    "id"]`` for total-order tiebreaks) the survivor is the first row per key
-    in that ordering.
+    column name) the survivor is the row per key with its greatest value.
     """
     if order_col is None:
         return batch.dropDuplicates(list(keys))
-    if isinstance(order_col, (list, tuple)):
-        order = [F.desc(c) if isinstance(c, str) else c for c in order_col]
-    else:
-        order = [F.desc(order_col) if isinstance(order_col, str) else order_col]
-    w = Window.partitionBy(*keys).orderBy(*order)
+    w = Window.partitionBy(*keys).orderBy(F.desc(order_col))
     return (
         batch.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
@@ -51,7 +45,10 @@ def dedup_batch(
 
 
 def insert_ignore(
-    existing: DataFrame, batch: DataFrame, keys: Sequence[str], order_col=None
+    existing: DataFrame,
+    batch: DataFrame,
+    keys: Sequence[str],
+    order_col: str | None = None,
 ) -> DataFrame:
     """``INSERT OR IGNORE`` semantics: existing rows win, new keys append.
 

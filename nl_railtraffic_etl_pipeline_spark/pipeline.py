@@ -144,23 +144,13 @@ class SparkETLPipeline:
         """Idempotent load: insert-ignore raw zone, latest-wins clean zone
         and the ``daily_stats`` roll-up of the merged clean zone.
 
-        The raw zone stores the VERBATIM record string when the extract
-        carried one (``raw_json`` column); only parsed-only inputs (e.g.
-        the archive file stream) fall back to re-serializing their
-        declared ``RAW_DISRUPTION`` fields.  The run
-        report rides the clean-zone write as observed metrics, so it needs
-        no read of its own.
+        ``raw`` is the extract's frame: the raw zone stores its VERBATIM
+        record string (``raw_json``).  The run report rides the clean-zone
+        write as observed metrics, so it needs no read of its own.
         """
-        raw_json = (
-            F.col("raw_json")
-            if "raw_json" in raw.columns
-            else F.to_json(
-                F.struct(*[c for c in raw.columns if c != "_corrupt_record"])
-            )
-        )
         raw_rows = raw.select(
             F.col("id").alias("disruption_id"),
-            raw_json.alias("raw_json"),
+            "raw_json",
             F.lit(run_ts).alias("fetched_at"),
         )
         raw_existing = self._read_zone("raw_disruptions", raw_rows.schema)
@@ -184,6 +174,22 @@ class SparkETLPipeline:
             "clean_total": report.pop("rows"),
             "daily_stats_total": staged["daily_stats"].get["rows"],
             "report": report,
+        }
+
+    def _lake_totals(self, run_ts: _dt.datetime) -> dict:
+        """What ``load`` returns, for the lake as it stands: the live zones'
+        row counts and the report for ``run_ts``'s date.  Reads only, so a
+        run that extracts nothing writes nothing; before the first run
+        every zone reads empty."""
+
+        def rows(name: str) -> int:
+            return self._read_zone(name, T.StructType()).count()
+
+        return {
+            "raw_total": rows("raw_disruptions"),
+            "clean_total": rows("disruptions"),
+            "daily_stats_total": rows("daily_stats"),
+            "report": self.report(run_ts.date()).first().asDict(),
         }
 
     def ensure_stations(self, run_ts: _dt.datetime) -> int:
@@ -282,17 +288,12 @@ class SparkETLPipeline:
             "csv_snapshot": f"{self.lake}/processed/cleaned_{stamp}",
         }
         write_raw_archive(raw, paths["archive_raw"], run_ts)
-        write_csv_snapshot(cleaned, paths["csv_snapshot"], bom=True)
+        write_csv_snapshot(cleaned, paths["csv_snapshot"])
         return paths
 
     # -- stage 4: report ----------------------------------------------------
     def report(self, as_of_date=None) -> DataFrame:
-        return run_report(
-            self.spark.read.schema(CLEAN_DISRUPTION).parquet(
-                f"{self.lake}/disruptions"
-            ),
-            as_of_date,
-        )
+        return run_report(self._read_zone("disruptions", CLEAN_DISRUPTION), as_of_date)
 
     # -- orchestration ------------------------------------------------------
     def run(
@@ -318,7 +319,7 @@ class SparkETLPipeline:
         ).localCheckpoint(eager=True)
         if (obs.get["rows"] or 0) == 0:
             logger.warning("no data extracted; stopping run")
-            return {"raw_total": 0, "clean_total": 0}
+            return self._lake_totals(run_ts)
         cleaned = self.transform(raw, run_ts)
         # One sink phase: the station seed, the load (which also yields
         # daily_stats and the report) and the artifacts write disjoint

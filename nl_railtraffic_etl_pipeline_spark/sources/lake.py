@@ -87,21 +87,19 @@ def replace(fs, src, dst) -> None:
         raise IOError(f"failed to rename {src} -> {dst}")
 
 
-def write_csv_snapshot(df: DataFrame, path: str, bom: bool = True) -> None:
+def write_csv_snapshot(df: DataFrame, path: str) -> None:
     """S5: single-file CSV snapshot of the cleaned frame (pipeline.py:103-110).
 
     coalesce(1) deliberately: snapshot fidelity over parallelism, exactly the
     reference's one-file-per-run contract.  Not for big outputs.
 
-    ``bom=True`` prepends the UTF-8 BOM — the reference writes
+    The file starts with the UTF-8 BOM — the reference writes
     ``encoding='utf-8-sig'`` (pipeline.py:109) so Excel-bound consumers get
     the byte-identical file head.  Spark's CSV writer has no BOM option;
     the single part file is re-headed through the Hadoop FileSystem API
     (scheme-agnostic, and the snapshot is one small file by contract).
     """
     df.coalesce(1).write.mode("overwrite").option("header", True).csv(path)
-    if not bom:
-        return
     spark = df.sparkSession
     hconf = spark._jsc.hadoopConfiguration()
     fs, root = hadoop_path(spark, path)

@@ -1409,8 +1409,7 @@ def isotonic_bin_stats(
 ) -> DataFrame:
     """Per-bin (count, positives) — the mergeable state
     :func:`isotonic_close` consumes.  Both aggregates merge
-    associatively across partial aggregations AND streaming
-    micro-batches (the batch/stream twin contract)."""
+    associatively across partial aggregations."""
     s = F.col(score_col)
     b = F.floor(s * bins / F.lit(denom)).cast("int").alias("bin")
     return (
@@ -1529,9 +1528,7 @@ def mcc_bucket_stats(
     n_thresholds: int = 9,
 ) -> DataFrame:
     """The mergeable state of :func:`mcc_thresholds`: per-bucket
-    (count, positives) — both sum associatively across partitions AND
-    micro-batches, so this frame is the streaming twin's complete-mode
-    aggregation state."""
+    (count, positives) — both sum associatively across partitions."""
     nb = n_thresholds + 1
     base = df.select(
         (F.col(score_col).cast("bigint") * nb / denom)
@@ -1638,8 +1635,7 @@ def log_loss_state(
 ) -> DataFrame:
     """The mergeable state of :func:`log_loss`: one row of (count,
     positive count, exact DECIMAL(28,12) sum of quantized per-row
-    terms) — all three merge associatively across partitions and
-    micro-batches."""
+    terms) — all three merge associatively across partitions."""
     p = (F.col(score_col).cast("double") + F.lit(1.0)) / F.lit(
         float(denom + 2)
     )

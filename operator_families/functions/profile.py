@@ -411,8 +411,7 @@ def benford_deviation(
 
 def benford_digit(units: Column) -> Column:
     """First decimal digit of a positive integer-unit column (NULL for
-    units < 1) — map-side, shared by the batch audit and its streaming
-    twin so the two can never disagree on digit extraction."""
+    units < 1) — map-side."""
     return F.when(
         units >= 1,
         F.substring(units.cast("string"), 1, 1).cast("int"),
@@ -421,8 +420,7 @@ def benford_digit(units: Column) -> Column:
 
 def benford_close(obs: DataFrame) -> DataFrame:
     """Close a (digit, n_obs) count frame into the full Benford report —
-    the exactly-mergeable-counts contract: the same closing arithmetic
-    serves the batch audit and the drained streaming state."""
+    the exactly-mergeable-counts contract."""
     spine = obs.sparkSession.range(1, 10).select(
         F.col("id").cast("int").alias("digit")
     )

@@ -204,8 +204,8 @@ def _ewma_packed_fold(
     prefix fold given by ``fold_expr`` (a SQL lambda body over
     ``(acc, x)``), and the exploded (keys..., id, ts, value, ewma)
     output.  Both variants MUST share this plan — their equivalence
-    contract (and the streaming twins) depends on identical NULL
-    handling, fold order, and output shape."""
+    contract depends on identical NULL handling, fold order, and output
+    shape."""
     keys = list(key_cols)
     packed = (
         df.filter(F.col(value_col).isNotNull())
@@ -268,8 +268,6 @@ def ewma_halving(
     the behavioral family; a whale key bounds at its history length, and
     the per-position prefix folds are O(n^2) IN-MEMORY arithmetic on
     that buffer, acceptable for per-entity histories and documented).
-    The streaming twin (``streaming.incremental.ewma_stream``) carries
-    identical state per key and is equivalence-tested against this.
     """
     return _ewma_packed_fold(
         df, "(acc + x) / 2", value_col, ts_col, key_cols, id_col
@@ -297,7 +295,7 @@ def ewma(
     DOUBLE)`` — Python ``repr`` round-trips the exact double, and
     parsing a decimal string to double is correctly rounded everywhere —
     so ANY engine replaying the same token sequence (the DuckDB oracle
-    does, and the Python-float streaming twin does) reproduces every
+    does) reproduces every
     ``ewma`` bit-identically, even for non-dyadic alpha like 0.3.  What
     is NOT contracted is algebraic equivalence across different
     formulations: ``s + alpha*(v - s)`` rounds differently — replays
@@ -2076,7 +2074,7 @@ def holt_linear(
     plus the one-step-ahead ``forecast = l_t + b_t`` (what a capacity
     monitor actually consumes).  Initialization ``b_1 = 0`` is the
     lookahead-free convention — the alternative ``b_1 = v_2 - v_1``
-    needs the future and breaks the streaming-replay contract.
+    needs the future and breaks incremental replay.
 
     Determinism rides the general-alpha :func:`ewma` contract: the fold
     is a FIXED sequence of correctly-rounded IEEE double ops with all
@@ -2451,10 +2449,7 @@ def anova_group_stats(
 ) -> DataFrame:
     """Per-group (count, exact decimal sum, exact decimal sum of
     squares) — the mergeable state :func:`anova_close` consumes.  All
-    three aggregates merge associatively across partial aggregations
-    AND streaming micro-batches, so a complete-mode stream aggregation
-    of this exact shape drains into the identical closing arithmetic
-    (the batch/stream twin contract)."""
+    three aggregates merge associatively across partial aggregations."""
     v = _dec(F.col(value_col))
     return (
         df.filter(
@@ -2837,8 +2832,7 @@ def cramers_cells(
     col_col: str,
 ) -> DataFrame:
     """The mergeable state of :func:`cramers_v`: per-(row, col) cell
-    counts — summable across partitions AND micro-batches, so this
-    frame is the streaming twin's complete-mode aggregation state."""
+    counts, summable across partitions."""
     base = df.filter(
         F.col(row_col).isNotNull() & F.col(col_col).isNotNull()
     ).select(F.col(row_col).alias("_r"), F.col(col_col).alias("_c"))

@@ -220,11 +220,6 @@ def _text_damerau_levenshtein(spark: SparkSession, sf_dir: str) -> DataFrame:
 # list_reduce over list(... ORDER BY event_type) so the k-term double
 # accumulation is bit-identical; grand sums ride exact decimals.
 # ---------------------------------------------------------------------------
-#: Shared by the batch gate below and its streaming twin
-#: (streaming_queries::streaming_anova): the per-type state (count /
-#: decimal sum / decimal sum-of-squares) is mergeable across
-#: micro-batches, so the drained stream closes with the identical
-#: arithmetic and the batch oracle IS the streaming oracle.
 ANOVA_ORACLE_SQL = """
 WITH b AS (
     SELECT event_type, CAST(CAST(value AS VARCHAR) AS DECIMAL(18,6)) AS dv

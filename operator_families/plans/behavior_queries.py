@@ -22,8 +22,6 @@ from .registry import query
 _FUNNEL_STAGES = ("view", "click", "purchase")
 
 
-#: Shared by events_funnel and its streaming twin (streaming_funnel) —
-#: the twin must hash-match the SAME oracle.
 FUNNEL_ORACLE_SQL = """
 WITH s1 AS (
     SELECT user_id, MIN(ts) AS entry FROM events
@@ -3087,9 +3085,6 @@ def _peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
 # = DAU).  One user-keyed lag window over the distinct activity frame;
 # churn attributes to the day AFTER the lapsed activity.
 # ---------------------------------------------------------------------------
-# shared with the streaming twin (streaming_growth): the distinct
-# (user, day) activity state is exactly mergeable, so the batch oracle
-# IS the streaming oracle under the availableNow drain
 GROWTH_ORACLE_SQL = """
 WITH ud AS (
     SELECT DISTINCT user_id AS u, CAST(ts AS DATE) AS d
@@ -3186,8 +3181,6 @@ def _growth_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (roaring-style), emitted NEXT TO count(distinct) so the gate verifies
 # the bitmap math against the naive path inside one result.
 # ---------------------------------------------------------------------------
-# shared with the streaming twin (streaming_bitmap_distinct): bitmaps
-# and the distinct-user frame are both merge-idempotent state
 BITMAP_ORACLE_SQL = """
 WITH m AS (
     SELECT CAST(ts AS DATE) AS day,
@@ -3365,8 +3358,6 @@ _HOLT_OMB = f"CAST('{1.0 - _HOLT_BETA!r}' AS DOUBLE)"
 _HOLT_LT = f"x[1] * {_HOLT_A} + (acc[1] + acc[2]) * {_HOLT_OMA}"
 
 
-#: Shared by events_holt_linear and its streaming twin (streaming_holt) —
-#: the twin must hash-match the SAME oracle.
 HOLT_ORACLE_SQL = f"""
 WITH ordered AS (
     SELECT user_id,
@@ -3419,9 +3410,6 @@ def _events_holt_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
 # contract, and the full 1..9 digit spine keeps absent digits in the
 # chi-square (the psi_drift spine lesson).
 # ---------------------------------------------------------------------------
-# shared with the streaming twin (streaming_benford): digit counts are
-# exactly mergeable across micro-batches, so the batch oracle IS the
-# streaming oracle under the availableNow drain
 BENFORD_ORACLE_SQL = f"""
 WITH obs AS (
     SELECT CAST(substr(CAST(u AS VARCHAR), 1, 1) AS INTEGER) AS digit,

@@ -80,9 +80,6 @@ def _auc_roc(spark: SparkSession, sf_dir: str) -> DataFrame:
     return auc_roc(base, ["iso_dow"], "score", "label")
 
 
-# shared with the streaming twin (streaming_calibration): the per-bin
-# integers are exactly mergeable, so the batch oracle IS the streaming
-# oracle under the availableNow drain
 CALIBRATION_ORACLE_SQL = f"""
 WITH base AS (
     SELECT {_H32_SQL} AS s,
@@ -129,9 +126,6 @@ def _calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     return calibration_report(base, "score", "label", n_bins=10, denom=_DENOM)
 
 
-# shared with the streaming twin (streaming_drift): the per-(bucket,
-# day) counts are exactly mergeable, so the batch oracle IS the
-# streaming oracle under the availableNow drain
 DRIFT_ORACLE_SQL = f"""
 WITH base AS (
     SELECT event_type AS bucket, CAST(ts AS DATE) AS d FROM events
@@ -646,10 +640,6 @@ def _publish_isotonic_reference(sf_dir: str) -> bool:
     return True
 
 
-#: Shared by the batch gate below and its streaming twin
-#: (streaming_queries::streaming_isotonic): the per-bin (count,
-#: positives) state is mergeable across micro-batches, so the drained
-#: stream closes with the shared PAV arithmetic under this same oracle.
 ISO_ORACLE_SQL = f"""
 WITH base AS (
     SELECT {_H32_SQL} AS s,

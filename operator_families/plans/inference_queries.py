@@ -44,9 +44,6 @@ _DENOM = 2**32
 # day-of-week contingency table — a metadata-sized cell frame at any
 # corpus scale; the cell-term sum is the anova_f strict left fold.
 # ---------------------------------------------------------------------------
-#: Shared with the streaming twin (streaming_queries::
-#: streaming_cramers_v): the (row, col) cell counts merge associatively
-#: across micro-batches, so the batch oracle IS the streaming oracle.
 CRAMERS_ORACLE_SQL = """
 WITH base AS (
     SELECT event_type AS r, CAST(isodow(CAST(ts AS DATE)) AS BIGINT) AS c
@@ -107,9 +104,6 @@ def _stats_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
 # pseudo-score predicting purchase — ONE bucket-keyed corpus pass; the
 # 9 confusion matrices derive from the 10-row bucket frame.
 # ---------------------------------------------------------------------------
-#: Shared with the streaming twin (streaming_queries::streaming_mcc):
-#: the bucket state (count, positives) merges associatively across
-#: micro-batches, so the batch oracle IS the streaming oracle.
 MCC_ORACLE_SQL = f"""
 WITH base AS (
     SELECT ({_H32_SQL} * 10) // {_DENOM} AS b,
@@ -172,10 +166,6 @@ def _ml_mcc(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Laplace-shifted md5 pseudo-probability against the purchase label —
 # transcendental ln under the quantized-term contract.
 # ---------------------------------------------------------------------------
-#: Shared with the streaming twin (streaming_queries::
-#: streaming_log_loss): the one-row state (count, positives, exact
-#: decimal term sum) merges associatively, so the batch oracle IS the
-#: streaming oracle.
 LOG_LOSS_ORACLE_SQL = f"""
 WITH base AS (
     SELECT (CAST({_H32_SQL} AS DOUBLE) + CAST(1 AS DOUBLE))
@@ -421,9 +411,6 @@ rem{r} AS (
 _ESD_ROUNDS = 3
 
 
-#: Shared with the streaming twin (streaming_queries::
-#: streaming_anomaly_esd): the per-day counts merge associatively, so
-#: the drained daily frame closes with the identical rounds.
 ESD_ORACLE_SQL = (
     """
 WITH rem0 AS (
@@ -508,9 +495,6 @@ def _text_utf8_validity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # without continuity correction (documented choice) — all counts
 # integer, one closing IEEE op pair.
 # ---------------------------------------------------------------------------
-#: Shared with the streaming twin (streaming_queries::
-#: streaming_sign_test): per-day counts merge associatively, so the
-#: batch oracle IS the streaming oracle.
 SIGN_TEST_ORACLE_SQL = """
 WITH daily AS (
     SELECT CAST(ts AS DATE) AS d, CAST(COUNT(*) AS BIGINT) AS v

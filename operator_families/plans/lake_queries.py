@@ -1,7 +1,6 @@
-"""Lake-format gates over the synthetic tables: ORC round-trip, parquet
-schema drift, partition pruning on a date-partitioned lake, and the
-versioned-zone commit protocol.  Lakes live under /tmp (wiped per
-invocation) — gate harness state, never under the repo or testdata.
+"""Lake-format gate over the synthetic tables: partition pruning on a
+date-partitioned lake.  The lake lives under /tmp (wiped per invocation) —
+gate harness state, never under the repo or testdata.
 """
 
 from __future__ import annotations

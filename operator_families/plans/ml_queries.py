@@ -2271,16 +2271,37 @@ _SLKMV_K = 64
 _SLKMV_H = _H32.format(x="'kmv:' || CAST(user_id AS VARCHAR)")
 
 
-# CM gate contract shared with the streaming twin — defined in
-# oracle_util (import-order-free; see the note there)
-from .oracle_util import (  # noqa: E402
-    CM_DEPTH as _CM_D,
-    CM_FREQUENCY_ORACLE_SQL,
-    CM_WIDTH as _CM_W,
+_CM_W, _CM_D = 1024, 4
+_CM_H = _H32.format(
+    x="'cm:' || CAST(k.k AS VARCHAR) || ':' || CAST(user_id AS VARCHAR)"
+)
+_CM_HI = _H32.format(
+    x="'cm:' || CAST(k.k AS VARCHAR) || ':' || CAST(i.value AS VARCHAR)"
 )
 
 
-@query("sketch_cm_frequency", CM_FREQUENCY_ORACLE_SQL)
+@query(
+    "sketch_cm_frequency",
+    f"""
+WITH state AS (
+    SELECT k.k AS row, CAST({_CM_H} % {_CM_W} AS INTEGER) AS bucket,
+           COUNT(*) AS c
+    FROM events, range(0, {_CM_D}) k(k)
+    GROUP BY 1, 2
+),
+items AS (
+    SELECT DISTINCT user_id AS value FROM events WHERE user_id % 50 = 0
+),
+probes AS (
+    SELECT i.value, k.k AS row,
+           CAST({_CM_HI} % {_CM_W} AS INTEGER) AS bucket
+    FROM items i, range(0, {_CM_D}) k(k)
+)
+SELECT p.value, CAST(MIN(COALESCE(s.c, 0)) AS BIGINT) AS est
+FROM probes p LEFT JOIN state s USING (row, bucket)
+GROUP BY p.value
+""",
+)
 def _sketch_cm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-Min frequency estimates (sketch.cm_build/cm_query): the
     deterministic md5-contract CMS — state and estimates replay exactly

@@ -14,42 +14,3 @@ def round_sql(expr: str, digits: int) -> str:
         f"{digits}) AS DOUBLE)"
     )
 
-
-# ---------------------------------------------------------------------------
-# Count-Min gate contract, shared by the batch gate (ml_queries::
-# sketch_cm_frequency) and its streaming twin (streaming_queries::
-# streaming_cm_frequency).  Lives HERE because plans modules may only
-# share code through import-order-free helpers: a direct
-# streaming_queries -> ml_queries module-level import deadlocks when a
-# caller imports ml_queries first (registry's registration imports then
-# initialize streaming_queries while ml_queries is still partial).
-# ---------------------------------------------------------------------------
-H32_SQL = "CAST(('0x' || substr(md5({x}), 1, 8)) AS BIGINT)"
-
-CM_WIDTH, CM_DEPTH = 1024, 4
-_CM_H = H32_SQL.format(
-    x="'cm:' || CAST(k.k AS VARCHAR) || ':' || CAST(user_id AS VARCHAR)"
-)
-_CM_HI = H32_SQL.format(
-    x="'cm:' || CAST(k.k AS VARCHAR) || ':' || CAST(i.value AS VARCHAR)"
-)
-
-CM_FREQUENCY_ORACLE_SQL = f"""
-WITH state AS (
-    SELECT k.k AS row, CAST({_CM_H} % {CM_WIDTH} AS INTEGER) AS bucket,
-           COUNT(*) AS c
-    FROM events, range(0, {CM_DEPTH}) k(k)
-    GROUP BY 1, 2
-),
-items AS (
-    SELECT DISTINCT user_id AS value FROM events WHERE user_id % 50 = 0
-),
-probes AS (
-    SELECT i.value, k.k AS row,
-           CAST({_CM_HI} % {CM_WIDTH} AS INTEGER) AS bucket
-    FROM items i, range(0, {CM_DEPTH}) k(k)
-)
-SELECT p.value, CAST(MIN(COALESCE(s.c, 0)) AS BIGINT) AS est
-FROM probes p LEFT JOIN state s USING (row, bucket)
-GROUP BY p.value
-"""

@@ -40,4 +40,3 @@ from . import geo_queries  # noqa: E402,F401  (registration side-effect)
 from . import inference_queries  # noqa: E402,F401  (registration side-effect)
 from . import lake_queries  # noqa: E402,F401  (registration side-effect)
 from . import ml_queries  # noqa: E402,F401  (registration side-effect)
-from . import streaming_queries  # noqa: E402,F401  (registration side-effect)

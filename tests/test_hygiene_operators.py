@@ -1,30 +1,7 @@
-"""Unit tests for the r11 hygiene/metadata-plane operators: parquet
-footer trust check, generalized-ESD anomaly rounds, UTF-8 validity."""
+"""Unit tests for the r11 hygiene/metadata-plane operators:
+generalized-ESD anomaly rounds, UTF-8 validity."""
 
 from __future__ import annotations
-
-
-def test_parquet_footer_matches_data(spark, tmp_path):
-    """Footer stats over a freshly written file equal the data-derived
-    truth, including a column with nulls."""
-    from operator_families.sources.lake_tools import parquet_footer_stats
-
-    df = spark.createDataFrame(
-        [(1, 10), (2, None), (3, 30), (4, 40)], "a long, b long"
-    ).coalesce(1)
-    path = str(tmp_path / "t.parquet")
-    df.write.mode("overwrite").parquet(path)
-    import glob
-
-    part = glob.glob(path + "/part-*.parquet")[0]
-    out = {
-        r["column"]: r
-        for r in parquet_footer_stats(spark, part, ["a", "b"]).collect()
-    }
-    assert out["a"]["n_values"] == 4 and out["a"]["n_nulls"] == 0
-    assert out["a"]["min_val"] == 1 and out["a"]["max_val"] == 4
-    assert out["b"]["n_values"] == 3 and out["b"]["n_nulls"] == 1
-    assert out["b"]["min_val"] == 10 and out["b"]["max_val"] == 40
 
 
 def test_esd_removes_in_magnitude_order(spark):

@@ -196,14 +196,3 @@ def test_theil_u_known_table(spark):
     out = theil_u(ind, "r", "c").collect()[0]
     assert abs(out["u"] - 0.0) < 1e-9
     assert out["h_r"] > 0
-
-
-def test_streaming_sign_test_matches_batch(spark):
-    from operator_families.plans.registry import QUERIES
-
-    sf = "/root/testdata/sf0.001"
-    got = {tuple(r) for r in
-           QUERIES["streaming_sign_test"](spark, sf).collect()}
-    want = {tuple(r) for r in
-            QUERIES["stats_sign_test"](spark, sf).collect()}
-    assert got == want

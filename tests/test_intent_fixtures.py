@@ -1584,47 +1584,6 @@ def test_time_to_convert_intent(spark):
     assert out == {1: (1, 1, 50.0), 2: (1, 2, 100.0)}
 
 
-def test_point_in_time_join_intent(spark):
-    import datetime as dt
-
-    from operator_families.operators.pit import (
-        point_in_time_join,
-    )
-
-    t = lambda h: dt.datetime(2024, 1, 1, h, 0, 0)  # noqa: E731
-    dim = spark.createDataFrame(
-        [
-            # u1: [1,2) gold, gap, [5,7) silver
-            Row(k=1, state="gold", valid_from=t(1), valid_to=t(2)),
-            Row(k=1, state="silver", valid_from=t(5), valid_to=t(7)),
-            # u2: single open interval
-            Row(k=2, state="bronze", valid_from=t(3), valid_to=None),
-        ]
-    )
-    facts = spark.createDataFrame(
-        [
-            Row(k=1, fid=1, ts=t(0)),   # pre-history -> NULL
-            Row(k=1, fid=2, ts=t(1)),   # exactly at open -> gold
-            Row(k=1, fid=3, ts=t(2)),   # exactly at close -> gap -> NULL
-            Row(k=1, fid=4, ts=t(6)),   # inside second -> silver
-            Row(k=1, fid=5, ts=t(9)),   # after close -> NULL
-            Row(k=2, fid=6, ts=t(4)),   # open interval -> bronze
-        ]
-    )
-    out = {
-        r.fid: (r.state, None if r._pit_from is None else r._pit_from.hour)
-        for r in point_in_time_join(facts, dim, ["k"], "ts").collect()
-    }
-    assert out == {
-        1: (None, None),
-        2: ("gold", 1),
-        3: (None, None),
-        4: ("silver", 5),
-        5: (None, None),
-        6: ("bronze", 3),
-    }
-
-
 def test_period_decomposition_intent(spark):
     import datetime as dt
 
@@ -2018,55 +1977,6 @@ def test_association_rules_intent(spark):
 
     with _pytest.raises(ValueError):
         association_rules(df, "basket", "item", min_confidence=0.0)
-
-
-def test_scd2_merge_equals_full_rebuild(spark):
-    import datetime as dt
-
-    from operator_families.operators.scd2 import scd2_merge
-
-    t = lambda h: dt.datetime(2024, 1, 1, h)  # noqa: E731
-    # full change stream: u1 has 3 changes (one arriving LATE in the
-    # batch, timestamped between two existing ones), u2 untouched
-    dim_changes = [
-        Row(user_id=1, state="a", ts=t(1), change_id=1),
-        Row(user_id=1, state="c", ts=t(5), change_id=2),
-        Row(user_id=2, state="x", ts=t(2), change_id=3),
-    ]
-    batch_rows = [
-        Row(user_id=1, state="b", ts=t(3), change_id=4),  # late arrival
-        Row(user_id=1, state="d", ts=t(7), change_id=5),
-    ]
-
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    def build(rows):
-        df = spark.createDataFrame(rows)
-        w = Window.partitionBy("user_id").orderBy("ts", "change_id")
-        nxt = F.lead("ts").over(w)
-        return df.select(
-            "user_id",
-            "state",
-            F.col("ts").alias("valid_from"),
-            nxt.alias("valid_to"),
-            nxt.isNull().alias("is_current"),
-            "change_id",
-        )
-
-    dim0 = build(dim_changes)
-    batch = spark.createDataFrame(batch_rows)
-    merged = scd2_merge(dim0, batch, "user_id").collect()
-    full = build(dim_changes + batch_rows).collect()
-    key = lambda r: (r.user_id, r.change_id)  # noqa: E731
-    assert sorted(map(tuple, merged), key=lambda x: (x[0], x[5])) == sorted(
-        map(tuple, full), key=lambda x: (x[0], x[5])
-    )
-    # the late row split u1's (a -> c) interval: a now closes at t(3)
-    m = {key(r): r for r in merged}
-    assert m[(1, 1)].valid_to.hour == 3
-    assert m[(1, 4)].valid_to.hour == 5
-    assert m[(1, 5)].is_current
 
 
 def test_lsh_recall_composition_intent(spark):

@@ -844,32 +844,6 @@ def test_trailing_anomalies_cold_start_and_flag(spark):
     assert [(r["event_id"], r["trailing_mean"]) for r in got] == [(9, 1.0)]
 
 
-def test_apply_cdc_log_delete_and_latest(spark):
-    import datetime as dt
-
-    from operator_families.operators.cdc import apply_cdc_log
-
-    t0 = dt.datetime(2024, 1, 1)
-    rows = [
-        Row(user_id=1, ts=t0, event_id=1, op="I", value=1.0),
-        Row(user_id=1, ts=t0 + dt.timedelta(1), event_id=2, op="U", value=2.0),
-        Row(user_id=2, ts=t0, event_id=3, op="I", value=3.0),
-        Row(user_id=2, ts=t0 + dt.timedelta(1), event_id=4, op="D", value=0.0),
-        Row(user_id=3, ts=t0, event_id=5, op="D", value=0.0),
-        Row(user_id=3, ts=t0, event_id=6, op="I", value=6.0),  # same ts, seq wins
-    ]
-    df = spark.createDataFrame(rows)
-    out = {
-        r["user_id"]: r
-        for r in apply_cdc_log(
-            df, ["user_id"], "ts", "event_id", payload_cols=["value"]
-        ).collect()
-    }
-    assert out[1]["value"] == 2.0 and out[1]["op"] == "U"
-    assert 2 not in out            # deleted
-    assert out[3]["value"] == 6.0  # higher seq at equal ts wins
-
-
 def test_pagerank_deterministic_and_sensible(spark):
     """Hub node outranks leaves; result invariant under repartitioning;
     per-node mass stays within [teleport, total]."""
@@ -985,20 +959,6 @@ def test_plan_audio_chunks_windows(spark):
         )
     assert out[0] == [(0, 0, 30000), (1, 25000, 55000), (2, 50000, 70000)]
     assert out[1] == [(0, 0, 400)]  # short clip: one clamped chunk
-
-
-def test_key_skew_profile_orders_and_shares(spark):
-    from operator_families.operators.skew import (
-        key_skew_profile,
-    )
-
-    rows = [Row(k="hot")] * 70 + [Row(k="warm")] * 20 + [Row(k="cold")] * 10
-    df = spark.createDataFrame(rows)
-    out = key_skew_profile(df, ["k"], topk=2).collect()
-    assert [(r["k"], r["n_rows"], r["rank"]) for r in out] == [
-        ("hot", 70, 1), ("warm", 20, 2)
-    ]
-    assert out[0]["share"] == 0.7
 
 
 def test_shard_assignment_stable_and_balanced(spark):

@@ -98,11 +98,42 @@ def test_first_run_on_empty_lake(lake):
     assert snap.csv(snapshot).count() == stats["clean_total"]
 
 
+def _lake_files(root) -> dict[str, float]:
+    return {
+        path: os.path.getmtime(path)
+        for path in glob.glob(f"{root}/**", recursive=True)
+    }
+
+
 def test_payload_of_falsy_ids_stops_before_load(lake):
+    """A payload without a truthy id writes nothing and returns what the
+    untouched lake holds, in the shape of every other run's result."""
     records = [{"id": None, "type": "DISRUPTION"}, {"id": "", "type": "CALAMITY"},
                {"type": "MAINTENANCE"}]
-    assert lake.run(records, RUN1) == {"raw_total": 0, "clean_total": 0}
+    # First run: every zone reads empty.  The report is run_report's on a
+    # day without rows: a count of 0 and NULL for every other aggregate.
+    assert lake.run(records, RUN1) == {
+        "raw_total": 0,
+        "clean_total": 0,
+        "daily_stats_total": 0,
+        "report": {
+            "total_records": 0,
+            "disruptions": None,
+            "maintenance": None,
+            "calamities": None,
+            "avg_duration_minutes": None,
+            "max_impact_level": None,
+        },
+    }
     assert glob.glob(f"{lake.root}/*") == []
+    # After day 1: the totals and the report of the lake that run left.
+    day1 = lake.run(lake.batch(DAY1), RUN1)
+    files = _lake_files(lake.root)
+    rerun_ts = RUN1 + dt.timedelta(hours=1)
+    stats = lake.run(records, rerun_ts)
+    lake.check(stats, rerun_ts)
+    assert stats == {k: v for k, v in day1.items() if k != "artifacts"}
+    assert _lake_files(lake.root) == files
 
 
 def test_rerun_of_same_payload(lake):

@@ -1,5 +1,5 @@
-"""Unit tests for the r11 raster codecs (Netpbm, QOI) and the
-streaming MCC / log-loss twins."""
+"""Unit tests for the r11 raster codecs (Netpbm, QOI, TGA) and systematic
+sampling."""
 
 from __future__ import annotations
 
@@ -89,25 +89,6 @@ def test_qoi_encoder_emits_compact_ops():
     assert _qoi_decode(b[:-1] + b"\x02") is None
 
 
-def test_streaming_twins_match_batch(spark):
-    """streaming_mcc / streaming_log_loss drain to the IDENTICAL rows
-    as their batch twins at sf0.001 — the shared-close contract."""
-    from operator_families.plans.registry import QUERIES
-
-    sf = "/root/testdata/sf0.001"
-    for s_name, b_name in [
-        ("streaming_mcc", "ml_mcc"),
-        ("streaming_log_loss", "ml_log_loss"),
-    ]:
-        got = {
-            tuple(r) for r in QUERIES[s_name](spark, sf).collect()
-        }
-        want = {
-            tuple(r) for r in QUERIES[b_name](spark, sf).collect()
-        }
-        assert got == want, s_name
-
-
 def test_tga_orientations_and_rle():
     """Bottom-up and top-down storage decode to the same top-down
     stats; RLE and raw streams agree; truncation quarantines."""
@@ -127,21 +108,6 @@ def test_tga_orientations_and_rle():
     rle = tga_encode(3, 10, 10)     # odd: RLE (different doc formula,
     assert len(rle) < 18 + 100 * 3 + 100  # but runs must win overall)
     assert _tga_decode(tga_encode(0, 6, 4)[:12]) is None
-
-
-def test_streaming_esd_and_cramers_match_batch(spark):
-    """The two newest twins drain to identical rows as their batch
-    gates at sf0.001."""
-    from operator_families.plans.registry import QUERIES
-
-    sf = "/root/testdata/sf0.001"
-    for s_name, b_name in [
-        ("streaming_cramers_v", "stats_cramers_v"),
-        ("streaming_anomaly_esd", "events_anomaly_esd"),
-    ]:
-        got = {tuple(r) for r in QUERIES[s_name](spark, sf).collect()}
-        want = {tuple(r) for r in QUERIES[b_name](spark, sf).collect()}
-        assert got == want, s_name
 
 
 def test_systematic_sampling_even_spacing(spark):

@@ -13,7 +13,6 @@ from nl_railtraffic_etl_pipeline_spark.sources.lake import (
     write_csv_snapshot,
     write_raw_archive,
 )
-from operator_families.sources.lake_tools import read_jsonl
 
 PAYLOAD = "/root/reference/data/raw/disruptions_20260214_111810.json"
 RUN_TS = dt.datetime(2026, 2, 14, 11, 18, 10)
@@ -137,49 +136,6 @@ def test_csv_snapshot_utf8_sig_bom(spark, tmp_path):
     assert back.count() == 1
 
 
-def test_read_jsonl_permissive(spark, tmp_path):
-    p = tmp_path / "x.jsonl"
-    p.write_text(
-        '{"id": "a", "title": "Works at Amsterdam"}\n'
-        '{"id": "b", "type": "MAINTENANCE"}\n'
-        "{not json at all\n"  # malformed -> _corrupt_record, not a failure
-    )
-    df = read_jsonl(spark, str(p))
-    rows = df.collect()
-    assert len(rows) == 3
-    ok = {r.id for r in rows if r.id is not None}
-    assert ok == {"a", "b"}
-    corrupt = [r for r in rows if r._corrupt_record is not None]
-    assert len(corrupt) == 1  # Glue ignore.malformed.json equivalence
-
-
-def test_bucketed_tables_join_without_shuffle(spark, tmp_path):
-    from operator_families.sources.lake_tools import write_bucketed
-
-    a = spark.range(10_000).select(
-        F.col("id").alias("k"), (F.col("id") * 2).alias("va")
-    )
-    b = spark.range(10_000).select(
-        F.col("id").alias("k"), (F.col("id") * 3).alias("vb")
-    )
-    write_bucketed(a, "bkt_a", ["k"], 8, path=str(tmp_path / "a"))
-    write_bucketed(b, "bkt_b", ["k"], 8, path=str(tmp_path / "b"))
-    old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        joined = spark.table("bkt_a").join(spark.table("bkt_b"), "k")
-        plan = joined._sc._jvm.PythonSQLUtils.explainString(
-            joined._jdf.queryExecution(), "simple"
-        )
-        # co-located: bucket i zips with bucket i — no shuffle, no sort
-        assert "Exchange" not in plan, plan
-        assert joined.count() == 10_000
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
-        spark.sql("DROP TABLE IF EXISTS bkt_a")
-        spark.sql("DROP TABLE IF EXISTS bkt_b")
-
-
 def test_python_datasource_raw_zone(spark):
     from nl_railtraffic_etl_pipeline_spark.schemas import RAW_DISRUPTION
     from nl_railtraffic_etl_pipeline_spark.sources import rest_datasource
@@ -244,34 +200,3 @@ def test_rest_source_aborts_on_auth(monkeypatch):
     with pytest.raises(RuntimeError):
         rest_source.fetch_disruptions("key", max_retries=3)
     assert len(calls) == 1  # 401 short-circuits, no retries
-
-
-def test_compact_partitions_reduces_files_preserves_data(spark, tmp_path):
-    """Compaction must leave exactly files_per_partition data files per
-    partition directory, preserve every row, and remove the staging dir
-    (atomic swap)."""
-    import os
-
-    from operator_families.sources.lake_tools import compact_partitions
-
-    path = str(tmp_path / "zone")
-    df = spark.createDataFrame(
-        [(i, f"d{i % 3}", float(i)) for i in range(300)],
-        "id bigint, day string, v double",
-    )
-    # simulate many small append files: 8 tasks per partition value
-    df.repartition(8).write.partitionBy("day").parquet(path)
-    before_expected = sum(
-        1
-        for root, _, files in os.walk(path)
-        for f in files
-        if f.endswith(".parquet") and not f.startswith((".", "_"))
-    )
-    before, after = compact_partitions(spark, path, ["day"])
-    assert before == before_expected and before > 3
-    assert after == 3  # one file per day value
-    assert not os.path.exists(path + "__compact_stage")
-    got = spark.read.parquet(path).select("id", "day", "v")
-    ref = df.select("id", "day", "v")
-    assert got.count() == 300
-    assert got.exceptAll(ref).count() == 0 and ref.exceptAll(got).count() == 0
