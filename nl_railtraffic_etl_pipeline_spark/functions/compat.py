@@ -1,10 +1,10 @@
 """Dialect shims: SQLite/Postgres expression semantics as Spark columns.
 
-The DataFrame roll-up (``operators/rollup.py``) needs three of the
-reference's SQLite constructs: the ``%H`` hour, an exact AVG and the CSV
-station unnest.  These helpers build them from native Spark expressions
-(JVM whole-stage codegen — no UDFs).  The Q1-Q6 text in
-``plans/sql_queries.py`` spells the same constructs in SQL.
+The DataFrame roll-ups (``operators/rollup.py``) need two of the
+reference's SQLite constructs: the ``%H`` hour and an exact AVG.  These
+helpers build them from native Spark expressions (JVM whole-stage codegen —
+no UDFs).  The Q1-Q6 text in ``plans/sql_queries.py`` spells the same
+constructs in SQL.
 """
 
 from __future__ import annotations
@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-__all__ = ["hour_bucket", "exact_avg", "csv_unnest"]
+__all__ = ["hour_bucket", "exact_avg"]
 
 
 def hour_bucket(ts: Column) -> Column:
@@ -34,14 +34,3 @@ def exact_avg(col: Column) -> Column:
     d = col.cast("decimal(24,6)")
     return F.sum(d).cast("double") / F.count(d)
 
-
-def csv_unnest(csv: Column) -> Column:
-    """The reference's ``json_each('["' || REPLACE(csv,',','","') || '"]')``
-    CSV-to-rows unnest (aggregators.py:73-77), as an explode-able array.
-
-    Matches its semantics exactly: ``split`` on an empty string yields a
-    single empty-string element (the json_each wrapping produces the same),
-    and NULL input produces no rows only because callers guard with
-    ``IS NOT NULL`` — exactly as the reference does.
-    """
-    return F.explode(F.split(csv, ","))

@@ -7,7 +7,9 @@ obvious builder.  The run report mirrors ``ETLPipeline._generate_report``
 
 Mode-style picks (most_affected_station, peak_hour) are
 ``mode(..., deterministic=True)`` aggregates, which break ties towards the
-lowest value — deterministic at any parallelism.  The report is a list of
+lowest value — deterministic at any parallelism.  Both outputs are one
+aggregation each: ``daily_stats`` is one ``groupBy`` over the exploded
+station rows (one shuffle, no join), and the report is a list of
 conditional aggregates with no filter, so the pipeline can observe it on
 the clean-zone write instead of scanning the zone again.
 """
@@ -19,7 +21,7 @@ import datetime as _dt
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.compat import csv_unnest, exact_avg, hour_bucket
+from ..functions.compat import exact_avg, hour_bucket
 
 
 def build_daily_stats(
@@ -28,47 +30,42 @@ def build_daily_stats(
     """Roll ``disruptions`` up to one row per DATE(start_time).
 
     Columns per schema.sql:48-57; most_affected_station is the modal station
-    among that day's exploded ``affected_stations`` (ties -> lexicographically
+    among that day's ``affected_stations`` elements (ties -> lexicographically
     first code; a day with no station lists gets NULL), peak_hour the modal
     hour (ties -> earliest hour: the zero-padded 'HH' bucket orders
     lexically as numerically).
+
+    One aggregation over one scan: each disruption is exploded into one row
+    per station element, as the reference's ``json_each`` unnest
+    (aggregators.py:73-77) does — ``''`` yields one ``''`` element, ``',X'``
+    yields ``''`` and ``'X'`` — and ``posexplode_outer`` keeps a NULL list
+    as one row with a NULL position and station.  The per-disruption
+    aggregates (count, cancellations, average, peak hour) read only each
+    disruption's first row (position NULL or 0); the maximum and the modal
+    station read every row, since repeats cannot move a maximum and a
+    ``mode`` skips NULL stations.
     """
     run_ts = run_ts or _dt.datetime.now(_dt.timezone.utc)
-    base = disruptions.filter(F.col("start_time").isNotNull()).withColumn(
-        "date", F.to_date("start_time")
+    rows = disruptions.filter(F.col("start_time").isNotNull()).select(
+        F.to_date("start_time").alias("date"),
+        "type",
+        "duration_minutes",
+        "start_time",
+        F.posexplode_outer(F.split("affected_stations", ",")).alias("pos", "station"),
     )
-
-    core = base.groupBy("date").agg(
-        F.count("*").cast("int").alias("total_disruptions"),
-        F.sum(F.when(F.col("type") == "cancellation", 1).otherwise(0))
+    first = F.col("pos").isNull() | (F.col("pos") == 0)
+    return rows.groupBy("date").agg(
+        F.count(F.when(first, 1)).cast("int").alias("total_disruptions"),
+        F.sum(F.when(first & (F.col("type") == "cancellation"), 1).otherwise(0))
         .cast("int")
         .alias("total_cancellations"),
-        exact_avg(F.col("duration_minutes")).alias("avg_duration_minutes"),
+        exact_avg(F.when(first, F.col("duration_minutes"))).alias("avg_duration_minutes"),
         F.max("duration_minutes").cast("int").alias("max_duration_minutes"),
-        F.mode(hour_bucket(F.col("start_time")), deterministic=True)
+        F.mode("station", deterministic=True).alias("most_affected_station"),
+        F.mode(F.when(first, hour_bucket(F.col("start_time"))), deterministic=True)
         .cast("int")
         .alias("peak_hour"),
-    )
-    stations = (
-        base.filter(F.col("affected_stations").isNotNull())
-        .select("date", csv_unnest(F.col("affected_stations")).alias("station"))
-        .groupBy("date")
-        .agg(F.mode("station", deterministic=True).alias("most_affected_station"))
-    )
-
-    return (
-        core.join(stations, "date", "left")
-        .withColumn("calculated_at", F.lit(run_ts))
-        .select(
-            "date",
-            "total_disruptions",
-            "total_cancellations",
-            "avg_duration_minutes",
-            "max_duration_minutes",
-            "most_affected_station",
-            "peak_hour",
-            "calculated_at",
-        )
+        F.lit(run_ts).alias("calculated_at"),
     )
 
 

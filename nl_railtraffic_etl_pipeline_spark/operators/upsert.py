@@ -58,7 +58,7 @@ def insert_ignore(
     already key-unique.
     """
     new_rows = dedup_batch(batch, keys, order_col).join(
-        existing.select(*keys).distinct(), list(keys), "left_anti"
+        existing.select(*keys), list(keys), "left_anti"
     )
     return existing.unionByName(new_rows)
 

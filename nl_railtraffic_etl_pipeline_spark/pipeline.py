@@ -3,7 +3,7 @@
 Mirrors the reference's four stages (pipeline.py:52-79) with DataFrames as
 the only IR (SURVEY §3.1):
 
-    extract   archived payload / live fetch -> raw DataFrame, checkpointed
+    extract   payload read on the driver -> raw DataFrame, checkpointed
     transform the reference's 6 cleaning steps as one projection
               (functions/cleaning.py)
     load      idempotent upserts into a parquet lake (operators/upsert.py)
@@ -15,6 +15,12 @@ After the extract a run has ONE sink phase: the station seed, the load and
 the per-run artifacts touch disjoint paths, so they run at once.  The load
 stages every zone it rewrites next to the live one and publishes them only
 after every stage write has succeeded.
+
+The extract's checkpoint is the one Spark job a run spends before that
+phase, and it stays: the sinks share the extracted frame, and without the
+checkpoint the optimizer folds the cleaner's projection over the in-memory
+payload on the driver, once per concurrent sink, and those concurrent folds
+corrupted station lists (``extract``).
 
 The lake layout is the reference warehouse's four tables
 (reference ``src/storage/schema.sql:7-57``) as parquet zones:
@@ -33,9 +39,11 @@ overwrite them with the bare batch).
 from __future__ import annotations
 
 import datetime as _dt
+import json
 import logging
 from concurrent.futures import Future, ThreadPoolExecutor, wait
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -50,7 +58,6 @@ from .sources.lake import (
     write_csv_snapshot,
     write_raw_archive,
 )
-from .sources.rest_datasource import register as register_rest_source
 
 logger = logging.getLogger(__name__)
 
@@ -94,26 +101,47 @@ class SparkETLPipeline:
         return fs.exists(hpath)
 
     # -- stage 1: extract ---------------------------------------------------
-    def extract(self, payload_path: str) -> DataFrame:
-        """Payload -> parsed frame CARRYING the verbatim record string.
+    def extract(self, payload_path: str) -> DataFrame | None:
+        """Payload -> parsed frame CARRYING the verbatim record string, or
+        None when no record has an id.
 
-        The ``ns_disruptions`` DataSource yields each record exactly as the
-        reference's raw zone stores it (``json.dumps(item,
-        ensure_ascii=False)``, reference pipeline.py:151) plus the falsy-id
-        skip; the typed columns the cleaner consumes are a ``from_json``
-        over that same string with ``RAW_DISRUPTION``, which declares only
-        the fields the cleaner reads, so raw-zone archiving never
-        re-serializes and the parse skips every other key.
+        The payload is one bounded API response, so it is read on the
+        driver, as the reference's client does (api_client.py:63).  Each
+        record keeps the string the reference's raw zone stores
+        (``json.dumps(item, ensure_ascii=False)``, reference
+        pipeline.py:151), after the falsy-id skip (pipeline.py:147-149);
+        the typed columns the cleaner consumes are a ``from_json`` over that
+        same string with ``RAW_DISRUPTION``, which declares only the fields
+        the cleaner reads, so raw-zone archiving never re-serializes.
+
+        The frame is checkpointed: it feeds the raw-zone merge, the
+        clean-zone merge and the archive writer, which run as concurrent
+        actions.  Over the bare in-memory relation the optimizer would fold
+        the cleaner's projection on the driver once per action
+        (``ConvertToLocalRelation``), and those concurrent folds of its
+        higher-order functions gave one record another record's station
+        list; over the checkpoint each action scans plain rows.
         """
-        register_rest_source(self.spark)
-        rows = (
-            self.spark.read.format("ns_disruptions")
-            .option("payload_path", payload_path)
-            .load()
+        with open(payload_path, encoding="utf-8") as fh:
+            records = json.load(fh)
+        ids, raw_json = [], []
+        for rec in records:
+            rid = rec.get("id")
+            if rid in (None, ""):
+                continue
+            ids.append(str(rid))
+            raw_json.append(json.dumps(rec, ensure_ascii=False))
+        if not ids:
+            return None
+        rows = self.spark.createDataFrame(pa.table({"id": ids, "raw_json": raw_json}))
+        parsed = F.from_json("raw_json", RAW_DISRUPTION).alias("_rec")
+        fields = [f"_rec.{name}" for name in RAW_DISRUPTION.fieldNames() if name != "id"]
+        return (
+            rows.select("id", "raw_json", parsed)
+            .select("id", "raw_json", *fields)
+            .coalesce(1)
+            .localCheckpoint(eager=True)
         )
-        return rows.select(
-            "raw_json", F.from_json("raw_json", RAW_DISRUPTION).alias("_rec")
-        ).select("raw_json", "_rec.*")
 
     # -- stage 2: transform -------------------------------------------------
     def transform(self, raw: DataFrame, run_ts: _dt.datetime) -> DataFrame:
@@ -303,21 +331,12 @@ class SparkETLPipeline:
         artifacts: bool = True,
     ) -> dict:
         run_ts = run_ts or _dt.datetime.now(_dt.timezone.utc)
-        # Materialize the extract ONCE: the parsed payload feeds the
-        # emptiness probe, the raw-zone merge, the clean-zone merge and
-        # (with artifacts) the archive writer — each a separate action
-        # that would otherwise re-execute the single-partition Python
-        # data source end to end (guide §5: cut lineage of a reused
-        # intermediate; the payload is one bounded HTTP response, so the
-        # checkpoint is metadata-sized by construction).  The emptiness
-        # probe RIDES the checkpoint action as an observe metric — the
-        # separate isEmpty() job it replaces was one more full scheduling
-        # round-trip per run.
-        obs = Observation()
-        raw = self.extract(payload_path).observe(
-            obs, F.count(F.lit(1)).alias("rows")
-        ).localCheckpoint(eager=True)
-        if (obs.get["rows"] or 0) == 0:
+        # The extract is one checkpoint job, and it must stay one: the sinks
+        # below read it concurrently, and over the bare in-memory payload
+        # their concurrent driver-side folds mixed up station lists (see
+        # ``extract``).  Its emptiness is known on the driver, no job.
+        raw = self.extract(payload_path)
+        if raw is None:
             logger.warning("no data extracted; stopping run")
             return self._lake_totals(run_ts)
         cleaned = self.transform(raw, run_ts)

@@ -21,6 +21,14 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def _driver_memory() -> str:
+    """A quarter of physical memory, at least 1g: the local-mode driver is
+    the whole engine, and a heap larger than the machine fails to commit
+    once a second JVM runs beside it."""
+    physical_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{max(1024, physical_mb // 4)}m"
+
+
 def get_spark(
     app_name: str = "nl_railtraffic_etl_pipeline_spark",
     master: str | None = None,
@@ -45,7 +53,7 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "90g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", _driver_memory()))
     )
     if master is not None:
         builder = builder.master(master)

@@ -42,8 +42,8 @@ def write_raw_archive(df: DataFrame, path: str, run_ts: _dt.datetime) -> None:
 
     Keeps one ``raw_json`` string column per record alongside the ingest
     timestamp; the Athena/Glue external table reads this same archive.
-    When the frame already carries ``raw_json`` (the raw-zone shape the
-    ``ns_disruptions`` DataSource yields) the string is archived
+    When the frame already carries ``raw_json`` (the raw-zone shape
+    ``SparkETLPipeline.extract`` yields) the string is archived
     BYTE-VERBATIM — the reference's archive contract
     (api_client.py:105-110); parsed-only frames fall back to a canonical
     ``to_json`` re-serialization of their declared fields.

@@ -98,6 +98,23 @@ def test_first_run_on_empty_lake(lake):
     assert snap.csv(snapshot).count() == stats["clean_total"]
 
 
+def test_first_run_of_month_history_reads_checkpointed_extract(spark, tmp_path):
+    """The sinks read the extract from its checkpoint, never from the
+    in-memory payload relation: over that relation the optimizer folds the
+    cleaner's projection on the driver once per concurrent sink, and those
+    folds gave one record another record's station list.  A month of
+    history in one first run must land exactly as the fold says."""
+    lake = GeneratedLake(spark, tmp_path, seed=2)
+    records = lake.gen.history(DAY1, 30, 150)
+    path = str(tmp_path / "history.json")
+    write_payload(records, path)
+    cleaned = lake.pipeline.transform(lake.pipeline.extract(path), RUN1)
+    plan = cleaned._jdf.queryExecution().optimizedPlan().toString()
+    assert "LocalRelation" not in plan
+    stats = lake.run(records, RUN1)
+    lake.check(stats, RUN1)
+
+
 def _lake_files(root) -> dict[str, float]:
     return {
         path: os.path.getmtime(path)

@@ -1,11 +1,16 @@
-"""Lake writers (S2-S5) and the REST source's retry policy."""
+"""The extract (S1), the lake writers (S2-S5) and the REST source's retry
+policy."""
 
 import datetime as dt
+import json
 import os
 
 import pytest
+from payloads import PayloadGenerator, write_payload
 from pyspark.sql import functions as F
 
+from nl_railtraffic_etl_pipeline_spark.pipeline import SparkETLPipeline
+from nl_railtraffic_etl_pipeline_spark.schemas import RAW_DISRUPTION
 from nl_railtraffic_etl_pipeline_spark.sources import rest_source
 from nl_railtraffic_etl_pipeline_spark.sources.json_source import read_payload
 from nl_railtraffic_etl_pipeline_spark.sources.lake import (
@@ -94,19 +99,7 @@ def test_raw_archive_verbatim_record_bytes(spark, tmp_path):
     """S2 fidelity: a raw-zone frame's record string survives the archive
     BYTE-identically (the reference stores json.dumps(item,
     ensure_ascii=False) untouched — reference pipeline.py:151)."""
-    import json
-
-    from nl_railtraffic_etl_pipeline_spark.sources.rest_datasource import (
-        register,
-    )
-
-    register(spark)
-    rows = (
-        spark.read.format("ns_disruptions")
-        .option("payload_path", PAYLOAD)
-        .option("fetched_at", RUN_TS.isoformat())
-        .load()
-    )
+    rows = SparkETLPipeline(spark, str(tmp_path / "lake")).extract(PAYLOAD)
     path = str(tmp_path / "archive")
     write_raw_archive(rows, path, RUN_TS)
 
@@ -136,24 +129,65 @@ def test_csv_snapshot_utf8_sig_bom(spark, tmp_path):
     assert back.count() == 1
 
 
-def test_python_datasource_raw_zone(spark):
-    from nl_railtraffic_etl_pipeline_spark.schemas import RAW_DISRUPTION
-    from nl_railtraffic_etl_pipeline_spark.sources import rest_datasource
-
-    rest_datasource.register(spark)
-    df = (
-        spark.read.format("ns_disruptions")
-        .option("payload_path", PAYLOAD)
-        .option("fetched_at", "2026-02-14T11:18:10")
-        .load()
-    )
-    assert df.schema.simpleString() == (
-        "struct<id:string,raw_json:string,fetched_at:timestamp>"
-    )
+def test_extract_raw_zone(spark, tmp_path):
+    df = SparkETLPipeline(spark, str(tmp_path / "lake")).extract(PAYLOAD)
     assert df.count() == 125
     # raw_json round-trips through the nested schema the cleaner consumes
     parsed = df.select(F.from_json("raw_json", RAW_DISRUPTION).alias("r"))
     assert parsed.filter(F.col("r.id").isNull()).count() == 0
+
+
+def _generated_payload(tmp_path, seed):
+    """A generated batch with every falsy-id form added: ``None``, ``""``
+    and a missing key."""
+    records = PayloadGenerator(seed).batch(150, [RUN_TS.date()], [], falsy=3)
+    records += [{"id": None, "type": "DISRUPTION"}, {"id": "", "type": "CALAMITY"},
+                {"type": "MAINTENANCE", "title": "Geen id – café"}]
+    path = str(tmp_path / f"payload{seed}.json")
+    write_payload(records, path)
+    return records, path
+
+
+def _verbatim(records) -> dict[str, str]:
+    """id -> the raw zone's record string, after the falsy-id skip."""
+    return {
+        str(r["id"]): json.dumps(r, ensure_ascii=False)
+        for r in records if r.get("id") not in (None, "")
+    }
+
+
+@pytest.mark.parametrize("seed", [1, 2])
+def test_extract_generated_payload_verbatim(spark, tmp_path, seed):
+    """Every record with an id is extracted once, its ``raw_json`` the
+    record's ``json.dumps(..., ensure_ascii=False)`` byte for byte; the
+    falsy ids are skipped, and a payload of only falsy ids extracts
+    nothing."""
+    records, path = _generated_payload(tmp_path, seed)
+    pipeline = SparkETLPipeline(spark, str(tmp_path / "lake"))
+    df = pipeline.extract(path)
+    want = _verbatim(records)
+    assert len(want) == 150 < len(records)
+    got = {r.id: r.raw_json for r in df.select("id", "raw_json").collect()}
+    assert df.count() == len(got) == len(want)
+    assert got == want
+    # the descriptions' non-ASCII text is kept as characters, not escapes
+    assert all("Café" in raw and "\\u" not in raw for raw in got.values())
+    falsy = [r for r in records if r.get("id") in (None, "")]
+    falsy_path = str(tmp_path / "falsy.json")
+    write_payload(falsy, falsy_path)
+    assert pipeline.extract(falsy_path) is None
+
+
+def test_raw_archive_generated_payload_verbatim(spark, tmp_path):
+    """The archive of a generated payload holds every extracted record
+    string byte-identically, under the run's day."""
+    records, path = _generated_payload(tmp_path, 3)
+    rows = SparkETLPipeline(spark, str(tmp_path / "lake")).extract(path)
+    archive = str(tmp_path / "archive")
+    write_raw_archive(rows, archive, RUN_TS)
+    back = spark.read.json(archive).filter(F.col("day") == RUN_TS.day)
+    archived = [r.raw_json for r in back.select("raw_json").collect()]
+    assert sorted(archived) == sorted(_verbatim(records).values())
 
 
 class _FakeResp:
