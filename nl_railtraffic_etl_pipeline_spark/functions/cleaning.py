@@ -10,13 +10,13 @@ column-presence guards carry over: ``clean`` is one filter and one
 of this module.
 
 Determinism: the reference leaks wall-clock ``now()`` into the data (end-time
-imputation, created/updated stamps).  Here ``run_ts`` is an injected
-parameter so runs are reproducible (SURVEY §7.3.3).
+imputation, created/updated stamps).  Here the run stamp is the input's
+``fetched_at`` column, set once by the extract, so runs are reproducible
+(SURVEY §7.3.3); being data, not a literal, it leaves the generated code
+the same from one run to the next.
 """
 
 from __future__ import annotations
-
-import datetime as _dt
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -136,15 +136,16 @@ def _stations_col(title: Column) -> Column:
     return F.when(F.length(csv) > 0, csv)
 
 
-def clean(df: DataFrame, run_ts: _dt.datetime) -> DataFrame:
-    """Raw payload frame (``RAW_DISRUPTION`` columns) -> warehouse frame.
+def clean(df: DataFrame) -> DataFrame:
+    """Raw payload frame (``RAW_DISRUPTION`` columns plus the run stamp
+    ``fetched_at``) -> warehouse frame.
 
     Step 2 (cleaners.py:86-107) parses both timestamps to UTC and imputes
-    an unparseable or missing end as ``run_ts`` + 2 h; step 6
+    an unparseable or missing end as ``fetched_at`` + 2 h; step 6
     (cleaners.py:231-266) drops null ids, stamps the run and projects the
     12 ``CLEAN_DISRUPTION`` columns.
     """
-    kind, title, stamp = _type_col(), _title_col(), F.lit(run_ts)
+    kind, title, stamp = _type_col(), _title_col(), F.col("fetched_at")
     start = _parse_ts(F.col("start"))
     end = F.coalesce(_parse_ts(F.col("end")), stamp + F.expr("INTERVAL 2 HOURS"))
     duration = _duration_col(start, end)

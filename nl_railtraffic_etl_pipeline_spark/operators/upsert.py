@@ -45,19 +45,15 @@ def dedup_batch(
 
 
 def insert_ignore(
-    existing: DataFrame,
-    batch: DataFrame,
-    keys: Sequence[str],
-    order_col: str | None = None,
+    existing: DataFrame, batch: DataFrame, keys: Sequence[str]
 ) -> DataFrame:
     """``INSERT OR IGNORE`` semantics: existing rows win, new keys append.
 
-    ``order_col`` picks the deterministic within-batch survivor among rows
-    sharing a key (see ``dedup_batch``); without it the survivor is
-    engine-arbitrary, which is fine only for callers whose batches are
-    already key-unique.
+    Among batch rows sharing a key the survivor is engine-arbitrary, so
+    the pipeline hands in key-unique batches: the extract keeps one record
+    per id and the station seed one row per code.
     """
-    new_rows = dedup_batch(batch, keys, order_col).join(
+    new_rows = dedup_batch(batch, keys).join(
         existing.select(*keys), list(keys), "left_anti"
     )
     return existing.unionByName(new_rows)

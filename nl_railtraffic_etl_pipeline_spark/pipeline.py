@@ -101,9 +101,9 @@ class SparkETLPipeline:
         return fs.exists(hpath)
 
     # -- stage 1: extract ---------------------------------------------------
-    def extract(self, payload_path: str) -> DataFrame | None:
-        """Payload -> parsed frame CARRYING the verbatim record string, or
-        None when no record has an id.
+    def extract(self, payload_path: str, run_ts: _dt.datetime) -> DataFrame | None:
+        """Payload -> parsed frame CARRYING the verbatim record string and
+        the run stamp, or None when no record has an id.
 
         The payload is one bounded API response, so it is read on the
         driver, as the reference's client does (api_client.py:63).  Each
@@ -113,6 +113,15 @@ class SparkETLPipeline:
         the typed columns the cleaner consumes are a ``from_json`` over that
         same string with ``RAW_DISRUPTION``, which declares only the fields
         the cleaner reads, so raw-zone archiving never re-serializes.
+
+        An id the payload repeats keeps ONE record, the one with the
+        greatest record string, so the raw zone, the clean zone and the
+        archive all hold the same survivor whatever the payload order.
+
+        ``run_ts`` travels as the ``fetched_at`` column (a naive value is
+        read as UTC), not as a literal in later plans: a literal is inlined
+        into the generated code, so every run with a new stamp would
+        compile its classes afresh.
 
         The frame is checkpointed: it feeds the raw-zone merge, the
         clean-zone merge and the archive writer, which run as concurrent
@@ -124,28 +133,41 @@ class SparkETLPipeline:
         """
         with open(payload_path, encoding="utf-8") as fh:
             records = json.load(fh)
-        ids, raw_json = [], []
+        latest: dict[str, str] = {}
         for rec in records:
             rid = rec.get("id")
             if rid in (None, ""):
                 continue
-            ids.append(str(rid))
-            raw_json.append(json.dumps(rec, ensure_ascii=False))
-        if not ids:
+            raw_json = json.dumps(rec, ensure_ascii=False)
+            # str order is code point order, which is the UTF-8 byte order
+            # Spark compares strings in.
+            if raw_json > latest.get(str(rid), ""):
+                latest[str(rid)] = raw_json
+        if not latest:
             return None
-        rows = self.spark.createDataFrame(pa.table({"id": ids, "raw_json": raw_json}))
+        stamp = pa.scalar(run_ts, pa.timestamp("us", tz="UTC"))
+        rows = self.spark.createDataFrame(
+            pa.table({
+                "id": list(latest),
+                "raw_json": list(latest.values()),
+                "fetched_at": pa.repeat(stamp, len(latest)),
+            })
+        )
         parsed = F.from_json("raw_json", RAW_DISRUPTION).alias("_rec")
         fields = [f"_rec.{name}" for name in RAW_DISRUPTION.fieldNames() if name != "id"]
         return (
-            rows.select("id", "raw_json", parsed)
-            .select("id", "raw_json", *fields)
+            rows.select("id", "raw_json", "fetched_at", parsed)
+            .select("id", "raw_json", "fetched_at", *fields)
             .coalesce(1)
             .localCheckpoint(eager=True)
         )
 
     # -- stage 2: transform -------------------------------------------------
     def transform(self, raw: DataFrame, run_ts: _dt.datetime) -> DataFrame:
-        return clean(raw, run_ts)
+        """``clean`` over the extract.  ``run_ts`` is already the extract's
+        ``fetched_at`` column; the parameter keeps the stage signature that
+        ``run`` calls and ``perfbench/run.py`` hooks."""
+        return clean(raw)
 
     def _recover_zone(self, name: str) -> None:
         """Finish an interrupted publish: a crash between delete and rename
@@ -177,16 +199,12 @@ class SparkETLPipeline:
         write as observed metrics, so it needs no read of its own.
         """
         raw_rows = raw.select(
-            F.col("id").alias("disruption_id"),
-            "raw_json",
-            F.lit(run_ts).alias("fetched_at"),
+            F.col("id").alias("disruption_id"), "raw_json", "fetched_at"
         )
         raw_existing = self._read_zone("raw_disruptions", raw_rows.schema)
-        # raw_json is the within-batch tiebreak: dropDuplicates alone would
-        # keep an arbitrary survivor, breaking raw-zone reproducibility.
-        merged_raw = insert_ignore(
-            raw_existing, raw_rows, ["disruption_id"], order_col="raw_json"
-        )
+        # The extract keeps one record per id, so the batch needs no
+        # within-batch tiebreak.
+        merged_raw = insert_ignore(raw_existing, raw_rows, ["disruption_id"])
         clean_existing = self._read_zone("disruptions", CLEAN_DISRUPTION)
         merged_clean = upsert_latest_wins(
             clean_existing, cleaned, ["disruption_id"], "updated_at"
@@ -315,7 +333,7 @@ class SparkETLPipeline:
             "archive_raw": f"{self.lake}/archive/raw",
             "csv_snapshot": f"{self.lake}/processed/cleaned_{stamp}",
         }
-        write_raw_archive(raw, paths["archive_raw"], run_ts)
+        write_raw_archive(raw, paths["archive_raw"])
         write_csv_snapshot(cleaned, paths["csv_snapshot"])
         return paths
 
@@ -335,7 +353,7 @@ class SparkETLPipeline:
         # below read it concurrently, and over the bare in-memory payload
         # their concurrent driver-side folds mixed up station lists (see
         # ``extract``).  Its emptiness is known on the driver, no job.
-        raw = self.extract(payload_path)
+        raw = self.extract(payload_path, run_ts)
         if raw is None:
             logger.warning("no data extracted; stopping run")
             return self._lake_totals(run_ts)

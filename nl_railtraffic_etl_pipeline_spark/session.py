@@ -10,6 +10,8 @@ every knob that matters on a real cluster:
 - AQE on: runtime shuffle-partition coalescing, skew-join splitting and
   dynamic broadcast — the mechanisms that keep the same plans healthy at
   100 TB without re-tuning.
+- A generated-code cache that holds the whole working set (see
+  ``CODEGEN_CACHE_ENTRIES``), so a JVM compiles each class once.
 """
 
 from __future__ import annotations
@@ -19,6 +21,9 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+#: ``spark.sql.codegen.cache.maxEntries`` (see ``get_spark``).
+CODEGEN_CACHE_ENTRIES = 1000
 
 
 def _driver_memory() -> str:
@@ -39,6 +44,15 @@ def get_spark(
 
     On a real cluster ``master`` comes from spark-submit; locally we default
     to ``local[$SPARK_GRAFT_CPUS]``.
+
+    The generated-code cache keeps ``CODEGEN_CACHE_ENTRIES`` compiled
+    classes.  One pass of Q1-Q6 on both surfaces needs about 145 of them
+    and the pipeline run that builds their lake about 80 more, while
+    Spark's default keeps 100: every analytics cycle recompiled about 140
+    classes (Q5's DataFrame run alone 47), 1-2 s of a 6-7 s cycle on 4
+    cores.  At several times that 225-class working set, a JVM compiles
+    each class once.  It is a static conf, so it is set here, before the
+    session starts.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
@@ -53,6 +67,7 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", _driver_memory()))
     )
     if master is not None:

@@ -9,17 +9,21 @@ Maps the reference's ingest surface onto native Spark readers (SURVEY §2.1):
 Both read with ``RAW_DISRUPTION``, the fields the cleaner reads, so the
 frame they return is parsed-only: every other key of the payload is
 skipped.  Both read PERMISSIVE with a corrupt-record column — the Spark
-equivalent of the Glue SerDe's ``ignore.malformed.json`` tolerance.
+equivalent of the Glue SerDe's ``ignore.malformed.json`` tolerance — and
+add the run stamp as the ``fetched_at`` column ``clean`` reads.
 """
 
 from __future__ import annotations
 
+import datetime as _dt
+
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from ..schemas import RAW_DISRUPTION
 
 
-def read_payload(spark: SparkSession, path: str) -> DataFrame:
+def read_payload(spark: SparkSession, path: str, run_ts: _dt.datetime) -> DataFrame:
     """Read archived NS payload files (JSON array of nested records)."""
     return (
         spark.read.option("multiLine", True)
@@ -27,10 +31,13 @@ def read_payload(spark: SparkSession, path: str) -> DataFrame:
         .option("columnNameOfCorruptRecord", "_corrupt_record")
         .schema(RAW_DISRUPTION)
         .json(path)
+        .withColumn("fetched_at", F.lit(run_ts))
     )
 
 
-def payload_from_records(spark: SparkSession, records: list[dict]) -> DataFrame:
+def payload_from_records(
+    spark: SparkSession, records: list[dict], run_ts: _dt.datetime
+) -> DataFrame:
     """Driver-side list[dict] (e.g. a live REST fetch) -> typed DataFrame.
 
     The schema-tolerant twin of the reference's ``pd.DataFrame(raw_data)``
@@ -45,4 +52,5 @@ def payload_from_records(spark: SparkSession, records: list[dict]) -> DataFrame:
         .option("columnNameOfCorruptRecord", "_corrupt_record")
         .schema(RAW_DISRUPTION)
         .json(rdd)
+        .withColumn("fetched_at", F.lit(run_ts))
     )

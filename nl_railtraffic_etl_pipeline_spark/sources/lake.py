@@ -18,8 +18,6 @@ snapshot's BOM re-head and the pipeline's zone swap share.
 
 from __future__ import annotations
 
-import datetime as _dt
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -37,30 +35,17 @@ def with_date_partitions(df: DataFrame, ts_col: str = "fetched_at") -> DataFrame
     )
 
 
-def write_raw_archive(df: DataFrame, path: str, run_ts: _dt.datetime) -> None:
+def write_raw_archive(df: DataFrame, path: str) -> None:
     """S2/S3/S4: archive the verbatim payload as date-partitioned JSON lines.
 
-    Keeps one ``raw_json`` string column per record alongside the ingest
-    timestamp; the Athena/Glue external table reads this same archive.
-    When the frame already carries ``raw_json`` (the raw-zone shape
-    ``SparkETLPipeline.extract`` yields) the string is archived
-    BYTE-VERBATIM — the reference's archive contract
-    (api_client.py:105-110); parsed-only frames fall back to a canonical
-    ``to_json`` re-serialization of their declared fields.
+    ``df`` is the extract's frame (``SparkETLPipeline.extract``): each
+    record's ``raw_json`` string is archived BYTE-VERBATIM — the
+    reference's archive contract (api_client.py:105-110) — with its
+    ``fetched_at`` run stamp, which also names the partition.  The
+    Athena/Glue external table reads this same archive.
     """
-    raw_json = (
-        F.col("raw_json")
-        if "raw_json" in df.columns
-        else F.to_json(
-            F.struct(*[c for c in df.columns if c != "_corrupt_record"])
-        )
-    )
-    out = df.select(
-        raw_json.alias("raw_json"),
-        F.lit(run_ts).alias("fetched_at"),
-    )
     (
-        with_date_partitions(out)
+        with_date_partitions(df.select("raw_json", "fetched_at"))
         .write.mode("append")
         .partitionBy("year", "month", "day")
         .json(path)

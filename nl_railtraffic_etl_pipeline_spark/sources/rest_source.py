@@ -24,7 +24,6 @@ def fetch_disruptions(
     url: str = DEFAULT_URL,
     max_retries: int = 3,
     timeout_s: int = 10,
-    is_active: bool | None = None,
 ) -> list[dict]:
     """GET the disruptions payload with the reference's retry policy."""
     try:
@@ -35,14 +34,11 @@ def fetch_disruptions(
             "json_source.read_payload over archived files instead"
         ) from exc
 
-    params = {} if is_active is None else {"isActive": str(is_active).lower()}
     headers = {"Ocp-Apim-Subscription-Key": api_key}
     last_error: Exception | None = None
     for attempt in range(1, max_retries + 1):
         try:
-            resp = requests.get(
-                url, headers=headers, params=params, timeout=timeout_s
-            )
+            resp = requests.get(url, headers=headers, timeout=timeout_s)
             resp.raise_for_status()
             return resp.json()
         except Exception as exc:

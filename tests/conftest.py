@@ -18,3 +18,10 @@ def spark():
     s = get_spark("tests", shuffle_partitions=8)
     s.sparkContext.setLogLevel("ERROR")
     yield s
+
+
+@pytest.fixture(scope="session")
+def compiles(spark):
+    """How many classes this JVM has compiled from generated code so far."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return lambda: metrics.METRIC_COMPILATION_TIME().getCount()

@@ -13,7 +13,7 @@ RUN_TS = dt.datetime(2026, 2, 14, 11, 18, 10)
 
 
 def _clean_records(spark, records):
-    return clean(payload_from_records(spark, records), RUN_TS)
+    return clean(payload_from_records(spark, records, RUN_TS))
 
 
 def test_reference_inline_fixture(spark):

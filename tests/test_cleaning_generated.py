@@ -50,7 +50,7 @@ def test_clean_matches_fold_on_generated_payloads(spark, tmp_path):
         records = PayloadGenerator(seed).batch(150, [DAY], [])
         path = str(tmp_path / f"payload{seed}.json")
         write_payload(records, path)
-        cleaned = pipeline.transform(pipeline.extract(path), RUN_TS)
+        cleaned = pipeline.transform(pipeline.extract(path, RUN_TS), RUN_TS)
         rows = cleaned.select(
             *[F.col(c).cast("timestamp_ntz") if c in TIMESTAMPS else c
               for c in CLEAN_COLUMNS]

@@ -24,7 +24,7 @@ RUN_TS = dt.datetime(2026, 2, 14, 11, 18, 10)
 @pytest.fixture(scope="module")
 def frames(spark):
     ours = (
-        clean(read_payload(spark, RAW), RUN_TS)
+        clean(read_payload(spark, RAW, RUN_TS))
         .orderBy("disruption_id")
         .toPandas()
         .set_index("disruption_id")

@@ -12,7 +12,6 @@ from pyspark.sql import functions as F
 from nl_railtraffic_etl_pipeline_spark.pipeline import SparkETLPipeline
 from nl_railtraffic_etl_pipeline_spark.schemas import RAW_DISRUPTION
 from nl_railtraffic_etl_pipeline_spark.sources import rest_source
-from nl_railtraffic_etl_pipeline_spark.sources.json_source import read_payload
 from nl_railtraffic_etl_pipeline_spark.sources.lake import (
     with_date_partitions,
     write_csv_snapshot,
@@ -24,9 +23,9 @@ RUN_TS = dt.datetime(2026, 2, 14, 11, 18, 10)
 
 
 def test_raw_archive_hive_layout_and_pruning(spark, tmp_path):
-    raw = read_payload(spark, PAYLOAD)
+    raw = SparkETLPipeline(spark, str(tmp_path / "lake")).extract(PAYLOAD, RUN_TS)
     path = str(tmp_path / "archive")
-    write_raw_archive(raw, path, RUN_TS)
+    write_raw_archive(raw, path)
 
     # Hive layout: year=/month=/day= directories, zero-padded values
     assert os.path.isdir(f"{path}/year=2026/month=02/day=14")
@@ -99,9 +98,9 @@ def test_raw_archive_verbatim_record_bytes(spark, tmp_path):
     """S2 fidelity: a raw-zone frame's record string survives the archive
     BYTE-identically (the reference stores json.dumps(item,
     ensure_ascii=False) untouched — reference pipeline.py:151)."""
-    rows = SparkETLPipeline(spark, str(tmp_path / "lake")).extract(PAYLOAD)
+    rows = SparkETLPipeline(spark, str(tmp_path / "lake")).extract(PAYLOAD, RUN_TS)
     path = str(tmp_path / "archive")
-    write_raw_archive(rows, path, RUN_TS)
+    write_raw_archive(rows, path)
 
     with open(PAYLOAD, encoding="utf-8") as fh:
         records = {r["id"]: r for r in json.load(fh) if r.get("id")}
@@ -130,7 +129,7 @@ def test_csv_snapshot_utf8_sig_bom(spark, tmp_path):
 
 
 def test_extract_raw_zone(spark, tmp_path):
-    df = SparkETLPipeline(spark, str(tmp_path / "lake")).extract(PAYLOAD)
+    df = SparkETLPipeline(spark, str(tmp_path / "lake")).extract(PAYLOAD, RUN_TS)
     assert df.count() == 125
     # raw_json round-trips through the nested schema the cleaner consumes
     parsed = df.select(F.from_json("raw_json", RAW_DISRUPTION).alias("r"))
@@ -164,7 +163,7 @@ def test_extract_generated_payload_verbatim(spark, tmp_path, seed):
     nothing."""
     records, path = _generated_payload(tmp_path, seed)
     pipeline = SparkETLPipeline(spark, str(tmp_path / "lake"))
-    df = pipeline.extract(path)
+    df = pipeline.extract(path, RUN_TS)
     want = _verbatim(records)
     assert len(want) == 150 < len(records)
     got = {r.id: r.raw_json for r in df.select("id", "raw_json").collect()}
@@ -175,16 +174,16 @@ def test_extract_generated_payload_verbatim(spark, tmp_path, seed):
     falsy = [r for r in records if r.get("id") in (None, "")]
     falsy_path = str(tmp_path / "falsy.json")
     write_payload(falsy, falsy_path)
-    assert pipeline.extract(falsy_path) is None
+    assert pipeline.extract(falsy_path, RUN_TS) is None
 
 
 def test_raw_archive_generated_payload_verbatim(spark, tmp_path):
     """The archive of a generated payload holds every extracted record
     string byte-identically, under the run's day."""
     records, path = _generated_payload(tmp_path, 3)
-    rows = SparkETLPipeline(spark, str(tmp_path / "lake")).extract(path)
+    rows = SparkETLPipeline(spark, str(tmp_path / "lake")).extract(path, RUN_TS)
     archive = str(tmp_path / "archive")
-    write_raw_archive(rows, archive, RUN_TS)
+    write_raw_archive(rows, archive)
     back = spark.read.json(archive).filter(F.col("day") == RUN_TS.day)
     archived = [r.raw_json for r in back.select("raw_json").collect()]
     assert sorted(archived) == sorted(_verbatim(records).values())

@@ -79,6 +79,22 @@ def test_dataframe_surface_leaves_no_temp_views(spark):
     assert after == before
 
 
+def test_second_pass_compiles_nothing(spark, compiles):
+    """One pass of Q1-Q6 on both surfaces generates more classes than
+    Spark's default codegen cache holds (100); ``get_spark`` sizes the
+    cache for the whole working set, so a second pass compiles none."""
+
+    def one_pass():
+        for name in sorted(sq.SQL_QUERIES):
+            for run in _SURFACES.values():
+                run(spark, name).collect()
+
+    one_pass()
+    before = compiles()
+    one_pass()
+    assert compiles() - before == 0
+
+
 def test_rendered_sql_text_has_no_placeholders():
     for name, text in sq.SQL_QUERIES.items():
         assert "{" not in text and "}" not in text, name
