@@ -26,24 +26,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def dedup_batch(
-    batch: DataFrame, keys: Sequence[str], order_col: str | None = None
-) -> DataFrame:
-    """Deterministic within-batch dedup: latest by order_col, else any-one.
-
-    ``dropDuplicates`` picks an arbitrary survivor; with ``order_col`` (a
-    column name) the survivor is the row per key with its greatest value.
-    """
-    if order_col is None:
-        return batch.dropDuplicates(list(keys))
-    w = Window.partitionBy(*keys).orderBy(F.desc(order_col))
-    return (
-        batch.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-
-
 def insert_ignore(
     existing: DataFrame, batch: DataFrame, keys: Sequence[str]
 ) -> DataFrame:
@@ -53,7 +35,7 @@ def insert_ignore(
     the pipeline hands in key-unique batches: the extract keeps one record
     per id and the station seed one row per code.
     """
-    new_rows = dedup_batch(batch, keys).join(
+    new_rows = batch.dropDuplicates(list(keys)).join(
         existing.select(*keys), list(keys), "left_anti"
     )
     return existing.unionByName(new_rows)

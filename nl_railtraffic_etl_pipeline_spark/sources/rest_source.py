@@ -1,8 +1,9 @@
 """Driver-side HTTP REST source for the NS disruptions endpoint.
 
 Spark has no executor-side HTTP source for a ~125-record daily payload, nor
-should it: the fetch is a driver-side concern (S1, SURVEY §2.1), after which
-``payload_from_records`` turns the list into a typed DataFrame.  Retry
+should it: the fetch is a driver-side concern (S1, SURVEY §2.1); the
+payload it returns, saved as a JSON file, is what
+``SparkETLPipeline.extract`` reads.  Retry
 semantics mirror the reference client (api_client.py:52-88): 10 s timeout,
 3 attempts, exponential 2/4/8 s backoff, immediate abort on 401/429.
 
@@ -30,8 +31,8 @@ def fetch_disruptions(
         import requests
     except ImportError as exc:  # pragma: no cover - env without requests
         raise RuntimeError(
-            "rest_source requires the 'requests' package; use "
-            "json_source.read_payload over archived files instead"
+            "rest_source requires the 'requests' package; run "
+            "SparkETLPipeline over archived payload files instead"
         ) from exc
 
     headers = {"Ocp-Apim-Subscription-Key": api_key}

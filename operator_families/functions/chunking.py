@@ -491,9 +491,8 @@ def bpe_encode_pieces(
                 # regex \s = [ \t\n\x0B\f\r], exactly this class) splits
                 # on ASCII whitespace — a document containing e.g.
                 # U+00A0 must tokenize identically.  NOTE: RE2's \s is
-                # [\t\n\f\r ] and EXCLUDES \x0B, so the DuckDB oracle
-                # spells this class out explicitly (ml_queries.py
-                # _BPE_WORDS_SQL) instead of using \s.
+                # [\t\n\f\r ] and EXCLUDES \x0B, so a DuckDB twin must
+                # spell this class out explicitly instead of using \s.
                 for w in _re.split(
                     r"[ \t\n\r\f\v]+", text.strip(" \t\n\r\f\v").lower()
                 ):

@@ -329,7 +329,7 @@ def feature_hash(
         # Decimal math stays internal; the OUTPUT boundary is a plain
         # correctly-rounded decimal->double cast (driver-safe — raw
         # DECIMAL output columns hash-fail at the driver even when the
-        # values are equal; see plans/registry.py output-type contract).
+        # values are equal).
         aggs.append(
             F.sum("_v").cast("decimal(18,6)").cast("double")
             .alias("value_sum")

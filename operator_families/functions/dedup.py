@@ -74,17 +74,6 @@ def _materialize(df: DataFrame) -> DataFrame:
     return df.localCheckpoint(eager=True)
 
 
-def shingle_arrays(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 3
-) -> DataFrame:
-    """Materialized (doc, sh_arr) shingle-set artifact for a corpus.
-
-    The persisted intermediate both Jaccard-family dedup operators consume;
-    build once per corpus and pass via their ``arrays`` parameter.
-    """
-    return _materialize(_shingle_arrays(df, text_col, id_col, n))
-
-
 def _shingle_arrays(df: DataFrame, text_col: str, id_col: str, n: int) -> DataFrame:
     """(doc, sh_arr) with the shingle array materialized behind an exchange."""
     return _spread(
@@ -217,7 +206,7 @@ def flag_contaminated(
     BROADCAST and the corpus streams through a map-side hash join; no
     corpus shuffle at all.  Set ``broadcast_heldout=False`` only if the
     heldout set is itself corpus-sized (falls back to a hash-partitioned
-    equi-join).  ``train_arrays`` reuses a prebuilt ``shingle_arrays``
+    equi-join).  ``train_arrays`` reuses a prebuilt ``_shingle_arrays``
     artifact.
     """
     if train_arrays is None:
@@ -878,7 +867,7 @@ def incremental_near_dup(
     side never self-joins, so cost is bounded by the batch's shingle
     postings, not the corpus's square.  Per-doc sizes ride the shingle
     arrays (no second explode+groupBy).  ``index_arrays`` is the persisted
-    ``shingle_arrays`` artifact; built inline when omitted.
+    ``_shingle_arrays`` artifact; built inline when omitted.
     """
     new_arr = _shingle_arrays(new_docs, text_col, id_col, n)
     if index_arrays is None:

@@ -133,6 +133,9 @@ def blocked_text_pairs(
 #: tasks while a freshly forked worker never inherits a parent's handle
 #: (guide §4.5 — heavyweight init once per worker, not per task/batch).
 _DUCK_CON: tuple[int, object] | None = None
+#: Handles a forked worker inherited, kept referenced so the child never
+#: closes or destroys them: DuckDB is not fork-safe.
+_INHERITED: list = []
 
 
 def _duck_con():
@@ -144,13 +147,9 @@ def _duck_con():
         import duckdb
 
         if _DUCK_CON is not None:
-            # a forked child inherited the parent's handle object: close
-            # our copy so the in-memory DB's resources are released
-            # promptly rather than at GC time (ADVICE r11)
-            try:
-                _DUCK_CON[1].close()
-            except Exception:
-                pass
+            # forked child: leave the parent's handle alone (no close(),
+            # no destructor) and open our own
+            _INHERITED.append(_DUCK_CON[1])
         con = duckdb.connect()
         # Spark owns the cores — one task must not fan out its own pool.
         con.execute("SET threads=1")

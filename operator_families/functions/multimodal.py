@@ -170,28 +170,6 @@ def parse_image_headers(df_with_payload: DataFrame) -> DataFrame:
     )
 
 
-def sample_frames(
-    df_with_payload: DataFrame, every_n_bytes: int = 97
-) -> DataFrame:
-    """Frame-sampling stand-in: take every Nth byte of the payload as a
-    'frame' marker — demonstrates the explode-from-binary pattern used for
-    video frame extraction (JVM-side, no Python).  For animated GIF —
-    the one multi-frame container a pure-stdlib decoder can open —
-    :func:`sample_gif_frames` does the REAL thing (per-frame LZW decode
-    of sampled frames, structural skip of the rest); this byte-marker
-    plan remains the stand-in for codec-gated video only."""
-    n = F.length("payload")
-    idx = F.sequence(F.lit(1), F.greatest(n, F.lit(1)), F.lit(every_n_bytes))
-    return df_with_payload.select(
-        "doc_id",
-        F.posexplode(idx).alias("frame_no", "byte_offset"),
-    ).select(
-        "doc_id",
-        "frame_no",
-        F.col("byte_offset").cast("int").alias("byte_offset"),
-    )
-
-
 def plan_audio_chunks(
     df: DataFrame,
     duration_col: str = "duration_ms",
@@ -887,73 +865,6 @@ def jpeg_encode_gray_blocks(
     )
 
 
-#: Output schema of the DC-stats decoder: exact integer DC sums (plain and
-#: position-weighted) so the gate hash-matches an arithmetic oracle; the
-#: weighted sum pins BLOCK ORDER, not just the multiset of DC values.
-JPEG_DC_STATS = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("blocks_w", T.IntegerType()),
-        T.StructField("blocks_h", T.IntegerType()),
-        T.StructField("dc_sum", T.LongType()),
-        T.StructField("dc_weighted", T.LongType()),
-        T.StructField("decoded", T.BooleanType()),
-    ]
-)
-
-
-def _jpeg_dc_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            dec = _jpeg_decode_dc(bytes(payload))
-            if dec is None:
-                rows.append(
-                    (doc_id, None, None, None, None, None, None, False)
-                )
-                continue
-            w, h, bw, bh, dcs = dec
-            rows.append(
-                (
-                    doc_id, w, h, bw, bh,
-                    sum(dcs),
-                    sum((i + 1) * d for i, d in enumerate(dcs)),
-                    True,
-                )
-            )
-        yield pd.DataFrame(
-            rows,
-            columns=[
-                "doc_id", "width", "height", "blocks_w", "blocks_h",
-                "dc_sum", "dc_weighted", "decoded",
-            ],
-        ).astype(
-            {
-                "width": "Int32", "height": "Int32",
-                "blocks_w": "Int32", "blocks_h": "Int32",
-                "dc_sum": "Int64", "dc_weighted": "Int64",
-            }
-        )
-
-
-def decode_jpeg_dc_stats(df_with_payload: DataFrame) -> DataFrame:
-    """REAL JPEG entropy decode over a binary column, DC coefficients
-    only (see :func:`_jpeg_decode_dc`): per-doc exact integer DC sums —
-    plain and position-weighted (block-order-sensitive) — with
-    malformed / non-baseline payloads quarantined (``decoded = false``),
-    never task failures.
-
-    Same scale shape as the other kernels: Arrow ``mapInPandas``,
-    map-only (zero shuffles), Python memory bounded by
-    ``arrow.maxRecordsPerBatch``; DC-only means the work per image is
-    O(entropy-stream bytes), no pixel buffers at all.
-    """
-    return df_with_payload.select("doc_id", "payload").mapInPandas(
-        _jpeg_dc_batch, JPEG_DC_STATS
-    )
-
 # ---------------------------------------------------------------------------
 # FULL baseline JPEG pixel decode (pure stdlib + numpy): the r8 decoder
 # stopped at DC coefficients; this completes ITU-T T.81 baseline —
@@ -1475,75 +1386,6 @@ def jpeg_encode_ycbcr_subsampled(
     )
 
 
-#: Output schema of the full pixel decoder: exact integer channel sums
-#: (pre-conversion YCbCr and fixed-point RGB) + the position-weighted
-#: luma sum that pins spatial layout, all BIGINT-exact for the oracle.
-JPEG_PIXEL_STATS = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("y_sum", T.LongType()),
-        T.StructField("cb_sum", T.LongType()),
-        T.StructField("cr_sum", T.LongType()),
-        T.StructField("y_weighted", T.LongType()),
-        T.StructField("r_sum", T.LongType()),
-        T.StructField("g_sum", T.LongType()),
-        T.StructField("b_sum", T.LongType()),
-        T.StructField("decoded", T.BooleanType()),
-    ]
-)
-
-
-def _jpeg_pixels_batch(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            dec = _jpeg_decode_pixels(bytes(payload))
-            if dec is None:
-                rows.append(
-                    (doc_id,) + (None,) * 9 + (False,)
-                )
-                continue
-            w, h, (ys, cbs, crs, ywt, rs, gs, bs) = dec
-            rows.append(
-                (doc_id, w, h, ys, cbs, crs, ywt, rs, gs, bs, True)
-            )
-        yield pd.DataFrame(
-            rows,
-            columns=[
-                "doc_id", "width", "height", "y_sum", "cb_sum",
-                "cr_sum", "y_weighted", "r_sum", "g_sum", "b_sum",
-                "decoded",
-            ],
-        ).astype(
-            {
-                "width": "Int32", "height": "Int32",
-                "y_sum": "Int64", "cb_sum": "Int64", "cr_sum": "Int64",
-                "y_weighted": "Int64", "r_sum": "Int64",
-                "g_sum": "Int64", "b_sum": "Int64",
-            }
-        )
-
-
-def decode_jpeg_pixel_stats(df_with_payload: DataFrame) -> DataFrame:
-    """FULL baseline JPEG pixel decode over a binary column (see
-    :func:`_jpeg_decode_pixels`): AC Huffman + dequant + exact IDCT +
-    fixed-point YCbCr->RGB, per-doc exact integer channel sums, with
-    malformed / non-baseline payloads quarantined (``decoded = false``),
-    never task failures.
-
-    Scale shape: Arrow ``mapInPandas``, map-only (zero shuffles); per
-    image the live state is one MCU (three 64-sample vectors) — pixel
-    planes are never materialized, so memory is O(1) in image size and
-    the numpy basis matmul keeps the IDCT off the Python bytecode path.
-    """
-    return df_with_payload.select("doc_id", "payload").mapInPandas(
-        _jpeg_pixels_batch, JPEG_PIXEL_STATS
-    )
-
 # ---------------------------------------------------------------------------
 # REAL WAV (RIFF) PCM16 decode, pure stdlib: chunk walking with the
 # word-alignment pad byte (odd-sized chunks are followed by one pad —
@@ -1634,62 +1476,6 @@ def wav_encode_pcm16(doc_id: int, n_samples: int) -> bytes:
     return b"RIFF" + struct.pack("<I", len(body)) + body
 
 
-WAV_PCM_STATS = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("sample_rate", T.IntegerType()),
-        T.StructField("n_channels", T.IntegerType()),
-        T.StructField("n_samples", T.LongType()),
-        T.StructField("sample_sum", T.LongType()),
-        T.StructField("sample_weighted", T.LongType()),
-        T.StructField("peak_abs", T.LongType()),
-        T.StructField("energy", T.LongType()),
-        T.StructField("decoded", T.BooleanType()),
-    ]
-)
-
-
-def _wav_pcm_batch(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            dec = _wav_decode_pcm16(bytes(payload))
-            if dec is None:
-                rows.append((doc_id,) + (None,) * 7 + (False,))
-                continue
-            rate, n_ch, n, (ssum, swt, peak, energy) = dec
-            rows.append(
-                (doc_id, rate, n_ch, n, ssum, swt, peak, energy, True)
-            )
-        yield pd.DataFrame(
-            rows,
-            columns=[
-                "doc_id", "sample_rate", "n_channels", "n_samples",
-                "sample_sum", "sample_weighted", "peak_abs", "energy",
-                "decoded",
-            ],
-        ).astype(
-            {
-                "sample_rate": "Int32", "n_channels": "Int32",
-                "n_samples": "Int64", "sample_sum": "Int64",
-                "sample_weighted": "Int64", "peak_abs": "Int64",
-                "energy": "Int64",
-            }
-        )
-
-
-def decode_wav_pcm_stats(df_with_payload: DataFrame) -> DataFrame:
-    """REAL WAV/PCM16 decode over a binary column (see
-    :func:`_wav_decode_pcm16`): exact integer sample statistics with
-    malformed payloads quarantined.  Arrow ``mapInPandas``, map-only,
-    numpy sample math — the audio twin of the image decode kernels."""
-    return df_with_payload.select("doc_id", "payload").mapInPandas(
-        _wav_pcm_batch, WAV_PCM_STATS
-    )
-
-
 # ---------------------------------------------------------------------------
 # REAL BMP decode (BITMAPINFOHEADER, BI_RGB 24bpp), pure stdlib: 4-byte
 # row padding, BGR byte order, and the bottom-up row layout (positive
@@ -1778,56 +1564,6 @@ def bmp_encode_rgb(doc_id: int, width: int, height: int) -> bytes:
     )
     return hdr + dib + bytes(rows)
 
-
-BMP_PIXEL_STATS = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("r_sum", T.LongType()),
-        T.StructField("g_sum", T.LongType()),
-        T.StructField("b_sum", T.LongType()),
-        T.StructField("rgb_weighted", T.LongType()),
-        T.StructField("decoded", T.BooleanType()),
-    ]
-)
-
-
-def _bmp_pixels_batch(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            dec = _bmp_decode_pixels(bytes(payload))
-            if dec is None:
-                rows.append((doc_id,) + (None,) * 6 + (False,))
-                continue
-            w, h, (rs, gs, bs, wt) = dec
-            rows.append((doc_id, w, h, rs, gs, bs, wt, True))
-        yield pd.DataFrame(
-            rows,
-            columns=[
-                "doc_id", "width", "height", "r_sum", "g_sum", "b_sum",
-                "rgb_weighted", "decoded",
-            ],
-        ).astype(
-            {
-                "width": "Int32", "height": "Int32", "r_sum": "Int64",
-                "g_sum": "Int64", "b_sum": "Int64",
-                "rgb_weighted": "Int64",
-            }
-        )
-
-
-def decode_bmp_pixel_stats(df_with_payload: DataFrame) -> DataFrame:
-    """REAL BMP pixel decode over a binary column (see
-    :func:`_bmp_decode_pixels`): exact channel sums + the flip-pinning
-    weighted sum, malformed payloads quarantined.  Arrow
-    ``mapInPandas``, map-only, numpy row math."""
-    return df_with_payload.select("doc_id", "payload").mapInPandas(
-        _bmp_pixels_batch, BMP_PIXEL_STATS
-    )
 
 # ---------------------------------------------------------------------------
 # REAL GIF decode (GIF89a, pure stdlib): logical-screen + image
@@ -2175,126 +1911,6 @@ def gif_encode_animated(
     return hdr + bytes(palette) + netscape + bytes(body) + b"\x3b"
 
 
-#: Output schema of the frame sampler: one row per SAMPLED frame with
-#: exact palette-channel sums, or one quarantine row per bad payload.
-GIF_FRAME_STATS = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("frame_no", T.IntegerType()),
-        T.StructField("delay_cs", T.IntegerType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("r_sum", T.LongType()),
-        T.StructField("g_sum", T.LongType()),
-        T.StructField("b_sum", T.LongType()),
-        T.StructField("idx_weighted", T.LongType()),
-        T.StructField("decoded", T.BooleanType()),
-    ]
-)
-
-
-def sample_gif_frames(
-    df_with_payload: DataFrame, stride: int = 2
-) -> DataFrame:
-    """REAL video-style frame sampling over animated GIF payloads (see
-    :func:`_gif_decode_frames`): every ``stride``-th frame is
-    LZW-decoded to exact per-frame channel sums + the stream-pinning
-    weighted index sum and its GCE delay; the frames in between are
-    walked structurally without decoding.  Malformed payloads yield ONE
-    quarantine row (null frame, ``decoded = false``), never task
-    failures.  This replaces the byte-marker ``sample_frames`` stand-in
-    for the one animated container a pure-stdlib decoder can open; true
-    video (H.264 etc.) still needs codec libraries and stays stubbed.
-
-    Scale shape: Arrow ``mapInPandas``, map-only (zero shuffles); fan-out
-    bounded by frames-per-payload / stride, decode cost by SAMPLED
-    frames only; ``max_frames`` fences decompression bombs.
-    """
-
-    def batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                dec = _gif_decode_frames(bytes(payload), stride=stride)
-                if dec is None:
-                    rows.append((doc_id,) + (None,) * 8 + (False,))
-                    continue
-                w, h, frames = dec
-                for fno, delay, rs, gs, bs, wt in frames:
-                    rows.append(
-                        (doc_id, fno, delay, w, h, rs, gs, bs, wt, True)
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "frame_no", "delay_cs", "width", "height",
-                    "r_sum", "g_sum", "b_sum", "idx_weighted", "decoded",
-                ],
-            ).astype(
-                {
-                    "frame_no": "Int32", "delay_cs": "Int32",
-                    "width": "Int32", "height": "Int32",
-                    "r_sum": "Int64", "g_sum": "Int64", "b_sum": "Int64",
-                    "idx_weighted": "Int64",
-                }
-            )
-
-    return df_with_payload.select("doc_id", "payload").mapInPandas(
-        batch, GIF_FRAME_STATS
-    )
-
-
-GIF_PIXEL_STATS = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("r_sum", T.LongType()),
-        T.StructField("g_sum", T.LongType()),
-        T.StructField("b_sum", T.LongType()),
-        T.StructField("idx_weighted", T.LongType()),
-        T.StructField("decoded", T.BooleanType()),
-    ]
-)
-
-
-def _gif_pixels_batch(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            dec = _gif_decode_pixels(bytes(payload))
-            if dec is None:
-                rows.append((doc_id,) + (None,) * 6 + (False,))
-                continue
-            w, h, (rs, gs, bs, wt) = dec
-            rows.append((doc_id, w, h, rs, gs, bs, wt, True))
-        yield pd.DataFrame(
-            rows,
-            columns=[
-                "doc_id", "width", "height", "r_sum", "g_sum", "b_sum",
-                "idx_weighted", "decoded",
-            ],
-        ).astype(
-            {
-                "width": "Int32", "height": "Int32", "r_sum": "Int64",
-                "g_sum": "Int64", "b_sum": "Int64",
-                "idx_weighted": "Int64",
-            }
-        )
-
-
-def decode_gif_pixel_stats(df_with_payload: DataFrame) -> DataFrame:
-    """REAL GIF/LZW decode over a binary column (see
-    :func:`_gif_decode_pixels`): exact palette-channel sums + the
-    stream-pinning weighted index sum, malformed payloads quarantined.
-    Arrow ``mapInPandas``, map-only."""
-    return df_with_payload.select("doc_id", "payload").mapInPandas(
-        _gif_pixels_batch, GIF_PIXEL_STATS
-    )
-
-
 # ---------------------------------------------------------------------------
 # PROGRESSIVE JPEG, DC path (T.81 Annex G): SOF2 images whose DC
 # coefficients arrive as a first scan (DPCM of DC >> Al) followed by
@@ -2508,67 +2124,6 @@ def jpeg_encode_progressive_dc(
         out += pack([((d >> lvl) & 1, 1) for d in dcs])
     out += b"\xff\xd9"
     return bytes(out)
-
-
-#: Output schema of the progressive-DC decoder: the DC-stats contract
-#: plus the scan count that pins the successive-approximation chain.
-JPEG_PROG_DC_STATS = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("blocks_w", T.IntegerType()),
-        T.StructField("blocks_h", T.IntegerType()),
-        T.StructField("n_scans", T.IntegerType()),
-        T.StructField("dc_sum", T.LongType()),
-        T.StructField("dc_weighted", T.LongType()),
-        T.StructField("decoded", T.BooleanType()),
-    ]
-)
-
-
-def decode_jpeg_progressive_dc_stats(df_with_payload: DataFrame) -> DataFrame:
-    """Progressive-JPEG DC-path decode over a binary column (see
-    :func:`_jpeg_decode_progressive_dc`): exact dequantized-DC sums +
-    the position-weighted sum + the scan count, malformed / incomplete /
-    out-of-envelope payloads quarantined.  Arrow ``mapInPandas``,
-    map-only, O(blocks) live state per image."""
-
-    def batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                dec = _jpeg_decode_progressive_dc(bytes(payload))
-                if dec is None:
-                    rows.append((doc_id,) + (None,) * 7 + (False,))
-                    continue
-                w, h, bw, bh, nsc, dcs = dec
-                rows.append(
-                    (
-                        doc_id, w, h, bw, bh, nsc,
-                        sum(dcs),
-                        sum((i + 1) * d for i, d in enumerate(dcs)),
-                        True,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "width", "height", "blocks_w", "blocks_h",
-                    "n_scans", "dc_sum", "dc_weighted", "decoded",
-                ],
-            ).astype(
-                {
-                    "width": "Int32", "height": "Int32",
-                    "blocks_w": "Int32", "blocks_h": "Int32",
-                    "n_scans": "Int32", "dc_sum": "Int64",
-                    "dc_weighted": "Int64",
-                }
-            )
-
-    return df_with_payload.select("doc_id", "payload").mapInPandas(
-        batch, JPEG_PROG_DC_STATS
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -3238,75 +2793,6 @@ def jpeg_encode_progressive_pixels(
     )
 
 
-#: Output schema: the baseline pixel-stats contract + the scan count
-#: that pins the successive-approximation/spectral-selection chain.
-JPEG_PROG_PIXEL_STATS = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("n_scans", T.IntegerType()),
-        T.StructField("y_sum", T.LongType()),
-        T.StructField("cb_sum", T.LongType()),
-        T.StructField("cr_sum", T.LongType()),
-        T.StructField("y_weighted", T.LongType()),
-        T.StructField("r_sum", T.LongType()),
-        T.StructField("g_sum", T.LongType()),
-        T.StructField("b_sum", T.LongType()),
-        T.StructField("decoded", T.BooleanType()),
-    ]
-)
-
-
-def decode_jpeg_progressive_pixel_stats(
-    df_with_payload: DataFrame,
-) -> DataFrame:
-    """FULL progressive JPEG pixel decode over a binary column (see
-    :func:`_jpeg_decode_progressive_pixels`): DC + spectral-selection
-    AC + successive-approximation refinement, then the same dequant /
-    IDCT / fixed-point YCbCr->RGB close as the baseline path.  Exact
-    integer channel sums; malformed / out-of-envelope payloads
-    quarantined (``decoded = false``), never task failures.
-
-    Scale shape: Arrow ``mapInPandas``, map-only (zero shuffles).
-    Memory is O(image coefficients) per image — inherent to the
-    multi-scan format — fenced by ``_PROG_PIXEL_CAP``."""
-
-    def batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                dec = _jpeg_decode_progressive_pixels(bytes(payload))
-                if dec is None:
-                    rows.append((doc_id,) + (None,) * 10 + (False,))
-                    continue
-                w, h, nsc, (ys, cbs, crs, ywt, rs, gs, bs) = dec
-                rows.append(
-                    (doc_id, w, h, nsc, ys, cbs, crs, ywt, rs, gs, bs,
-                     True)
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "width", "height", "n_scans", "y_sum",
-                    "cb_sum", "cr_sum", "y_weighted", "r_sum", "g_sum",
-                    "b_sum", "decoded",
-                ],
-            ).astype(
-                {
-                    "width": "Int32", "height": "Int32",
-                    "n_scans": "Int32", "y_sum": "Int64",
-                    "cb_sum": "Int64", "cr_sum": "Int64",
-                    "y_weighted": "Int64", "r_sum": "Int64",
-                    "g_sum": "Int64", "b_sum": "Int64",
-                }
-            )
-
-    return df_with_payload.select("doc_id", "payload").mapInPandas(
-        batch, JPEG_PROG_PIXEL_STATS
-    )
-
-
 # ---------------------------------------------------------------------------
 # G.711 companded WAV decode (mu-law fmt 7 / A-law fmt 6): the telephony
 # codecs every call-center / voice corpus carries.  Expansion is pure
@@ -3427,63 +2913,6 @@ def wav_encode_g711(doc_id: int, n_samples: int, law: str) -> bytes:
     return b"RIFF" + struct.pack("<I", len(body)) + body
 
 
-WAV_G711_STATS = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("sample_rate", T.IntegerType()),
-        T.StructField("n_channels", T.IntegerType()),
-        T.StructField("n_samples", T.LongType()),
-        T.StructField("codec", T.StringType()),
-        T.StructField("sample_sum", T.LongType()),
-        T.StructField("sample_weighted", T.LongType()),
-        T.StructField("peak_abs", T.LongType()),
-        T.StructField("energy", T.LongType()),
-        T.StructField("decoded", T.BooleanType()),
-    ]
-)
-
-
-def decode_wav_g711_stats(df_with_payload: DataFrame) -> DataFrame:
-    """G.711 mu-law/A-law WAV decode over a binary column (see
-    :func:`_wav_decode_g711`): table-driven expansion to PCM16, exact
-    integer sums, malformed / non-G.711 payloads quarantined.  Arrow
-    ``mapInPandas``, map-only; the 256-entry tables amortize across the
-    batch and the expansion is one vectorized numpy gather."""
-
-    def batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                dec = _wav_decode_g711(bytes(payload))
-                if dec is None:
-                    rows.append((doc_id,) + (None,) * 8 + (False,))
-                    continue
-                rate, n_ch, n, codec, (ssum, swt, peak, energy) = dec
-                rows.append(
-                    (doc_id, rate, n_ch, n, codec, ssum, swt, peak,
-                     energy, True)
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "sample_rate", "n_channels", "n_samples",
-                    "codec", "sample_sum", "sample_weighted", "peak_abs",
-                    "energy", "decoded",
-                ],
-            ).astype(
-                {
-                    "sample_rate": "Int32", "n_channels": "Int32",
-                    "n_samples": "Int64", "sample_sum": "Int64",
-                    "sample_weighted": "Int64", "peak_abs": "Int64",
-                    "energy": "Int64",
-                }
-            )
-
-    return df_with_payload.select("doc_id", "payload").mapInPandas(
-        batch, WAV_G711_STATS
-    )
-
-
 # ---------------------------------------------------------------------------
 # ICO container decode: the favicon format every web crawl collects.
 # An ICO is a tiny directory (ICONDIR: reserved/type/count, then 16-byte
@@ -3561,65 +2990,6 @@ def ico_encode_png_entries(doc_id: int, n_entries: int) -> bytes:
         )
         off += len(blob)
     return header + bytes(dir_) + b"".join(blobs)
-
-
-ICO_STATS = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("icon_idx", T.IntegerType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("channels", T.IntegerType()),
-        T.StructField("ch0_sum", T.LongType()),
-        T.StructField("ch1_sum", T.LongType()),
-        T.StructField("ch2_sum", T.LongType()),
-        T.StructField("decoded", T.BooleanType()),
-    ]
-)
-
-
-def decode_ico_stats(df_with_payload: DataFrame) -> DataFrame:
-    """ICO container decode over a binary column (see
-    :func:`_ico_decode_entries`): one output row per directory entry
-    (exact integer channel sums via the shared PNG kernel), a single
-    quarantine row (icon_idx NULL) for malformed containers.  Arrow
-    ``mapInPandas``, map-only; fan-out bounded by the directory count
-    the container itself declares against its byte length."""
-
-    def batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                entries = _ico_decode_entries(bytes(payload))
-                if entries is None:
-                    rows.append((doc_id,) + (None,) * 7 + (False,))
-                    continue
-                for j, w, h, ch, sums in entries:
-                    if sums is None:
-                        rows.append(
-                            (doc_id, j) + (None,) * 6 + (False,)
-                        )
-                        continue
-                    s = sums + (None,) * (3 - len(sums))
-                    rows.append((doc_id, j, w, h, ch) + s[:3] + (True,))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "icon_idx", "width", "height", "channels",
-                    "ch0_sum", "ch1_sum", "ch2_sum", "decoded",
-                ],
-            ).astype(
-                {
-                    "icon_idx": "Int32", "width": "Int32",
-                    "height": "Int32", "channels": "Int32",
-                    "ch0_sum": "Int64", "ch1_sum": "Int64",
-                    "ch2_sum": "Int64",
-                }
-            )
-
-    return df_with_payload.select("doc_id", "payload").mapInPandas(
-        batch, ICO_STATS
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -3758,58 +3128,6 @@ def zip_encode(doc_id: int, n_entries: int) -> bytes:
         "<HHHHIIH", 0, 0, n_entries, n_entries, len(cd), len(locals_), 0
     )
     return bytes(locals_) + bytes(cd) + eocd
-
-
-ZIP_ENTRY_STATS = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("entry_idx", T.IntegerType()),
-        T.StructField("name", T.StringType()),
-        T.StructField("method", T.IntegerType()),
-        T.StructField("n_bytes", T.LongType()),
-        T.StructField("byte_sum", T.LongType()),
-        T.StructField("crc_ok", T.BooleanType()),
-        T.StructField("decoded", T.BooleanType()),
-    ]
-)
-
-
-def decode_zip_entries(df_with_payload: DataFrame) -> DataFrame:
-    """ZIP archive walk over a binary column (see :func:`_zip_entries`):
-    one row per central-directory entry with verified (not trusted)
-    size/CRC and exact byte sums; malformed containers quarantine as a
-    single entry_idx-NULL row.  Arrow ``mapInPandas``, map-only; the
-    bounded raw inflate caps memory at the declared size fence."""
-    import pandas as pd
-
-    def batch(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                entries = _zip_entries(bytes(payload))
-                if entries is None:
-                    rows.append((doc_id,) + (None,) * 6 + (False,))
-                    continue
-                for idx, name, method, nb, bs, ok in entries:
-                    rows.append(
-                        (doc_id, idx, name, method, nb, bs, ok, True)
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "entry_idx", "name", "method", "n_bytes",
-                    "byte_sum", "crc_ok", "decoded",
-                ],
-            ).astype(
-                {
-                    "entry_idx": "Int32", "method": "Int32",
-                    "n_bytes": "Int64", "byte_sum": "Int64",
-                }
-            )
-
-    return df_with_payload.select("doc_id", "payload").mapInPandas(
-        batch, ZIP_ENTRY_STATS
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -3955,51 +3273,6 @@ def _wav_decode_adpcm(b: bytes):
         return None
 
 
-WAV_ADPCM_STATS = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("sample_rate", T.IntegerType()),
-        T.StructField("n_channels", T.IntegerType()),
-        T.StructField("n_samples", T.LongType()),
-        T.StructField("sample_sum", T.LongType()),
-        T.StructField("sample_weighted", T.LongType()),
-        T.StructField("peak_abs", T.LongType()),
-        T.StructField("energy", T.LongType()),
-        T.StructField("decoded", T.BooleanType()),
-    ]
-)
-
-
-def decode_wav_adpcm_stats(df_with_payload: DataFrame) -> DataFrame:
-    """IMA-ADPCM WAV decode over a binary column (see
-    :func:`_wav_decode_adpcm`): the sequential step-size recursion runs
-    per block inside an Arrow ``mapInPandas`` kernel (blocks are the
-    codec's own parallel unit — a 100 TB corpus decodes block-
-    independent, memory O(one block)); malformed / non-ADPCM payloads
-    quarantine."""
-    import pandas as pd
-
-    def batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                dec = _wav_decode_adpcm(bytes(payload))
-                if dec is None:
-                    rows.append((doc_id,) + (None,) * 7 + (False,))
-                    continue
-                rate, n_ch, n, (ssum, swt, peak, energy) = dec
-                rows.append(
-                    (doc_id, rate, n_ch, n, ssum, swt, peak, energy, True)
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in WAV_ADPCM_STATS.fields]
-            )
-
-    return df_with_payload.select("doc_id", "payload").mapInPandas(
-        batch, WAV_ADPCM_STATS
-    )
-
-
 # ---------------------------------------------------------------------------
 # POSIX ustar TAR — the corpus-ingestion archive walk next to ZIP/WARC:
 # fixed 512-byte headers, octal size fields, checksum over the header
@@ -4082,51 +3355,6 @@ def _tar_members(b: bytes):
         )
         pos += 512 + size + ((-size) % 512)
     return members if pos == len(b) else None
-
-
-TAR_MEMBER_STATS = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("member_idx", T.IntegerType()),
-        T.StructField("name", T.StringType()),
-        T.StructField("n_bytes", T.LongType()),
-        T.StructField("byte_sum", T.LongType()),
-        T.StructField("weighted_sum", T.LongType()),
-        T.StructField("checksum_ok", T.BooleanType()),
-        T.StructField("decoded", T.BooleanType()),
-    ]
-)
-
-
-def decode_tar_members(df_with_payload: DataFrame) -> DataFrame:
-    """TAR archive walk over a binary column (see :func:`_tar_members`):
-    one row per member with verified header checksum and exact content
-    sums; malformed archives quarantine as a single member_idx-NULL row.
-    Arrow ``mapInPandas``, map-only — the walk is O(archive) with no
-    decompression state (ustar stores content raw)."""
-    import pandas as pd
-
-    def batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                members = _tar_members(bytes(payload))
-                if members is None:
-                    rows.append(
-                        (doc_id, None, None, None, None, None, None, False)
-                    )
-                    continue
-                for j, (name, size, bsum, wsum, chk) in enumerate(members):
-                    rows.append(
-                        (doc_id, j, name, size, bsum, wsum, chk, True)
-                    )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in TAR_MEMBER_STATS.fields]
-            )
-
-    return df_with_payload.select("doc_id", "payload").mapInPandas(
-        batch, TAR_MEMBER_STATS
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -4335,47 +3563,6 @@ def _tiff_decode(b: bytes):
         return None
 
 
-TIFF_PIXEL_STATS = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("channels", T.IntegerType()),
-        T.StructField("n_strips", T.IntegerType()),
-        T.StructField("c0_sum", T.LongType()),
-        T.StructField("c1_sum", T.LongType()),
-        T.StructField("c2_sum", T.LongType()),
-        T.StructField("weighted", T.LongType()),
-        T.StructField("decoded", T.BooleanType()),
-    ]
-)
-
-
-def decode_tiff_pixel_stats(df_with_payload: DataFrame) -> DataFrame:
-    """Baseline TIFF decode over a binary column (see
-    :func:`_tiff_decode`): both byte orders, strip reassembly, exact
-    integer channel sums; malformed payloads quarantine.  Arrow
-    ``mapInPandas``, map-only, memory O(one raster)."""
-    import pandas as pd
-
-    def batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                dec = _tiff_decode(bytes(payload))
-                if dec is None:
-                    rows.append((doc_id,) + (None,) * 8 + (False,))
-                    continue
-                rows.append((doc_id,) + dec + (True,))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in TIFF_PIXEL_STATS.fields]
-            )
-
-    return df_with_payload.select("doc_id", "payload").mapInPandas(
-        batch, TIFF_PIXEL_STATS
-    )
-
-
 def jpeg_exif_encode(doc_id: int) -> bytes:
     """Minimal JPEG wrapper with a REAL EXIF APP1 segment: SOI, APP1
     ('Exif\\0\\0' + TIFF IFD with Make/Orientation/XResolution), a
@@ -4458,45 +3645,6 @@ def _exif_meta(b: bytes):
         return sof + exif
     except (struct.error, IndexError):
         return None
-
-
-EXIF_META = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("sof_width", T.IntegerType()),
-        T.StructField("sof_height", T.IntegerType()),
-        T.StructField("byte_order", T.StringType()),
-        T.StructField("make", T.StringType()),
-        T.StructField("orientation", T.IntegerType()),
-        T.StructField("xres_num", T.LongType()),
-        T.StructField("xres_den", T.LongType()),
-        T.StructField("decoded", T.BooleanType()),
-    ]
-)
-
-
-def decode_exif_meta(df_with_payload: DataFrame) -> DataFrame:
-    """EXIF/SOF metadata walk over a JPEG binary column (see
-    :func:`_exif_meta`); malformed payloads quarantine.  Arrow
-    ``mapInPandas``, map-only, O(header) per file — pixels untouched."""
-    import pandas as pd
-
-    def batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                meta = _exif_meta(bytes(payload))
-                if meta is None:
-                    rows.append((doc_id,) + (None,) * 7 + (False,))
-                    continue
-                rows.append((doc_id,) + meta + (True,))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in EXIF_META.fields]
-            )
-
-    return df_with_payload.select("doc_id", "payload").mapInPandas(
-        batch, EXIF_META
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -4596,45 +3744,6 @@ def _pnm_decode(b: bytes):
         )
     except (ValueError, IndexError):
         return None
-
-
-PNM_PIXEL_STATS = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("fmt", T.StringType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("channels", T.IntegerType()),
-        T.StructField("c0_sum", T.LongType()),
-        T.StructField("c1_sum", T.LongType()),
-        T.StructField("c2_sum", T.LongType()),
-        T.StructField("weighted", T.LongType()),
-        T.StructField("decoded", T.BooleanType()),
-    ]
-)
-
-
-def decode_pnm_pixel_stats(df_with_payload: DataFrame) -> DataFrame:
-    """Netpbm decode over a binary column (see :func:`_pnm_decode`);
-    malformed payloads quarantine.  Arrow ``mapInPandas``, map-only."""
-    import pandas as pd
-
-    def batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                dec = _pnm_decode(bytes(payload))
-                if dec is None:
-                    rows.append((doc_id,) + (None,) * 8 + (False,))
-                    continue
-                rows.append((doc_id,) + dec + (True,))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in PNM_PIXEL_STATS.fields]
-            )
-
-    return df_with_payload.select("doc_id", "payload").mapInPandas(
-        batch, PNM_PIXEL_STATS
-    )
 
 
 def _qoi_hash(r: int, g: int, b: int, a: int) -> int:
@@ -4778,45 +3887,6 @@ def _qoi_decode(b: bytes):
         return None
 
 
-QOI_PIXEL_STATS = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("channels", T.IntegerType()),
-        T.StructField("r_sum", T.LongType()),
-        T.StructField("g_sum", T.LongType()),
-        T.StructField("b_sum", T.LongType()),
-        T.StructField("weighted", T.LongType()),
-        T.StructField("decoded", T.BooleanType()),
-    ]
-)
-
-
-def decode_qoi_pixel_stats(df_with_payload: DataFrame) -> DataFrame:
-    """QOI decode over a binary column (see :func:`_qoi_decode`);
-    malformed payloads quarantine.  Arrow ``mapInPandas``, map-only,
-    memory O(one raster)."""
-    import pandas as pd
-
-    def batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                dec = _qoi_decode(bytes(payload))
-                if dec is None:
-                    rows.append((doc_id,) + (None,) * 7 + (False,))
-                    continue
-                rows.append((doc_id,) + dec + (True,))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in QOI_PIXEL_STATS.fields]
-            )
-
-    return df_with_payload.select("doc_id", "payload").mapInPandas(
-        batch, QOI_PIXEL_STATS
-    )
-
-
 # ---------------------------------------------------------------------------
 # ISO BMFF / MP4 box walk — container-level video metadata (ISO/IEC
 # 14496-12 box grammar, public spec): the duration/track/size pass a
@@ -4953,44 +4023,6 @@ def _mp4_walk(b: bytes):
     return (brand, timescale, duration, n_tracks, mdat_bytes, mdat_sum)
 
 
-MP4_META = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("brand", T.StringType()),
-        T.StructField("timescale", T.LongType()),
-        T.StructField("duration", T.LongType()),
-        T.StructField("n_tracks", T.IntegerType()),
-        T.StructField("mdat_bytes", T.LongType()),
-        T.StructField("mdat_sum", T.LongType()),
-        T.StructField("decoded", T.BooleanType()),
-    ]
-)
-
-
-def decode_mp4_meta(df_with_payload: DataFrame) -> DataFrame:
-    """MP4 container walk over a binary column (see :func:`_mp4_walk`);
-    malformed payloads quarantine.  Arrow ``mapInPandas``, map-only,
-    O(header + mdat scan) per file."""
-    import pandas as pd
-
-    def batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                meta = _mp4_walk(bytes(payload))
-                if meta is None:
-                    rows.append((doc_id,) + (None,) * 6 + (False,))
-                    continue
-                rows.append((doc_id,) + meta + (True,))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in MP4_META.fields]
-            )
-
-    return df_with_payload.select("doc_id", "payload").mapInPandas(
-        batch, MP4_META
-    )
-
-
 # ---------------------------------------------------------------------------
 # Truevision TGA — uncompressed (type 2) and RLE (type 10) truecolor
 # plus the origin-bit row order, the fourth classic bitmap family.
@@ -5105,41 +4137,3 @@ def _tga_decode(b: bytes):
     bs = sum(c[2] for c in flat)
     wt = sum((p + 1) * sum(c) for p, c in enumerate(flat))
     return (w, h, itype == 10, rs, gs, bs, wt)
-
-
-TGA_PIXEL_STATS = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("rle", T.BooleanType()),
-        T.StructField("r_sum", T.LongType()),
-        T.StructField("g_sum", T.LongType()),
-        T.StructField("b_sum", T.LongType()),
-        T.StructField("weighted", T.LongType()),
-        T.StructField("decoded", T.BooleanType()),
-    ]
-)
-
-
-def decode_tga_pixel_stats(df_with_payload: DataFrame) -> DataFrame:
-    """TGA decode over a binary column (see :func:`_tga_decode`);
-    malformed payloads quarantine.  Arrow ``mapInPandas``, map-only."""
-    import pandas as pd
-
-    def batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                dec = _tga_decode(bytes(payload))
-                if dec is None:
-                    rows.append((doc_id,) + (None,) * 7 + (False,))
-                    continue
-                rows.append((doc_id,) + dec + (True,))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in TGA_PIXEL_STATS.fields]
-            )
-
-    return df_with_payload.select("doc_id", "payload").mapInPandas(
-        batch, TGA_PIXEL_STATS
-    )

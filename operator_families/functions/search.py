@@ -4,8 +4,7 @@ The retrieval operator of a corpus engine: score every document against a
 bag-of-terms query and return the top-k.  Classic BM25 (Robertson et al.,
 Okapi) with one documented deviation: the IDF weight is the RATIONAL
 ``(N - df + 0.5) / (df + 0.5)`` instead of its logarithm — transcendental
-functions differ across engines' libm in the last ulp (see
-``text.top_salient_terms``), while the rational form is exact integer
+functions differ across engines' libm in the last ulp, while the rational form is exact integer
 arithmetic plus one IEEE division, bit-reproducible anywhere.  Per-term
 weighting is still monotone-decreasing in df and the saturation /
 length-normalization behavior (k1, b) is untouched.

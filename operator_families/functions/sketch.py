@@ -609,8 +609,7 @@ def grid_quantile_estimate(
     containing rank ``r``:
     ``lo + (bin + (r - cum_prev) / c) * (hi - lo) / bins``.  Rank math is
     pure integer, the interpolation a fixed IEEE chain — bit-identical
-    cross-engine.  Grid error is bounded by one bin width (exact
-    quantiles live in plans/behavior_queries.py when you need them);
+    cross-engine.  Grid error is bounded by one bin width;
     determinism and mergeability are what this buys over
     ``approx_percentile``.
 

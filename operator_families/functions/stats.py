@@ -1339,7 +1339,7 @@ def corr_matrix(
     for i, a in enumerate(cols):
         for b in cols[i:]:
             # promote the left operand one digit: DuckDB's 18x18-digit
-            # decimal multiply overflows int64 (registry.py INT128 note);
+            # decimal multiply overflows int64;
             # Spark is exact either way, and the oracle mirrors the cast.
             left = F.col(a).cast("decimal(19,6)")
             aggs.append(F.sum(left * F.col(b)).alias(f"_p_{a}_{b}"))

@@ -96,8 +96,7 @@ def interpolate_daily_linear(
     value_col: str = "day_value",
 ) -> DataFrame:
     """Linear interpolation of a daily series onto its full calendar
-    spine — the time-series repair that LOCF gap-filling (see
-    plans/behavior_queries.py ``events_daily_gapfill``) cannot do:
+    spine — the time-series repair that LOCF gap-filling cannot do:
     missing days take the straight line BETWEEN the surrounding
     observations instead of repeating the last one.
 

@@ -3,8 +3,7 @@
 All pure ``pyspark.sql.functions`` compositions (JVM-side, whole-stage
 codegen): tokenization, n-gram shingles, quality features, stopword-based
 language scoring, and md5-derived document fingerprints.  Cross-engine
-deterministic — every expression has an exact DuckDB twin used by the
-correctness oracles (plans/ml_queries.py).
+deterministic — every expression has an exact DuckDB twin.
 
 Hash family: ``h(s) = int(md5(s)[:8], 16)`` — 32-bit, identical in Spark
 (``conv(substr(md5(x),1,8),16,10)``) and DuckDB
@@ -72,33 +71,6 @@ def fingerprint(text: Column) -> Column:
     return F.md5(F.regexp_replace(F.trim(F.lower(text)), r"\s+", " "))
 
 
-#: BPE-ish pre-tokenization: word runs and single non-space punctuation,
-#: the unit a byte-pair encoder would merge within (token-budget estimates).
-BPE_ISH_PATTERN = r"\w+|[^\w\s]"
-
-
-def bpe_ish_tokens(text: Column) -> Column:
-    """Subword-ready token pieces via the BPE-ish pre-tokenizer regex."""
-    return F.regexp_extract_all(F.lower(text), F.lit(BPE_ISH_PATTERN), 0)
-
-
-def rolling_fingerprint(toks: Column) -> Column:
-    """Order-sensitive polynomial rolling hash over the token stream.
-
-    ``h = fold(tokens[1:], h32(tokens[0]), (acc, t) -> (acc*31 + h32(t)) mod
-    2^31-1)`` — left fold from the first element so the DuckDB twin can use
-    ``list_reduce`` (which seeds from the head).  Unlike the md5
-    ``fingerprint`` this hash is incremental: streaming ingest can extend it
-    token-by-token without re-reading the document.
-    """
-    hashed = F.transform(toks, hash32)
-    return F.aggregate(
-        F.slice(hashed, 2, F.greatest(F.size(hashed) - 1, F.lit(0))),
-        F.element_at(hashed, 1),
-        lambda acc, h: (acc * 31 + h) % F.lit(2147483647),
-    )
-
-
 def punct_count(text: Column) -> Column:
     return F.length(text) - F.length(F.regexp_replace(text, r"[^\w\s]", ""))
 
@@ -110,13 +82,6 @@ def stopword_ratio(toks: Column) -> Column:
         )
     )
     return hits / F.size(toks)
-
-
-def avg_token_len(toks: Column) -> Column:
-    total = F.aggregate(
-        F.transform(toks, F.length), F.lit(0), lambda acc, x: acc + x
-    )
-    return total / F.size(toks)
 
 
 def lang_scores(toks: Column) -> dict[str, Column]:
@@ -138,50 +103,6 @@ def predicted_lang(toks: Column) -> Column:
         cond = scores[lang] == best
         expr = F.when(cond, lang) if expr is None else expr.when(cond, lang)
     return expr
-
-
-def top_salient_terms(
-    docs, text_col: str = "text", id_col: str = "doc_id", k: int = 3
-):
-    """Per-doc top-k salient terms: tf x corpus rarity (TF-IDF-shaped).
-
-    The rarity weight is the RATIONAL ``n_docs / df`` instead of the
-    classic ``log(n_docs/df)``: transcendental functions are not correctly
-    rounded and differ across engines' libm in the last ulp, while
-    ``CAST(tf * n_docs AS DOUBLE) / df`` is one exact integer product and
-    one IEEE division — bit-reproducible anywhere.  Per-doc ranking (the
-    thing keyword extraction consumes) is what the weight drives; ties
-    break on the term.
-
-    Plan: tokenize+explode (map-side), one (doc,term) tf aggregation, one
-    term df aggregation DERIVED from the tf frame (tf is already one row
-    per (doc,term), so the df count needs no ``distinct`` re-shuffle of
-    the raw token stream — partial aggregation collapses it map-side),
-    term-keyed equi-join (vocabulary can be corpus-sized, so the df side
-    is NOT broadcast), 1-row corpus count broadcast, per-doc rank window.  All shuffles key on doc or term — no collects.
-    """
-    from pyspark.sql import Window
-
-    tok = docs.select(
-        F.col(id_col).alias("doc"),
-        F.explode(tokens(F.col(text_col))).alias("term"),
-    )
-    tf = tok.groupBy("doc", "term").agg(F.count("*").alias("tf"))
-    dfreq = tf.groupBy("term").agg(F.count("*").alias("df"))
-    n = docs.agg(F.count("*").alias("n_docs"))
-    score = (F.col("tf") * F.col("n_docs")).cast("double") / F.col("df")
-    w = Window.partitionBy("doc").orderBy(F.desc("score"), F.asc("term"))
-    return (
-        tf.join(dfreq, "term")
-        .crossJoin(F.broadcast(n))
-        .withColumn("score", score)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col("doc").alias(id_col), "term", "score",
-            F.col("rank").cast("int").alias("rank"),
-        )
-    )
 
 
 def token_repetition_stats(
@@ -983,13 +904,9 @@ def compression_ratio(
     signal (highly repetitive / boilerplate text compresses far below
     natural prose; filters on ratio are standard in crawl pipelines).
 
-    DEFLATE is not expressible in SQL, so the gate's oracle rides the
-    published-artifact pattern (plans/ml_queries.py): a driver-local
-    pyarrow+zlib reference sweep publishes per-doc compressed sizes to a
-    lookup parquet the DuckDB oracle joins — this distributed kernel is
-    hash-checked against that independent single-process path.  Within
-    one zlib build the output length at a fixed level is deterministic,
-    so the column is stable run-to-run on this engine.
+    DEFLATE is not expressible in SQL, so this kernel has no SQL twin.
+    Within one zlib build the output length at a fixed level is
+    deterministic, so the column is stable run-to-run on this engine.
 
     Arrow ``mapInPandas`` shape (the multimodal contract): utf-8 encode +
     compress per batch, Python memory bounded by

@@ -21,7 +21,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from .sketch import _rank_hash
 
@@ -334,6 +333,21 @@ def canonical_url(url: Column) -> Column:
     return F.when(
         scheme_host == "", None
     ).otherwise(F.concat(F.lit("https://"), scheme_host, rest))
+
+
+def canonical_url_sql(url: str) -> str:
+    """The DuckDB twin of :func:`canonical_url`, for oracles and auditors."""
+    host = f"regexp_extract(lower({url}), '{HOST_CAPTURE_RE}', 1)"
+    return (
+        f"CASE WHEN {host} = '' THEN NULL "
+        f"ELSE 'https://' || {host} || "
+        "regexp_replace(regexp_replace(regexp_replace(regexp_replace("
+        "regexp_replace(regexp_replace(regexp_replace("
+        f"{url}, '{HOST_STRIP_RE}', ''), "
+        f"'#.*$', ''), '{TRACKING_PARAM_RE}', '\\1', 'g'), '&&+', '&', 'g'), "
+        "'[?&]+$', ''), '\\?&', '?'), '/$', '') "
+        "END"
+    )
 
 
 def dedup_urls(
@@ -682,56 +696,3 @@ def warc_encode(doc_id: int, n_records: int) -> bytes:
         out += f"Content-Length: {clen}\r\n".encode()
         out += b"\r\n" + payload + b"\r\n\r\n"
     return bytes(out)
-
-
-WARC_RECORDS = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("rec_idx", T.IntegerType()),
-        T.StructField("warc_type", T.StringType()),
-        T.StructField("target_uri", T.StringType()),
-        T.StructField("content_length", T.LongType()),
-        T.StructField("payload_sum", T.LongType()),
-        T.StructField("payload_weighted", T.LongType()),
-        T.StructField("decoded", T.BooleanType()),
-    ]
-)
-
-
-def warc_record_stats(df_with_payload: DataFrame) -> DataFrame:
-    """WARC record walk over a binary column (see :func:`_warc_records`):
-    one row per record with exact payload byte sums, a single
-    quarantine row (rec_idx NULL) for malformed archives.  Arrow
-    ``mapInPandas``, map-only; live state is one record's headers —
-    payloads stream through the two running sums."""
-    import pandas as pd
-
-    def batch(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                recs = _warc_records(bytes(payload))
-                if recs is None:
-                    rows.append((doc_id,) + (None,) * 6 + (False,))
-                    continue
-                for idx, wt, uri, clen, s, swt in recs:
-                    rows.append(
-                        (doc_id, idx, wt, uri, clen, s, swt, True)
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "rec_idx", "warc_type", "target_uri",
-                    "content_length", "payload_sum", "payload_weighted",
-                    "decoded",
-                ],
-            ).astype(
-                {
-                    "rec_idx": "Int32", "content_length": "Int64",
-                    "payload_sum": "Int64", "payload_weighted": "Int64",
-                }
-            )
-
-    return df_with_payload.select("doc_id", "payload").mapInPandas(
-        batch, WARC_RECORDS
-    )

@@ -2,24 +2,30 @@
 the reference's inline fixture (cleaners.py:274-301)."""
 
 import datetime as dt
+import json
 
 import pytest
-from pyspark.sql import functions as F
 
 from nl_railtraffic_etl_pipeline_spark.functions.cleaning import clean
-from nl_railtraffic_etl_pipeline_spark.sources.json_source import payload_from_records
+from nl_railtraffic_etl_pipeline_spark.pipeline import SparkETLPipeline
 
 RUN_TS = dt.datetime(2026, 2, 14, 11, 18, 10)
 
 
-def _clean_records(spark, records):
-    return clean(payload_from_records(spark, records, RUN_TS))
+@pytest.fixture
+def clean_records(spark, tmp_path):
+    """Records -> payload file -> the pipeline's own extract -> clean."""
+    def run(records):
+        path = tmp_path / "payload.json"
+        path.write_text(json.dumps(records), encoding="utf-8")
+        pipe = SparkETLPipeline(spark, str(tmp_path / "lake"))
+        return clean(pipe.extract(str(path), RUN_TS))
+    return run
 
 
-def test_reference_inline_fixture(spark):
+def test_reference_inline_fixture(clean_records):
     """The two sample records from cleaners.py:274-301."""
-    rows = _clean_records(
-        spark,
+    rows = clean_records(
         [
             {
                 "id": "prio-12345",
@@ -64,10 +70,9 @@ def test_reference_inline_fixture(spark):
     assert b.affected_stations is None  # regex finds no [A-Z]{2,5} token
 
 
-def test_type_normalization_passthrough(spark):
+def test_type_normalization_passthrough(clean_records):
     """Uppercase English types rely on lower() + pass-through (SURVEY §7.3.7)."""
-    rows = _clean_records(
-        spark,
+    rows = clean_records(
         [
             {"id": "1", "type": "MAINTENANCE", "start": "2026-01-01T00:00:00+0000"},
             {"id": "2", "type": "CALAMITY", "start": "2026-01-01T00:00:00+0000"},
@@ -89,12 +94,11 @@ def test_type_normalization_passthrough(spark):
     "minutes,expected",
     [(60, 2), (61, 3), (120, 3), (121, 4), (240, 3), (241, 4)],
 )
-def test_impact_boundaries(spark, minutes, expected):
+def test_impact_boundaries(clean_records, minutes, expected):
     """Strict > at 60/120 (disruption) and 240 (maintenance) — SURVEY §7.3.8."""
     dis_type = "maintenance" if minutes in (240, 241) else "verstoring"
     end = dt.datetime(2026, 1, 1) + dt.timedelta(minutes=minutes)
-    rows = _clean_records(
-        spark,
+    rows = clean_records(
         [
             {
                 "id": "x",
@@ -107,9 +111,8 @@ def test_impact_boundaries(spark, minutes, expected):
     assert rows[0].impact_level == expected
 
 
-def test_title_rules(spark):
-    rows = _clean_records(
-        spark,
+def test_title_rules(clean_records):
+    rows = clean_records(
         [
             {"id": "1", "title": "ab", "start": "2026-01-01T00:00:00+0000"},
             {"id": "2", "title": "  padded title  ", "start": "2026-01-01T00:00:00+0000"},
@@ -119,9 +122,8 @@ def test_title_rules(spark):
     assert rows[1].title == "padded title"  # trimmed
 
 
-def test_timestamp_edge_cases(spark):
-    rows = _clean_records(
-        spark,
+def test_timestamp_edge_cases(clean_records):
+    rows = clean_records(
         [
             {"id": "bad", "start": "not-a-date", "end": "also-bad"},
             {"id": "neg", "start": "2026-01-02T00:00:00+0000", "end": "2026-01-01T00:00:00+0000"},
@@ -139,9 +141,10 @@ def test_timestamp_edge_cases(spark):
     )
 
 
-def test_validation_drops_null_ids(spark):
-    df = _clean_records(
-        spark,
+def test_validation_drops_null_ids(clean_records):
+    # the extract's falsy-id skip drops the record (reference
+    # pipeline.py:147-149) before the cleaner's own id filter sees it
+    df = clean_records(
         [
             {"id": None, "type": "x", "start": "2026-01-01T00:00:00+0000"},
             {"id": "keep", "type": "x", "start": "2026-01-01T00:00:00+0000"},
@@ -150,9 +153,8 @@ def test_validation_drops_null_ids(spark):
     assert [r.disruption_id for r in df.collect()] == ["keep"]
 
 
-def test_station_extraction_strategies(spark):
-    rows = _clean_records(
-        spark,
+def test_station_extraction_strategies(clean_records):
+    rows = clean_records(
         [
             # strategy 1: section.stations[].uicCode
             {
@@ -195,9 +197,9 @@ def test_station_extraction_strategies(spark):
     assert rows[3].affected_stations == "EHV,LEDN"
 
 
-def test_output_schema(spark):
-    df = _clean_records(
-        spark, [{"id": "1", "type": "x", "start": "2026-01-01T00:00:00+0000"}]
+def test_output_schema(clean_records):
+    df = clean_records(
+        [{"id": "1", "type": "x", "start": "2026-01-01T00:00:00+0000"}]
     )
     assert df.columns == [
         "disruption_id",

@@ -14,7 +14,7 @@ import pandas as pd
 import pytest
 
 from nl_railtraffic_etl_pipeline_spark.functions.cleaning import clean
-from nl_railtraffic_etl_pipeline_spark.sources.json_source import read_payload
+from nl_railtraffic_etl_pipeline_spark.pipeline import SparkETLPipeline
 
 RAW = "/root/reference/data/raw/disruptions_20260214_111810.json"
 GOLDEN = "/root/reference/data/processed/cleaned_20260214_111810.csv"
@@ -22,9 +22,10 @@ RUN_TS = dt.datetime(2026, 2, 14, 11, 18, 10)
 
 
 @pytest.fixture(scope="module")
-def frames(spark):
+def frames(spark, tmp_path_factory):
+    pipe = SparkETLPipeline(spark, str(tmp_path_factory.mktemp("lake")))
     ours = (
-        clean(read_payload(spark, RAW, RUN_TS))
+        clean(pipe.extract(RAW, RUN_TS))
         .orderBy("disruption_id")
         .toPandas()
         .set_index("disruption_id")

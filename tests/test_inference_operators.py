@@ -157,29 +157,6 @@ def test_soundex_native_known_codes(spark):
     assert got["who"] == "W000"
 
 
-def test_soundex_oracle_sql_matches_native(spark):
-    """The DuckDB SQL reimplementation in the gate's oracle produces the
-    identical code for every token — the dual-implementation contract."""
-    import duckdb
-
-    from operator_families.plans.registry import ORACLES
-    from pyspark.sql import functions as F
-
-    df = spark.createDataFrame([(t,) for t in _SDX_TOKENS], "token string")
-    native = {
-        r["token"]: r["s"]
-        for r in df.select("token", F.soundex("token").alias("s")).collect()
-    }
-    con = duckdb.connect()
-    con.execute(
-        "CREATE TABLE documents AS SELECT token AS text,"
-        " ROW_NUMBER() OVER () AS doc_id FROM (SELECT unnest(?) AS token)",
-        [_SDX_TOKENS],
-    )
-    for token, sdx in con.execute(ORACLES["text_soundex"]).fetchall():
-        assert native[token] == sdx, (token, native[token], sdx)
-
-
 def test_theil_u_known_table(spark):
     """Perfect determinism (each column value maps to one row value)
     gives U = 1; independence gives U = 0."""

@@ -118,27 +118,3 @@ def test_krippendorff_excludes_singleton_units(spark):
     df = spark.createDataFrame(rows, "u string, v string")
     out = krippendorff_alpha_nominal(df, "u", "v").collect()[0]
     assert out["n_units"] == 1 and out["n"] == 2
-
-
-def test_sitemap_parse_counts(spark):
-    """The regex chain extracts every <loc>, keeps non-skip paths, and
-    min/max lastmod are real dates from the entries."""
-    from operator_families.plans.registry import QUERIES
-    import duckdb
-
-    from operator_families.plans.registry import ORACLES
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE TABLE documents AS SELECT unnest(range(0, 30)) AS doc_id,"
-        " 'src' || CAST(unnest(range(0, 30)) % 2 AS VARCHAR) AS source,"
-        " 'txt' AS text"
-    )
-    rows = con.execute(ORACLES["web_sitemap_parse"]).fetchall()
-    bysrc = {r[0]: r for r in rows}
-    assert len(bysrc) == 2
-    # 15 docs per source; doc_id % 7 == 0 -> skip (0,7,14,21,28: three even
-    # -> src0, two odd -> src1)
-    assert bysrc["src0"][1] == 15 and bysrc["src0"][2] == 12
-    assert bysrc["src1"][1] == 15 and bysrc["src1"][2] == 13
-    assert bysrc["src0"][4].startswith("2024-")

@@ -163,17 +163,3 @@ def test_dtw_known_distance(spark):
     out = dtw_distance_units(df, "part", "idx", "value").collect()[0]
     l1 = sum(abs(x - y) for x, y in zip(a, b))
     assert out["dtw_units"] < l1  # alignment tolerance: 0 < 60
-
-
-def test_sign_test_direction(spark):
-    """The week-on-week z is positive when the series grows."""
-    from operator_families.plans.registry import QUERIES
-
-    out = QUERIES["stats_sign_test"](
-        __import__(
-            "nl_railtraffic_etl_pipeline_spark.session",
-            fromlist=["get_spark"],
-        ).get_spark(),
-        "/root/testdata/sf0.001",
-    ).collect()[0]
-    assert out["n_pairs"] == out["n_pos"] + out["n_neg"] + out["n_ties"]

@@ -439,15 +439,10 @@ def test_multimodal_decode_roundtrip(spark):
 
 
 def test_registry_oracle_coverage():
-    """EVERY registered query carries a full DuckDB oracle — the former
-    rows-only exception (text_compression_ratio) now rides the
-    published-artifact pattern: a driver-local pyarrow+zlib reference
-    sweep the oracle joins (plans/ml_queries.py)."""
-    from nl_railtraffic_etl_pipeline_spark.plans import registry as rail
-    from operator_families.plans import registry as families
+    """Every registered rail gate carries a DuckDB oracle."""
+    from nl_railtraffic_etl_pipeline_spark.plans import registry
 
-    for reg in (rail, families):
-        assert set(reg.QUERIES) == set(reg.ORACLES)
+    assert set(registry.QUERIES) == set(registry.ORACLES)
 
 
 def test_kmv_distinct_exact_below_k_and_close_above(spark):

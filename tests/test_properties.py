@@ -275,7 +275,6 @@ def test_canonical_url_cross_engine(spark, pieces):
     import duckdb
 
     from operator_families.functions import web
-    from operator_families.plans.ml_queries import _CANON_SQL
 
     url = "".join(pieces)
     sdf = spark.createDataFrame([(url,)], ["url"])
@@ -284,7 +283,7 @@ def test_canonical_url_cross_engine(spark, pieces):
     ).collect()[0]["c"]
     con = duckdb.connect()
     got_duck = con.execute(
-        "SELECT " + _CANON_SQL + " FROM (SELECT ? AS url)", [url]
+        "SELECT " + web.canonical_url_sql("url") + " FROM (SELECT ? AS url)", [url]
     ).fetchone()[0]
     assert got_spark == got_duck, (url, got_spark, got_duck)
 

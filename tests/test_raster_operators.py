@@ -108,18 +108,3 @@ def test_tga_orientations_and_rle():
     rle = tga_encode(3, 10, 10)     # odd: RLE (different doc formula,
     assert len(rle) < 18 + 100 * 3 + 100  # but runs must win overall)
     assert _tga_decode(tga_encode(0, 6, 4)[:12]) is None
-
-
-def test_systematic_sampling_even_spacing(spark):
-    """Within each stratum the sampled ranks are exactly k apart."""
-    from operator_families.plans.registry import QUERIES
-
-    rows = QUERIES["sample_systematic"](
-        spark, "/root/testdata/sf0.001"
-    ).collect()
-    by_type = {}
-    for r in rows:
-        by_type.setdefault(r["event_type"], []).append(r["rn"])
-    for t, rns in by_type.items():
-        rns = sorted(rns)
-        assert all(b - a == 10 for a, b in zip(rns, rns[1:])), t

@@ -4,7 +4,6 @@
 from pyspark.sql import Row
 
 from nl_railtraffic_etl_pipeline_spark.operators.upsert import (
-    dedup_batch,
     insert_ignore,
     upsert_latest_wins,
 )
@@ -53,5 +52,6 @@ def test_dedup_batch_deterministic_winner(spark):
             {"k": "a", "v": 3, "ts": 2},
         ],
     )
-    out = dedup_batch(batch, ["k"], "ts").collect()
+    empty = spark.createDataFrame([], batch.schema)
+    out = upsert_latest_wins(empty, batch, ["k"], "ts").collect()
     assert len(out) == 1 and out[0].v == 2  # max ts wins
