@@ -5,9 +5,10 @@ cleaners.py:25-61) rule for rule, but every row loop / ``apply(axis=1)`` /
 ``iterrows`` becomes a whole-stage-codegen expression — no UDFs anywhere
 (SURVEY §2.9: none are needed).  The input has the declared
 ``schemas.RAW_DISRUPTION`` columns, so none of the reference's
-column-presence guards carry over: ``clean`` is one filter and one
-``select`` of the ``CLEAN_DISRUPTION`` columns, each one a Column helper
-of this module.
+column-presence guards carry over: ``clean`` is one ``select`` of the
+``CLEAN_DISRUPTION`` columns, each one a Column helper of this module.
+The reference's null-id drop happens upstream: the extract skips records
+with a null or empty id, so every frame reaching ``clean`` has one.
 
 Determinism: the reference leaks wall-clock ``now()`` into the data (end-time
 imputation, created/updated stamps).  Here the run stamp is the input's
@@ -142,14 +143,15 @@ def clean(df: DataFrame) -> DataFrame:
 
     Step 2 (cleaners.py:86-107) parses both timestamps to UTC and imputes
     an unparseable or missing end as ``fetched_at`` + 2 h; step 6
-    (cleaners.py:231-266) drops null ids, stamps the run and projects the
-    12 ``CLEAN_DISRUPTION`` columns.
+    (cleaners.py:231-266) stamps the run and projects the 12
+    ``CLEAN_DISRUPTION`` columns; its null-id drop is the extract's
+    falsy-id skip.
     """
     kind, title, stamp = _type_col(), _title_col(), F.col("fetched_at")
     start = _parse_ts(F.col("start"))
     end = F.coalesce(_parse_ts(F.col("end")), stamp + F.expr("INTERVAL 2 HOURS"))
     duration = _duration_col(start, end)
-    return df.filter(F.col("id").isNotNull()).select(
+    return df.select(
         F.col("id").alias("disruption_id"),
         kind.alias("type"),
         title.alias("title"),

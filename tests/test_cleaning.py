@@ -143,7 +143,7 @@ def test_timestamp_edge_cases(clean_records):
 
 def test_validation_drops_null_ids(clean_records):
     # the extract's falsy-id skip drops the record (reference
-    # pipeline.py:147-149) before the cleaner's own id filter sees it
+    # pipeline.py:147-149); the cleaner has no id filter of its own
     df = clean_records(
         [
             {"id": None, "type": "x", "start": "2026-01-01T00:00:00+0000"},

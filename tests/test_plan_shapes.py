@@ -117,11 +117,17 @@ def test_dimension_joins_broadcast(spark):
     assert "BroadcastHashJoin" in plan_of(spark, "rail_q2_station_severity")
 
 
-def test_blocked_embedding_kernel_is_executor_side():
-    """The exact all-pairs kernel must never collect its corpus to the
-    driver (VERDICT r01: `src.collect()` was the one scale-killer here)."""
-    from operator_families.functions import dedup
-
+def test_blocked_embedding_kernel_is_executor_side(spark):
+    """The exact all-pairs kernel must meet its build side through a
+    shuffle join of grouped blocks — never a driver-collecting broadcast
+    (VERDICT r01: `src.collect()` was the one scale-killer here)."""
+    txt = explain(
+        dedup.embedding_near_dup_pairs_blocked(
+            table(spark, "embeddings", spread=False), threshold=0.35
+        )
+    )
+    assert "ShuffledHashJoin" in txt
+    assert "BroadcastExchange" not in txt
     src = inspect.getsource(dedup)
     assert ".collect()" not in src, "corpus collect() reintroduced in dedup"
 
